@@ -3208,10 +3208,12 @@ def oracle_sql() -> dict[str, str]:
                 x = _parent[x]
             return x
 
-        for _a, _b in _edges:
+        # sorted edges, members and rows: the VALUES text must not
+        # depend on set iteration order (PYTHONHASHSEED)
+        for _a, _b in sorted(_edges):
             _parent[_find(_a)] = _find(_b)
         _members: dict = {}
-        for _v in _parent:
+        for _v in sorted(_parent):
             _members.setdefault(_find(_v), []).append(_v)
         _rows = []
         for _grp in _members.values():
@@ -3222,7 +3224,7 @@ def oracle_sql() -> dict[str, str]:
             o["domain_islands"] = (
                 "SELECT n AS node, c AS component, "
                 "CAST(s AS BIGINT) AS component_size FROM (VALUES "
-                + ", ".join(f"('{n}', '{c}', {s})" for n, c, s in _rows)
+                + ", ".join(f"('{n}', '{c}', {s})" for n, c, s in sorted(_rows))
                 + ") AS v(n, c, s)"
             )
     except Exception:

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from readur_spark.functions.textstats import fingerprint_col
+from readur_spark.operators.partitioning import ensure_partitions
 
 # --------------------------------------------------------------------------
 # Exact dedup (D1/D2/D4 parity)
@@ -69,55 +70,10 @@ def _token_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     tokens = F.filter(
         F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
     )
-    return _ensure_parallelism(docs).select(
+    # a corpus that fits in one file split would tokenize on one core
+    return ensure_partitions(docs).select(
         F.col(id_col).alias("id"), F.posexplode(tokens).alias("pos", "tk")
     )
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Small-input guard for operators that do heavy per-row work
-    (tokenize/shingle/hash): a corpus that fits in one parquet split scans
-    as ONE partition (maxPartitionBytes), serializing everything downstream
-    onto a single core. Repartitioning a small input is one cheap shuffle;
-    a real at-scale input already has ≥ defaultParallelism splits and is
-    left untouched.
-
-    The split estimate comes from file METADATA (``inputFiles`` + driver
-    FileSystem status calls), never from ``df.rdd.getNumPartitions()``:
-    under AQE, ``.rdd`` resolves the final physical plan and was measured
-    costing 0.9-1.5 s of driver work PER CALL (and can execute whole
-    upstream query stages for shuffle-derived inputs) — a silent tax on
-    every shingle/fingerprint operator. Plans with no file sources
-    (in-memory test relations, post-shuffle inputs) are left untouched:
-    shuffle outputs already carry ``spark.sql.shuffle.partitions``-level
-    parallelism."""
-    try:
-        sc = df.sparkSession.sparkContext
-        target = sc.defaultParallelism
-        files = df.inputFiles()
-        if not files or len(files) >= target:
-            return df
-        conf = sc._jsc.hadoopConfiguration()
-        jvm = sc._jvm
-        try:
-            max_bytes = int(
-                df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-                .lower()
-                .rstrip("b")
-            )
-        except (TypeError, ValueError):
-            max_bytes = 128 * 1024 * 1024
-        splits = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            fs = p.getFileSystem(conf)
-            size = fs.getFileStatus(p).getLen()
-            splits += max(1, -(-size // max_bytes))
-            if splits >= target:
-                return df
-        return df.repartition(target)
-    except Exception:
-        return df
 
 
 def _shingles(
@@ -582,7 +538,7 @@ def simhash_pairs(
     pigeonhole any pair within Hamming ≤3 agrees on ≥1 chunk, so the join
     is on (chunk_no, chunk_value) — never all-pairs. Verification is
     ``bit_count(a XOR b)`` (native)."""
-    fp = _ensure_parallelism(docs).select(
+    fp = ensure_partitions(docs).select(
         F.col(id_col).alias("id"), _simhash64(F.col(text_col)).alias("sim")
     )
     chunks = fp.select(
@@ -980,7 +936,7 @@ def winnow_fingerprints(
             yield pd.DataFrame({"id": ids, "fp": fps, "pos": poss})
 
     id_type = docs.schema[id_col].dataType.simpleString()
-    return _ensure_parallelism(docs.select(id_col, text_col)).mapInPandas(
+    return ensure_partitions(docs.select(id_col, text_col)).mapInPandas(
         run, schema=f"id {id_type}, fp long, pos int"
     )
 

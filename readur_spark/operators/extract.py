@@ -4,23 +4,21 @@ Spark shape
 -----------
 One ``mapInPandas`` stage over a skew-defused partitioning of the input:
 
-* **Partitioning** (``plan_partitions``): readur prioritizes work by file
-  size (size→priority bins, /root/reference/src/ingestion/batch_ingest.rs:
-  281-294) so one worker never serializes all the huge files. The Spark
-  analog: compute each document's byte weight natively
-  (``aggregate(spans, sum(length(text)))`` — pure Catalyst, no Python),
-  bin it into the reference's size classes, then ``repartitionByRange``
-  on (size_class, salt) where salt = ``pmod(xxhash64(doc_id), 2^20)``.
-  Mega-docs land in dedicated, evenly-salted partitions instead of
-  straggling a mixed one; AQE cannot split a single giant *row*, so this
-  doc-level binning is the explicit skew control the north rule asks for.
+* **Partitioning** (``plan_partitions``): one rule. When the input's file
+  scan yields fewer splits than ``num_partitions``, hash-repartition on
+  ``xxhash64(doc_id)`` so the documents, mega-docs included, spread
+  evenly by id; otherwise keep the input's partitions and skip the payload
+  shuffle. Cached and checkpointed inputs are already planned and are
+  kept. The split count comes from Spark's own scan plan, without running
+  a job (``operators.partitioning``). A single giant row is one task's
+  work either way; AQE cannot split a row.
 * **Extraction**: iterator-of-batches pandas UDF. Each Arrow batch holds
   many documents; each document is processed by the pure-Python kernel
   (readur-parity semantics, see ``kernels.extractor``). No per-row Spark
   serde — batch in, batch out over Arrow.
 
 At cluster scale the same plan holds: the scan is columnar (only ``doc_id``
-+ ``spans`` are read), the single shuffle is the explicit repartition, and
++ ``spans`` are read), the only shuffle is the planned repartition, and
 the UDF stage is embarrassingly parallel at ``num_partitions`` granularity
 (set it to 2–3× total executor cores).
 """
@@ -36,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from readur_spark.kernels.extractor import extract_document
+from readur_spark.operators.partitioning import ensure_partitions
 
 EXTRACTED_SCHEMA = T.StructType(
     [
@@ -63,74 +62,16 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-#: readur's size→priority bins (src/ingestion/batch_ingest.rs:281-294),
-#: reused as partition-range classes (higher priority = smaller doc).
-_SIZE_BINS_BYTES = [1, 5, 10, 50]  # MB boundaries
 
-
-def size_class_col(weight_col: str = "doc_bytes"):
-    """Column mapping byte weight → readur's priority bins (10/8/6/4/2)."""
-    mb = 1024 * 1024
-    c = F.col(weight_col)
-    return (
-        F.when(c <= 1 * mb, F.lit(10))
-        .when(c <= 5 * mb, F.lit(8))
-        .when(c <= 10 * mb, F.lit(6))
-        .when(c <= 50 * mb, F.lit(4))
-        .otherwise(F.lit(2))
-    )
-
-
-def plan_partitions(
-    docs_df: DataFrame, num_partitions: int, size_binned: bool = False
-) -> DataFrame:
-    """Skew-defused partitioning.
-
-    Default (``size_binned=False``): one hash repartition on
-    ``xxhash64(doc_id)`` — a single shuffle, no extra pass, uniform doc
-    spread (the north rule's salt-by-doc_id). This is the right default:
-    document costs are long-tailed but hashing 10^12 docs over ~10^5
-    partitions averages the tail out. Inputs that ALREADY carry at least
-    ``num_partitions`` partitions skip the payload shuffle entirely
-    (r9): scan splits are byte-bounded and shuffle outputs hash-spread,
-    so re-shuffling the span payloads buys nothing there.
-
-    ``size_binned=True`` adds readur's size→priority binning
-    (batch_ingest.rs:281-294) via ``repartitionByRange`` on
-    (size_class, salt): mega-docs get dedicated partitions so one 100 MB
-    monster never queues behind thousands of small docs. Costs one extra
-    pass (range-boundary sampling re-executes the upstream) — worth it only
-    when the size distribution is extreme; both modes are pure Catalyst.
-    """
-    if not size_binned:
-        # Skip the payload shuffle when the input already carries at
-        # least the requested parallelism (guide §2.4 "remove shuffles
-        # outright" / §8 "move heavy bytes once"): scan partitions are
-        # byte-bounded by maxPartitionBytes and shuffle outputs are
-        # hash-spread, so re-shuffling the span payloads buys nothing —
-        # measured a third of the flagship's wall. Inputs with FEWER
-        # partitions than requested (single-split small corpus, skewed
-        # unions) still get the defusing hash repartition, and
-        # ``size_binned=True`` always forces the explicit binning.
-        try:
-            if docs_df.rdd.getNumPartitions() >= num_partitions:
-                return docs_df
-        except Exception:
-            pass
-        return docs_df.repartition(num_partitions, F.xxhash64("doc_id"))
-    weighted = docs_df.withColumn(
-        "doc_bytes",
-        F.aggregate(
-            F.col("spans"),
-            F.lit(0).cast("long"),
-            lambda acc, s: acc + F.coalesce(F.octet_length(s["text"]), F.lit(0)),
-        ),
-    ).withColumn("size_class", size_class_col("doc_bytes")).withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(1 << 20))
-    )
-    return weighted.repartitionByRange(num_partitions, "size_class", "salt").drop(
-        "doc_bytes", "size_class", "salt"
-    )
+def plan_partitions(docs_df: DataFrame, num_partitions: int) -> DataFrame:
+    """Skew-defused partitioning: one hash repartition on
+    ``xxhash64(doc_id)`` (the north rule's salt-by-doc_id) when the input's
+    file scan yields fewer than ``num_partitions`` splits. Document costs
+    are long-tailed, but hashing 10^12 docs over ~10^5 partitions averages
+    the tail out. Inputs that already carry the parallelism (byte-bounded
+    scan splits, cached or checkpointed data) skip the payload shuffle;
+    the decision is :func:`~readur_spark.operators.partitioning.ensure_partitions`."""
+    return ensure_partitions(docs_df, num_partitions, F.xxhash64("doc_id"))
 
 
 def _extract_batches(
@@ -175,12 +116,10 @@ def extract_spans(
     repair_hyphens: bool = True,
     num_partitions: int | None = None,
     passthrough_cols: list[str] | None = None,
-    size_binned: bool = False,
 ) -> DataFrame:
     """Run the extraction pipeline over an interleaved-docs DataFrame.
 
-    ``num_partitions``: when set, apply the explicit skew-defused
-    repartition first. Sizing guidance: ≈1× total cores when per-doc work
+    ``num_partitions``: when set, ``plan_partitions`` first. Sizing guidance: ≈1× total cores when per-doc work
     is light (Arrow/Python per-task overhead dominates otherwise), 2–3×
     cores on a real cluster where tasks run seconds and elasticity matters.
     When ``None`` the input partitioning is kept (caller already planned).
@@ -189,7 +128,7 @@ def extract_spans(
     (e.g. a precomputed ``partition_id`` for checkpoint lineage).
     """
     if num_partitions:
-        docs_df = plan_partitions(docs_df, num_partitions, size_binned=size_binned)
+        docs_df = plan_partitions(docs_df, num_partitions)
 
     passthrough = passthrough_cols or []
     schema = T.StructType(
@@ -201,164 +140,6 @@ def extract_spans(
         return _extract_batches(batches, repair_hyphens, passthrough)
 
     return docs_df.mapInPandas(run, schema=schema)
-
-
-def extract_spans_split(
-    docs_df: DataFrame,
-    repair_hyphens: bool = True,
-    num_partitions: int | None = None,
-    split_threshold_spans: int = 64,
-) -> DataFrame:
-    """Mega-doc-safe extraction: giant documents are exploded to span
-    granularity, extracted in parallel, and reassembled.
-
-    ``extract_spans`` binds one document to one task — correct until a
-    single row carries thousands of spans (AQE can split skewed
-    *partitions*, never a single row; SURVEY §7 "mega-doc skew"). Here:
-
-    1. docs with ≤ ``split_threshold_spans`` spans take the normal batch
-       path untouched;
-    2. bigger docs ``posexplode`` to (doc_id, offset, span) rows, shuffle
-       across the cluster by (doc_id, span-position) hash, extract
-       per-span (same kernel ⇒ same per-span output), then reassemble with
-       ``collect_list(struct(offset, spans))`` + ``array_sort`` — order
-       derives from the input offsets, never execution order, so the
-       result is byte-identical to the unsplit path (tested).
-
-    Document-level sidecars (combined word count, status, quality gate)
-    are recomputed from the reassembled text exactly as the kernel does.
-    """
-    n_spans = F.size("spans")
-    small = docs_df.filter(n_spans <= split_threshold_spans)
-    big = docs_df.filter(n_spans > split_threshold_spans)
-
-    small_out = extract_spans(small, repair_hyphens, num_partitions)
-
-    # --- span-granular path for the giants --------------------------------
-    exploded = big.select(
-        "doc_id", F.posexplode("spans").alias("pos", "span")
-    ).select(
-        "doc_id",
-        "pos",
-        F.array(F.col("span")).alias("spans"),
-    )
-    if num_partitions:
-        exploded = exploded.repartition(
-            num_partitions, F.xxhash64("doc_id", "pos")
-        )
-
-    def run_span(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from readur_spark.kernels.extractor import extract_document
-
-        for pdf in batches:
-            rows = {"doc_id": [], "pos": [], "piece": [], "had_text": [], "piece_us": []}
-            for doc_id, pos, spans in zip(pdf["doc_id"], pdf["pos"], pdf["spans"]):
-                t0 = time.perf_counter()
-                res = extract_document(list(spans), repair_hyphens=repair_hyphens)
-                rows["doc_id"].append(doc_id)
-                rows["pos"].append(pos)
-                rows["piece"].append(res["spans"])
-                rows["had_text"].append(
-                    any((s.get("kind") or "") in ("text", "html") for s in spans)
-                )
-                rows["piece_us"].append(int((time.perf_counter() - t0) * 1_000_000))
-            yield pd.DataFrame(rows)
-
-    piece_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("pos", T.IntegerType(), False),
-            T.StructField("piece", EXTRACTED_SCHEMA["spans"].dataType, True),
-            T.StructField("had_text", T.BooleanType(), False),
-            T.StructField("piece_us", T.LongType(), False),
-        ]
-    )
-    pieces = exploded.mapInPandas(run_span, piece_schema)
-
-    # reassemble: order by original span position, then re-pack span orders
-    assembled = (
-        pieces.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("piece")))
-            ).alias("ordered"),
-            F.max("had_text").alias("had_text"),
-            F.sum("piece_us").alias("piece_us"),
-        )
-        .select(
-            "doc_id",
-            F.flatten(F.col("ordered.piece")).alias("raw_spans"),
-            "had_text",
-            "piece_us",
-        )
-    )
-
-    def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from readur_spark.kernels.quality import classify_ocr_error, validate_ocr_quality
-        from readur_spark.kernels.wordcount import count_words_safely_office
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "spans": [],
-                "confidence": [],
-                "word_count": [],
-                "status": [],
-                "failure_reason": [],
-                "preprocessing_applied": [],
-                "processing_time_ms": [],
-            }
-            for doc_id, raw, had_text, piece_us in zip(
-                pdf["doc_id"], pdf["raw_spans"], pdf["had_text"], pdf["piece_us"]
-            ):
-                t0 = time.perf_counter()
-                spans = [
-                    {
-                        "kind": s["kind"],
-                        "text": s["text"],
-                        "media_ref": s["media_ref"],
-                        "order": i,
-                    }
-                    for i, s in enumerate(raw if raw is not None else [])
-                ]
-                texts = [s["text"] for s in spans if s["kind"] == "text"]
-                combined = "\n\n".join(texts)
-                wc = count_words_safely_office(combined)
-                status, reason = "completed", None
-                if texts:
-                    err = validate_ocr_quality(combined, 100.0, wc)
-                    if err is not None:
-                        status = "failed"
-                        reason, _ = classify_ocr_error(err)
-                elif had_text or not spans:
-                    # text/html input yielded nothing usable — failed, like
-                    # the unsplit kernel's empty-result path
-                    status = "failed"
-                    reason, _ = classify_ocr_error(
-                        "No extractable text found in document (0 words)"
-                    )
-                if status == "failed":
-                    spans = [s for s in spans if s["kind"] == "media"]
-                    for i, s in enumerate(spans):
-                        s["order"] = i
-                out["doc_id"].append(doc_id)
-                out["spans"].append(spans)
-                out["confidence"].append(100.0)
-                out["word_count"].append(wc)
-                out["status"].append(status)
-                out["failure_reason"].append(reason)
-                out["preprocessing_applied"].append(["Span-split extraction"])
-                # real lineage: summed per-piece kernel time + this doc's
-                # reassembly/finalize time (comparable to the unsplit path's
-                # per-doc wall time within tolerance — tested)
-                finalize_us = (time.perf_counter() - t0) * 1_000_000
-                out["processing_time_ms"].append(
-                    int((int(piece_us) + finalize_us) / 1000)
-                )
-            yield pd.DataFrame(out)
-
-    big_out = assembled.mapInPandas(finalize, EXTRACTED_SCHEMA)
-    return small_out.unionByName(big_out)
 
 
 def chunk_texts(

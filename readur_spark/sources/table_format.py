@@ -80,13 +80,6 @@ def read_table(spark: SparkSession, target: str, fmt: str = "parquet") -> DataFr
     return spark.read.parquet(target)
 
 
-def append_table(df: DataFrame, target: str, fmt: str = "parquet") -> None:
-    if resolve_format(df.sparkSession, fmt) == "iceberg":
-        df.writeTo(target).append()
-    else:
-        df.write.mode("append").parquet(target)
-
-
 def overwrite_partitions(
     df: DataFrame, target: str, partition_by: list[str], fmt: str = "parquet"
 ) -> None:

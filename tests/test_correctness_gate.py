@@ -64,3 +64,30 @@ def test_pack_sequences_oracle_outputs_are_bigint():
     df = con.execute(entry.oracle_sql()["pack_sequences"]).fetchdf()
     for col in ("seq_id", "tok_start", "tok_end", "n_tokens"):
         assert df[col].dtype.kind == "i", (col, df[col].dtype)
+
+
+def test_oracle_sql_text_is_hashseed_independent():
+    # Oracle texts are compared across processes; an entry built in set
+    # iteration order (domain_islands once was) changes with PYTHONHASHSEED.
+    import json
+    import os
+    import subprocess
+    from pathlib import Path
+
+    script = (
+        "import json, __spark_entry__ as e; "
+        "print(json.dumps(e.oracle_sql(), sort_keys=True))"
+    )
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", script],
+            cwd=Path(__file__).resolve().parents[1],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        for seed in ("1", "2")
+    ]
+    a, b = (json.loads(p.communicate(timeout=300)[0]) for p in procs)
+    assert a.keys() == b.keys() and len(a) > 0
+    assert [k for k in a if a[k] != b[k]] == []

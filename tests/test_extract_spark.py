@@ -8,7 +8,7 @@ driver-side to the same input — plus determinism across partitioning.
 
 import pytest
 
-from readur_spark.corpus import docs_dataframe, generate_docs
+from readur_spark.corpus import DOCS_SCHEMA, docs_dataframe, generate_docs
 from readur_spark.kernels.extractor import extract_document
 from readur_spark.operators.extract import extract_spans
 
@@ -79,6 +79,40 @@ def test_mega_doc_handled(spark):
     rows = extract_spans(docs, num_partitions=4).collect()
     assert len(rows) == 5
     assert all(len(r["spans"]) > 0 for r in rows)
+
+
+def test_media_only_mega_doc(spark):
+    rows = [
+        {
+            "doc_id": "m",
+            "spans": [
+                {"kind": "media", "text": "", "media_ref": f"m://{i}", "offset": i}
+                for i in range(100)
+            ],
+        }
+    ]
+    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
+    out = extract_spans(docs).collect()[0]
+    assert out["status"] == "completed"
+    assert len(out["spans"]) == 100
+    assert [s["media_ref"] for s in out["spans"]] == [f"m://{i}" for i in range(100)]
+
+
+def test_all_text_gated_mega_doc_fails(spark):
+    rows = [
+        {
+            "doc_id": "junk",
+            "spans": [
+                {"kind": "text", "text": "!@#$%^&*()_+-=[]{}|;':\",./<>?", "media_ref": "", "offset": i}
+                for i in range(40)
+            ],
+        }
+    ]
+    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
+    out = extract_spans(docs).collect()[0]
+    assert out["status"] == "failed"
+    assert out["failure_reason"] == "low_ocr_confidence"
+    assert out["spans"] == []
 
 
 class TestChunking:
