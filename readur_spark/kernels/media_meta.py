@@ -15,8 +15,7 @@ Pillow/opencv, so dimensions are parsed straight from the container headers
 The EXIF 8-case orientation→transform table is reproduced exactly
 (document_ingestion.rs:389-399); the pixel apply lives in
 kernels/pixels.apply_orientation (real, all formats decode natively via
-kernels/pixels + kernels/minijpeg). WAV PCM content decode + audio
-features are real too (wav_decode / audio_features below).
+kernels/pixels + kernels/minijpeg).
 """
 
 from __future__ import annotations
@@ -183,318 +182,3 @@ def orientation_label(width: int, height: int) -> str:
     if height > width:
         return "portrait"
     return "square"
-
-
-# --------------------------------------------------------------------------
-# Audio / video container metadata (multimodal columns beyond images —
-# opaque binary + typed metadata; decode itself stays out of scope)
-# --------------------------------------------------------------------------
-
-
-def parse_audio_meta(data: bytes) -> dict | None:
-    """WAV (RIFF/WAVE fmt chunk) header parse: channels, sample rate, bit
-    depth, duration. MP3 recognized by ID3/frame-sync sniff (stream
-    metadata needs a frame walk — format reported, fields None).
-    Returns None when not audio."""
-    if len(data) >= 12 and data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        pos = 12
-        fmt = None
-        data_size = None
-        while pos + 8 <= len(data):
-            cid = data[pos : pos + 4]
-            (csize,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-            body = data[pos + 8 : pos + 8 + csize]
-            if cid == b"fmt " and len(body) >= 16:
-                _fmt_tag, channels, sample_rate = struct.unpack("<HHI", body[:8])
-                byte_rate = struct.unpack("<I", body[8:12])[0]
-                bits = struct.unpack("<H", body[14:16])[0]
-                fmt = (channels, sample_rate, byte_rate, bits)
-            elif cid == b"data":
-                data_size = csize
-            pos += 8 + csize + (csize & 1)  # chunks are word-aligned
-        if fmt is None:
-            return None
-        channels, sample_rate, byte_rate, bits = fmt
-        duration = (data_size / byte_rate) if (data_size and byte_rate) else None
-        return {
-            "format": "wav",
-            "channels": channels,
-            "sample_rate": sample_rate,
-            "bits_per_sample": bits,
-            "duration_s": round(duration, 6) if duration is not None else None,
-        }
-    if len(data) >= 3 and (data[:3] == b"ID3" or (data[0] == 0xFF and (data[1] & 0xE0) == 0xE0)):
-        info = mp3_info(data) or {}
-        return {
-            "format": "mp3",
-            "channels": None,  # needs per-frame mode parse; not exposed
-            "sample_rate": info.get("sample_rate"),
-            "bits_per_sample": None,
-            "duration_s": info.get("duration_s"),
-        }
-    return None
-
-
-def _walk_mp4_boxes(data: bytes, start: int, end: int):
-    pos = start
-    while pos + 8 <= end:
-        (size,) = struct.unpack(">I", data[pos : pos + 4])
-        kind = data[pos + 4 : pos + 8]
-        if size == 1:  # 64-bit largesize
-            if pos + 16 > end:
-                return
-            (size,) = struct.unpack(">Q", data[pos + 8 : pos + 16])
-            yield kind, pos + 16, pos + size
-        elif size == 0:  # to end of file
-            yield kind, pos + 8, end
-            return
-        else:
-            yield kind, pos + 8, pos + size
-        if size < 8:
-            return
-        pos += size
-
-
-def _parse_sample_tables(data: bytes, trak_s: int, trak_e: int) -> dict:
-    """Per-track sample-table walk (trak → mdia → {mdhd, minf → stbl →
-    {stts, stsz}}): media timescale, sample count, exact media duration
-    (Σ stts count×delta / timescale), total sample bytes, and the derived
-    mean sample rate (≈ fps for video) and bitrate. ISO 14496-12 §8.6.1.2
-    (stts) / §8.7.3.2 (stsz)."""
-    out = {
-        "n_samples": None,
-        "track_duration_s": None,
-        "sample_rate_hz": None,
-        "bitrate": None,
-    }
-    timescale = None
-    total_ticks = None
-    n_samples = None
-    total_bytes = None
-    for k, s, e in _walk_mp4_boxes(data, trak_s, trak_e):
-        if k != b"mdia":
-            continue
-        for k2, s2, e2 in _walk_mp4_boxes(data, s, e):
-            if k2 == b"mdhd" and e2 - s2 >= 20:
-                version = data[s2]
-                off = s2 + (20 if version == 1 else 12)
-                if off + 4 <= e2:
-                    timescale = struct.unpack(">I", data[off : off + 4])[0]
-            elif k2 == b"minf":
-                for k3, s3, e3 in _walk_mp4_boxes(data, s2, e2):
-                    if k3 != b"stbl":
-                        continue
-                    for k4, s4, e4 in _walk_mp4_boxes(data, s3, e3):
-                        if k4 == b"stts" and e4 - s4 >= 8:
-                            (n_entries,) = struct.unpack(">I", data[s4 + 4 : s4 + 8])
-                            ticks = 0
-                            cnt = 0
-                            p = s4 + 8
-                            for _ in range(n_entries):
-                                if p + 8 > e4:
-                                    break
-                                c, delta = struct.unpack(">II", data[p : p + 8])
-                                ticks += c * delta
-                                cnt += c
-                                p += 8
-                            total_ticks = ticks
-                            if n_samples is None:
-                                n_samples = cnt
-                        elif k4 == b"stsz" and e4 - s4 >= 12:
-                            uniform, count = struct.unpack(">II", data[s4 + 4 : s4 + 12])
-                            n_samples = count
-                            if uniform:
-                                total_bytes = uniform * count
-                            else:
-                                p = s4 + 12
-                                tb = 0
-                                for _ in range(count):
-                                    if p + 4 > e4:
-                                        break
-                                    tb += struct.unpack(">I", data[p : p + 4])[0]
-                                    p += 4
-                                total_bytes = tb
-    out["n_samples"] = n_samples
-    if timescale and total_ticks is not None:
-        dur = total_ticks / timescale
-        out["track_duration_s"] = round(dur, 6)
-        if dur > 0:
-            if n_samples:
-                out["sample_rate_hz"] = round(n_samples / dur, 6)
-            if total_bytes:
-                out["bitrate"] = int(round(total_bytes * 8 / dur))
-    return out
-
-
-def parse_video_meta(data: bytes) -> dict | None:
-    """MP4/MOV (ISO BMFF) box parse: duration from moov/mvhd
-    (timescale-normalized), display dimensions from the first video
-    trak/tkhd (16.16 fixed point), and per-track sample-table fidelity
-    (stts/stsz walk): frame count, exact track duration, mean fps,
-    bitrate. Returns None when not an MP4."""
-    if len(data) < 12 or data[4:8] != b"ftyp":
-        return None
-    out = {
-        "format": "mp4",
-        "duration_s": None,
-        "width": None,
-        "height": None,
-        "n_frames": None,
-        "fps": None,
-        "bitrate": None,
-    }
-    for kind, s, e in _walk_mp4_boxes(data, 0, len(data)):
-        if kind != b"moov":
-            continue
-        for k2, s2, e2 in _walk_mp4_boxes(data, s, e):
-            if k2 == b"mvhd" and e2 - s2 >= 20:
-                version = data[s2]
-                if version == 1:
-                    timescale = struct.unpack(">I", data[s2 + 20 : s2 + 24])[0]
-                    duration = struct.unpack(">Q", data[s2 + 24 : s2 + 32])[0]
-                else:
-                    timescale = struct.unpack(">I", data[s2 + 12 : s2 + 16])[0]
-                    duration = struct.unpack(">I", data[s2 + 16 : s2 + 20])[0]
-                if timescale:
-                    out["duration_s"] = round(duration / timescale, 6)
-            elif k2 == b"trak" and out["width"] is None:
-                for k3, s3, e3 in _walk_mp4_boxes(data, s2, e2):
-                    if k3 == b"tkhd" and e3 - s3 >= 84:
-                        version = data[s3]
-                        off = s3 + (92 if version == 1 else 80)
-                        if off + 8 <= e3:
-                            w = struct.unpack(">I", data[off : off + 4])[0] / 65536.0
-                            h = struct.unpack(">I", data[off + 4 : off + 8])[0] / 65536.0
-                            if w and h:
-                                out["width"] = int(w)
-                                out["height"] = int(h)
-                if out["width"] is not None and out["n_frames"] is None:
-                    st = _parse_sample_tables(data, s2, e2)
-                    out["n_frames"] = st["n_samples"]
-                    out["fps"] = st["sample_rate_hz"]
-                    out["bitrate"] = st["bitrate"]
-                    if st["track_duration_s"] is not None:
-                        # the media track's own clock beats the movie
-                        # header when both exist (edit lists aside)
-                        out["duration_s"] = st["track_duration_s"]
-    return out
-
-
-def wav_decode(data: bytes):
-    """Decode WAV PCM samples to (sample_rate, numpy array shaped
-    (n_frames, channels), int16/int32/uint8 per bit depth). Real decode —
-    PCM is raw sample data; non-PCM (compressed) WAV raises ValueError."""
-    import numpy as np
-
-    meta = parse_audio_meta(data)
-    if not meta or meta["format"] != "wav":
-        raise ValueError("not a WAV file")
-    pos = 12
-    fmt_tag = None
-    pcm = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (csize,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + csize]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt_tag = struct.unpack("<H", body[:2])[0]
-        elif cid == b"data":
-            pcm = body
-        pos += 8 + csize + (csize & 1)
-    if fmt_tag not in (1, 0xFFFE):  # PCM / extensible-PCM
-        raise ValueError(f"non-PCM WAV (format tag {fmt_tag}) unsupported")
-    if pcm is None:
-        raise ValueError("WAV has no data chunk")
-    bits = meta["bits_per_sample"]
-    channels = meta["channels"]
-    dtype = {8: np.uint8, 16: np.int16, 32: np.int32}.get(bits)
-    if dtype is None:
-        raise ValueError(f"{bits}-bit WAV unsupported")
-    samples = np.frombuffer(pcm, dtype=dtype)
-    frames = len(samples) // channels
-    return meta["sample_rate"], samples[: frames * channels].reshape(frames, channels)
-
-
-def audio_features(data: bytes) -> dict | None:
-    """Real audio content features from decoded PCM: RMS level, peak,
-    silence ratio (|x| < 1% full scale), duration. None for non-WAV."""
-    import numpy as np
-
-    try:
-        rate, samples = wav_decode(data)
-    except (ValueError, struct.error):
-        return None
-    if samples.size == 0:
-        return {"duration_s": 0.0, "rms": 0.0, "peak": 0.0, "silence_ratio": 1.0}
-    if samples.dtype == np.uint8:
-        x = (samples.astype(np.float64) - 128.0) / 128.0
-    else:
-        x = samples.astype(np.float64) / float(np.iinfo(samples.dtype).max)
-    mono = x.mean(axis=1)
-    return {
-        "duration_s": round(len(mono) / rate, 6),
-        "rms": round(float(np.sqrt((mono * mono).mean())), 6),
-        "peak": round(float(np.abs(mono).max()), 6),
-        "silence_ratio": round(float((np.abs(mono) < 0.01).mean()), 6),
-    }
-
-
-_MP3_BITRATES = {  # kbps, MPEG1 Layer III column of the standard table
-    1: 32, 2: 40, 3: 48, 4: 56, 5: 64, 6: 80, 7: 96,
-    8: 112, 9: 128, 10: 160, 11: 192, 12: 224, 13: 256, 14: 320,
-}
-_MP3_RATES = {0: 44100, 1: 48000, 2: 32000}
-
-
-def mp3_info(data: bytes) -> dict | None:
-    """MP3 stream info from the first MPEG1-Layer-III frame header after
-    any ID3v2 tag: bitrate, sample rate, and a duration estimate — exact
-    frame count from a Xing/Info header when present (VBR), else
-    CBR size/bitrate arithmetic. Returns None when no valid frame is
-    found."""
-    pos = 0
-    if data[:3] == b"ID3" and len(data) >= 10:
-        size = (
-            (data[6] & 0x7F) << 21 | (data[7] & 0x7F) << 14
-            | (data[8] & 0x7F) << 7 | (data[9] & 0x7F)
-        )
-        pos = 10 + size
-    n = len(data)
-    while pos + 4 <= n:
-        if data[pos] == 0xFF and (data[pos + 1] & 0xFE) == 0xFA:  # MPEG1 L3
-            b = data[pos + 2]
-            bitrate_idx, rate_idx = b >> 4, (b >> 2) & 0x3
-            if bitrate_idx in _MP3_BITRATES and rate_idx in _MP3_RATES:
-                bitrate = _MP3_BITRATES[bitrate_idx] * 1000
-                rate = _MP3_RATES[rate_idx]
-                # Xing/Info header (VBR): frame count sits right after the
-                # side info — 32 bytes for MPEG1 L3 stereo/joint/dual,
-                # 17 for mono (ISO 11172-3 §2.4.1.7). Mode-correct offset
-                # first, then the other MPEG1 offset defensively (some
-                # encoders place it wrong).
-                ch_mode = data[pos + 3] >> 6
-                side = 17 if ch_mode == 3 else 32
-                duration = None
-                for off in (side, 49 - side):
-                    xing_off = pos + 4 + off
-                    if data[xing_off : xing_off + 4] in (b"Xing", b"Info") and len(
-                        data
-                    ) >= xing_off + 12:
-                        (flags,) = struct.unpack(
-                            ">I", data[xing_off + 4 : xing_off + 8]
-                        )
-                        if flags & 1:
-                            (frames,) = struct.unpack(
-                                ">I", data[xing_off + 8 : xing_off + 12]
-                            )
-                            duration = round(frames * 1152.0 / rate, 6)
-                        break
-                if duration is None:
-                    duration = round((n - pos) * 8.0 / bitrate, 6)
-                return {
-                    "bitrate": bitrate,
-                    "sample_rate": rate,
-                    "duration_s": duration,
-                }
-        pos += 1
-    return None

@@ -786,8 +786,7 @@ def gif_decode(data: bytes) -> np.ndarray:
 
     Full LZW decompression (variable code width, clear/EOI codes), local
     or global color table, interlace pass reordering. Animated GIFs yield
-    frame 1 (the multimodal contract treats video-ish media via
-    sample_frames). Raises PngError-family ValueError on malformed input.
+    frame 1. Raises PngError-family ValueError on malformed input.
     """
     if not (data.startswith(b"GIF87a") or data.startswith(b"GIF89a")):
         raise PngError("not a GIF")

@@ -576,13 +576,6 @@ def simhash_pairs(
 # --------------------------------------------------------------------------
 
 
-def _cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    return dot / (na * nb)
-
-
 def embedding_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -592,7 +585,6 @@ def embedding_dup_pairs(
     num_planes: int = 8,
     num_tables: int = 16,
     seed: int = 42,
-    force_path: str | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ threshold) with a size-dispatched
     physical strategy:
@@ -614,19 +606,8 @@ def embedding_dup_pairs(
       1−(1−p^planes)^tables with p = 1−acos(s)/π — at the near-dup regime
       (s ≥ 0.9, defaults 8 planes × 16 tables) that is ≥ 99.5%; candidates
       are scored exactly so precision is always 1.
-
-    ``force_path="broadcast"|"lsh"`` pins the strategy and SKIPS the
-    dispatch ``count()`` — at 10^12 rows the caller knows the answer and
-    shouldn't pay one extra job per call for it; ``None`` keeps the
-    count-based auto-dispatch.
     """
-    if force_path not in (None, "broadcast", "lsh"):
-        raise ValueError(
-            f"force_path must be None, 'broadcast' or 'lsh', got {force_path!r}"
-        )
-    if force_path == "lsh" or (
-        force_path is None and embeddings.count() > broadcast_max_rows
-    ):
+    if embeddings.count() > broadcast_max_rows:
         return _embedding_dup_pairs_bucketed(
             embeddings, threshold, id_col, vec_col, num_planes, num_tables, seed
         )

@@ -148,7 +148,7 @@ def chunk_texts(
     overlap_words: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-    array_path_max_words: int | None = 10_000,
+    array_path_max_words: int = 10_000,
 ) -> DataFrame:
     """Training-data chunking: split each document into word-bounded
     chunks of ``chunk_words`` with ``overlap_words`` overlap (stride =
@@ -173,18 +173,11 @@ def chunk_texts(
       chunk_words yields exactly one chunk;
     * trailing windows fully contained in the previous chunk are not
       emitted (stride walks past the end at most once).
-
-    ``array_path_max_words=None`` disables the dispatch and keeps the
-    whole plan a zero-shuffle projection — ONLY safe when the caller
-    guarantees no mega documents.
     """
     assert 0 <= overlap_words < chunk_words
     stride = chunk_words - overlap_words
     words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != "")
     n = F.size(words)
-    array_only = array_path_max_words is None
-    if array_only:
-        array_path_max_words = 2**31 - 1
 
     # ---- array path (zero shuffle), docs with n ≤ bound -----------------
     extra = F.greatest(n - F.lit(chunk_words), F.lit(0))
@@ -213,8 +206,6 @@ def chunk_texts(
             F.col("c.n_words").alias("n_words"),
         )
     )
-    if array_only:
-        return small
 
     # ---- relational path (linear), the mega tail -------------------------
     big_rows = docs_df.filter(n > array_path_max_words).select(

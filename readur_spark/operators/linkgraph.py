@@ -852,8 +852,6 @@ def filter_by_domain_blocklist(
 #: — the browser-recovery answer. The body may contain nested markup
 #: (``<a><b>text</b></a>``); tags are stripped AFTER extraction.
 ANCHOR_EL_RE = r"(?is)<a(?:\s[^>]*)?>.*?</a\s*>"
-#: retained for callers/tests pinning the legacy single-form scope
-ANCHOR_RE = r'<a\s[^>]*href="([^"]+)"[^>]*>([^<]+)</a>'
 
 
 def extract_anchor_texts(

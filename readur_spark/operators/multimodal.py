@@ -1,17 +1,12 @@
-"""Multimodal column operators: opaque binary media + typed metadata.
+"""Multimodal column operators: opaque binary images + typed metadata.
 
-Images/audio/video travel as ``binary`` columns. Image decode is REAL for
-every format in the MIME table (PNG/JPEG/GIF/TIFF/BMP — in-repo
-stdlib+numpy codecs in kernels/pixels + kernels/minijpeg, EXIF auto-rotate
-applied); WAV PCM content decode + features are real
-(kernels/media_meta.wav_decode). The remaining stubs are compressed
-audio/video CONTENT decode (metadata is real; swap in ffmpeg on a real
-deployment — schemas, batch shapes and partition behavior stay).
+Images travel as ``binary`` columns. Image decode is REAL for every format
+in the MIME table (PNG/JPEG/GIF/TIFF/BMP — in-repo stdlib+numpy codecs in
+kernels/pixels + kernels/minijpeg, EXIF auto-rotate applied).
 
 Reference parity: image metadata I17 (metadata_extraction.rs:52-81), EXIF
 auto-rotate I5 (document_ingestion.rs:356-408), smart resize I7
 (enhanced.rs:442-475), quality analysis I9 + OCR ladder I1-I4 distributed.
-Frame sampling is the training-data-pipeline extension for video refs.
 """
 
 from __future__ import annotations
@@ -328,185 +323,3 @@ def ocr_dead_letters(ocr_df: DataFrame) -> DataFrame:
     return ocr_df.filter(F.col("status") == "failed").select(
         "doc_id", "failure_reason", "confidence", "processing_time_ms"
     )
-
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("frame_no", T.IntegerType(), False),
-        T.StructField("frame_ref", T.StringType(), False),
-        T.StructField("decode_stub", T.BooleanType(), False),
-    ]
-)
-
-
-def sample_frames(
-    media_df: DataFrame,
-    every_n: int = 30,
-    max_frames: int = 8,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-) -> DataFrame:
-    """Video frame sampling plumbing: emits deterministic frame refs
-    ``<media_ref>#frame=<n*every_n>`` (the real implementation decodes with
-    ffmpeg/pyav; the fan-out shape, one row per sampled frame, is what
-    downstream feature extraction consumes either way)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                doc_id = str(pdf[id_col].iloc[i])
-                ref = pdf[ref_col].iloc[i] or ""
-                if not ref:
-                    continue  # nothing to sample from an empty/NULL ref
-                # deterministic pseudo frame-count from the ref itself
-                n_frames = (
-                    int.from_bytes(hashlib.blake2b(ref.encode(), digest_size=2).digest(), "big")
-                    % 240
-                ) + 1
-                for k in range(min(max_frames, (n_frames + every_n - 1) // every_n)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "media_ref": ref,
-                            "frame_no": k * every_n,
-                            "frame_ref": f"{ref}#frame={k * every_n}",
-                            "decode_stub": True,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return media_df.select(id_col, ref_col).mapInPandas(run, FRAME_SAMPLE_SCHEMA)
-
-
-AUDIO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("bits_per_sample", T.IntegerType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-    ]
-)
-
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.LongType(), True),
-        T.StructField("fps", T.DoubleType(), True),
-        T.StructField("bitrate", T.LongType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-    ]
-)
-
-
-def audio_metadata(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Typed audio metadata from real header parsing (WAV RIFF fmt/data
-    chunks; MP3 sniffed). Arrow-batched; pure header reads, no decode."""
-    from readur_spark.kernels.media_meta import parse_audio_meta
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                meta = parse_audio_meta(data) or {}
-                rows.append(
-                    {
-                        "doc_id": str(pdf[id_col].iloc[i]),
-                        "format": meta.get("format"),
-                        "channels": meta.get("channels"),
-                        "sample_rate": meta.get("sample_rate"),
-                        "bits_per_sample": meta.get("bits_per_sample"),
-                        "duration_s": meta.get("duration_s"),
-                        "n_bytes": len(data),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media_df.select(id_col, content_col).mapInPandas(run, AUDIO_META_SCHEMA)
-
-
-def video_metadata(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Typed video metadata from real ISO-BMFF box parsing (mvhd duration,
-    tkhd display dims, stts/stsz sample tables → frame count / fps /
-    bitrate). Frame decode stays in sample_frames' stub."""
-    from readur_spark.kernels.media_meta import parse_video_meta
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                meta = parse_video_meta(data) or {}
-                rows.append(
-                    {
-                        "doc_id": str(pdf[id_col].iloc[i]),
-                        "format": meta.get("format"),
-                        "duration_s": meta.get("duration_s"),
-                        "width": meta.get("width"),
-                        "height": meta.get("height"),
-                        "n_frames": meta.get("n_frames"),
-                        "fps": meta.get("fps"),
-                        "bitrate": meta.get("bitrate"),
-                        "n_bytes": len(data),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media_df.select(id_col, content_col).mapInPandas(run, VIDEO_META_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("duration_s", T.DoubleType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-        T.StructField("silence_ratio", T.DoubleType(), True),
-    ]
-)
-
-
-def audio_content_features(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """REAL audio content features: WAV PCM decoded to samples per batch,
-    RMS/peak/silence computed in numpy (kernels/media_meta.audio_features).
-    Non-PCM/non-WAV rows yield nulls (compressed-audio decode is the one
-    remaining swap point — ffmpeg on a real deployment)."""
-    from readur_spark.kernels.media_meta import audio_features
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                feats = audio_features(data) or {}
-                rows.append(
-                    {
-                        "doc_id": str(pdf[id_col].iloc[i]),
-                        "duration_s": feats.get("duration_s"),
-                        "rms": feats.get("rms"),
-                        "peak": feats.get("peak"),
-                        "silence_ratio": feats.get("silence_ratio"),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media_df.select(id_col, content_col).mapInPandas(run, AUDIO_FEATURES_SCHEMA)

@@ -372,39 +372,6 @@ def hyperball(
     return result
 
 
-def effective_diameter(
-    neighborhood_function: list[float], alpha: float = 0.9
-) -> float:
-    """The ``alpha``-effective diameter from a neighborhood function
-    [N(0), N(1), ...] (hyperball's ``stats["neighborhood_function"]``):
-    the interpolated hop count t at which N(t) first reaches
-    ``alpha × N(∞)`` — the standard graph-compactness summary HyperBall
-    exists to make computable (exact diameter needs all-pairs BFS).
-    Linear interpolation between the straddling hops, per the usual
-    definition (Palmer et al. 2002).
-
-    Because N(t) is monotone and the target is ``alpha × N(last)`` with
-    ``alpha <= 1``, the last element always satisfies the target up to
-    float rounding; if rounding noise ever prevents that, the final
-    ``len(nf) - 1`` fallback returns the truncation point, which is a
-    LOWER BOUND on the effective diameter (r7 advisor note) — pass a
-    converged neighborhood function (``stats["converged"]`` from
-    :func:`hyperball`) for an exact value."""
-    if not 0 < alpha <= 1:
-        raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if not neighborhood_function:
-        return 0.0
-    target = alpha * neighborhood_function[-1]
-    prev = 0.0
-    for t, n in enumerate(neighborhood_function):
-        if n >= target:
-            if t == 0 or n == prev:
-                return float(t)
-            return (t - 1) + (target - prev) / (n - prev)
-        prev = n
-    return float(len(neighborhood_function) - 1)
-
-
 def hyperball_replay(
     edges: list[tuple[str, str]], p: int, max_t: int
 ) -> dict[str, tuple[float, float, int]]:

@@ -48,6 +48,7 @@ fixed-schedule GD here is deterministic to the last bit, and for the
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -67,6 +68,18 @@ P_EPS = 1e-12
 #: so big corpora keep their parallelism). Partitioning cannot change
 #: the result: addends are quantized per document and summed exactly.
 _TRAIN_ROWS_PER_TASK = 4096
+
+_Q15 = Decimal("1e-15")
+
+
+def _dec15i(x: float) -> int:
+    """``x`` quantized to DECIMAL(30,15) HALF_UP from its shortest decimal
+    repr, as an exact integer count of 1e-15 units. ``float(x)`` first: a
+    numpy scalar's repr is ``np.float64(...)`` under numpy 2, which
+    ``Decimal`` rejects."""
+    return int(
+        Decimal(repr(float(x))).quantize(_Q15, rounding=ROUND_HALF_UP).scaleb(15)
+    )
 
 
 def _sigmoid(acc: float) -> float:
@@ -160,16 +173,8 @@ def _grad_partials_fn(weights: list[float], bias: float, num_buckets: int):
     double→decimal cast does) then summed EXACTLY as integers in 1e-15
     units — so partitioning/batching cannot perturb the result. Buckets
     -1/-2 carry the bias gradient and the loss, as before."""
-    from decimal import ROUND_HALF_UP, Decimal
-
     w = np.asarray(weights, dtype=np.float64)
     b = float(bias)
-    q15 = Decimal("1e-15")
-
-    def dec15i(x: float) -> int:
-        return int(
-            Decimal(repr(x)).quantize(q15, rounding=ROUND_HALF_UP).scaleb(15)
-        )
 
     def grad_partials(batches):
         sums: dict[int, int] = {}
@@ -187,10 +192,10 @@ def _grad_partials_fn(weights: list[float], bias: float, num_buckets: int):
                 for bk, c in zip(bks.tolist(), cs.tolist()):
                     mi = memo.get(c)
                     if mi is None:
-                        memo[c] = mi = dec15i(err * c / t)
+                        memo[c] = mi = _dec15i(err * c / t)
                     sums[bk] = sums.get(bk, 0) + mi
-                sums[-1] = sums.get(-1, 0) + dec15i(err)
-                sums[-2] = sums.get(-2, 0) + dec15i(
+                sums[-1] = sums.get(-1, 0) + _dec15i(err)
+                sums[-2] = sums.get(-2, 0) + _dec15i(
                     -(yy * math.log(p) + (1.0 - yy) * math.log(1.0 - p))
                 )
         yield pd.DataFrame(
@@ -288,8 +293,6 @@ def train_quality_classifier(
             ]
             return _train_local(local, num_buckets, iters, lr, l2)
 
-        from decimal import Decimal
-
         # Iteration input: only the columns the gradient pass reads,
         # re-chunked so each task carries enough documents to amortize
         # task/Arrow overhead (a 5k-doc table in 64 shuffle partitions
@@ -367,16 +370,6 @@ def _train_local(data, num_buckets: int, iters: int, lr: float, l2: float) -> di
       ``float(Decimal(sum).scaleb(-15))`` is the same correctly-rounded
       conversion as ``float()`` of the old Decimal running sum.
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q15 = Decimal("1e-15")
-
-    def dec15i(x: float) -> int:
-        # integer micro-units of the quantized addend — exact
-        return int(
-            Decimal(repr(x)).quantize(q15, rounding=ROUND_HALF_UP).scaleb(15)
-        )
-
     # one-time preprocessing: flat arrays + distinct counts per doc
     prepped = []
     for fs, total, y in data:
@@ -401,11 +394,11 @@ def _train_local(data, num_buckets: int, iters: int, lr: float, l2: float) -> di
                 acc += x
             p = min(max(_sigmoid(acc), P_EPS), 1.0 - P_EPS)
             err = p - y
-            memo = {c: dec15i(err * c / total) for c in distinct}
+            memo = {c: _dec15i(err * c / total) for c in distinct}
             for b, c in zip(bs.tolist(), cs):
                 grad[b] += memo[c]
-            gb += dec15i(err)
-            loss += dec15i(-(y * math.log(p) + (1.0 - y) * math.log(1.0 - p)))
+            gb += _dec15i(err)
+            loss += _dec15i(-(y * math.log(p) + (1.0 - y) * math.log(1.0 - p)))
         losses.append(round(float(Decimal(loss).scaleb(-15)) / n, 9))
         w_list = [
             wi - lr * (float(Decimal(gi).scaleb(-15)) / n + l2 * wi)

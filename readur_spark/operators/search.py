@@ -64,7 +64,7 @@ def fuzzy_search(
     docs: DataFrame,
     query: str,
     threshold: float = 0.3,
-    array_path_max_chars: int | None = 10_000,
+    array_path_max_chars: int = 10_000,
 ) -> DataFrame:
     """F4: trigram-set Jaccard similarity > threshold (the pg_trgm
     ``similarity(text, q) > 0.3`` shape, search.rs:124-128).
@@ -76,13 +76,10 @@ def fuzzy_search(
     re-lowercases the text per trigram — so mega documents route through a
     relational path: split to characters, posexplode once, trigram via
     window ``lead``, and aggregate the set intersection per doc. Identical
-    similarity on both paths (tested). ``None`` disables the dispatch."""
+    similarity on both paths (tested)."""
     q = _trigrams(query)
     q_arr = F.array(*[F.lit(t) for t in q])
     lowered = F.lower(F.col("text"))
-    array_only = array_path_max_chars is None
-    if array_only:
-        array_path_max_chars = 2**31 - 1
     tri = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(lowered) - 2, F.lit(1))),
@@ -103,8 +100,6 @@ def fuzzy_search(
         .filter(F.col("similarity") > threshold)
         .select("doc_id", "similarity", "n_chars")
     )
-    if array_only:
-        return small
 
     from pyspark.sql.window import Window
 

@@ -214,71 +214,6 @@ def ann_topk_lsh(
     )
 
 
-def ivf_write_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Materialize the IVF index: corpus written partitioned BY CLUSTER so
-    probes prune partitions at the scan (the 10^12-scale layout the
-    in-memory ``ivf_topk`` docstring promises). Centroids persist in a
-    JSON sidecar next to the parquet. Returns the centroids."""
-    import json
-    import os
-
-    assigned, centroids = ivf_assign(
-        embeddings, n_centroids=n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    assigned.write.partitionBy("cluster").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as f:
-        json.dump(centroids, f)
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query the materialized IVF index: pick the ``n_probe`` nearest
-    centroids from the sidecar, scan ONLY those cluster partitions
-    (``cluster`` is a partition column — the isin filter becomes partition
-    pruning, visible as PartitionFilters in the scan), score exactly.
-    Same output contract as :func:`ivf_topk`."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        centroids = json.load(f)
-    q = np.asarray(query_vec, dtype=np.float64)
-    dists = [(((np.asarray(c) - q) ** 2).sum(), i) for i, c in enumerate(centroids)]
-    probe = [i for _, i in sorted(dists)[:n_probe]]
-    scan = spark.read.parquet(path).filter(F.col("cluster").isin(probe))
-    return cosine_topk(scan.drop("cluster"), query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def l2_normalize(
-    embeddings: DataFrame, vec_col: str = "embedding", out_col: str = "embedding_norm"
-) -> DataFrame:
-    """Unit-normalize embeddings (pure Catalyst fold — cosine becomes a
-    plain dot product downstream, halving the ANN scoring cost)."""
-    emb = F.col(vec_col).cast("array<double>")
-    norm = _norm(emb)
-    return embeddings.withColumn(
-        out_col,
-        F.when(norm == 0, emb).otherwise(F.transform(emb, lambda x: x / norm)),
-    )
-
-
 def quantize_int8(
     embeddings: DataFrame, vec_col: str = "embedding", out_col: str = "embedding_q8"
 ) -> DataFrame:

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from readur_spark.sources.table_format import literal_path
+
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -104,7 +106,9 @@ class CheckpointTable:
             return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
         if self.table_format == "iceberg":
             return self.spark.read.table(self.path)
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
+            literal_path(self.path)
+        )
 
     def append(self, rows: list[dict]) -> None:
         if self.table_format != "iceberg":

@@ -253,7 +253,7 @@ def _stage_assigned_input(
     snapshot the crashed run started from. The partition count is baked
     into the name so a resume with a different ``num_partitions`` never
     reuses a stale assignment."""
-    from readur_spark.sources.table_format import read_table
+    from readur_spark.sources.table_format import literal_path, read_table
 
     staged = f"{checkpoint_path}_staged_p{num_partitions}"
     if table_format == "iceberg":
@@ -272,6 +272,7 @@ def _stage_assigned_input(
             planned.write.mode("overwrite").partitionBy(
                 "partition_id"
             ).parquet(staged)
+        staged = literal_path(staged)  # read back this directory, not a glob
     return read_table(spark, staged, table_format)
 
 
@@ -301,13 +302,13 @@ def _drop_staged_input(
         # count: a resume with a different num_partitions would otherwise
         # orphan the previous corpus-sized snapshot forever (r8 advisor
         # finding). Hadoop FS for the same cluster-correctness reason as
-        # the existence probe above.
+        # the existence probe above. Matched by name prefix, not by glob:
+        # the checkpoint path may itself hold glob metacharacters.
         try:
-            fs, _, jvm = _hadoop_fs(spark, checkpoint_path)
-            pat = jvm.org.apache.hadoop.fs.Path(
-                f"{checkpoint_path}_staged_p*"
-            )
-            for st in fs.globStatus(pat) or []:
-                fs.delete(st.getPath(), True)
+            fs, p, _ = _hadoop_fs(spark, checkpoint_path)
+            prefix = p.getName() + "_staged_p"
+            for st in fs.listStatus(p.getParent()):
+                if st.getPath().getName().startswith(prefix):
+                    fs.delete(st.getPath(), True)
         except Exception:
             pass  # cleanup is best-effort; a leftover snapshot is inert

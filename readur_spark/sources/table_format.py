@@ -26,6 +26,8 @@ than failing deep inside an executor.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 FORMATS = ("parquet", "iceberg")
@@ -69,6 +71,13 @@ def resolve_format(spark: SparkSession, fmt: str) -> str:
             "not on the classpath; launch with:\n" + ICEBERG_SUBMIT_SNIPPET
         )
     return fmt
+
+
+def literal_path(path: str) -> str:
+    """``path`` with Hadoop's glob metacharacters backslash-escaped. A
+    file-source read globs its path, so a directory this job wrote under a
+    name holding ``[``, ``{`` or ``?`` reads back only through this."""
+    return re.sub(r"([{}\[\]*?\\])", r"\\\1", path)
 
 
 def read_table(spark: SparkSession, target: str, fmt: str = "parquet") -> DataFrame:
@@ -117,20 +126,3 @@ def overwrite_partitions(
                 spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
             else:
                 spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def delete_where(spark: SparkSession, target: str, predicate: str, fmt: str) -> int:
-    """Queue-row deletion (readur drops completed ocr_queue rows,
-    /root/reference/src/ocr/queue.rs:1171-1184). Iceberg: metadata-only
-    ``DELETE FROM``; parquet callers keep their rewrite-and-rename commit
-    (CheckpointTable.cleanup_completed) because a bare parquet directory
-    has no transactional delete. Returns rows deleted when cheaply known,
-    else -1 (Iceberg's DELETE doesn't report a count without a snapshot
-    diff)."""
-    if resolve_format(spark, fmt) != "iceberg":
-        raise ValueError(
-            "delete_where is the iceberg leg; the parquet fallback is "
-            "CheckpointTable.cleanup_completed's compacting rename commit"
-        )
-    spark.sql(f"DELETE FROM {target} WHERE {predicate}")
-    return -1

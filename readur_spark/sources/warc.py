@@ -327,35 +327,3 @@ def build_warc(records: list[dict], gzip_per_record: bool = True) -> bytes:
         else:
             out += record
     return bytes(out)
-
-
-def filter_urls(
-    records: DataFrame,
-    blocked_domains: list[str] | None = None,
-    blocked_patterns: list[str] | None = None,
-    allowed_schemes: tuple[str, ...] = ("http", "https"),
-    url_col: str = "target_uri",
-) -> DataFrame:
-    """RefinedWeb/C4-style URL filtering over WARC records (or any frame
-    with a URL column): drop disallowed schemes, blocked domains
-    (subdomains included), and regex-blocked paths. Pure Catalyst — the
-    domain check is one lowercase host extraction plus an OR chain over
-    the (small, literal) blocklist, so it pushes into the scan stage;
-    at 100 TB this prunes before anything shuffles.
-
-    Blocklists here are parameters, not bundled: real deployments carry
-    curated lists (e.g. the UT1 categories RefinedWeb uses)."""
-    from pyspark.sql import functions as F
-
-    # RFC 3986: scheme and host are case-insensitive — lowercase BEFORE
-    # matching so 'HTTP://Example.COM' passes the [a-z] patterns
-    url = F.lower(F.col(url_col))
-    host = F.regexp_extract(url, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
-    scheme = F.regexp_extract(url, r"^([a-z][a-z0-9+.-]*)://", 1)
-    keep = scheme.isin(*allowed_schemes)
-    for dom in blocked_domains or []:
-        d = dom.lower()
-        keep = keep & ~(host == d) & ~host.endswith("." + d)
-    for pat in blocked_patterns or []:
-        keep = keep & ~url.rlike(pat)
-    return records.filter(keep)

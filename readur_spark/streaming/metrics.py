@@ -1,18 +1,10 @@
-"""Streaming ingestion metrics: event-time windowed aggregation with
-watermarked late-data handling.
+"""Ingestion metrics: event-time tumbling-window aggregation per key.
 
 readur tracks per-source sync/ingest counters and exposes them over its
 metrics endpoints (/root/reference/src/monitoring/ and
 src/scheduling/source_scheduler.rs progress accounting); at pipeline scale
-the equivalent is a Structured Streaming windowed aggregation: events
-carry their own event time, tumbling windows aggregate per key, and a
-watermark bounds state so the 10^12-doc stream never accumulates unbounded
-window state — late events beyond the watermark are dropped, exactly the
-documented trade.
-
-Batch/stream parity: the same ``windowed_metrics`` plan runs on a static
-DataFrame (tested equal), because Structured Streaming plans incremental
-execution over the identical logical plan.
+the equivalent is a windowed aggregation: events carry their own event
+time and tumbling windows aggregate per key.
 """
 
 from __future__ import annotations
@@ -24,19 +16,13 @@ from pyspark.sql import functions as F
 def windowed_metrics(
     events: DataFrame,
     window: str = "1 hour",
-    watermark: str | None = "2 hours",
     time_col: str = "ts",
     key_col: str = "event_type",
     value_col: str = "value",
 ) -> DataFrame:
-    """Tumbling-window per-key metrics. Works on a stream (with watermark,
-    bounded state, append-mode finalized windows) and on a batch frame
-    (watermark is a no-op there — parity tested)."""
-    src = events
-    if watermark is not None and events.isStreaming:
-        src = events.withWatermark(time_col, watermark)
+    """Tumbling-window per-key event counts and value totals."""
     return (
-        src.groupBy(F.window(F.col(time_col), window).alias("win"), F.col(key_col))
+        events.groupBy(F.window(F.col(time_col), window).alias("win"), F.col(key_col))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(value_col), 4).alias("total_value"),
@@ -50,34 +36,3 @@ def windowed_metrics(
         )
     )
 
-
-def stream_windowed_metrics(
-    spark,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    time_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-):
-    """File-source stream → watermarked windowed metrics → parquet sink,
-    exactly-once via the streaming checkpoint. ``availableNow`` semantics:
-    each call drains the current backlog and stops; the watermark persists
-    in the checkpoint, so a later run drops events older than what the
-    first run established (tested)."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    out = windowed_metrics(
-        stream, window=window, watermark=watermark,
-        time_col=time_col, key_col=key_col, value_col=value_col,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -48,40 +48,6 @@ def test_embedding_bucketed_never_collects(spark, emb):
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_embedding_force_path_skips_dispatch_count(spark, emb, monkeypatch):
-    """force_path pins the strategy WITHOUT the dispatch count() — at
-    10^12 rows that count is one full extra job per call. Both forced
-    paths must build and agree with the auto-dispatched result while
-    DataFrame.count is booby-trapped."""
-    from pyspark.sql import DataFrame as SparkDF
-
-    exact = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in dedup.embedding_dup_pairs(emb, threshold=0.4).collect()
-    }
-
-    def _no_count(self):
-        raise AssertionError("dispatch count() ran despite force_path")
-
-    monkeypatch.setattr(SparkDF, "count", _no_count)
-    forced_b = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in dedup.embedding_dup_pairs(
-            emb, threshold=0.4, force_path="broadcast"
-        ).collect()
-    }
-    forced_l = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in dedup.embedding_dup_pairs(
-            emb, threshold=0.4, force_path="lsh", num_planes=2, num_tables=16
-        ).collect()
-    }
-    assert forced_b == exact
-    assert forced_l == exact
-    with pytest.raises(ValueError):
-        dedup.embedding_dup_pairs(emb, force_path="bogus")
-
-
 def test_ngram_df_cap_noop_on_small_corpus(spark, docs):
     """The capped scale path (opt-in) equals the uncapped exact default
     whenever no shingle exceeds the cap — i.e. always on test corpora."""

@@ -151,17 +151,8 @@ class TestChunking:
         from readur_spark.operators.extract import chunk_texts
 
         docs = spark.createDataFrame([("d", "a b c")], "doc_id string, text string")
-        # array-only mode: the zero-shuffle scan-speed map (callers that
-        # guarantee no mega docs); the default hybrid adds a shuffled
-        # branch for the mega tail but still uses no Python anywhere
-        plan = (
-            chunk_texts(docs, array_path_max_words=None)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan, plan
-        assert "Exchange" not in plan, plan  # no shuffle: scan-speed map
+        # the hybrid plan adds a shuffled branch for the mega tail but
+        # still uses no Python anywhere
         hybrid = chunk_texts(docs)._jdf.queryExecution().executedPlan().toString()
         assert "PythonUDF" not in hybrid and "ArrowEvalPython" not in hybrid, hybrid
 

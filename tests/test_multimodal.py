@@ -117,27 +117,6 @@ def test_distributed_image_metadata(spark):
     assert bytes(dec["m2"]["pixels"]) == bytes(dec2["m2"]["pixels"])
 
 
-def test_frame_sampling(spark):
-    from readur_spark.operators.multimodal import sample_frames
-
-    df = spark.createDataFrame(
-        [("v1", "media://video/abc"), ("v2", "media://video/def")],
-        "doc_id string, media_ref string",
-    )
-    empty = spark.createDataFrame(
-        [("e1", ""), ("e2", None)], "doc_id string, media_ref string"
-    )
-    assert sample_frames(empty).count() == 0
-
-    frames = sample_frames(df, every_n=30, max_frames=4).collect()
-    assert all(f["frame_ref"].endswith(f"#frame={f['frame_no']}") for f in frames)
-    by_doc = {}
-    for f in frames:
-        by_doc.setdefault(f["doc_id"], []).append(f["frame_no"])
-    for nos in by_doc.values():
-        assert nos == sorted(nos) and len(nos) <= 4
-
-
 # --------------------------------------------------------------------------
 # Real PNG decode + distributed quality / OCR (round 2)
 # --------------------------------------------------------------------------
@@ -231,157 +210,6 @@ def test_ocr_images_deterministic_across_runs(spark):
     assert a == b
 
 
-# --------------------------------------------------------------------------
-# Audio / video metadata (real header parsing)
-# --------------------------------------------------------------------------
-
-
-def _wav_bytes(channels=2, rate=16000, width=2, seconds=0.5) -> bytes:
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(width)
-        w.setframerate(rate)
-        w.writeframes(b"\x00" * int(rate * seconds) * channels * width)
-    return buf.getvalue()
-
-
-def _mp4_bytes(duration_s=7.5, timescale=1000, w=640, h=360) -> bytes:
-    def box(kind, payload):
-        return struct.pack(">I", len(payload) + 8) + kind + payload
-
-    mvhd = (
-        b"\x00\x00\x00\x00"  # version/flags
-        + b"\x00" * 8  # creation/modification
-        + struct.pack(">I", timescale)
-        + struct.pack(">I", int(duration_s * timescale))
-        + b"\x00" * 80
-    )
-    tkhd = (
-        b"\x00\x00\x00\x07"
-        + b"\x00" * 76  # through the matrix (version 0 layout)
-        + struct.pack(">I", w << 16)
-        + struct.pack(">I", h << 16)
-    )
-    moov = box(b"moov", box(b"mvhd", mvhd) + box(b"trak", box(b"tkhd", tkhd)))
-    ftyp = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
-    return ftyp + moov
-
-
-def _mp4_with_sample_tables(
-    media_timescale=12800, frame_ticks=512, n_frames=75, sizes=None, w=640, h=360
-) -> bytes:
-    """MP4 whose video trak carries real mdhd/stts/stsz sample tables:
-    n_frames samples of frame_ticks each (fps = timescale/frame_ticks)."""
-
-    def box(kind, payload):
-        return struct.pack(">I", len(payload) + 8) + kind + payload
-
-    mvhd = (
-        b"\x00\x00\x00\x00" + b"\x00" * 8
-        + struct.pack(">I", 1000) + struct.pack(">I", 99000)  # stale movie clock
-        + b"\x00" * 80
-    )
-    tkhd = (
-        b"\x00\x00\x00\x07" + b"\x00" * 76
-        + struct.pack(">I", w << 16) + struct.pack(">I", h << 16)
-    )
-    mdhd = (
-        b"\x00\x00\x00\x00" + b"\x00" * 8
-        + struct.pack(">I", media_timescale)
-        + struct.pack(">I", frame_ticks * n_frames)
-        + b"\x00" * 4
-    )
-    stts = b"\x00\x00\x00\x00" + struct.pack(">I", 1) + struct.pack(">II", n_frames, frame_ticks)
-    if sizes is None:
-        stsz = b"\x00\x00\x00\x00" + struct.pack(">II", 4000, n_frames)  # uniform
-    else:
-        stsz = (
-            b"\x00\x00\x00\x00" + struct.pack(">II", 0, len(sizes))
-            + b"".join(struct.pack(">I", sz) for sz in sizes)
-        )
-    stbl = box(b"stbl", box(b"stts", stts) + box(b"stsz", stsz))
-    mdia = box(b"mdia", box(b"mdhd", mdhd) + box(b"minf", stbl))
-    trak = box(b"trak", box(b"tkhd", tkhd) + mdia)
-    moov = box(b"moov", box(b"mvhd", mvhd) + trak)
-    return box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + moov
-
-
-def test_parse_wav_metadata():
-    from readur_spark.kernels.media_meta import parse_audio_meta
-
-    m = parse_audio_meta(_wav_bytes(channels=2, rate=16000, width=2, seconds=0.5))
-    assert m["format"] == "wav"
-    assert m["channels"] == 2
-    assert m["sample_rate"] == 16000
-    assert m["bits_per_sample"] == 16
-    assert m["duration_s"] == pytest.approx(0.5, abs=1e-6)
-
-
-def test_parse_mp3_sniff_and_not_audio():
-    from readur_spark.kernels.media_meta import parse_audio_meta
-
-    assert parse_audio_meta(b"ID3\x04\x00" + b"\x00" * 20)["format"] == "mp3"
-    assert parse_audio_meta(b"\xff\xfb\x90\x00" + b"\x00" * 20)["format"] == "mp3"
-    assert parse_audio_meta(b"not audio at all") is None
-
-
-def test_parse_mp4_metadata():
-    from readur_spark.kernels.media_meta import parse_video_meta
-
-    m = parse_video_meta(_mp4_bytes(duration_s=7.5, w=640, h=360))
-    assert m["format"] == "mp4"
-    assert m["duration_s"] == pytest.approx(7.5)
-    assert (m["width"], m["height"]) == (640, 360)
-    assert m["n_frames"] is None  # no sample tables in this fixture
-    assert parse_video_meta(b"RIFF....WAVE") is None
-
-
-def test_parse_mp4_sample_tables_stts_stsz():
-    """stts/stsz walk: frame count, exact track duration (media clock wins
-    over the movie header), mean fps, and bitrate — uniform and per-sample
-    stsz layouts (ISO 14496-12 §8.6.1.2/§8.7.3.2)."""
-    from readur_spark.kernels.media_meta import parse_video_meta
-
-    # 75 frames × 512 ticks @ 12800 Hz = 3.0 s, 25 fps, uniform 4000 B/frame
-    m = parse_video_meta(_mp4_with_sample_tables())
-    assert m["n_frames"] == 75
-    assert m["duration_s"] == pytest.approx(3.0)
-    assert m["fps"] == pytest.approx(25.0)
-    assert m["bitrate"] == int(round(75 * 4000 * 8 / 3.0))
-
-    # per-sample sizes
-    sizes = [1000, 2000, 3000]
-    m2 = parse_video_meta(
-        _mp4_with_sample_tables(frame_ticks=6400, n_frames=3, sizes=sizes)
-    )
-    assert m2["n_frames"] == 3
-    assert m2["duration_s"] == pytest.approx(1.5)
-    assert m2["fps"] == pytest.approx(2.0)
-    assert m2["bitrate"] == int(round(sum(sizes) * 8 / 1.5))
-
-
-def test_distributed_audio_video_metadata(spark):
-    from readur_spark.operators.multimodal import audio_metadata, video_metadata
-
-    rows = [
-        {"doc_id": "w", "content": _wav_bytes(channels=1, rate=8000, seconds=1.0)},
-        {"doc_id": "v", "content": _mp4_bytes(duration_s=3.0, w=320, h=240)},
-        {"doc_id": "x", "content": b"junk"},
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, content binary")
-    a = {r["doc_id"]: r for r in audio_metadata(df).collect()}
-    assert a["w"]["format"] == "wav" and a["w"]["duration_s"] == pytest.approx(1.0)
-    assert a["x"]["format"] is None
-    v = {r["doc_id"]: r for r in video_metadata(df).collect()}
-    assert v["v"]["format"] == "mp4" and v["v"]["duration_s"] == pytest.approx(3.0)
-    assert v["v"]["width"] == 320
-    assert v["w"]["format"] is None
-
-
 def test_parse_tiff_dims():
     from readur_spark.kernels.media_meta import parse_image_meta
 
@@ -403,74 +231,3 @@ def test_parse_tiff_dims():
     )
     data_be = b"MM\x00*" + struct.pack(">I", 8) + ifd_be
     assert parse_image_meta(data_be)["width"] == 33
-
-
-def test_wav_pcm_decode_and_features():
-    import io
-    import math
-    import wave
-
-    from readur_spark.kernels.media_meta import audio_features, wav_decode
-
-    rate, amp = 8000, 0.5
-    n = rate // 4
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(
-            b"".join(
-                struct.pack("<h", int(amp * 32767 * math.sin(2 * math.pi * 440 * t / rate)))
-                for t in range(n)
-            )
-        )
-    data = buf.getvalue()
-    r, samples = wav_decode(data)
-    assert r == rate and samples.shape == (n, 1)
-    f = audio_features(data)
-    assert abs(f["rms"] - amp / math.sqrt(2)) < 0.01  # sine RMS = A/√2
-    assert abs(f["duration_s"] - 0.25) < 1e-6
-    assert audio_features(b"not audio") is None
-
-
-def test_distributed_audio_features(spark):
-    from readur_spark.operators.multimodal import audio_content_features
-
-    rows = [
-        {"doc_id": "w", "content": _wav_bytes(channels=1, rate=8000, seconds=0.5)},
-        {"doc_id": "x", "content": b"junk"},
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, content binary")
-    got = {r["doc_id"]: r for r in audio_content_features(df).collect()}
-    assert got["w"]["duration_s"] == pytest.approx(0.5)
-    assert got["w"]["silence_ratio"] == pytest.approx(1.0)  # silent frames
-    assert got["x"]["rms"] is None
-
-
-def test_mp3_frame_walk_info():
-    from readur_spark.kernels.media_meta import mp3_info, parse_audio_meta
-
-    hdr = bytes([0xFF, 0xFB, (9 << 4), 0x00])  # 128 kbps, 44.1 kHz, stereo
-    frame_len = 144 * 128000 // 44100
-    cbr = (hdr + b"\x00" * (frame_len - 4)) * 10
-    info = mp3_info(cbr)
-    assert info["bitrate"] == 128000 and info["sample_rate"] == 44100
-    assert info["duration_s"] == pytest.approx(len(cbr) * 8 / 128000, abs=1e-6)
-    # Xing VBR frame count wins over the CBR estimate. MPEG1 L3 side info
-    # is 32 bytes for stereo (ch_mode != 3), 17 for mono — spec layouts:
-    xing_payload = b"Xing" + struct.pack(">I", 1) + struct.pack(">I", 100) + b"\x00" * 64
-    xing_stereo = hdr + b"\x00" * 32 + xing_payload
-    assert mp3_info(xing_stereo)["duration_s"] == pytest.approx(100 * 1152 / 44100, abs=1e-4)
-    mono_hdr = bytes([0xFF, 0xFB, (9 << 4), 0xC0])  # ch_mode=3 (mono)
-    xing_mono = mono_hdr + b"\x00" * 17 + xing_payload
-    assert mp3_info(xing_mono)["duration_s"] == pytest.approx(100 * 1152 / 44100, abs=1e-4)
-    # defensive: encoder that wrote the mono offset under a stereo header
-    xing_wrongoff = hdr + b"\x00" * 17 + xing_payload + b"\x00" * 15
-    assert mp3_info(xing_wrongoff)["duration_s"] == pytest.approx(100 * 1152 / 44100, abs=1e-4)
-    # ID3v2 prefix is skipped (syncsafe size)
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 10]) + b"\x00" * 10
-    meta = parse_audio_meta(id3 + cbr)
-    assert meta["format"] == "mp3" and meta["sample_rate"] == 44100
-    assert meta["duration_s"] is not None
-    assert mp3_info(b"\x00" * 50) is None

@@ -181,16 +181,3 @@ def test_hll_register_and_estimate_shared_kernel():
     est = hll_estimate(bytes(regs), 10)
     assert abs(est - 100) / 100 < 0.10
     assert math.isfinite(est)
-
-
-def test_effective_diameter_interpolation():
-    from readur_spark.operators.neighborhood import effective_diameter
-
-    # N = [5, 15, 20]: N(inf)=20, 90% target = 18 -> between hop 1 and
-    # 2: 1 + (18-15)/(20-15) = 1.6
-    assert effective_diameter([5.0, 15.0, 20.0]) == pytest.approx(1.6)
-    # already saturated at hop 0
-    assert effective_diameter([10.0, 10.0], alpha=0.9) == 0.0
-    assert effective_diameter([]) == 0.0
-    with pytest.raises(ValueError):
-        effective_diameter([1.0], alpha=0.0)

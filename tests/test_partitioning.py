@@ -56,6 +56,26 @@ def test_broadcast_left_semi_join(spark, one_file):
     assert _agrees_with_rdd(docs.join(wanted, "doc_id", "left_semi")) == 1
 
 
+def test_one_split_dsv2_scan_repartitions(spark, one_file):
+    """With parquet read through DSv2 (as Iceberg tables plan), the leaf is
+    a ``BatchScanExec``; its one split is still counted, without a job."""
+    key = "spark.sql.sources.useV1SourceList"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "")
+    try:
+        docs = spark.read.parquet(one_file)
+        leaves = docs._jdf.queryExecution().sparkPlan().collectLeaves()
+        assert leaves.apply(0).getClass().getSimpleName() == "BatchScanExec"
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        planned = ensure_partitions(docs, 8)
+        assert set(tracker.getJobIdsForGroup(None)) == before
+        assert planned is not docs
+        assert planned.rdd.getNumPartitions() == 8
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_cached_input_is_untouched(spark, one_file):
     docs = spark.read.parquet(one_file).cache()
     try:

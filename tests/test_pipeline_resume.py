@@ -317,3 +317,25 @@ def test_staged_input_reused_by_resume_then_dropped(spark, dirs, monkeypatch):
     # the crashed run's (a restage would have bumped it)
     assert pre_drop_mtime == [mtime]
     assert not os.path.exists(staged)  # dropped at completion
+
+
+def test_staged_input_dropped_under_glob_metachar_checkpoint_path(spark, dirs):
+    """A checkpoint path holding ``[1]`` is a literal name: the batched run
+    reads its own staged snapshot and checkpoint back, drops the snapshot
+    at completion, and leaves alone a sibling that the path, read as a
+    glob, would match."""
+    import os
+
+    out, base = dirs
+    ckpt_path = f"{base}[1]"
+    decoy = f"{base}1_staged_p4"
+    os.makedirs(decoy)
+    docs = docs_dataframe(spark, 40, seed=9)
+    s = run_extraction(
+        spark, docs, out, ckpt_path, num_partitions=4, batch_partitions=2
+    )
+    assert s["partitions_processed"] == 4 and s["docs_processed"] == 40
+    assert not os.path.exists(f"{ckpt_path}_staged_p4")
+    assert os.path.isdir(decoy)
+    again = run_extraction(spark, docs, out, ckpt_path, num_partitions=4)
+    assert again["partitions_skipped"] == 4

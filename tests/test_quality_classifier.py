@@ -147,3 +147,17 @@ def test_duplicate_or_overlapping_ids_raise(spark, labeled):
         train_quality_classifier(pos, neg.unionByName(pos.limit(1)))
     with pytest.raises(ValueError, match="more than once"):
         train_quality_classifier(pos.unionByName(pos.limit(1)), neg)
+
+
+def test_dec15i_accepts_numpy2_scalar_repr():
+    """Under numpy 2, ``repr(np.float64(0.5))`` is ``'np.float64(0.5)'``;
+    the gradient quantizer must give the same integer as for ``0.5``."""
+    from readur_spark.operators.quality_classifier import _dec15i
+
+    class Numpy2Float(float):
+        def __repr__(self):
+            return f"np.float64({float(self)!r})"
+
+    assert repr(Numpy2Float(0.5)) == "np.float64(0.5)"
+    assert _dec15i(Numpy2Float(0.5)) == _dec15i(0.5) == 5 * 10**14
+    assert _dec15i(Numpy2Float(-1 / 3)) == _dec15i(-1 / 3)

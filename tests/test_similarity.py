@@ -83,43 +83,8 @@ def test_ivf_large_k_pandas_path_matches_literal_path(spark, emb, query_vec):
     assert a == b
 
 
-def test_ivf_indexed_query_matches_in_memory(spark, emb, query_vec, tmp_path):
-    """The partitioned on-disk index returns the same top-k as the
-    in-memory form, and its scan carries a cluster partition filter."""
-    from readur_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-
-    path = str(tmp_path / "ivf_index")
-    ivf_write_index(emb, path, n_centroids=8, seed=42)
-    indexed = ivf_topk_indexed(spark, path, query_vec, k=10, n_probe=4)
-    in_mem = ivf_topk(emb, query_vec, k=10, n_centroids=8, n_probe=4)
-    assert [tuple(r) for r in indexed.collect()] == [tuple(r) for r in in_mem.collect()]
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters")[1][:200], plan
-
-
-def test_l2_normalize_and_quantize_roundtrip(spark, emb):
-    from readur_spark.operators.similarity import (
-        dequantize_int8,
-        l2_normalize,
-        quantize_int8,
-    )
-    from pyspark.sql import functions as F
-
-    normed = l2_normalize(emb)
-    norms = normed.select(
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("embedding_norm"), lambda x: x * x),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-        ).alias("n")
-    ).collect()
-    assert all(abs(r["n"] - 1.0) < 1e-9 for r in norms)
+def test_quantize_int8_roundtrip(spark, emb):
+    from readur_spark.operators.similarity import dequantize_int8, quantize_int8
 
     deq = dequantize_int8(quantize_int8(emb))
     rows = deq.select("embedding", "embedding_deq", "embedding_q8_scale").collect()

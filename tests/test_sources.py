@@ -159,32 +159,6 @@ def test_warc_html_payload_flows_into_main_content_extraction(spark, tmp_path):
     assert "nav link" not in joined and "about" not in joined
 
 
-def test_filter_urls_blocks_domains_schemes_patterns(spark):
-    from readur_spark.sources.warc import filter_urls
-
-    rows = [
-        ("https://good.example.com/page", "keep"),
-        ("https://spam.bad.com/x", "blocked domain subdomain"),
-        ("https://bad.com/y", "blocked domain exact"),
-        ("https://notbad.com/z", "NOT blocked (suffix is not subdomain)"),
-        ("ftp://good.example.com/f", "blocked scheme"),
-        ("https://ok.com/casino/jackpot", "blocked pattern"),
-        ("https://ok.com/article", "keep"),
-    ]
-    df = spark.createDataFrame(rows, "target_uri string, note string")
-    kept = {
-        r["target_uri"]
-        for r in filter_urls(
-            df, blocked_domains=["bad.com"], blocked_patterns=[r"/casino/"]
-        ).collect()
-    }
-    assert kept == {
-        "https://good.example.com/page",
-        "https://notbad.com/z",
-        "https://ok.com/article",
-    }
-
-
 def test_warc_rejects_negative_content_length():
     """A crafted negative Content-Length must not rewind the cursor (the
     review-found infinite loop): parsing terminates with no bogus records."""
@@ -212,20 +186,6 @@ def test_warc_corrupt_gzip_member_degrades_to_prefix():
     corrupt[len(corrupt) // 2] ^= 0xFF  # flip a bit inside the member
     recs = list(parse_warc(good + bytes(corrupt)))
     assert [r["target_uri"] for r in recs] == ["https://e.com/1"]
-
-
-def test_filter_urls_uppercase_scheme_and_host(spark):
-    from readur_spark.sources.warc import filter_urls
-
-    df = spark.createDataFrame(
-        [("HTTP://Example.COM/Page",), ("HtTpS://Sub.BAD.com/x",)],
-        "target_uri string",
-    )
-    kept = {
-        r["target_uri"]
-        for r in filter_urls(df, blocked_domains=["bad.com"]).collect()
-    }
-    assert kept == {"HTTP://Example.COM/Page"}
 
 
 def test_warc_many_members_linear_time():

@@ -1,12 +1,8 @@
-"""Watermarked windowed streaming metrics: batch/stream parity + late-data
-drop semantics across checkpointed restarts."""
+"""Event-time windowed metrics: per-window, per-key counts and totals."""
 
 import datetime
 
-import pytest
-from pyspark.sql import functions as F
-
-from readur_spark.streaming.metrics import stream_windowed_metrics, windowed_metrics
+from readur_spark.streaming.metrics import windowed_metrics
 
 SCHEMA = "ts timestamp, event_type string, value double"
 
@@ -29,59 +25,3 @@ def test_batch_windowed_metrics_shape(spark):
     }
     assert out == {(10, "a"): (2, 3.0), (10, "b"): (1, 5.0), (11, "a"): (1, 7.0)}
 
-
-def test_stream_equals_batch(spark, tmp_path):
-    """The identical plan over file-stream vs static frame produces the
-    same finalized windows (append mode emits a window once the watermark
-    passes it; a final empty-batch flush in availableNow finalizes all)."""
-    rows = _rows(
-        (8, 0, "a", 1), (8, 30, "b", 2), (9, 0, "a", 3), (9, 30, "a", 4), (12, 0, "c", 9)
-    )
-    src = str(tmp_path / "in")
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
-    outdir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = stream_windowed_metrics(
-        spark, src, outdir, ck, SCHEMA, window="1 hour", watermark="1 hour"
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"].hour, r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(outdir).collect()
-        if r["window_start"].hour < 12  # the max-ts window may not finalize
-    }
-    batch = {
-        (r["window_start"].hour, r["event_type"]): (r["n_events"], r["total_value"])
-        for r in windowed_metrics(
-            spark.createDataFrame(rows, SCHEMA), window="1 hour"
-        ).collect()
-        if r["window_start"].hour < 12
-    }
-    assert got == batch
-    assert (8, "a") in got and (9, "a") in got
-
-
-def test_late_event_dropped_after_restart(spark, tmp_path):
-    """Watermark persists in the checkpoint: a second availableNow run
-    seeing an event far older than the established watermark must DROP it
-    (bounded state is the 10^12-scale contract, late data the cost)."""
-    src = str(tmp_path / "in")
-    outdir, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    first = _rows((8, 0, "a", 1), (8, 45, "a", 2), (13, 0, "z", 0))  # watermark -> ~12:00
-    spark.createDataFrame(first, SCHEMA).coalesce(1).write.parquet(src)
-    q = stream_windowed_metrics(
-        spark, src, outdir, ck, SCHEMA, window="1 hour", watermark="1 hour"
-    )
-    q.awaitTermination(120)
-    base = spark.read.parquet(outdir).filter(F.col("event_type") == "a").collect()
-    assert {(r["window_start"].hour, r["n_events"]) for r in base} == {(8, 2)}
-
-    # second drop: one event at 08:10 — hours behind the checkpointed
-    # watermark; its window is already finalized, the row must not resurface
-    late = _rows((8, 10, "a", 100))
-    spark.createDataFrame(late, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    q2 = stream_windowed_metrics(
-        spark, src, outdir, ck, SCHEMA, window="1 hour", watermark="1 hour"
-    )
-    q2.awaitTermination(120)
-    after = spark.read.parquet(outdir).filter(F.col("event_type") == "a").collect()
-    assert {(r["window_start"].hour, r["n_events"]) for r in after} == {(8, 2)}
