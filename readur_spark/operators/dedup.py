@@ -30,6 +30,12 @@ from pyspark.sql.window import Window
 from readur_spark.functions.textstats import fingerprint_col
 from readur_spark.operators.partitioning import ensure_partitions
 
+# a fingerprint in more than this many documents seeds no span and no
+# overlap pair: it is boilerplate, and its postings join is quadratic
+_MAX_FP_DF = 1000
+# shorter lines (after trimming) are never dropped by dedup_lines
+_MIN_LINE_CHARS = 10
+
 # --------------------------------------------------------------------------
 # Exact dedup (D1/D2/D4 parity)
 # --------------------------------------------------------------------------
@@ -132,34 +138,24 @@ def _materialize_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     return out
 
 
-def _jaccard_for_pairs(
-    sh: DataFrame, pairs: DataFrame, threshold: float
+def _set_sizes(sh: DataFrame) -> DataFrame:
+    """(id, sz): the shingle-set size of each document in ``sh``."""
+    return sh.groupBy("id").agg(F.count("*").alias("sz"))
+
+
+def _score_jaccard(
+    inter: DataFrame, sizes_a: DataFrame, sizes_b: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact Jaccard restricted to an EXPLICIT (id_a, id_b) pair list —
-    the verifier for capped candidate generation. Instead of the
-    postings self-join (which regenerates every co-occurring pair from
-    each shingle's postings list, O(group^2) per shingle on
-    mass-duplicated corpora), explode each pair to its left side's
-    shingles and count matches on the uniform (id_b, shingle) key:
-    linear in pairs × shingles-per-doc. Pairs with zero intersection
-    fall out of the count join — they cannot pass any threshold > 0."""
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    left = pairs.join(sh.withColumnRenamed("id", "id_a"), "id_a")
-    inter = (
-        left.join(
-            sh.select(F.col("id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    """The one Jaccard score: (id_a, id_b, inter) with the set sizes of
+    each side → |A∩B| / (|A|+|B|−|A∩B|), rounded to 6 places, kept when
+    ≥ ``threshold``. Returns (id_a, id_b, jaccard)."""
     return (
         inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
+            sizes_a.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"),
             "id_a",
         )
         .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"),
+            sizes_b.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"),
             "id_b",
         )
         .withColumn(
@@ -174,20 +170,45 @@ def _jaccard_for_pairs(
     )
 
 
-def _jaccard_from_shingles(
-    sh: DataFrame, threshold: float, sizes: DataFrame | None = None
+def _jaccard_for_pairs(
+    sh: DataFrame, pairs: DataFrame, threshold: float, sh_b: DataFrame | None = None
 ) -> DataFrame:
-    """Exact pairwise Jaccard over a (id, shingle) table: inverted-index
-    self-join on shingle → |A∩B| per pair → |A∪B| = |A|+|B|−|A∩B|.
-    Shared by the exact all-pairs operator and the MinHash-LSH verifier so
-    the corpus is shingled exactly once per call chain.
+    """Exact Jaccard restricted to an EXPLICIT (id_a, id_b) pair list —
+    the verifier of every candidate-generating operator. Instead of the
+    postings self-join (which regenerates every co-occurring pair from
+    each shingle's postings list, O(group^2) per shingle on
+    mass-duplicated corpora), explode each pair to its left side's
+    shingles and count matches on the uniform (id_b, shingle) key:
+    linear in pairs × shingles-per-doc. Pairs with zero intersection
+    fall out of the count join — they cannot pass any threshold > 0.
 
-    ``sizes``: optional external (id, sz) set-size table. When ``sh`` has
-    been df-pruned, passing the sizes computed from the UN-pruned table
-    keeps the denominator honest — the estimate can then only under-count
-    (missed intersections), never inflate (false positives)."""
-    if sizes is None:
-        sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+    ``sh`` holds the id_a side's shingles; ``sh_b`` the id_b side's when
+    the two sides are separate documents that may share ids (a re-ingested
+    document is new under the id it has in history)."""
+    sizes_a = _set_sizes(sh)
+    if sh_b is None:
+        sh_b, sizes_b = sh, sizes_a
+    else:
+        sizes_b = _set_sizes(sh_b)
+    inter = (
+        pairs.join(sh.withColumnRenamed("id", "id_a"), "id_a")
+        .join(sh_b.select(F.col("id").alias("id_b"), "shingle"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return _score_jaccard(inter, sizes_a, sizes_b, threshold)
+
+
+def _jaccard_from_shingles(
+    sh: DataFrame, threshold: float, sizes: DataFrame
+) -> DataFrame:
+    """Exact all-pairs Jaccard over a (id, shingle) table: inverted-index
+    self-join on shingle → |A∩B| per pair, scored by :func:`_score_jaccard`.
+
+    ``sizes``: the (id, sz) set-size table. When ``sh`` has been df-pruned,
+    passing the sizes computed from the UN-pruned table keeps the
+    denominator honest — the estimate can then only under-count (missed
+    intersections), never inflate (false positives)."""
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -196,16 +217,38 @@ def _jaccard_from_shingles(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _score_jaccard(inter, sizes, sizes, threshold)
+
+
+def _drop_high_df(
+    rows: DataFrame, key: str, cap: int, postings: DataFrame | None = None
+) -> tuple[DataFrame, bool]:
+    """The high-df key prune: ``rows`` without the rows whose ``key``
+    occurs in more than ``cap`` documents, and whether any key was dropped.
+    The document frequency is counted over ``postings``, the distinct
+    (id, key) table; it defaults to ``rows`` when that is one already.
+
+    The DROP list (keys above the cap) is tiny by construction — the
+    high-df tail. Collect it and push a NOT-IN literal filter: no join at
+    all on the main path. Pathologically large tails (>10k) fall back to a
+    broadcast anti-join. Broadcasting the keep-list would ship the entire
+    vocabulary — never do that. A window-count over the key would fold
+    this into the main job but has NO map-side combine: the mega-hot key
+    this cap exists for would all land in one task just to be counted.
+    groupBy partial-aggregates, so the df pass is itself skew-safe."""
+    drop = (
+        (rows if postings is None else postings)
+        .groupBy(key)
+        .count()
+        .filter(F.col("count") > cap)
+        .select(key)
     )
+    drop_vals = [r[key] for r in drop.limit(10_001).collect()]
+    if len(drop_vals) > 10_000:
+        return rows.join(F.broadcast(drop), key, "left_anti"), True
+    if drop_vals:
+        return rows.filter(~F.col(key).isin(drop_vals)), True
+    return rows, False
 
 
 def ngram_jaccard_pairs(
@@ -244,34 +287,13 @@ def ngram_jaccard_pairs(
     # sides — one shingling pass instead of four; released via
     # _materialize_release before returning
     sh = _shingles(docs, id_col, text_col, n).persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    if max_shingle_df is None:
-        return _materialize_release(_jaccard_from_shingles(sh, threshold, sizes), sh)
-    # the DROP list (shingles above the cap) is tiny by construction —
-    # the high-df tail. Collect it (one cheap agg over the cached
-    # shingle table) and push a NOT-IN literal filter: no join at all
-    # on the main path. Pathologically large tails (>10k) fall back to
-    # a broadcast anti-join. Broadcasting the keep-list would ship the
-    # entire vocabulary — never do that. A window-count over shingle
-    # would fold this into the main job but has NO map-side combine:
-    # the mega-hot shingle this cap exists for would all land in one
-    # task just to be counted. groupBy partial-aggregates, so the df
-    # pass is itself skew-safe.
-    drop = (
-        sh.groupBy("shingle")
-        .count()
-        .filter(F.col("count") > max_shingle_df)
-        .select("shingle")
+    kept, dropped = (
+        (sh, False)
+        if max_shingle_df is None
+        else _drop_high_df(sh, "shingle", max_shingle_df)
     )
-    drop_vals = [r["shingle"] for r in drop.limit(10_001).collect()]
-    if len(drop_vals) > 10_000:
-        kept = sh.join(F.broadcast(drop), "shingle", "left_anti")
-    elif drop_vals:
-        kept = sh.filter(~F.col("shingle").isin(drop_vals))
-    else:
-        kept = sh
-    pairs = _jaccard_from_shingles(kept, threshold, sizes)
-    if drop_vals and threshold <= 1.0:
+    pairs = _jaccard_from_shingles(kept, threshold, _set_sizes(sh))
+    if dropped and threshold <= 1.0:
         # mass-duplicate recovery: docs with ZERO surviving shingles are
         # exactly the > cap boilerplate families. Hash each such doc's FULL
         # sorted shingle set; identical sets ⇒ jaccard 1.0. Join on the
@@ -306,20 +328,56 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
+def _band_rows(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """LSH banding: (id, band_no, band_val), one row per document and band.
+    ``band_val`` hashes the band number with that band's ``rows_per_band``
+    signature rows, so equal values in different bands never collide."""
+    return sig.select(
+        "id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_no"),
+                        F.xxhash64(
+                            F.lit(b),
+                            *[
+                                F.col(f"h{b * rows_per_band + r}")
+                                for r in range(rows_per_band)
+                            ],
+                        ).alias("band_val"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("id", "bk.band_no", "bk.band_val")
+
+
+def _candidate_shingles(
+    docs: DataFrame, ids: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """Shingles of just the documents whose id is in ``ids`` (one
+    distinct ``id`` column, broadcast): verification explodes the
+    candidates, never the corpus."""
+    return _shingles(
+        docs.join(F.broadcast(ids.withColumnRenamed("id", id_col)), id_col, "left_semi"),
+        id_col,
+        text_col,
+        n,
+    )
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 32,
     n: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signatures: h_i(doc) = min over shingles of
     xxhash64(shingle, seed=i). Pure Catalyst — the per-seed min-aggregation
     is a single groupBy over the exploded shingle table.
-
-    ``shingles``: a prebuilt (id, shingle) table (e.g. persisted by the
-    caller so it is scanned instead of re-shingling).
 
     Each shingle STRING is hashed exactly once (xxhash64 → long); the per-
     seed family then hashes that fixed-width long, not the string again —
@@ -335,11 +393,7 @@ def minhash_signatures(
     also: F.transform treats a two-arg lambda as (element, index).)"""
     # multiset-safe: min over repeated shingles equals min over the set,
     # so skip the distinct shuffle entirely
-    sh = (
-        shingles
-        if shingles is not None
-        else _shingles(docs, id_col, text_col, n, distinct=False)
-    )
+    sh = _shingles(docs, id_col, text_col, n, distinct=False)
     based = sh.select("id", F.xxhash64("shingle").alias("bh"))
     aggs = [
         F.min(F.xxhash64(F.col("bh"), F.lit(i))).alias(f"h{i}")
@@ -383,24 +437,13 @@ def minhash_lsh_pairs(
     all-pairs default is unchanged).
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     # one shingle+agg pass for the signatures (nothing else consumes the
     # exploded table anymore — verification shingles only the candidates).
     # Persisted because the band self-join consumes sig on BOTH sides.
     sig = minhash_signatures(docs, num_hashes, n, id_col, text_col).persist()
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("id", *band_cols)
-    stacked = banded.select(
-        "id",
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("b"), F.col(f"band{b}").alias("v")) for b in range(bands)])
-        ).alias("bk"),
-    ).select("id", F.col("bk.b").alias("band_no"), F.col("bk.v").alias("band_val"))
+    banded = _band_rows(sig, bands, num_hashes // bands)
+    held = [sig]
+    star = None
     if max_bucket_size is not None:
         # one window pass tags every (band, bucket) with its size and
         # hub (min id); oversized buckets contribute star pairs with NO
@@ -408,74 +451,49 @@ def minhash_lsh_pairs(
         # the cap admits
         wb = Window.partitionBy("band_no", "band_val")
         tagged = (
-            stacked.withColumn("bsz", F.count("*").over(wb))
+            banded.withColumn("bsz", F.count("*").over(wb))
             .withColumn("bmin", F.min("id").over(wb))
             .persist()
         )
-        small = tagged.filter(F.col("bsz") <= max_bucket_size).select(
+        held.append(tagged)
+        banded = tagged.filter(F.col("bsz") <= max_bucket_size).select(
             "id", "band_no", "band_val"
         )
-        x = small.alias("x")
-        y = small.alias("y")
-        pair_small = (
-            x.join(y, ["band_no", "band_val"])
-            .where(F.col("x.id") < F.col("y.id"))
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        )
-        pair_star = (
+        star = (
             tagged.filter(
                 (F.col("bsz") > max_bucket_size) & (F.col("id") != F.col("bmin"))
             )
             # hub = bucket min, so id_a < id_b holds by construction
             .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
         )
-        candidates = pair_small.union(pair_star).distinct().cache()
-        candidates.count()  # materialize before releasing the window pass
-        tagged.unpersist()
-    else:
-        x = stacked.alias("x")
-        y = stacked.alias("y")
-        candidates = (
-            x.join(y, ["band_no", "band_val"])
-            .where(F.col("x.id") < F.col("y.id"))
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .distinct()
-        ).cache()
-    # exact verification restricted to candidate DOCUMENTS only: semi-join
-    # the corpus down to candidate ids and shingle JUST those (the LSH is
-    # selective, so this explodes a few hundred docs instead of the whole
-    # corpus — the full-corpus shingle pass is gone entirely), then the
-    # usual inverted-index intersection with exact per-doc set sizes
+    x = banded.alias("x")
+    y = banded.alias("y")
+    candidates = (
+        x.join(y, ["band_no", "band_val"])
+        .where(F.col("x.id") < F.col("y.id"))
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+    )
+    if star is not None:
+        candidates = candidates.union(star)
+    candidates = candidates.distinct().cache()
+    # exact verification restricted to candidate DOCUMENTS only (the LSH
+    # is selective, so this shingles a few hundred docs instead of the
+    # whole corpus), then to the candidate pairs: a postings self-join
+    # would regenerate ALL co-occurring pairs from each shingle's postings
+    # list — O(replicas^2) rows per shingle on a mass-duplicated corpus
+    # (measured: >25 min at the 500k-doc funnel)
     cand_ids = (
         candidates.select(F.col("id_a").alias("id"))
         .union(candidates.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    cand_docs = docs.join(
-        F.broadcast(cand_ids.withColumnRenamed("id", id_col)), id_col, "left_semi"
-    )
-    sh = _shingles(cand_docs, id_col, text_col, n)
-    if max_bucket_size is not None:
-        # pair-restricted verification: the postings self-join inside
-        # _jaccard_from_shingles regenerates ALL co-occurring pairs from
-        # each shingle's postings list — O(replicas^2) rows per shingle
-        # on a mass-duplicated corpus, which is exactly the blow-up the
-        # bucket cap removed from candidate generation (measured: the
-        # 500k-doc funnel spends >25 min there after the cap without
-        # this). Instead, explode each CANDIDATE pair to its left-side
-        # shingles and count matches on the (id_b, shingle) join —
-        # linear in pairs x shingles-per-doc.
-        result = _jaccard_for_pairs(sh, candidates, threshold)
-    else:
-        exact = _jaccard_from_shingles(sh, threshold)
-        result = candidates.join(exact, ["id_a", "id_b"]).select(
-            "id_a", "id_b", "jaccard"
-        )
+    sh = _candidate_shingles(docs, cand_ids, id_col, text_col, n)
+    result = _jaccard_for_pairs(sh, candidates, threshold)
     # eager-materialize the (small) pair list and release the cached
     # intermediates — without this, repeated calls in one session leak
     # storage blocks and pin shuffle files (round-2 judge: 4.75→9.47→13.2 s
     # monotonic slowdown on identical runs)
-    return _materialize_release(result, sig, candidates)
+    return _materialize_release(result, *held, candidates)
 
 
 # --------------------------------------------------------------------------
@@ -1007,6 +1025,44 @@ def _pair_spans(
     return sorted(out), truncated
 
 
+def _extend_seeds(
+    joined: DataFrame, k: int, min_len: int, max_seeds: int = 500
+) -> DataFrame:
+    """The one seed-extension pass: (id_a, id_b, seeds, text_a, text_b)
+    rows → (id_a, id_b, start_a, start_b, length, seeds_truncated), one row
+    per maximal span ≥ ``min_len`` (:func:`_pair_spans`), Arrow-batched.
+    A pair that hit the ``max_seeds`` cap and found no span still emits
+    one marker row (start_a=start_b=-1, length=0), so the cap is never
+    silent. Each id column keeps its input type."""
+    cols = ["id_a", "id_b", "start_a", "start_b", "length", "seeds_truncated"]
+    schema = (
+        f"id_a {joined.schema['id_a'].dataType.simpleString()}, "
+        f"id_b {joined.schema['id_b'].dataType.simpleString()}, "
+        "start_a int, start_b int, length int, seeds_truncated boolean"
+    )
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for id_a, id_b, seeds, text_a, text_b in zip(
+                pdf["id_a"], pdf["id_b"], pdf["seeds"], pdf["text_a"], pdf["text_b"]
+            ):
+                sd = [(int(s["pos_a"]), int(s["pos_b"])) for s in seeds]
+                spans, truncated = _pair_spans(
+                    text_a, text_b, sd, k, min_len, max_seeds=max_seeds
+                )
+                if truncated and not spans:
+                    spans = [(-1, -1, 0)]  # marker: seeds dropped, no span
+                rows.extend(
+                    (id_a, id_b, sa, sb, ln, truncated) for sa, sb, ln in spans
+                )
+            yield pd.DataFrame(rows, columns=cols)
+
+    return joined.select("id_a", "id_b", "seeds", "text_a", "text_b").mapInPandas(
+        run, schema
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     min_len: int = 50,
@@ -1014,7 +1070,6 @@ def duplicate_spans(
     window: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_fp_df: int | None = 1000,
     max_seeds: int = 500,
 ) -> DataFrame:
     """Cross-document duplicated character spans ≥ ``min_len`` — the
@@ -1043,21 +1098,10 @@ def duplicate_spans(
     ``min_len`` still emits one marker row (start_a=start_b=-1, length=0)
     so the cap is never silent. Raise ``max_seeds`` to trade compute for
     recall on such pairs."""
-    import pandas as pd
-
     fps = winnow_fingerprints(docs, k, window, id_col, text_col).persist()
-    pruned = fps
-    if max_fp_df is not None:
-        drop = (
-            fps.select("id", "fp").distinct()
-            .groupBy("fp").count()
-            .filter(F.col("count") > max_fp_df).select("fp")
-        )
-        drop_vals = [r["fp"] for r in drop.limit(10_001).collect()]
-        if len(drop_vals) > 10_000:
-            pruned = fps.join(F.broadcast(drop), "fp", "left_anti")
-        elif drop_vals:
-            pruned = fps.filter(~F.col("fp").isin(drop_vals))
+    pruned, _ = _drop_high_df(
+        fps, "fp", _MAX_FP_DF, fps.select("id", "fp").distinct()
+    )
     a = pruned.alias("a")
     b = pruned.alias("b")
     seeds = (
@@ -1077,43 +1121,7 @@ def duplicate_spans(
         seeds.join(texts.withColumnRenamed("tid", "id_a").withColumnRenamed("t", "text_a"), "id_a")
         .join(texts.withColumnRenamed("tid", "id_b").withColumnRenamed("t", "text_b"), "id_b")
     )
-    id_type = docs.schema[id_col].dataType.simpleString()
-    schema = (
-        f"id_a {id_type}, id_b {id_type}, start_a int, start_b int, "
-        f"length int, seeds_truncated boolean"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                sd = [(int(s["pos_a"]), int(s["pos_b"])) for s in pdf["seeds"].iloc[i]]
-                spans, truncated = _pair_spans(
-                    pdf["text_a"].iloc[i], pdf["text_b"].iloc[i], sd, k,
-                    min_len, max_seeds=max_seeds,
-                )
-                if truncated and not spans:
-                    spans = [(-1, -1, 0)]  # marker: seeds dropped, no span
-                for sa, sb, ln in spans:
-                    rows.append(
-                        {
-                            "id_a": pdf["id_a"].iloc[i],
-                            "id_b": pdf["id_b"].iloc[i],
-                            "start_a": sa,
-                            "start_b": sb,
-                            "length": ln,
-                            "seeds_truncated": truncated,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id_a", "id_b", "start_a", "start_b", "length",
-                    "seeds_truncated",
-                ],
-            )
-
-    result = joined.mapInPandas(run, schema)
+    result = _extend_seeds(joined, k, min_len, max_seeds)
     return _materialize_release(result, fps)
 
 
@@ -1128,7 +1136,6 @@ def decontaminate(
     heldout_id_col: str = "doc_id",
     heldout_text_col: str = "text",
     exclude_same_id: bool = False,
-    max_fp_df: int | None = 1000,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / Pile procedure):
     flag corpus documents sharing a verbatim run ≥ ``min_len`` (normalized
@@ -1154,82 +1161,55 @@ def decontaminate(
     (see ``decontaminate_filter``). ``exclude_same_id`` skips identity
     pairs when both frames share an id space (self-decontamination runs).
     """
-    import pandas as pd
-
     fpc = winnow_fingerprints(corpus, k, window, id_col, text_col)
     fpe = winnow_fingerprints(heldout, k, window, heldout_id_col, heldout_text_col)
-    if max_fp_df is not None:
-        # cap on the EVAL side (the broadcast one): a boilerplate
-        # fingerprint present in >cap eval docs seeds cap× the work for
-        # no extra decision power — one hit already flags the doc
-        w = Window.partitionBy("fp").orderBy("id", "pos")
-        fpe = fpe.withColumn("rn", F.row_number().over(w)).filter(
-            F.col("rn") <= max_fp_df
-        ).drop("rn")
+    # cap on the EVAL side (the broadcast one): a boilerplate fingerprint
+    # present in >cap eval docs seeds cap× the work for no extra decision
+    # power — one hit already flags the doc
+    w = Window.partitionBy("fp").orderBy("id", "pos")
+    fpe = fpe.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= _MAX_FP_DF
+    ).drop("rn")
+    # the corpus side is a, the held-out side b, for the shared extension
     seeds = (
         fpc.alias("c")
         .join(F.broadcast(fpe.alias("e")), "fp")
         .select(
-            F.col("c.id").alias("cid"),
-            F.col("e.id").alias("eid"),
-            F.col("c.pos").alias("pos_c"),
-            F.col("e.pos").alias("pos_e"),
+            F.col("c.id").alias("id_a"),
+            F.col("e.id").alias("id_b"),
+            F.col("c.pos").alias("pos_a"),
+            F.col("e.pos").alias("pos_b"),
         )
     )
     if exclude_same_id:
-        seeds = seeds.where(F.col("cid") != F.col("eid"))
-    grouped = seeds.groupBy("cid", "eid").agg(
-        F.collect_set(F.struct(F.col("pos_c").alias("pos_a"), F.col("pos_e").alias("pos_b"))).alias("seeds")
+        seeds = seeds.where(F.col("id_a") != F.col("id_b"))
+    grouped = seeds.groupBy("id_a", "id_b").agg(
+        F.collect_set(F.struct("pos_a", "pos_b")).alias("seeds")
     )
-    ctexts = corpus.select(F.col(id_col).alias("cid"), F.col(text_col).alias("text_c"))
+    ctexts = corpus.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a"))
     etexts = heldout.select(
-        F.col(heldout_id_col).alias("eid"), F.col(heldout_text_col).alias("text_e")
+        F.col(heldout_id_col).alias("id_b"), F.col(heldout_text_col).alias("text_b")
     )
-    joined = grouped.join(ctexts, "cid").join(F.broadcast(etexts), "eid")
-    cid_type = corpus.schema[id_col].dataType.simpleString()
-    eid_type = heldout.schema[heldout_id_col].dataType.simpleString()
-    span_schema = (
-        f"cid {cid_type}, eid {eid_type}, start_c int, length int, "
-        f"seeds_truncated boolean"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                sd = [(int(s["pos_a"]), int(s["pos_b"])) for s in pdf["seeds"].iloc[i]]
-                spans, truncated = _pair_spans(
-                    pdf["text_c"].iloc[i], pdf["text_e"].iloc[i], sd, k, min_len
-                )
-                if truncated and not spans:
-                    spans = [(-1, -1, 0)]  # marker: seeds dropped, no span
-                for sa, _sb, ln in spans:
-                    rows.append(
-                        {
-                            "cid": pdf["cid"].iloc[i],
-                            "eid": pdf["eid"].iloc[i],
-                            "start_c": sa,
-                            "length": ln,
-                            "seeds_truncated": truncated,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["cid", "eid", "start_c", "length", "seeds_truncated"],
-            )
-
-    spans = joined.mapInPandas(run, span_schema)
+    joined = grouped.join(ctexts, "id_a").join(F.broadcast(etexts), "id_b")
+    spans = _extend_seeds(joined, k, min_len)
     # per-corpus-doc rollup; contaminated_chars = merged-interval coverage
     # (pure Catalyst: sorted-array fold over (start, end) structs)
     merged_chars = F.aggregate(
-        F.sort_array(F.collect_list(F.struct(F.col("start_c"), (F.col("start_c") + F.col("length")).alias("end_c")))),
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.col("start_a").alias("start"),
+                    (F.col("start_a") + F.col("length")).alias("end"),
+                )
+            )
+        ),
         F.struct(F.lit(0).alias("covered"), F.lit(-1).alias("end")),
         lambda acc, s: F.struct(
             (
                 acc["covered"]
-                + F.greatest(s["end_c"] - F.greatest(s["start_c"], acc["end"]), F.lit(0))
+                + F.greatest(s["end"] - F.greatest(s["start"], acc["end"]), F.lit(0))
             ).alias("covered"),
-            F.greatest(s["end_c"], acc["end"]).alias("end"),
+            F.greatest(s["end"], acc["end"]).alias("end"),
         ),
         lambda acc: acc["covered"],
     )
@@ -1238,9 +1218,9 @@ def decontaminate(
     # counts (and contribute 0 to the interval coverage by construction)
     real = F.col("length") > 0
     return (
-        spans.groupBy(F.col("cid").alias("doc_id"))
+        spans.groupBy(F.col("id_a").alias("doc_id"))
         .agg(
-            F.countDistinct(F.when(real, F.col("eid"))).alias("n_eval_docs"),
+            F.countDistinct(F.when(real, F.col("id_b"))).alias("n_eval_docs"),
             F.sum(real.cast("long")).alias("n_spans"),
             merged_chars.alias("contaminated_chars"),
             F.max("seeds_truncated").alias("seeds_truncated"),
@@ -1274,21 +1254,13 @@ def winnow_overlap_pairs(
     window: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_fp_df: int | None = 1000,
 ) -> DataFrame:
     """Content-overlap candidate pairs: documents sharing ≥ ``min_shared``
     winnowing fingerprints (the plagiarism/near-dup detection shape —
     MOSS). Inverted-index join on the fingerprint (never all-pairs) with
     the same high-df skew cap as the shingle family."""
     fps = winnow_fingerprints(docs, k, window, id_col, text_col).select("id", "fp").distinct().persist()
-    pruned = fps
-    if max_fp_df is not None:
-        drop = fps.groupBy("fp").count().filter(F.col("count") > max_fp_df).select("fp")
-        drop_vals = [r["fp"] for r in drop.limit(10_001).collect()]
-        if len(drop_vals) > 10_000:
-            pruned = fps.join(F.broadcast(drop), "fp", "left_anti")
-        elif drop_vals:
-            pruned = fps.filter(~F.col("fp").isin(drop_vals))
+    pruned, _ = _drop_high_df(fps, "fp", _MAX_FP_DF)
     a = pruned.alias("a")
     b = pruned.alias("b")
     result = (
@@ -1306,7 +1278,6 @@ def dedup_lines(
     max_line_df: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_line_chars: int = 10,
     separator: str = "\n",
 ) -> DataFrame:
     """Corpus-wide boilerplate-line removal (the C4 / RefinedWeb curation
@@ -1320,7 +1291,7 @@ def dedup_lines(
     RefinedWeb granularity); any literal separator works — the unit is
     whatever the split produces, and reassembly uses the same separator.
 
-    Lines shorter than ``min_line_chars`` after trimming (including empty
+    Lines shorter than ``_MIN_LINE_CHARS`` after trimming (including empty
     lines) are exempt: one-word lines ("Home", "Menu") are too ambiguous
     to kill corpus-wide, and empty lines are structure, not content.
 
@@ -1349,7 +1320,7 @@ def dedup_lines(
         "norm",
         F.regexp_replace(F.col("line"), r"^\s+|\s+$", ""),
     )
-    eligible = F.length(F.col("norm")) >= min_line_chars
+    eligible = F.length(F.col("norm")) >= _MIN_LINE_CHARS
     drop = (
         lines.filter(eligible)
         .select("id", F.xxhash64("norm").alias("lh"))
@@ -1536,78 +1507,27 @@ def minhash_lsh_incremental(
             history_docs, num_hashes, n, id_col, text_col
         ).persist()
         own_hist = True
-
-    def _stack(sig):
-        band_cols = [
-            F.xxhash64(
-                F.lit(b),
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
-            ).alias(f"band{b}")
-            for b in range(bands)
-        ]
-        return (
-            sig.select("id", *band_cols)
-            .select(
-                "id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(b).alias("b"), F.col(f"band{b}").alias("v")
-                            )
-                            for b in range(bands)
-                        ]
-                    )
-                ).alias("bk"),
-            )
-            .select("id", F.col("bk.b").alias("band_no"), F.col("bk.v").alias("band_val"))
-        )
-
     candidates = (
-        _stack(sig_new)
+        _band_rows(sig_new, bands, rows_per_band)
         .alias("x")
-        .join(_stack(sig_hist).alias("y"), ["band_no", "band_val"])
+        .join(
+            _band_rows(sig_hist, bands, rows_per_band).alias("y"),
+            ["band_no", "band_val"],
+        )
         .where(F.col("x.id") != F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     ).cache()
-    cand_new = new_docs.join(
-        F.broadcast(
-            candidates.select(F.col("id_a").alias(id_col)).distinct()
-        ),
-        id_col,
-        "left_semi",
+    # the two sides shingle separately: a re-ingested document may carry
+    # the id it has in history, so one merged table would mix two texts
+    sh_new = _candidate_shingles(
+        new_docs, candidates.select(F.col("id_a").alias("id")).distinct(),
+        id_col, text_col, n,
     )
-    cand_hist = history_docs.join(
-        F.broadcast(
-            candidates.select(F.col("id_b").alias(id_col)).distinct()
-        ),
-        id_col,
-        "left_semi",
+    sh_hist = _candidate_shingles(
+        history_docs, candidates.select(F.col("id_b").alias("id")).distinct(),
+        id_col, text_col, n,
     )
-    sh_new = _shingles(cand_new, id_col, text_col, n).select(
-        F.col("id"), F.col("shingle")
-    )
-    sh_hist = _shingles(cand_hist, id_col, text_col, n)
-    sz_new = sh_new.groupBy("id").agg(F.count("*").alias("sz"))
-    sz_hist = sh_hist.groupBy("id").agg(F.count("*").alias("sz"))
-    inter = (
-        sh_new.alias("a")
-        .join(sh_hist.alias("b"), "shingle")
-        .where(F.col("a.id") != F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    exact = (
-        inter.join(sz_new.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sz_hist.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    result = candidates.join(exact, ["id_a", "id_b"]).select("id_a", "id_b", "jaccard")
+    result = _jaccard_for_pairs(sh_new, candidates, threshold, sh_hist)
     released = [sig_new, candidates] + ([sig_hist] if own_hist else [])
     return _materialize_release(result, *released)

@@ -83,6 +83,7 @@ def run_extraction(
     docs processed/failed, batches committed.
     """
     from readur_spark.sources.table_format import (
+        literal_path,
         overwrite_partitions,
         read_table,
         resolve_format,
@@ -94,6 +95,11 @@ def run_extraction(
         )
     table_format = resolve_format(spark, table_format)
     run_id = run_id or new_run_id()
+    # the committed output is read back for lineage metrics: a parquet
+    # path is globbed on read, an Iceberg identifier is not
+    output_table = (
+        output_path if table_format == "iceberg" else literal_path(output_path)
+    )
     ckpt = CheckpointTable(spark, checkpoint_path, table_format=table_format)
     done = ckpt.completed_partitions()
     prev_attempts = ckpt.attempts_so_far()
@@ -181,7 +187,7 @@ def run_extraction(
 
         # lineage metrics from the committed output (not in-flight state)
         metrics = (
-            read_table(spark, output_path, table_format)
+            read_table(spark, output_table, table_format)
             .filter(F.col("partition_id").isin(chunk))
             .groupBy("partition_id")
             .agg(

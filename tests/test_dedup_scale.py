@@ -372,6 +372,39 @@ def test_decontaminate_merged_intervals_no_double_count(spark):
     assert row["contaminated_chars"] <= len(run) + 2
 
 
+def test_decontaminate_mixed_id_types(spark):
+    """A long corpus id against a string held-out id: the output keeps the
+    corpus id type, and the flags equal a run whose ids share one type."""
+    from pyspark.sql.types import LongType
+
+    eval_q = (
+        "what is the capital of france and why does it matter to "
+        "geography students everywhere"
+    )
+    corpus = spark.createDataFrame(
+        [
+            (1, f"training doc that leaks the question {eval_q} plus more"),
+            (2, "a clean training document with entirely original content here"),
+            (3, f"another leak {eval_q} and {eval_q} twice even"),
+        ],
+        "doc_id long, text string",
+    )
+    mixed = dedup.decontaminate(
+        corpus,
+        spark.createDataFrame([("e1", eval_q)], "doc_id string, text string"),
+        min_len=50,
+    )
+    same = dedup.decontaminate(
+        corpus,
+        spark.createDataFrame([(101, eval_q)], "doc_id long, text string"),
+        min_len=50,
+    )
+    assert mixed.schema["doc_id"].dataType == LongType()
+    got = sorted(tuple(r) for r in mixed.collect())
+    assert [r[0] for r in got] == [1, 3]
+    assert got == sorted(tuple(r) for r in same.collect())
+
+
 def test_dedup_lines_removes_boilerplate_preserves_order(spark):
     """C4/RefinedWeb line dedup: a footer shared by >max_line_df docs
     vanishes from every doc; unique lines keep their original order;
@@ -547,6 +580,49 @@ def test_minhash_incremental_leaves_caller_signatures_persisted(spark, docs):
     ).collect()
     assert sigs.storageLevel.useMemory  # still persisted
     sigs.unpersist()
+
+
+def test_minhash_incremental_overlapping_ids_verify_each_side(spark):
+    """A document edited and re-ingested under the id it has in history:
+    the batch and history sides must stay separate through verification.
+    No identity pair is emitted, and every cross pair scores the exact
+    Jaccard of its own two texts (a verifier that merged both sides into
+    one shingle table would score id 1 as the union of both versions)."""
+    base = _long_varied_text(60, "reingest").split()
+
+    def edit(tag: str, positions) -> str:
+        words = list(base)
+        for p in positions:
+            words[p] = f"{tag}{p}"
+        return " ".join(words)
+
+    hist_texts = {
+        1: " ".join(base),
+        2: edit("h", [10, 40]),
+        4: _long_varied_text(60, "unrelated"),
+    }
+    new_texts = {1: edit("n", [20, 50]), 3: edit("m", [30])}
+    hist = spark.createDataFrame(list(hist_texts.items()), "doc_id long, text string")
+    new = spark.createDataFrame(list(new_texts.items()), "doc_id long, text string")
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.minhash_lsh_incremental(
+            new, hist, threshold=0.5, num_hashes=32, bands=8, n=1
+        ).collect()
+    }
+    assert all(a != b for a, b in got)
+    # the exact score of each (new, history) text pair, ids kept apart
+    both = spark.createDataFrame(
+        [(i + 100, t) for i, t in new_texts.items()] + list(hist_texts.items()),
+        "doc_id long, text string",
+    )
+    exact = {
+        (r.id_b - 100, r.id_a): r.jaccard
+        for r in dedup.ngram_jaccard_pairs(both, threshold=0.5, n=1).collect()
+        if r.id_b >= 100 > r.id_a
+    }
+    assert got == {(a, b): j for (a, b), j in exact.items() if a != b}
+    assert set(got) == {(1, 2), (3, 1), (3, 2)}
 
 
 def test_dedup_lines_paragraph_mode(spark):

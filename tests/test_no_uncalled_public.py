@@ -1,8 +1,10 @@
-"""Every top-level public ``def`` and ``class`` in ``readur_spark`` has a
-caller outside ``tests/``: a job, a tool, the registry, the benchmark or
-another module of the package. A name counts as called when some ``.py``
-file outside ``tests/`` mentions it as an AST ``Name``, an attribute or an
-import; docstrings and comments do not count.
+"""Every top-level public ``def`` and ``class`` in ``readur_spark``, and
+every public method of those classes, has a caller outside ``tests/``: a
+job, a tool, the registry, the benchmark or another module of the package.
+A name counts as called when some ``.py`` file outside ``tests/`` mentions
+it as an AST ``Name``, an attribute or an import; docstrings and comments
+do not count. A method is listed as ``Class.method`` and counts as called
+when its bare name does.
 
 Public code that only tests call is deleted instead of kept, unless it is
 listed below with its reason: a readur-parity row of ``COVERAGE.md``, a
@@ -27,6 +29,8 @@ ALLOWED = {
     "are_compatible": "COVERAGE M4 MIME compatibility",
     "read_binary_dir": "COVERAGE S2 batch directory scan",
     "size_priority": "COVERAGE Q2 size to priority",
+    "CheckpointTable.cleanup_completed": "COVERAGE Q8 checkpoint cleanup",
+    "TesseractEngine.available": "COVERAGE I1-I4 OCR engine adapter",
     # references the tests compare against
     "extract_main_content_reference": "reference for the fast HTML extractor",
     # fixture encoders
@@ -39,14 +43,22 @@ ALLOWED = {
 }
 
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
 def _public_defs() -> dict[str, str]:
+    """Public top-level names and ``Class.method`` names → defining file."""
     defs = {}
     for path in sorted((ROOT / "readur_spark").rglob("*.py")):
+        where = str(path.relative_to(ROOT))
         for node in ast.parse(path.read_text()).body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
-                defs[node.name] = str(path.relative_to(ROOT))
+            if not isinstance(node, (*_DEFS, ast.ClassDef)) or node.name.startswith("_"):
+                continue
+            defs[node.name] = where
+            if isinstance(node, ast.ClassDef):
+                for member in node.body:
+                    if isinstance(member, _DEFS) and not member.name.startswith("_"):
+                        defs[f"{node.name}.{member.name}"] = where
     return defs
 
 
@@ -72,7 +84,7 @@ def test_every_public_def_has_a_non_test_caller():
     uncalled = {
         name: where
         for name, where in defs.items()
-        if name not in refs and name not in ALLOWED
+        if name.rsplit(".", 1)[-1] not in refs and name not in ALLOWED
     }
     assert uncalled == {}, (
         "public defs with no caller outside tests/: give each a caller, "
@@ -86,4 +98,4 @@ def test_allowlist_is_current():
     defs = _public_defs()
     refs = _referenced_names()
     assert sorted(n for n in ALLOWED if n not in defs) == []
-    assert sorted(n for n in ALLOWED if n in refs) == []
+    assert sorted(n for n in ALLOWED if n.rsplit(".", 1)[-1] in refs) == []

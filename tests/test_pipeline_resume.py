@@ -339,3 +339,18 @@ def test_staged_input_dropped_under_glob_metachar_checkpoint_path(spark, dirs):
     assert os.path.isdir(decoy)
     again = run_extraction(spark, docs, out, ckpt_path, num_partitions=4)
     assert again["partitions_skipped"] == 4
+
+
+def test_glob_metachar_output_path_completes_and_resumes(spark, dirs):
+    """An output path holding ``[1]`` is a literal name: each chunk's
+    lineage metrics read back the committed output, not a glob that
+    matches nothing."""
+    out, ckpt_path = dirs
+    out = f"{out}[1]"
+    docs = docs_dataframe(spark, 40, seed=9)
+    s = run_extraction(
+        spark, docs, out, ckpt_path, num_partitions=4, batch_partitions=2
+    )
+    assert s["partitions_processed"] == 4 and s["docs_processed"] == 40
+    again = run_extraction(spark, docs, out, ckpt_path, num_partitions=4)
+    assert again["partitions_processed"] == 0
