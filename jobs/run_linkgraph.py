@@ -31,8 +31,8 @@ counts).
 Scale notes: outlink extraction is codegen'd regex (no UDF); the rank
 loop is one shuffle join + one groupBy per iteration on the uniform
 domain key with per-iteration localCheckpoint; blocklists and seed sets
-broadcast. The same shapes the 10^7-edge probe times in
-tools/linkgraph_bench.py.
+broadcast. BASELINE.md ("Round 7 — host-graph probe at 10^7 edges")
+records these shapes timed at local[32].
 """
 
 from __future__ import annotations

@@ -27,7 +27,6 @@ the same because reads always reduce to the latest-completed row).
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from readur_spark.sources.table_format import literal_path
+from readur_spark.sources.table_format import hadoop_fs, literal_path
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -60,7 +59,9 @@ class CheckpointTable:
     this container. ``table_format="iceberg"``: ``path`` is a catalog
     table identifier; appends are snapshot commits, cleanup is a
     metadata-only DELETE, and the rename recovery machinery is inert
-    (Iceberg's own commit protocol owns atomicity)."""
+    (Iceberg's own commit protocol owns atomicity). The parquet leg
+    reaches storage only through ``table_format.hadoop_fs``, so a
+    ``file://``, ``hdfs://`` or ``s3a://`` path resumes like a plain one."""
 
     def __init__(self, spark: SparkSession, path: str, table_format: str = "parquet"):
         from readur_spark.sources.table_format import resolve_format
@@ -76,29 +77,33 @@ class CheckpointTable:
         the crash hit between the renames → restore the old table (the
         compaction simply didn't happen). A ``.compact-*`` sibling is a
         write that never committed → drop it. If the main path exists, any
-        ``.old-*`` leftovers are already-superseded tables → drop them."""
-        import shutil
-
-        parent = os.path.dirname(self.path) or "."
-        base = os.path.basename(self.path)
-        if not os.path.isdir(parent):
+        ``.old-*`` leftovers are already-superseded tables → drop them.
+        Siblings are matched by name prefix, not by glob: the path may
+        itself hold glob metacharacters."""
+        fs, main = hadoop_fs(self.spark, self.path)
+        parent, base = main.getParent(), main.getName()
+        if not fs.exists(parent):
             return
-        sibs = [f for f in os.listdir(parent) if f.startswith(base + ".")]
-        main_exists = os.path.isdir(self.path)
-        for s in sibs:
-            full = os.path.join(parent, s)
-            if s.startswith(base + ".old-") and not main_exists:
-                os.rename(full, self.path)
+        main_exists = fs.exists(main)
+        for st in fs.listStatus(parent):
+            sib = st.getPath()
+            name = sib.getName()
+            if not name.startswith(base + "."):
+                continue
+            if name.startswith(base + ".old-") and not main_exists:
+                _rename(fs, sib, main)
                 main_exists = True
             else:
-                shutil.rmtree(full, ignore_errors=True)
+                fs.delete(sib, True)
 
     def exists(self) -> bool:
         if self.table_format == "iceberg":
             return self.spark.catalog.tableExists(self.path)
         self._recover()
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
+        fs, main = hadoop_fs(self.spark, self.path)
+        return fs.exists(main) and any(
+            st.getPath().getName().endswith(".parquet")
+            for st in fs.listStatus(main)
         )
 
     def read(self) -> DataFrame:
@@ -186,7 +191,6 @@ class CheckpointTable:
         (a tri-state NOT over a NULL comparison silently deleted them
         before): age unknown is not age expired."""
         import datetime
-        import shutil
 
         if not self.exists():
             return 0
@@ -213,14 +217,14 @@ class CheckpointTable:
         deleted = df.count() - len(rows)
         if deleted:
             token = uuid.uuid4().hex[:8]
-            tmp = f"{self.path}.compact-{token}"
-            old = f"{self.path}.old-{token}"
             self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
                 "overwrite"
-            ).parquet(tmp)
-            os.rename(self.path, old)
-            os.rename(tmp, self.path)
-            shutil.rmtree(old, ignore_errors=True)
+            ).parquet(f"{self.path}.compact-{token}")
+            fs, main = hadoop_fs(self.spark, self.path)
+            old = main.suffix(f".old-{token}")
+            _rename(fs, main, old)
+            _rename(fs, main.suffix(f".compact-{token}"), main)
+            fs.delete(old, True)
         return int(deleted)
 
     def stats(self) -> DataFrame:
@@ -237,6 +241,12 @@ class CheckpointTable:
                 F.max("processing_time_ms").alias("max_ms"),
             )
         )
+
+
+def _rename(fs, src, dst) -> None:
+    # Hadoop's rename reports failure by returning False, not by raising
+    if not fs.rename(src, dst):
+        raise OSError(f"checkpoint rename {src} -> {dst} failed")
 
 
 def new_run_id() -> str:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from readur_spark.operators.extract import extract_spans
 from readur_spark.plans.checkpoint import CheckpointTable, new_run_id
+from readur_spark.sources.table_format import hadoop_fs
 
 
 def assign_partitions(docs_df: DataFrame, num_partitions: int) -> DataFrame:
@@ -107,23 +108,8 @@ def run_extraction(
     planned = assign_partitions(docs_df, num_partitions)
     todo_pids = sorted(set(range(num_partitions)) - done)
     if not todo_pids:
-        # a prior batched run may have crashed between its LAST commit
-        # and its own cleanup — drop any leftover staged snapshot here
-        # too (no-op when none exists), so the corpus-sized orphan
-        # can't survive a crash-at-the-finish-line or a resume invoked
-        # without batch_partitions
-        _drop_staged_input(spark, checkpoint_path, table_format, num_partitions)
-        return {
-            "run_id": run_id,
-            "partitions_total": num_partitions,
-            "partitions_skipped": len(done),
-            "partitions_processed": 0,
-            "docs_processed": 0,
-            "docs_failed": 0,
-            "batches": 0,
-        }
-
-    if batch_partitions is None:
+        chunks = []
+    elif batch_partitions is None:
         chunks = [todo_pids]
         source = planned
     else:
@@ -229,7 +215,8 @@ def run_extraction(
     # checkpoint path would orphan ~1× the input per completed run. A
     # later run over new docs restages from its own source scan.
     # Unconditional (not only when THIS invocation batched): an unbatched
-    # resume of a crashed batched run must clean up too.
+    # resume of a crashed batched run must clean up too, and so must a
+    # no-op resume after a crash between the last commit and this drop.
     _drop_staged_input(spark, checkpoint_path, table_format, num_partitions)
 
     return {
@@ -273,22 +260,13 @@ def _stage_assigned_input(
         # probe always misses — every resume would re-stage the corpus
         # snapshot and lose the pinned-snapshot guarantee (r8 advisor
         # finding).
-        fs, p, jvm = _hadoop_fs(spark, staged)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(staged + "/_SUCCESS")):
+        fs, marker = hadoop_fs(spark, staged + "/_SUCCESS")
+        if not fs.exists(marker):
             planned.write.mode("overwrite").partitionBy(
                 "partition_id"
             ).parquet(staged)
         staged = literal_path(staged)  # read back this directory, not a glob
     return read_table(spark, staged, table_format)
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path, jvm) for ``path`` through the session's Hadoop
-    configuration — works for file://, hdfs://, s3a://, ... alike."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), p, jvm
 
 
 def _drop_staged_input(
@@ -311,7 +289,7 @@ def _drop_staged_input(
         # the existence probe above. Matched by name prefix, not by glob:
         # the checkpoint path may itself hold glob metacharacters.
         try:
-            fs, p, _ = _hadoop_fs(spark, checkpoint_path)
+            fs, p = hadoop_fs(spark, checkpoint_path)
             prefix = p.getName() + "_staged_p"
             for st in fs.listStatus(p.getParent()):
                 if st.getPath().getName().startswith(prefix):

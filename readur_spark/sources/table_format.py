@@ -80,6 +80,19 @@ def literal_path(path: str) -> str:
     return re.sub(r"([{}\[\]*?\\])", r"\\\1", path)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, qualified Path) for ``path`` through the session's
+    Hadoop configuration, so driver-side probes, listings, renames and
+    deletes reach the same storage the job writes to: file://, hdfs://,
+    s3a://, ... alike, and a bare path resolves as Spark resolves it.
+    Calls on it start no Spark job, and ``Path`` is literal (no glob)."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    return fs, fs.makeQualified(p)
+
+
 def read_table(spark: SparkSession, target: str, fmt: str = "parquet") -> DataFrame:
     """Scan ``target`` — a parquet path or an Iceberg table identifier.
     Both legs keep Catalyst predicate pushdown / column pruning (Iceberg

@@ -246,6 +246,71 @@ def test_materialize_roundtrip(spark, docs):
     man.unpersist()
 
 
+def _funnel(base, rep, seq_len):
+    """Replicate ``base`` ``rep`` times with distinct ids → extract_spans →
+    md5 content-fingerprint dedup (smallest doc_id per fingerprint, so the
+    '-1' replica survives) → manifest → stats → a corpus-level signature
+    of the materialized element streams (bit_xor of xxhash64 over each
+    sequence's canonical rendering keyed by seq_id)."""
+    from pyspark.sql.window import Window
+
+    from readur_spark.operators.extract import extract_spans
+    from readur_spark.operators.interleave import materialize_interleaved
+
+    reps = F.explode(F.sequence(F.lit(1), F.lit(rep))).alias("rep")
+    docs = (
+        base.select(reps, "doc_id", "spans")
+        .select(F.concat_ws("-", "doc_id", "rep").alias("doc_id"), "spans")
+        .repartition(8)
+    )
+    w = Window.partitionBy("__fp").orderBy("doc_id")
+    deduped = (
+        extract_spans(docs)
+        .filter(F.col("status") == "completed")
+        .withColumn("__fp", F.md5(F.to_json(F.col("spans"))))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__fp", "__rn")
+        .cache()
+    )
+    out = {"n_after_dedup": deduped.count()}
+    manifest = build_interleaved_sequences(deduped, seq_len=seq_len).cache()
+    agg = interleave_stats(manifest, seq_len).agg(
+        F.count("*").alias("n_seqs"),
+        F.sum("n_media").alias("n_media"),
+        F.sum(F.when(F.col("fill") < 1.0, 1).otherwise(0)).alias("n_underfull"),
+    ).collect()[0]
+    out["n_seqs"] = agg["n_seqs"]
+    out["n_media"] = int(agg["n_media"] or 0)
+    out["n_underfull"] = int(agg["n_underfull"] or 0)
+    render = F.md5(
+        F.concat_ws(
+            ";",
+            F.transform(
+                "elements",
+                lambda e: F.concat_ws(
+                    "|",
+                    e["pos"],
+                    e["kind"],
+                    F.coalesce(e["media_ref"], F.lit("")),
+                    F.coalesce(F.concat_ws(",", e["ids"]), F.lit("")),
+                    e["n_tokens"],
+                ),
+            ),
+        )
+    )
+    sig = (
+        materialize_interleaved(deduped, manifest, _len_encoder)
+        .select(F.xxhash64(F.concat_ws("#", F.col("seq_id"), render)).alias("h"))
+        .agg(F.expr("bit_xor(h)").alias("sig"))
+        .collect()[0]["sig"]
+    )
+    out["materialize_sig"] = int(sig or 0)
+    manifest.unpersist()
+    deduped.unpersist()
+    return out
+
+
 def test_interleave_funnel_rep_invariant(spark):
     """Funnel-level composition (r6 verdict, next-round #3): extract →
     fingerprint dedup → manifest → materialize produces BIT-IDENTICAL
@@ -253,15 +318,11 @@ def test_interleave_funnel_rep_invariant(spark):
     of every document — the dedup stage must collapse replication
     without disturbing stream order, and the downstream manifest /
     materialization must depend only on the surviving set."""
-    from tools.interleave_funnel_bench import run_funnel
-
-    from readur_spark.corpus import docs_dataframe
-
     base = docs_dataframe(spark, 150, seed=20260818).localCheckpoint(
         eager=True
     )
-    r1 = run_funnel(spark, base, rep=1, cpus=4, seq_len=256)
-    r20 = run_funnel(spark, base, rep=20, cpus=4, seq_len=256)
+    r1 = _funnel(base, rep=1, seq_len=256)
+    r20 = _funnel(base, rep=20, seq_len=256)
     assert r1["n_after_dedup"] == r20["n_after_dedup"]
     assert r1["materialize_sig"] == r20["materialize_sig"]
     assert r1["n_seqs"] == r20["n_seqs"]

@@ -31,6 +31,7 @@ ALLOWED = {
     "size_priority": "COVERAGE Q2 size to priority",
     "CheckpointTable.cleanup_completed": "COVERAGE Q8 checkpoint cleanup",
     "TesseractEngine.available": "COVERAGE I1-I4 OCR engine adapter",
+    "ingest_with_history_dedup": "COVERAGE continuous ingest + history dedup",
     # references the tests compare against
     "extract_main_content_reference": "reference for the fast HTML extractor",
     # fixture encoders
@@ -40,6 +41,7 @@ ALLOWED = {
     "tiff_encode": "fixture: TIFF encoder",
     "build_doc": "fixture: legacy .doc encoder",
     "train_bpe_from_texts": "fixture: one-call BPE tokenizer for test corpora",
+    "docs_dataframe": "fixture: synthetic interleaved document generator",
 }
 
 

@@ -21,20 +21,24 @@ def dirs():
 
 
 def test_full_run_then_noop_resume(spark, dirs):
+    """A finished run resumes as a no-op, for a plain path and for a
+    ``file://`` URI alike, and both runs report the same summary keys."""
     out, ckpt_path = dirs
     docs = docs_dataframe(spark, 80, seed=5)
-    s1 = run_extraction(spark, docs, out, ckpt_path, num_partitions=N_PARTS)
-    assert s1["partitions_processed"] == N_PARTS
-    assert s1["docs_processed"] == 80
+    for o, c in ((out, ckpt_path), (f"file://{out}_uri", f"file://{ckpt_path}_uri")):
+        s1 = run_extraction(spark, docs, o, c, num_partitions=N_PARTS)
+        assert s1["partitions_processed"] == N_PARTS
+        assert s1["docs_processed"] == 80
 
-    result = spark.read.parquet(out)
-    assert result.count() == 80
+        result = spark.read.parquet(o)
+        assert result.count() == 80
 
-    # resume with everything completed → no work
-    s2 = run_extraction(spark, docs, out, ckpt_path, num_partitions=N_PARTS)
-    assert s2["partitions_processed"] == 0
-    assert s2["partitions_skipped"] == N_PARTS
-    assert spark.read.parquet(out).count() == 80
+        # resume with everything completed → no work
+        s2 = run_extraction(spark, docs, o, c, num_partitions=N_PARTS)
+        assert s2["partitions_processed"] == 0, c
+        assert s2["partitions_skipped"] == N_PARTS
+        assert s2.keys() == s1.keys()
+        assert spark.read.parquet(o).count() == 80
 
 
 def test_crash_resume_reprocesses_only_incomplete(spark, dirs):
@@ -84,30 +88,32 @@ def test_lineage_metrics(spark, dirs):
 
 def test_cleanup_completed_q8(spark, tmp_path):
     """Q8 (queue.rs:1171-1184): completed rows older than the horizon are
-    deleted; fresh completed rows and non-completed rows survive."""
+    deleted; fresh completed rows and non-completed rows survive. A
+    ``file://`` URI table is compacted like a plain path."""
     import datetime
 
     from readur_spark.plans.checkpoint import CheckpointTable
 
-    ck = CheckpointTable(spark, str(tmp_path / "ck"))
-    now = datetime.datetime(2026, 8, 16, 12, 0, 0)
-    old = now - datetime.timedelta(days=10)
-    fresh = now - datetime.timedelta(hours=2)
-    ck.append(
-        [
-            {"run_id": "r1", "partition_id": 0, "status": "completed", "completed_at": old},
-            {"run_id": "r1", "partition_id": 1, "status": "completed", "completed_at": fresh},
-            {"run_id": "r1", "partition_id": 2, "status": "failed", "completed_at": old},
-        ]
-    )
-    deleted = ck.cleanup_completed(days_to_keep=7, now=now)
-    assert deleted == 1
-    remaining = {(r["partition_id"], r["status"]) for r in ck.read().collect()}
-    assert remaining == {(1, "completed"), (2, "failed")}
-    # idempotent
-    assert ck.cleanup_completed(days_to_keep=7, now=now) == 0
-    # expired partition is re-eligible on resume (its completed row is gone)
-    assert ck.completed_partitions() == {1}
+    for path in (str(tmp_path / "ck"), (tmp_path / "ck_uri").as_uri()):
+        ck = CheckpointTable(spark, path)
+        now = datetime.datetime(2026, 8, 16, 12, 0, 0)
+        old = now - datetime.timedelta(days=10)
+        fresh = now - datetime.timedelta(hours=2)
+        ck.append(
+            [
+                {"run_id": "r1", "partition_id": 0, "status": "completed", "completed_at": old},
+                {"run_id": "r1", "partition_id": 1, "status": "completed", "completed_at": fresh},
+                {"run_id": "r1", "partition_id": 2, "status": "failed", "completed_at": old},
+            ]
+        )
+        deleted = ck.cleanup_completed(days_to_keep=7, now=now)
+        assert deleted == 1, path
+        remaining = {(r["partition_id"], r["status"]) for r in ck.read().collect()}
+        assert remaining == {(1, "completed"), (2, "failed")}
+        # idempotent
+        assert ck.cleanup_completed(days_to_keep=7, now=now) == 0
+        # expired partition is re-eligible on resume (its completed row is gone)
+        assert ck.completed_partitions() == {1}
 
 
 def test_cleanup_retains_null_completed_at(spark, tmp_path):

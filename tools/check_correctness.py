@@ -12,8 +12,11 @@ Usage: python tools/check_correctness.py [name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -49,7 +52,6 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
 def main(only: list[str]) -> int:
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     from readur_spark.session import get_spark
 
@@ -128,7 +130,6 @@ def _parse_only(argv: list[str]) -> list[str]:
 if __name__ == "__main__":
     _only = _parse_only(sys.argv[1:])
     if _only:
-        sys.path.insert(0, "/root/repo")
         import __spark_entry__ as _e
 
         _unknown = sorted(set(_only) - set(_e.queries()))
