@@ -19,10 +19,13 @@ Semantics mirrored from the reference:
 * first-writer-wins commit = completed rows are never overwritten
   (db_guardrails_simple.rs:97 ``ocr_status != 'completed'`` guard).
 
-Storage is a parquet directory written append-only, one file per attempt
-batch (the local stand-in for an Iceberg table — swap ``_write``/``_read``
-for ``format("iceberg")`` + MERGE INTO on a real catalog; semantics are
-the same because reads always reduce to the latest-completed row).
+Storage is a parquet directory written append-only, one file per append.
+The driver writes each append's rows as one parquet file through the
+job's Hadoop FileSystem (a hidden temp file, then a rename), so an append
+starts no Spark job. ``table_format="iceberg"`` keeps the same table on a
+catalog instead: each append is a ``writeTo`` snapshot commit. Semantics
+are the same on both legs because reads always reduce to the
+latest-completed row.
 """
 
 from __future__ import annotations
@@ -30,9 +33,12 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from readur_spark.sources.table_format import hadoop_fs, literal_path
 
@@ -116,34 +122,19 @@ class CheckpointTable:
         )
 
     def append(self, rows: list[dict]) -> None:
-        if self.table_format != "iceberg":
-            self._recover()
-        df = self.spark.createDataFrame(
-            [
-                {
-                    "run_id": r["run_id"],
-                    "partition_id": int(r["partition_id"]),
-                    "status": r["status"],
-                    "attempts": int(r.get("attempts", 1)),
-                    "started_at": r.get("started_at"),
-                    "completed_at": r.get("completed_at"),
-                    "docs_processed": r.get("docs_processed"),
-                    "docs_failed": r.get("docs_failed"),
-                    "processing_time_ms": r.get("processing_time_ms"),
-                    "worker_id": r.get("worker_id"),
-                    "error_message": r.get("error_message"),
-                }
-                for r in rows
-            ],
-            CHECKPOINT_SCHEMA,
-        )
+        """One commit of ``rows``: one parquet file, or one Iceberg
+        snapshot."""
+        rows = [_checkpoint_row(r) for r in rows]
         if self.table_format == "iceberg":
+            df = self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
             if self.exists():
                 df.writeTo(self.path).append()
             else:
                 df.writeTo(self.path).create()
-        else:
-            df.write.mode("append").parquet(self.path)
+            return
+        self._recover()
+        fs, main = hadoop_fs(self.spark, self.path)
+        _write_file(self.spark, fs, main, rows)
 
     def completed_partitions(self) -> set[int]:
         """Partitions with a completed row in ANY run — first-writer-wins,
@@ -217,13 +208,12 @@ class CheckpointTable:
         deleted = df.count() - len(rows)
         if deleted:
             token = uuid.uuid4().hex[:8]
-            self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{self.path}.compact-{token}")
             fs, main = hadoop_fs(self.spark, self.path)
+            compact = main.suffix(f".compact-{token}")
+            _write_file(self.spark, fs, compact, [r.asDict() for r in rows])
             old = main.suffix(f".old-{token}")
             _rename(fs, main, old)
-            _rename(fs, main.suffix(f".compact-{token}"), main)
+            _rename(fs, compact, main)
             fs.delete(old, True)
         return int(deleted)
 
@@ -241,6 +231,51 @@ class CheckpointTable:
                 F.max("processing_time_ms").alias("max_ms"),
             )
         )
+
+
+_ARROW_SCHEMA = to_arrow_schema(CHECKPOINT_SCHEMA)
+_TIMESTAMP = T.TimestampType()
+
+
+def _checkpoint_row(r: dict) -> dict:
+    return {
+        "run_id": r["run_id"],
+        "partition_id": int(r["partition_id"]),
+        "status": r["status"],
+        "attempts": int(r.get("attempts", 1)),
+        "started_at": r.get("started_at"),
+        "completed_at": r.get("completed_at"),
+        "docs_processed": r.get("docs_processed"),
+        "docs_failed": r.get("docs_failed"),
+        "processing_time_ms": r.get("processing_time_ms"),
+        "worker_id": r.get("worker_id"),
+        "error_message": r.get("error_message"),
+    }
+
+
+def _write_file(spark: SparkSession, fs, directory, rows: list[dict]) -> None:
+    """Write ``rows`` as one ``part-<uuid>.parquet`` file in ``directory``
+    from the driver: serialized with pyarrow, written to a hidden temp
+    file (file-source reads skip ``.``-prefixed names) and renamed into
+    place, so a crash mid-write leaves no partial file visible.
+    Timestamps convert as PySpark's ``TimestampType.toInternal`` does (a
+    naive ``datetime`` is local time), so ``read()`` returns what
+    ``createDataFrame`` would have stored."""
+    columns = {f.name: [r[f.name] for r in rows] for f in CHECKPOINT_SCHEMA}
+    for name in ("started_at", "completed_at"):
+        columns[name] = [_TIMESTAMP.toInternal(v) for v in columns[name]]
+    table = pa.Table.from_pydict(columns, schema=_ARROW_SCHEMA)
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    tmp, final = Path(directory, f".{name}.tmp"), Path(directory, name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    _rename(fs, tmp, final)
 
 
 def _rename(fs, src, dst) -> None:

@@ -10,16 +10,22 @@ Deterministic partition assignment + partition-granular checkpointing:
 2. Partitions already marked ``completed`` in the checkpoint table are
    filtered out *before* the shuffle — a resume reads, shuffles, and
    processes only the remaining fraction.
-3. Results are written ``partitionBy(partition_id)`` with dynamic partition
-   overwrite: re-running a previously-crashed partition atomically replaces
-   its partial output, and completed partitions are never touched (the
+3. Each chunk of checkpoint partitions is shuffled once with
+   ``repartitionById``, one task per checkpoint partition, and written
+   ``partitionBy(partition_id)`` with dynamic partition overwrite:
+   re-running a previously-crashed partition atomically replaces its
+   partial output, and completed partitions are never touched (the
    first-writer-wins guard of
    /root/reference/src/db_guardrails_simple.rs:97).
-4. Only after the write succeeds are ``completed`` checkpoint rows appended,
-   with per-partition lineage metrics (docs processed/failed, wall-clock) —
-   the `ocr_metrics` analog (migrations/20250620100001:34-46).
+4. Only after the write succeeds are ``completed`` checkpoint rows
+   recorded, with per-partition lineage metrics read back from the
+   committed output (docs processed/failed, wall-clock) — the
+   `ocr_metrics` analog (migrations/20250620100001:34-46). They go out in
+   the same append as the next chunk's claim rows: one append per chunk
+   boundary, ``chunks + 1`` per run.
 
-Crash anywhere → no checkpoint row → the partition reruns next time.
+Crash anywhere → no completed row → the partition reruns next time.
+Needs Spark ≥ 4.1 (``DataFrame.repartitionById``).
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ from pyspark.sql import functions as F
 
 from readur_spark.operators.extract import extract_spans
 from readur_spark.plans.checkpoint import CheckpointTable, new_run_id
-from readur_spark.sources.table_format import hadoop_fs
+from readur_spark.sources.table_format import hadoop_fs, literal_path
 
 
 def assign_partitions(docs_df: DataFrame, num_partitions: int) -> DataFrame:
@@ -66,10 +72,10 @@ def run_extraction(
     one partition-overwrite — minimal IO, but a crash mid-run commits
     nothing and the whole todo set reruns. With ``batch_partitions=K``
     the todo set is processed in chunks of K partitions, each chunk its
-    own claim → extract → atomic partition-overwrite → completed-row
-    append, so a kill loses at most ONE in-flight chunk — the
-    difference between "restart the week-long run" and "lose 20
-    minutes" at 10^12 docs. To keep chunked runs from rescanning the
+    own claim → extract → atomic partition-overwrite → completed rows
+    (appended with the next chunk's claims), so a kill loses at most ONE
+    in-flight chunk — the difference between "restart the week-long
+    run" and "lose 20 minutes" at 10^12 docs. To keep chunked runs from rescanning the
     full source once per chunk (partition_id is a hash — no source-side
     pruning exists for it), the assigned input is first STAGED once to
     ``<checkpoint>_staged`` partitioned by partition_id; every chunk
@@ -84,9 +90,7 @@ def run_extraction(
     docs processed/failed, batches committed.
     """
     from readur_spark.sources.table_format import (
-        literal_path,
         overwrite_partitions,
-        read_table,
         resolve_format,
     )
 
@@ -96,11 +100,6 @@ def run_extraction(
         )
     table_format = resolve_format(spark, table_format)
     run_id = run_id or new_run_id()
-    # the committed output is read back for lineage metrics: a parquet
-    # path is globbed on read, an Iceberg identifier is not
-    output_table = (
-        output_path if table_format == "iceberg" else literal_path(output_path)
-    )
     ckpt = CheckpointTable(spark, checkpoint_path, table_format=table_format)
     done = ckpt.completed_partitions()
     prev_attempts = ckpt.attempts_so_far()
@@ -124,26 +123,40 @@ def run_extraction(
     total_wall_ms = 0
     total_processed = 0
     total_failed = 0
+    # the previous chunk's completed rows, committed together with the
+    # next chunk's claim rows: one checkpoint append per chunk boundary
+    completed_rows: list[dict] = []
     for chunk in chunks:
         todo = (
             source.filter(F.col("partition_id").isin(chunk))
             if (len(chunk) < num_partitions or done)
             else source
         )
-        # one explicit shuffle: co-locate each checkpoint partition
-        todo = todo.repartition(max(len(chunk), 1), "partition_id")
+        # one explicit shuffle, one task per checkpoint partition: the
+        # target is the partition id's position in the chunk (a hash of
+        # the id would put several ids in one task and leave others idle;
+        # the chunks of a resumed run are not contiguous ranges)
+        todo = todo.repartitionById(
+            len(chunk),
+            F.array_position(F.array(*map(F.lit, chunk)), F.col("partition_id"))
+            .cast("int")
+            - 1,
+        )
 
         started = datetime.datetime.now(datetime.timezone.utc).replace(
             tzinfo=None
         )
-        # claim rows first (readur's dequeue claims the item and bumps
-        # attempts inside the claiming transaction,
-        # src/ocr/queue.rs:165-318) — so attempt counts survive a crash
-        # that never commits results. Claims are per CHUNK: a partition's
-        # attempt count only bumps when its chunk is actually started.
+        # claim rows are durable before the chunk starts: they go out in
+        # one append with the previous chunk's completed rows (readur's
+        # dequeue claims the item and bumps attempts inside the claiming
+        # transaction, src/ocr/queue.rs:165-318) — so attempt counts
+        # survive a crash that never commits results. Claims are per
+        # CHUNK: a partition's attempt count only bumps when its chunk is
+        # actually started.
         attempts_now = {pid: prev_attempts.get(pid, 0) + 1 for pid in chunk}
         ckpt.append(
-            [
+            completed_rows
+            + [
                 {
                     "run_id": run_id,
                     "partition_id": pid,
@@ -173,7 +186,7 @@ def run_extraction(
 
         # lineage metrics from the committed output (not in-flight state)
         metrics = (
-            read_table(spark, output_table, table_format)
+            _read_output(spark, output_path, table_format)
             .filter(F.col("partition_id").isin(chunk))
             .groupBy("partition_id")
             .agg(
@@ -186,10 +199,10 @@ def run_extraction(
             .collect()
         )
         by_pid = {r["partition_id"]: r for r in metrics}
-        rows = []
+        completed_rows = []
         for pid in chunk:
             m = by_pid.get(pid)
-            rows.append(
+            completed_rows.append(
                 {
                     "run_id": run_id,
                     "partition_id": pid,
@@ -206,9 +219,10 @@ def run_extraction(
                     "error_message": None,
                 }
             )
-        ckpt.append(rows)
-        total_processed += sum(r["docs_processed"] for r in rows)
-        total_failed += sum(r["docs_failed"] for r in rows)
+        total_processed += sum(r["docs_processed"] for r in completed_rows)
+        total_failed += sum(r["docs_failed"] for r in completed_rows)
+    if completed_rows:
+        ckpt.append(completed_rows)
 
     # every partition is now committed: drop the staged snapshot — it is
     # corpus-sized (the whole assigned input), and leaving it under the
@@ -246,27 +260,38 @@ def _stage_assigned_input(
     snapshot the crashed run started from. The partition count is baked
     into the name so a resume with a different ``num_partitions`` never
     reuses a stale assignment."""
-    from readur_spark.sources.table_format import literal_path, read_table
-
     staged = f"{checkpoint_path}_staged_p{num_partitions}"
     if table_format == "iceberg":
         if not spark.catalog.tableExists(staged):
             planned.writeTo(staged).partitionedBy(
                 F.col("partition_id")
             ).create()
-    else:
-        # Hadoop FileSystem, not driver-local os.path: run_extraction is
-        # a spark-submit entry point, and on HDFS/S3 a local existence
-        # probe always misses — every resume would re-stage the corpus
-        # snapshot and lose the pinned-snapshot guarantee (r8 advisor
-        # finding).
-        fs, marker = hadoop_fs(spark, staged + "/_SUCCESS")
-        if not fs.exists(marker):
-            planned.write.mode("overwrite").partitionBy(
-                "partition_id"
-            ).parquet(staged)
-        staged = literal_path(staged)  # read back this directory, not a glob
-    return read_table(spark, staged, table_format)
+        return spark.read.table(staged)
+    # Hadoop FileSystem, not driver-local os.path: run_extraction is a
+    # spark-submit entry point, and on HDFS/S3 a local existence probe
+    # always misses — every resume would re-stage the corpus snapshot and
+    # lose the pinned-snapshot guarantee (r8 advisor finding).
+    fs, marker = hadoop_fs(spark, staged + "/_SUCCESS")
+    if not fs.exists(marker):
+        planned.write.mode("overwrite").partitionBy("partition_id").parquet(
+            staged
+        )
+    # this directory, not a glob; with the known schema, so no job infers it
+    return spark.read.schema(planned.schema).parquet(literal_path(staged))
+
+
+#: the committed output's columns that the lineage metrics read
+_LINEAGE_SCHEMA = "status string, processing_time_ms long, partition_id int"
+
+
+def _read_output(spark: SparkSession, output_path: str, table_format: str):
+    """The committed output, read back for the lineage metrics. A parquet
+    path is read as a literal directory (not a glob) with the schema of
+    the columns the metrics use, so no job infers it; an Iceberg
+    identifier is read as it is."""
+    if table_format == "iceberg":
+        return spark.read.table(output_path)
+    return spark.read.schema(_LINEAGE_SCHEMA).parquet(literal_path(output_path))
 
 
 def _drop_staged_input(

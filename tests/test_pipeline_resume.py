@@ -182,7 +182,11 @@ def test_cleanup_crash_recovery(spark, tmp_path):
 
 def test_batched_commits_match_single_commit(spark, dirs):
     """batch_partitions=K must produce exactly the single-commit result
-    (same rows, same spans), with one commit per chunk recorded."""
+    (same rows, same spans), with one commit per chunk recorded. Chunk
+    k's completed rows go out with chunk k+1's claims: 3 chunks write 4
+    checkpoint files, one claim and one completed row per partition."""
+    import os
+
     out, ckpt_path = dirs
     docs = docs_dataframe(spark, 80, seed=5)
     s = run_extraction(
@@ -191,6 +195,13 @@ def test_batched_commits_match_single_commit(spark, dirs):
     )
     assert s["batches"] == 3  # ceil(8 / 3)
     assert s["docs_processed"] == 80
+    files = [f for f in os.listdir(ckpt_path) if f.endswith(".parquet")]
+    assert len(files) == 4 and all(not f.startswith(".") for f in files)
+    rows = CheckpointTable(spark, ckpt_path).read().collect()
+    assert sorted((r["partition_id"], r["status"]) for r in rows) == sorted(
+        (p, st) for p in range(N_PARTS) for st in ("processing", "completed")
+    )
+    assert sum(r["docs_processed"] or 0 for r in rows) == 80
     batched = {
         r["doc_id"]: [tuple(x) for x in r["spans"]]
         for r in spark.read.parquet(out).collect()
@@ -360,3 +371,205 @@ def test_glob_metachar_output_path_completes_and_resumes(spark, dirs):
     assert s["partitions_processed"] == 4 and s["docs_processed"] == 40
     again = run_extraction(spark, docs, out, ckpt_path, num_partitions=4)
     assert again["partitions_processed"] == 0
+
+
+def test_append_starts_no_spark_job_and_adds_one_file(spark, tmp_path):
+    """A parquet-leg append is written from the driver: it starts no Spark
+    job and adds exactly one visible file to the table directory."""
+    import os
+
+    def visible():
+        return {f for f in os.listdir(ck.path) if not f.startswith((".", "_"))}
+
+    ck = CheckpointTable(spark, str(tmp_path / "ck"))
+    ck.append([{"run_id": "r", "partition_id": 0, "status": "processing"}])
+    before = visible()
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-append", "checkpoint append")
+    try:
+        ck.append(
+            [
+                {"run_id": "r", "partition_id": 0, "status": "completed"},
+                {"run_id": "r", "partition_id": 1, "status": "processing"},
+            ]
+        )
+        jobs = list(sc.statusTracker().getJobIdsForGroup("checkpoint-append"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    new = visible() - before
+    assert len(new) == 1 and next(iter(new)).endswith(".parquet")
+    assert len(ck.read().collect()) == 3
+    assert ck.completed_partitions() == {0}
+
+
+def test_append_timestamps_read_back_as_written(spark, tmp_path, monkeypatch):
+    """Naive datetimes are local time and aware ones are instants, as in
+    PySpark's ``TimestampType``: both read back as ``createDataFrame``
+    stores them. The driver runs in a non-UTC zone so that a naive value
+    taken as UTC would show."""
+    import datetime
+    import time
+
+    from readur_spark.plans.checkpoint import CHECKPOINT_SCHEMA
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        naive = datetime.datetime(2026, 7, 4, 23, 30, 15, 123456)
+        aware = datetime.datetime(
+            2026, 1, 2, 3, 4, 5, 678901,
+            tzinfo=datetime.timezone(datetime.timedelta(hours=5)),
+        )
+        rows = [
+            {"run_id": "r", "partition_id": 0, "status": "completed",
+             "started_at": naive, "completed_at": aware},
+            {"run_id": "r", "partition_id": 1, "status": "processing",
+             "started_at": aware, "completed_at": None},
+        ]
+        ck = CheckpointTable(spark, str(tmp_path / "ck"))
+        ck.append(rows)
+        got = sorted(ck.read().collect(), key=lambda r: r["partition_id"])
+        want = sorted(
+            spark.createDataFrame(
+                [{k: r.get(k) for k in CHECKPOINT_SCHEMA.names} | {"attempts": 1}
+                 for r in rows],
+                CHECKPOINT_SCHEMA,
+            ).collect(),
+            key=lambda r: r["partition_id"],
+        )
+        assert got == want
+        local_aware = aware.astimezone().replace(tzinfo=None)
+        assert got[0]["started_at"] == naive
+        assert got[0]["completed_at"] == local_aware
+        assert got[1]["started_at"] == local_aware
+        assert got[1]["completed_at"] is None
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_checkpoint_reads_spark_written_and_driver_written_files(spark, tmp_path):
+    """A table holding a file written by a Spark job (how appends were made
+    before the driver-side writer) and a driver-written one reads as one
+    table, so a run started on the old writer resumes on the new one."""
+    import datetime
+
+    from readur_spark.plans.checkpoint import CHECKPOINT_SCHEMA
+
+    path = str(tmp_path / "ck")
+    t = datetime.datetime(2026, 8, 16, 12, 0, 0)
+    old_rows = [
+        {"run_id": "r", "partition_id": p, "status": s, "attempts": 1,
+         "started_at": t, "completed_at": t if s == "completed" else None,
+         "docs_processed": 10 if s == "completed" else None,
+         "docs_failed": None, "processing_time_ms": None,
+         "worker_id": "r", "error_message": None}
+        for p in (0, 1) for s in ("processing", "completed")
+    ]
+    spark.createDataFrame(old_rows, CHECKPOINT_SCHEMA).write.mode(
+        "append"
+    ).parquet(path)
+    ck = CheckpointTable(spark, path)
+    ck.append(
+        [
+            {"run_id": "r2", "partition_id": 2, "status": "processing",
+             "attempts": 2, "started_at": t},
+        ]
+    )
+    got = sorted(
+        (r["partition_id"], r["status"], r["attempts"], r["started_at"])
+        for r in ck.read().collect()
+    )
+    assert got == [
+        (0, "completed", 1, t), (0, "processing", 1, t),
+        (1, "completed", 1, t), (1, "processing", 1, t),
+        (2, "processing", 2, t),
+    ]
+    assert ck.completed_partitions() == {0, 1}
+    assert ck.attempts_so_far() == {0: 1, 1: 1, 2: 2}
+
+
+def test_noncontiguous_chunk_gets_one_task_per_partition(spark, dirs, monkeypatch):
+    """A resumed run's chunk ``[1, 5, 6, 9]`` is not a contiguous range:
+    each of its checkpoint partitions still gets its own task."""
+    import readur_spark.plans.pipeline as pl
+
+    out, ckpt_path = dirs
+    chunk = [1, 5, 6, 9]
+    CheckpointTable(spark, ckpt_path).append(
+        [
+            {"run_id": "r0", "partition_id": p, "status": "completed"}
+            for p in range(12)
+            if p not in chunk
+        ]
+    )
+    seen = []
+    real_extract = pl.extract_spans
+
+    def recording_extract(todo, **kw):
+        seen.append(
+            todo.select("partition_id", F.spark_partition_id().alias("task"))
+            .distinct()
+            .collect()
+        )
+        return real_extract(todo, **kw)
+
+    monkeypatch.setattr(pl, "extract_spans", recording_extract)
+    docs = docs_dataframe(spark, 120, seed=5)
+    s = run_extraction(
+        spark, docs, out, ckpt_path, num_partitions=12, batch_partitions=4
+    )
+    assert s["batches"] == 1 and s["partitions_processed"] == 4
+    (pairs,) = seen
+    task_of = {r["partition_id"]: r["task"] for r in pairs}
+    assert len(pairs) == len(task_of) == 4, pairs  # one task per partition id
+    assert sorted(task_of) == chunk
+    assert sorted(task_of.values()) == [0, 1, 2, 3]
+
+
+def test_crash_before_boundary_append_reruns_the_chunk(spark, dirs, monkeypatch):
+    """A crash after chunk 1's overwrite but before the append that records
+    it completed leaves chunk 1 claimed, not completed: the resume reruns
+    it, and its output equals an uncrashed run's."""
+    real_append = CheckpointTable.append
+    calls = {"n": 0}
+
+    def crashing_append(self, rows):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash before the boundary append")
+        return real_append(self, rows)
+
+    out, ckpt_path = dirs
+    docs = docs_dataframe(spark, 80, seed=5)
+    monkeypatch.setattr(CheckpointTable, "append", crashing_append)
+    with pytest.raises(RuntimeError, match="simulated"):
+        run_extraction(
+            spark, docs, out, ckpt_path, num_partitions=N_PARTS, batch_partitions=4
+        )
+    monkeypatch.setattr(CheckpointTable, "append", real_append)
+
+    ckpt = CheckpointTable(spark, ckpt_path)
+    assert ckpt.completed_partitions() == set()
+    assert ckpt.attempts_so_far() == {p: 1 for p in range(4)}
+
+    s = run_extraction(
+        spark, docs, out, ckpt_path, num_partitions=N_PARTS, batch_partitions=4
+    )
+    assert s["partitions_skipped"] == 0 and s["partitions_processed"] == N_PARTS
+    att = ckpt.attempts_so_far()
+    assert all(att[p] == 2 for p in range(4))
+    assert all(att[p] == 1 for p in range(4, N_PARTS))
+    resumed = {
+        r["doc_id"]: [tuple(x) for x in r["spans"]]
+        for r in spark.read.parquet(out).collect()
+    }
+    out2, ckpt2 = out + "_ctl", ckpt_path + "_ctl"
+    run_extraction(spark, docs, out2, ckpt2, num_partitions=N_PARTS)
+    control = {
+        r["doc_id"]: [tuple(x) for x in r["spans"]]
+        for r in spark.read.parquet(out2).collect()
+    }
+    assert resumed == control

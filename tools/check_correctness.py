@@ -55,7 +55,7 @@ def main(only: list[str]) -> int:
     import __spark_entry__ as entry
     from readur_spark.session import get_spark
 
-    spark = get_spark(cores=8, app_name="correctness", shuffle_partitions=16)
+    spark = get_spark(app_name="correctness")
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"

@@ -19,10 +19,11 @@ Methodology:
   media per doc — real web pages are 10-100 KB) MATERIALIZED to parquet
   with 128 files before any timing, so the scan parallelizes and wave
   counts divide evenly at both levels.
-* **Protocol**: fresh JVM per level; full-corpus passthrough mapInPandas
-  warm-up (spawns every Python worker, warms the page cache, finishes
-  JIT); ``--reps`` timed repetitions, reported as median and quartiles;
-  throughput and efficiency are taken at the medians.
+* **Protocol**: fresh JVM per level; one untimed full-corpus extraction
+  as warm-up (spawns every Python worker, warms the page cache and the
+  extraction path's JIT); ``--reps`` timed repetitions, reported as
+  median and quartiles; throughput and efficiency are taken at the
+  medians.
 
 Usage: python tools/scaling_bench.py [--lo N --hi 4N --replicate 40]
 (default --hi is the host's cores, --lo a quarter of that).
@@ -81,7 +82,6 @@ spark.stop()
 
 WORKER = r"""
 import json, sys, time
-import pandas as pd
 from readur_spark.session import get_spark
 from readur_spark.operators.extract import extract_spans
 
@@ -90,11 +90,7 @@ spark = get_spark(cores=cores, app_name=f"scaling_{cores}")
 docs = spark.read.parquet(corpus)
 n = docs.count()
 
-def passthrough(batches):
-    for pdf in batches:
-        yield pd.DataFrame({"doc_id": pdf["doc_id"]})
-
-docs.mapInPandas(passthrough, "doc_id string").write.format("noop").mode("overwrite").save()
+extract_spans(docs).write.format("noop").mode("overwrite").save()  # warm-up
 times = []
 for _ in range(reps):
     t0 = time.perf_counter()
