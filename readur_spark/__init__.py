@@ -21,6 +21,42 @@ Layout:
                 search, multimodal plumbing)
     plans/      job plans: partitioning, checkpoint/lineage, resume
     sources/    readers (parquet, binaryFile, iceberg-behind-import-try)
+
+Importing the package makes ``importlib.invalidate_caches()`` re-read a
+zip or jar on ``sys.path`` only when that archive changed on disk
+(``_skip_unchanged_zip_rereads``): PySpark calls it at the start of every
+Python task, and re-parsing pyspark.zip, the spark-core jar and py4j cost
+each task about 0.25 s of Python CPU.
 """
 
+import os
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Wrap ``zipimporter.invalidate_caches`` so that an importer re-reads
+    its archive's directory only when the archive's ``(st_mtime_ns,
+    st_size, st_ino)`` differs from what it saw at its last read. An
+    archive that cannot be stat'ed is always re-read, and so is every
+    archive on an importer's first call. Idempotent."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_skips_unchanged", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches._skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_skip_unchanged_zip_rereads()

@@ -20,7 +20,12 @@ One ``mapInPandas`` stage over a skew-defused partitioning of the input:
 At cluster scale the same plan holds: the scan is columnar (only ``doc_id``
 + ``spans`` are read), the only shuffle is the planned repartition, and
 the UDF stage is embarrassingly parallel at ``num_partitions`` granularity
-(set it to 2–3× total executor cores).
+(set it to 2–3× total executor cores). Each Python task has a fixed cost of
+about 0.045 s of worker CPU: an identity ``mapInArrow`` over 20k
+``doc_id``s at 4, 8 and 32 tasks on ``local[4]``, with the package's guard
+against per-task zip re-reads in place (0.25 s without it). The kernel
+costs about 200 µs per document, so a task of 10^4 documents spends under
+3% of its time on that fixed cost.
 """
 
 from __future__ import annotations
@@ -119,9 +124,11 @@ def extract_spans(
 ) -> DataFrame:
     """Run the extraction pipeline over an interleaved-docs DataFrame.
 
-    ``num_partitions``: when set, ``plan_partitions`` first. Sizing guidance: ≈1× total cores when per-doc work
-    is light (Arrow/Python per-task overhead dominates otherwise), 2–3×
-    cores on a real cluster where tasks run seconds and elasticity matters.
+    ``num_partitions``: when set, ``plan_partitions`` first. Sizing
+    guidance: 2–3× total cores, so the stage keeps every core busy through
+    skew and elasticity. A Python task's fixed cost is about 0.045 s of
+    worker CPU (module docstring), the kernel's time for about 225
+    documents, so size tasks well above that: 10^4 documents or more.
     When ``None`` the input partitioning is kept (caller already planned).
 
     ``passthrough_cols``: input columns copied verbatim onto the output

@@ -180,20 +180,29 @@ class CheckpointTable:
 
         Rows with status='completed' but NULL ``completed_at`` are RETAINED
         (a tri-state NOT over a NULL comparison silently deleted them
-        before): age unknown is not age expired."""
+        before): age unknown is not age expired.
+
+        ``now`` defaults to the current instant; a naive ``now`` is local
+        time, as ``TimestampType`` reads it. Both legs compare against the
+        same UTC instant."""
         import datetime
 
         if not self.exists():
             return 0
-        now = now or datetime.datetime.now()
-        cutoff = now - datetime.timedelta(days=days_to_keep)
+        now = now or datetime.datetime.now(datetime.timezone.utc)
+        cutoff = (now - datetime.timedelta(days=days_to_keep)).astimezone(
+            datetime.timezone.utc
+        )
         if self.table_format == "iceberg":
-            # metadata-only delete, one snapshot commit — no rewrite/rename
+            # metadata-only delete, one snapshot commit — no rewrite/rename;
+            # the literal is the cutoff's UTC wall clock, read in the
+            # session zone, which ``session.get_spark`` pins to UTC
             before = self.read().count()
+            literal = cutoff.replace(tzinfo=None).isoformat(sep=" ")
             self.spark.sql(
                 f"DELETE FROM {self.path} WHERE status = 'completed' "
                 f"AND completed_at IS NOT NULL "
-                f"AND completed_at < TIMESTAMP '{cutoff.isoformat(sep=' ')}'"
+                f"AND completed_at < TIMESTAMP '{literal}'"
             )
             return int(before - self.read().count())
         df = self.read()

@@ -31,6 +31,7 @@ Needs Spark ≥ 4.1 (``DataFrame.repartitionById``).
 from __future__ import annotations
 
 import datetime
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -143,9 +144,9 @@ def run_extraction(
             - 1,
         )
 
-        started = datetime.datetime.now(datetime.timezone.utc).replace(
-            tzinfo=None
-        )
+        # aware UTC instants: ``TimestampType`` reads a naive value as
+        # local time, which shifts a naive UTC stamp on a non-UTC driver
+        started = datetime.datetime.now(datetime.timezone.utc)
         # claim rows are durable before the chunk starts: they go out in
         # one append with the previous chunk's completed rows (readur's
         # dequeue claims the item and bumps attempts inside the claiming
@@ -168,7 +169,7 @@ def run_extraction(
                 for pid in chunk
             ]
         )
-        t0 = datetime.datetime.now()
+        t0 = time.perf_counter()
         extracted = extract_spans(
             todo,
             repair_hyphens=repair_hyphens,
@@ -177,12 +178,8 @@ def run_extraction(
         overwrite_partitions(
             extracted, output_path, ["partition_id"], fmt=table_format
         )
-        total_wall_ms += int(
-            (datetime.datetime.now() - t0).total_seconds() * 1000
-        )
-        completed = datetime.datetime.now(datetime.timezone.utc).replace(
-            tzinfo=None
-        )
+        total_wall_ms += int((time.perf_counter() - t0) * 1000)
+        completed = datetime.datetime.now(datetime.timezone.utc)
 
         # lineage metrics from the committed output (not in-flight state)
         metrics = (

@@ -450,6 +450,89 @@ def test_append_timestamps_read_back_as_written(spark, tmp_path, monkeypatch):
         time.tzset()
 
 
+@pytest.fixture()
+def new_york_driver(monkeypatch):
+    """The driver's local zone is America/New_York, so a naive UTC stamp
+    read as local time would be off by four or five hours."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_job_stamps_read_back_as_true_instants(spark, dirs, new_york_driver):
+    """The rows ``run_extraction`` writes hold the instants they were
+    taken at, and retention measures age from them: a row completed
+    ``days_to_keep`` days + 1 h ago is deleted, one completed
+    ``days_to_keep`` days − 1 h ago is kept."""
+    import datetime
+
+    utc = datetime.timezone.utc
+    out, ckpt_path = dirs
+    docs = docs_dataframe(spark, 20, seed=5, num_partitions=2)
+    t_before = datetime.datetime.now(utc)
+    run_extraction(spark, docs, out, ckpt_path, num_partitions=2)
+    t_after = datetime.datetime.now(utc)
+
+    ck = CheckpointTable(spark, ckpt_path)
+    rows = ck.read().collect()
+    # collect() returns naive local datetimes, as TimestampType reads them
+    stamps = {r["started_at"].astimezone(utc) for r in rows}
+    completed = {
+        r["completed_at"].astimezone(utc) for r in rows if r["status"] == "completed"
+    }
+    assert len(stamps) == 1 and len(completed) == 1
+    (started,), (done,) = stamps, completed
+    assert t_before <= started <= done <= t_after
+
+    kept = done + datetime.timedelta(days=7, hours=-1)
+    expired = done + datetime.timedelta(days=7, hours=1)
+    assert ck.cleanup_completed(days_to_keep=7, now=kept) == 0
+    assert ck.cleanup_completed(days_to_keep=7, now=expired) == 2
+    assert ck.completed_partitions() == set()
+
+
+def test_cleanup_cutoff_is_one_instant_on_both_legs(
+    spark, tmp_path, new_york_driver, monkeypatch
+):
+    """With the default ``now``, the parquet leg's filter and the Iceberg
+    leg's ``DELETE`` predicate draw the retention boundary at the same
+    instant on a non-UTC driver, in the UTC session zone ``get_spark``
+    pins."""
+    import datetime
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = [
+        {"run_id": "r", "partition_id": 0, "status": "completed",
+         "completed_at": now - datetime.timedelta(days=7, hours=1)},
+        {"run_id": "r", "partition_id": 1, "status": "completed",
+         "completed_at": now - datetime.timedelta(days=7, hours=-1)},
+    ]
+    ck = CheckpointTable(spark, str(tmp_path / "ck"))
+    ck.append(rows)
+
+    # Iceberg leg, against a view of the same rows: capture its DELETE
+    # and evaluate its predicate
+    spark.read.parquet(ck.path).createOrReplaceTempView("ck_iceberg_leg")
+    ice = CheckpointTable(spark, str(tmp_path / "unused"))
+    ice.table_format, ice.path = "iceberg", "ck_iceberg_leg"
+    deletes = []
+    with monkeypatch.context() as m:
+        m.setattr(spark, "sql", deletes.append)
+        ice.cleanup_completed(days_to_keep=7)
+    (stmt,) = deletes
+    predicate = stmt.split(" WHERE ", 1)[1]
+    deleted = spark.table("ck_iceberg_leg").where(predicate).collect()
+    spark.catalog.dropTempView("ck_iceberg_leg")
+    assert {r["partition_id"] for r in deleted} == {0}
+
+    assert ck.cleanup_completed(days_to_keep=7) == 1
+    assert {r["partition_id"] for r in ck.read().collect()} == {1}
+
+
 def test_checkpoint_reads_spark_written_and_driver_written_files(spark, tmp_path):
     """A table holding a file written by a Spark job (how appends were made
     before the driver-side writer) and a driver-written one reads as one
