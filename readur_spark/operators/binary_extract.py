@@ -1,8 +1,10 @@
 """Binary-file extraction operator: (doc_id, filename, content) → spans.
 
 The Spark form of readur's MIME-dispatch extraction
-(/root/reference/src/ocr/enhanced.rs:1615-1692): one Arrow-batched
-``mapInPandas`` stage; per file the ladder is
+(``src/ocr/enhanced.rs:1615-1692``): ``extract_one`` is the
+per-file kernel and ``extract_files`` runs it through
+``operators.extract.map_documents``, the one Arrow-batched Python
+boundary; per file the ladder is
 
     detect_mime (magic bytes ▸ trusted server type ▸ extension)
     ├── text/plain & friends → O5 plain-text read (null strip, 10 MB
@@ -16,8 +18,8 @@ The Spark form of readur's MIME-dispatch extraction
     ├── legacy DOC (OLE2)    → external-tool ladder unavailable here →
     │       unsupported (the reference also degrades when
     │       antiword/catdoc/wvText are missing, xml_extractor.rs:1069-1152)
-    ├── image/*              → OCR required; stubbed (no tesseract in this
-    │       container) → unsupported_format failure with clear message
+    ├── image/*              → image-OCR ladder when an ``engine`` is
+    │       given; otherwise unsupported_format failure with clear message
     └── anything else        → "Unsupported file type" (enhanced.rs:1692)
 
 Every accepted result passes the document quality gate (W3) before being
@@ -28,10 +30,6 @@ the output into the results table and the failed_documents table (S8).
 
 from __future__ import annotations
 
-import time
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,26 +44,14 @@ from readur_spark.kernels.wordcount import (
     count_words_safely_enhanced,
     count_words_safely_office,
 )
+from readur_spark.operators.extract import SPANS_TYPE, map_documents
 
 BINARY_EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("filename", T.StringType(), True),
         T.StructField("mime_type", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType(), True),
-                        T.StructField("text", T.StringType(), True),
-                        T.StructField("media_ref", T.StringType(), True),
-                        T.StructField("order", T.IntegerType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
+        T.StructField("spans", SPANS_TYPE, True),
         T.StructField("confidence", T.FloatType(), True),
         T.StructField("word_count", T.IntegerType(), True),
         T.StructField("status", T.StringType(), False),
@@ -91,7 +77,7 @@ def _text_spans(text: str) -> list[dict]:
 
 
 def extract_one(doc_id: str, filename: str, content: bytes, server_mime: str | None = None,
-                ocr_stub: bool = True, engine=None, ocr_settings=None) -> dict:
+                engine=None, ocr_settings=None) -> dict:
     """Extract one file (pure kernel — unit-testable without Spark).
 
     ``engine``: optional pluggable OCR engine (kernels/ocr_engine). When
@@ -142,7 +128,7 @@ def extract_one(doc_id: str, filename: str, content: bytes, server_mime: str | N
 
             res = extract_pdf_with_engine(content or b"", engine, settings=ocr_settings)
         else:
-            res = extract_pdf(content or b"", ocr_stub=ocr_stub)
+            res = extract_pdf(content or b"")
         error = res["error"]
         if error is None:
             spans = _text_spans(res["text"])
@@ -251,7 +237,6 @@ def extract_one(doc_id: str, filename: str, content: bytes, server_mime: str | N
 
 def extract_files(
     files_df: DataFrame,
-    ocr_stub: bool = True,
     id_col: str = "doc_id",
     filename_col: str = "filename",
     content_col: str = "content",
@@ -265,31 +250,16 @@ def extract_files(
     100 MB skip of batch_ingest.rs:239-243 becomes a length filter the
     caller applies before this operator)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            server = (
-                pdf[server_mime_col] if server_mime_col and server_mime_col in pdf else None
-            )
-            for i in range(len(pdf)):
-                t0 = time.perf_counter()
-                r = extract_one(
-                    str(pdf[id_col].iloc[i]),
-                    pdf[filename_col].iloc[i],
-                    pdf[content_col].iloc[i],
-                    server.iloc[i] if server is not None else None,
-                    ocr_stub=ocr_stub,
-                    engine=engine,
-                    ocr_settings=ocr_settings,
-                )
-                r["processing_time_ms"] = int((time.perf_counter() - t0) * 1000)
-                rows.append(r)
-            yield pd.DataFrame(rows)
+    def kernel(doc_id, filename, content, server_mime=None):
+        return extract_one(
+            str(doc_id), filename, content, server_mime,
+            engine=engine, ocr_settings=ocr_settings,
+        )
 
-    cols = [id_col, filename_col, content_col] + (
-        [server_mime_col] if server_mime_col else []
-    )
-    return files_df.select(*cols).mapInPandas(run, schema=BINARY_EXTRACTED_SCHEMA)
+    inputs = [id_col, filename_col, content_col]
+    if server_mime_col:
+        inputs.append(server_mime_col)
+    return map_documents(files_df, inputs, kernel, BINARY_EXTRACTED_SCHEMA)
 
 
 def dead_letters(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -12,10 +12,13 @@ One ``mapInPandas`` stage over a skew-defused partitioning of the input:
   kept. The split count comes from Spark's own scan plan, without running
   a job (``operators.partitioning``). A single giant row is one task's
   work either way; AQE cannot split a row.
-* **Extraction**: iterator-of-batches pandas UDF. Each Arrow batch holds
-  many documents; each document is processed by the pure-Python kernel
-  (readur-parity semantics, see ``kernels.extractor``). No per-row Spark
-  serde — batch in, batch out over Arrow.
+* **Extraction**: ``map_documents``, the one Python boundary for every
+  per-document operator here and in ``binary_extract`` and
+  ``multimodal``. It ships only the columns the kernel reads (plus
+  passthrough), runs the pure-Python kernel (readur-parity semantics, see
+  ``kernels.extractor``) once per document of each Arrow batch, and
+  builds the output batch column-wise. No per-row Spark serde — batch
+  in, batch out over Arrow.
 
 At cluster scale the same plan holds: the scan is columnar (only ``doc_id``
 + ``spans`` are read), the only shuffle is the planned repartition, and
@@ -31,7 +34,7 @@ costs about 200 µs per document, so a task of 10^4 documents spends under
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,23 +44,22 @@ from pyspark.sql import types as T
 from readur_spark.kernels.extractor import extract_document
 from readur_spark.operators.partitioning import ensure_partitions
 
+#: The ordered span sequence every extraction operator emits.
+SPANS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("kind", T.StringType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("media_ref", T.StringType(), True),
+            T.StructField("order", T.IntegerType(), True),
+        ]
+    )
+)
+
 EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType(), True),
-                        T.StructField("text", T.StringType(), True),
-                        T.StructField("media_ref", T.StringType(), True),
-                        T.StructField("order", T.IntegerType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
+        T.StructField("spans", SPANS_TYPE, True),
         T.StructField("confidence", T.FloatType(), True),
         T.StructField("word_count", T.IntegerType(), True),
         T.StructField("status", T.StringType(), True),
@@ -79,41 +81,54 @@ def plan_partitions(docs_df: DataFrame, num_partitions: int) -> DataFrame:
     return ensure_partitions(docs_df, num_partitions, F.xxhash64("doc_id"))
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], repair_hyphens: bool, passthrough: list[str]
-):
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "spans": [],
-            "confidence": [],
-            "word_count": [],
-            "status": [],
-            "failure_reason": [],
-            "preprocessing_applied": [],
-            "processing_time_ms": [],
-        }
-        for col in passthrough:
-            out[col] = pdf[col].tolist()
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            t0 = time.perf_counter()
-            # Arrow delivers array<struct> elements as plain dicts with the
-            # span field names — hand them to the kernel without re-copying
-            # (one less dict per span on the hot path)
-            res = extract_document(
-                spans if spans is not None else [], repair_hyphens=repair_hyphens
-            )
-            out["doc_id"].append(doc_id)
-            out["spans"].append(res["spans"])
-            out["confidence"].append(res["confidence"])
-            out["word_count"].append(res["word_count"])
-            out["status"].append(res["status"])
-            out["failure_reason"].append(res["failure_reason"])
-            out["preprocessing_applied"].append(res["preprocessing_applied"])
-            out["processing_time_ms"].append(
-                int((time.perf_counter() - t0) * 1000)
-            )
-        yield pd.DataFrame(out)
+def map_documents(
+    df: DataFrame,
+    inputs: Sequence[str],
+    kernel: Callable[..., dict],
+    schema: T.StructType,
+    passthrough: Sequence[str] = (),
+) -> DataFrame:
+    """The one Python boundary for per-document operators: one row in, one
+    row out, over Arrow batches (``mapInPandas``).
+
+    Only the ``inputs`` and ``passthrough`` columns cross the boundary.
+    Per row, ``kernel(*values of inputs)`` returns a dict of output
+    fields; a ``schema`` field it leaves out is null, and
+    ``processing_time_ms``, when ``schema`` has it, is the kernel call's
+    wall time. A ``passthrough`` column is copied verbatim: in place when
+    ``schema`` names it, else appended with its input type. Output is
+    built column-wise, one list per field, never as row dicts.
+    """
+    names = schema.fieldNames()
+    schema = T.StructType(
+        schema.fields + [df.schema[c] for c in passthrough if c not in names]
+    )
+    computed = [
+        n for n in names if n not in passthrough and n != "processing_time_ms"
+    ]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {name: [] for name in schema.fieldNames()}
+            fill = [(out[name].append, name) for name in computed]
+            ms = out.get("processing_time_ms")
+            for values in zip(*(pdf[c] for c in inputs)):
+                t0 = time.perf_counter()
+                res = kernel(*values)
+                if ms is not None:
+                    ms.append(int((time.perf_counter() - t0) * 1000))
+                for append, name in fill:
+                    append(res.get(name))
+            for c in passthrough:
+                out[c] = pdf[c].tolist()
+            yield pd.DataFrame(out)
+
+    # in the input's column order, so a frame that has only these columns
+    # crosses unprojected
+    shipped = {*inputs, *passthrough}
+    return df.select(*(c for c in df.columns if c in shipped)).mapInPandas(
+        run, schema
+    )
 
 
 def extract_spans(
@@ -137,16 +152,15 @@ def extract_spans(
     if num_partitions:
         docs_df = plan_partitions(docs_df, num_partitions)
 
-    passthrough = passthrough_cols or []
-    schema = T.StructType(
-        EXTRACTED_SCHEMA.fields
-        + [docs_df.schema[c] for c in passthrough]
-    )
+    def kernel(spans):
+        # Arrow delivers array<struct> elements as plain dicts with the
+        # span field names — hand them to the kernel without re-copying
+        return extract_document(
+            spans if spans is not None else [], repair_hyphens=repair_hyphens
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_batches(batches, repair_hyphens, passthrough)
-
-    return docs_df.mapInPandas(run, schema=schema)
+    passthrough = ["doc_id", *(passthrough_cols or [])]
+    return map_documents(docs_df, ["spans"], kernel, EXTRACTED_SCHEMA, passthrough)
 
 
 def chunk_texts(

@@ -1,6 +1,9 @@
 """Multimodal column operators: opaque binary images + typed metadata.
 
-Images travel as ``binary`` columns. Image decode is REAL for every format
+Images travel as ``binary`` columns. Each operator here is a per-image
+kernel run through ``operators.extract.map_documents``, the one
+Arrow-batched Python boundary, which also fills the null fields of an
+image the kernel cannot read. Image decode is REAL for every format
 in the MIME table (PNG/JPEG/GIF/TIFF/BMP — in-repo stdlib+numpy codecs in
 kernels/pixels + kernels/minijpeg, EXIF auto-rotate applied).
 
@@ -12,9 +15,7 @@ auto-rotate I5 (document_ingestion.rs:356-408), smart resize I7
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,6 +27,7 @@ from readur_spark.kernels.media_meta import (
     parse_image_meta,
     smart_resize_dims,
 )
+from readur_spark.operators.extract import map_documents
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -46,63 +48,42 @@ IMAGE_META_SCHEMA = T.StructType(
 )
 
 
+def _bytes(raw) -> bytes:
+    return bytes(raw) if raw is not None else b""
+
+
 def image_metadata(
     media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
     """I17+I5+I7 metadata/decision extraction — header-level parsing only,
     no pixel decode, so it runs at full Arrow batch speed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                doc_id = str(pdf[id_col].iloc[i])
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                meta = parse_image_meta(data)
-                if meta is None:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "format": None,
-                            "width": None,
-                            "height": None,
-                            "n_bytes": len(data),
-                            "aspect_ratio": None,
-                            "orientation": None,
-                            "megapixels": None,
-                            "exif_orientation": None,
-                            "rotate_ops": None,
-                            "resize_op": None,
-                            "target_width": None,
-                            "target_height": None,
-                        }
-                    )
-                    continue
-                w, h = meta["width"], meta["height"]
-                exif = parse_exif_orientation(data) if meta["format"] == "jpeg" else 1
-                rot = orientation_transform(exif, w, h)
-                tw, th, resize_op = smart_resize_dims(rot["width"], rot["height"])
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "format": meta["format"],
-                        "width": w,
-                        "height": h,
-                        "n_bytes": len(data),
-                        "aspect_ratio": round(w / h, 4) if h else None,
-                        "orientation": orientation_label(w, h),
-                        "megapixels": round(w * h / 1_000_000.0, 4),
-                        "exif_orientation": exif,
-                        "rotate_ops": rot["ops"],
-                        "resize_op": resize_op,
-                        "target_width": tw,
-                        "target_height": th,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id, raw):
+        data = _bytes(raw)
+        row = {"doc_id": str(doc_id), "n_bytes": len(data)}
+        meta = parse_image_meta(data)
+        if meta is None:
+            return row
+        w, h = meta["width"], meta["height"]
+        exif = parse_exif_orientation(data) if meta["format"] == "jpeg" else 1
+        rot = orientation_transform(exif, w, h)
+        tw, th, resize_op = smart_resize_dims(rot["width"], rot["height"])
+        return {
+            **row,
+            "format": meta["format"],
+            "width": w,
+            "height": h,
+            "aspect_ratio": round(w / h, 4) if h else None,
+            "orientation": orientation_label(w, h),
+            "megapixels": round(w * h / 1_000_000.0, 4),
+            "exif_orientation": exif,
+            "rotate_ops": rot["ops"],
+            "resize_op": resize_op,
+            "target_width": tw,
+            "target_height": th,
+        }
 
-    return media_df.select(id_col, content_col).mapInPandas(run, IMAGE_META_SCHEMA)
+    return map_documents(media_df, [id_col, content_col], kernel, IMAGE_META_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -136,66 +117,38 @@ def decode_images(
     EXIF auto-rotate for JPEG) to grayscale pixels with
     ``decode_stub=false``; corrupt-but-parseable headers → flagged stub;
     undecodable → null pixels."""
+    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from readur_spark.kernels.pixels import decode_image, to_luma
 
-        from readur_spark.kernels.pixels import decode_image, to_luma
+    def kernel(doc_id, raw):
+        data = _bytes(raw)
+        row = {"doc_id": str(doc_id), "decode_stub": True}
+        if data.startswith((b"\x89PNG", b"\xff\xd8", b"GIF8", b"BM", b"II*\x00", b"MM\x00*")):
+            try:
+                gray = to_luma(decode_image(data))
+                return {
+                    **row,
+                    "width": int(gray.shape[1]),
+                    "height": int(gray.shape[0]),
+                    "channels": 1,
+                    "pixels": np.ascontiguousarray(gray).tobytes(),
+                    "decode_stub": False,
+                }
+            except Exception:
+                pass  # corrupt image → fall through to the metadata path
+        meta = parse_image_meta(data)
+        if meta is None or not meta["width"]:
+            return row
+        return {
+            **row,
+            "width": meta["width"],
+            "height": meta["height"],
+            "channels": 1,
+            "pixels": _decode_image_stub(data, meta["width"], meta["height"]),
+        }
 
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                doc_id = str(pdf[id_col].iloc[i])
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                if (
-                    data.startswith(b"\x89PNG")
-                    or data.startswith(b"\xff\xd8")
-                    or data.startswith(b"GIF8")
-                    or data.startswith(b"BM")
-                    or data[:4] in (b"II*\x00", b"MM\x00*")
-                ):
-                    try:
-                        gray = to_luma(decode_image(data))
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "width": int(gray.shape[1]),
-                                "height": int(gray.shape[0]),
-                                "channels": 1,
-                                "pixels": np.ascontiguousarray(gray).tobytes(),
-                                "decode_stub": False,
-                            }
-                        )
-                        continue
-                    except Exception:
-                        pass  # corrupt PNG → fall through to metadata path
-                meta = parse_image_meta(data)
-                if meta is None or not meta["width"]:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "width": None,
-                            "height": None,
-                            "channels": None,
-                            "pixels": None,
-                            "decode_stub": True,
-                        }
-                    )
-                    continue
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": meta["width"],
-                        "height": meta["height"],
-                        "channels": 1,
-                        "pixels": _decode_image_stub(data, meta["width"], meta["height"]),
-                        "decode_stub": True,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media_df.select(id_col, content_col).mapInPandas(run, DECODED_SCHEMA)
+    return map_documents(media_df, [id_col, content_col], kernel, DECODED_SCHEMA)
 
 
 IMAGE_QUALITY_SCHEMA = T.StructType(
@@ -217,57 +170,36 @@ def image_quality(
 ) -> DataFrame:
     """I9 distributed: real PNG decode + the reference's quality analysis
     (enhanced.rs:478-639) per image; the I10 enhancement decision under
-    stat-gated (neutral) settings rides along. Arrow-batched mapInPandas —
-    per-image numpy work, no per-pixel Python."""
+    stat-gated (neutral) settings rides along. Per-image numpy work, no
+    per-pixel Python."""
+    from readur_spark.kernels.pixels import (
+        analyze_quality,
+        decode_image,
+        needs_enhancement,
+        neutral_settings,
+        to_luma,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from readur_spark.kernels.pixels import (
-            analyze_quality,
-            decode_image,
-            needs_enhancement,
-            neutral_settings,
-            to_luma,
-        )
+    settings = neutral_settings()
 
-        settings = neutral_settings()
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                doc_id = str(pdf[id_col].iloc[i])
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    gray = to_luma(decode_image(data))
-                except Exception:
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "width": None,
-                            "height": None,
-                            "brightness": None,
-                            "contrast_ratio": None,
-                            "noise_level": None,
-                            "sharpness": None,
-                            "needs_enhancement": None,
-                        }
-                    )
-                    continue
-                stats = analyze_quality(gray)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": int(gray.shape[1]),
-                        "height": int(gray.shape[0]),
-                        "brightness": stats.average_brightness,
-                        "contrast_ratio": stats.contrast_ratio,
-                        "noise_level": stats.noise_level,
-                        "sharpness": stats.sharpness,
-                        "needs_enhancement": needs_enhancement(stats, settings),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def kernel(doc_id, raw):
+        try:
+            gray = to_luma(decode_image(_bytes(raw)))
+        except Exception:
+            return {"doc_id": str(doc_id)}
+        stats = analyze_quality(gray)
+        return {
+            "doc_id": str(doc_id),
+            "width": int(gray.shape[1]),
+            "height": int(gray.shape[0]),
+            "brightness": stats.average_brightness,
+            "contrast_ratio": stats.contrast_ratio,
+            "noise_level": stats.noise_level,
+            "sharpness": stats.sharpness,
+            "needs_enhancement": needs_enhancement(stats, settings),
+        }
 
-    return media_df.select(id_col, content_col).mapInPandas(run, IMAGE_QUALITY_SCHEMA)
+    return map_documents(media_df, [id_col, content_col], kernel, IMAGE_QUALITY_SCHEMA)
 
 
 OCR_RESULT_SCHEMA = T.StructType(
@@ -294,27 +226,20 @@ def ocr_images(
 ) -> DataFrame:
     """I1–I4 distributed: the full image-OCR ladder (decode → preprocess →
     engine with language combo / PSM / confidence gate / timeout → I3
-    reduced-quality retry → W3 quality gate) per document, Arrow-batched.
+    reduced-quality retry → W3 quality gate) per document.
     ``engine`` is the pluggable OCR engine (default: the deterministic
     FakeOcrEngine — swap a tesseract adapter in production)."""
     from readur_spark.kernels.ocr_engine import FakeOcrEngine, ocr_image_bytes
 
     eng = engine if engine is not None else FakeOcrEngine()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in range(len(pdf)):
-                doc_id = str(pdf[id_col].iloc[i])
-                raw = pdf[content_col].iloc[i]
-                data = bytes(raw) if raw is not None else b""
-                res = ocr_image_bytes(data, eng, settings=settings, limits=limits)
-                res["doc_id"] = doc_id
-                res["confidence"] = float(res["confidence"])
-                rows.append(res)
-            yield pd.DataFrame(rows, columns=[f.name for f in OCR_RESULT_SCHEMA.fields])
+    def kernel(doc_id, raw):
+        res = ocr_image_bytes(_bytes(raw), eng, settings=settings, limits=limits)
+        res["doc_id"] = str(doc_id)
+        res["confidence"] = float(res["confidence"])
+        return res
 
-    return media_df.select(id_col, content_col).mapInPandas(run, OCR_RESULT_SCHEMA)
+    return map_documents(media_df, [id_col, content_col], kernel, OCR_RESULT_SCHEMA)
 
 
 def ocr_dead_letters(ocr_df: DataFrame) -> DataFrame:

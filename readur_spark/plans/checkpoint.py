@@ -195,10 +195,10 @@ class CheckpointTable:
         )
         if self.table_format == "iceberg":
             # metadata-only delete, one snapshot commit — no rewrite/rename;
-            # the literal is the cutoff's UTC wall clock, read in the
-            # session zone, which ``session.get_spark`` pins to UTC
+            # the literal carries its ``+00:00`` offset, so it is the same
+            # instant in every session zone
             before = self.read().count()
-            literal = cutoff.replace(tzinfo=None).isoformat(sep=" ")
+            literal = cutoff.isoformat(sep=" ")
             self.spark.sql(
                 f"DELETE FROM {self.path} WHERE status = 'completed' "
                 f"AND completed_at IS NOT NULL "

@@ -48,13 +48,13 @@ def _java_options(current: SparkConf, extra_conf: dict) -> dict:
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "readur_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession.
 
     ``cores``: int for ``local[N]``, "*" for all, None to honor
     ``SPARK_GRAFT_CPUS`` (driver contract) then fall back to "*".
+    Shuffle partitions are ``max(2 × cores, 8)``.
 
     The JVM's ``extraJavaOptions`` keep what the deployment set and gain
     ``CODE_CACHE_FLAG`` (``_java_options``). The driver's flag takes effect
@@ -69,13 +69,11 @@ def get_spark(
         n_cores = int(cores)
     except (TypeError, ValueError):
         n_cores = os.cpu_count() or 8
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * n_cores, 8)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * n_cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -7,6 +7,6 @@ import pytest
 def spark():
     from readur_spark.session import get_spark
 
-    s = get_spark(cores=4, app_name="readur_spark_tests", shuffle_partitions=8)
+    s = get_spark(cores=4, app_name="readur_spark_tests")
     yield s
     s.stop()

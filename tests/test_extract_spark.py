@@ -72,6 +72,41 @@ def test_partitioning_invariance(spark):
     assert a == b
 
 
+def _map_in_pandas_input(df) -> list[str]:
+    """Column names the ``MapInPandas`` node of ``df``'s optimized plan
+    reads from its child: what crosses the Python boundary."""
+    pending = [df._jdf.queryExecution().optimizedPlan()]
+    while pending:
+        node = pending.pop()
+        if node.nodeName() == "MapInPandas":
+            out = node.child().output()
+            return [out.apply(i).name() for i in range(out.size())]
+        children = node.children()
+        pending.extend(children.apply(i) for i in range(children.size()))
+    raise AssertionError("no MapInPandas node in the plan")
+
+
+def test_only_read_columns_cross_the_python_boundary(spark):
+    """A wide column the kernel never reads is pruned before the Python
+    boundary: only ``doc_id``, ``spans`` and the passthrough columns are
+    shipped to the workers."""
+    from pyspark.sql import functions as F
+
+    docs = docs_dataframe(spark, 10, seed=5).select(
+        F.repeat(F.lit("x"), 100_000).alias("wide"),
+        "doc_id",
+        F.lit(3).alias("partition_id"),
+        "spans",
+    )
+    out = extract_spans(docs, passthrough_cols=["partition_id"])
+    assert sorted(_map_in_pandas_input(out)) == [
+        "doc_id", "partition_id", "spans"
+    ]
+    row = out.where(F.col("doc_id") == docs.first()["doc_id"]).first()
+    assert row["partition_id"] == 3
+    assert "wide" not in out.columns
+
+
 def test_mega_doc_handled(spark):
     docs = docs_dataframe(
         spark, 5, seed=99, mega_fraction=1.0, mega_span_range=(120, 150)

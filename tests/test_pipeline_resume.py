@@ -501,7 +501,8 @@ def test_cleanup_cutoff_is_one_instant_on_both_legs(
     """With the default ``now``, the parquet leg's filter and the Iceberg
     leg's ``DELETE`` predicate draw the retention boundary at the same
     instant on a non-UTC driver, in the UTC session zone ``get_spark``
-    pins."""
+    pins; in a non-UTC session zone the Iceberg literal still reads back
+    as the cutoff instant."""
     import datetime
 
     now = datetime.datetime.now(datetime.timezone.utc)
@@ -526,8 +527,27 @@ def test_cleanup_cutoff_is_one_instant_on_both_legs(
     (stmt,) = deletes
     predicate = stmt.split(" WHERE ", 1)[1]
     deleted = spark.table("ck_iceberg_leg").where(predicate).collect()
-    spark.catalog.dropTempView("ck_iceberg_leg")
     assert {r["partition_id"] for r in deleted} == {0}
+
+    # in a session zone that is not UTC, the Iceberg literal still names
+    # the cutoff instant
+    zone_key = "spark.sql.session.timeZone"
+    zone = spark.conf.get(zone_key)
+    deletes.clear()
+    try:
+        spark.conf.set(zone_key, "America/New_York")
+        with monkeypatch.context() as m:
+            m.setattr(spark, "sql", deletes.append)
+            ice.cleanup_completed(days_to_keep=7, now=now)
+        (stmt,) = deletes
+        literal = stmt.split("completed_at < ", 1)[1]
+        got = spark.sql(f"SELECT unix_micros({literal}) AS us").first()["us"]
+    finally:
+        spark.conf.set(zone_key, zone)
+    spark.catalog.dropTempView("ck_iceberg_leg")
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    cutoff = now - datetime.timedelta(days=7)
+    assert got == (cutoff - epoch) // datetime.timedelta(microseconds=1)
 
     assert ck.cleanup_completed(days_to_keep=7) == 1
     assert {r["partition_id"] for r in ck.read().collect()} == {1}

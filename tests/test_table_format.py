@@ -123,14 +123,22 @@ class _FakeIcebergSpark:
         assert m, q
         import datetime
 
-        ident, cutoff = m.group(1), datetime.datetime.fromisoformat(m.group(2))
+        def instant(ts):
+            # the literal carries its offset; a naive row value is UTC, as
+            # the UTC session zone reads it
+            if ts.tzinfo is None:
+                return ts.replace(tzinfo=datetime.timezone.utc)
+            return ts
+
+        ident = m.group(1)
+        cutoff = instant(datetime.datetime.fromisoformat(m.group(2)))
         self.tables[ident] = [
             r
             for r in self.tables[ident]
             if not (
                 r["status"] == "completed"
                 and r.get("completed_at") is not None
-                and r["completed_at"] < cutoff
+                and instant(r["completed_at"]) < cutoff
             )
         ]
 

@@ -15,6 +15,8 @@ Methodology:
   a local-mode artifact a real 4N-executor cluster does not have. The
   pure-Python multiprocessing control at the same two levels measures
   the host's own scaling ceiling, which bounds what Spark can show here.
+  It runs ``--reps`` times (lo then hi each time); the ceiling is the
+  median of its efficiencies, reported with quartiles.
 * **Input**: a realistic-weight interleaved corpus (~10 KB HTML + text +
   media per doc — real web pages are 10-100 KB) MATERIALIZED to parquet
   with 128 files before any timing, so the scan parallelizes and wave
@@ -114,16 +116,20 @@ def burn(n):
         extract_document(spans)
     return n / (time.perf_counter() - t0)
 
+def rate(procs):
+    with mp.Pool(procs) as p:
+        t0 = time.perf_counter()
+        p.map(burn, [400] * procs)
+        wall = time.perf_counter() - t0
+    return procs * 400 / wall
+
 if __name__ == "__main__":
-    lo, hi = int(sys.argv[1]), int(sys.argv[2])
-    out = {}
-    for procs in (lo, hi):
-        with mp.Pool(procs) as p:
-            t0 = time.perf_counter()
-            p.map(burn, [400] * procs)
-            wall = time.perf_counter() - t0
-        out[str(procs)] = round(procs * 400 / wall, 1)
-    print(json.dumps(out))
+    lo, hi, reps = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
+    efficiency = []
+    for _ in range(reps):
+        r_lo = rate(lo)
+        efficiency.append(rate(hi) / r_lo / (hi / lo))
+    print(json.dumps({"efficiency": efficiency}))
 """
 
 
@@ -144,16 +150,16 @@ def _run(code: str, *args: str) -> dict:
     return json.loads(lines[-1]) if lines else {}
 
 
+def _quartiles(xs: list[float]) -> dict:
+    q1, med, q3 = statistics.quantiles(xs, n=4) if len(xs) > 1 else (xs[0],) * 3
+    return {"median": round(med, 3), "q1": round(q1, 3), "q3": round(q3, 3), "n": len(xs)}
+
+
 def _level(r: dict) -> dict:
     """Median and quartiles of one level's timed reps; throughput at the
     median."""
-    t = r["times"]
-    q1, med, q3 = statistics.quantiles(t, n=4) if len(t) > 1 else (t[0],) * 3
-    return {
-        **r,
-        "secs": {"median": round(med, 3), "q1": round(q1, 3), "q3": round(q3, 3), "n": len(t)},
-        "docs_per_sec": round(r["docs"] / med, 2),
-    }
+    secs = _quartiles(r["times"])
+    return {**r, "secs": secs, "docs_per_sec": round(r["docs"] / secs["median"], 2)}
 
 
 def main() -> None:
@@ -174,8 +180,9 @@ def main() -> None:
 
     lo, hi = (_level(_run(WORKER, str(c), corpus, str(args.reps))) for c in (args.lo, args.hi))
     ratio = args.hi / args.lo
-    control = _run(CONTROL, str(args.lo), str(args.hi))
-    ctrl_eff = (control[str(args.hi)] / control[str(args.lo)]) / ratio
+    control = _quartiles(
+        _run(CONTROL, str(args.lo), str(args.hi), str(args.reps))["efficiency"]
+    )
 
     efficiency = hi["docs_per_sec"] / lo["docs_per_sec"] / ratio
     result = {
@@ -194,7 +201,10 @@ def main() -> None:
             round(lo["secs"]["q1"] / hi["secs"]["q3"] / ratio, 3),
             round(lo["secs"]["q3"] / hi["secs"]["q1"] / ratio, 3),
         ],
-        "machine_ceiling_pure_python_efficiency": round(ctrl_eff, 3),
+        # the control's efficiency over --reps runs; the ceiling is its
+        # median, so one contended run cannot set it
+        "machine_ceiling_pure_python_efficiency": control["median"],
+        "pure_python_efficiency": control,
         "criterion": ">=0.8",
         "pass": efficiency >= 0.8,
     }
