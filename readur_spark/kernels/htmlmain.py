@@ -17,13 +17,20 @@ WSDM 2010 — boilerpipe; Pomikálek, "jusText", 2011):
 4. Emit kept blocks as ordered text spans and ``<img>`` elements in
    non-excluded positions as media spans (``media_ref = src``).
 
-Pure stdlib (``html.parser``) — tolerant of malformed markup, deterministic,
-and dependency-free so it runs identically on every executor.
+Two implementations of the same semantics, both pure stdlib — tolerant of
+malformed markup, deterministic, and dependency-free so they run
+identically on every executor:
+
+* :func:`extract_main_content` is the production path: one scan of a
+  master regex (``_TOKEN_RE``) over the document, one token per match.
+* :func:`extract_main_content_reference` drives ``html.parser`` and is the
+  oracle the production path is compared against in the tests.
 """
 
 from __future__ import annotations
 
 import re
+from html import unescape as _unescape
 from html.parser import HTMLParser
 
 #: Subtrees that never contribute content (boilerpipe/jusText tag policy).
@@ -235,24 +242,34 @@ def extract_main_content_reference(html: str) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# Fast path: regex tokenizer with the same segmentation semantics
+# Fast path: one master-regex scan with the same segmentation semantics
 # ---------------------------------------------------------------------------
 
-_TAG_RE = re.compile(
+#: One token per match, contiguous from any position: every alternative
+#: but the first starts at '<', and the last takes a '<' no other
+#: alternative accepts, so ``finditer`` never skips a character. The
+#: token's kind is ``m.lastindex``: ``_TEXT``, ``_END``, 5 for a start tag
+#: (its last group always participates), ``_STRAY``, or None for a
+#: comment, declaration, CDATA section, processing instruction or bogus
+#: end tag, all of which are dropped.
+_TOKEN_RE = re.compile(
     r"(?s)"
-    r"<!--.*?(?:-->|$)"  # comments (unterminated: consumed to EOF)
+    r"([^<]+)"  # 1: text run
+    r"|<!--.*?(?:-->|$)"  # comments (unterminated: consumed to EOF)
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"  # CDATA (unterminated: consumed to EOF)
     r"|<![^>]*>"  # doctype / declarations
     r"|<\?[^>]*>"  # processing instructions
     # end tag: optional whitespace, tolerant name (WHATWG: any char but
     # ws / > — so '</p<>' closes 'p<'), junk to the FIRST '>' quote-
     # unaware (html.parser/browser end tags don't honor quotes)
-    r"|</\s*([a-zA-Z][^\t\n\r\f />]*)[^>]*>"  # 1: end tag name
+    r"|</\s*([a-zA-Z][^\t\n\r\f />]*)[^>]*>"  # 2: end tag name
     r"|</[^>]*>"  # bogus end tag ('</>', '</123>') — dropped silently
-    r"|<([a-zA-Z][^\t\n\r\f />]*)"  # 2: start tag name (tolerant charset)
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)"  # 3: attr blob (lazy: leave the /)
-    r"(/?)>"  # 4: self-closing slash
+    r"|<([a-zA-Z][^\t\n\r\f />]*)"  # 3: start tag name (tolerant charset)
+    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*?)"  # 4: attr blob (lazy: leave the /)
+    r"(/?)>"  # 5: self-closing slash
+    r"|(<)"  # 6: stray '<' — html.parser treats it as text
 )
+_TEXT, _END, _STRAY = 1, 2, 6
 _SRC_RE = re.compile(r"""\bsrc\s*=\s*("([^"]*)"|'([^']*)'|([^\s>]+))""", re.IGNORECASE)
 #: elements whose raw content runs to the matching close tag — html.parser's
 #: CDATA_CONTENT_ELEMENTS, matched exactly for cross-validation
@@ -260,7 +277,6 @@ _RAWTEXT = frozenset({"script", "style"})
 _RAWTEXT_END = {
     t: re.compile(rf"</{t}\b[^>]*>", re.IGNORECASE) for t in _RAWTEXT
 }
-_AMP = "&"
 
 
 def extract_main_content(html: str) -> list[dict]:
@@ -268,19 +284,17 @@ def extract_main_content(html: str) -> list[dict]:
 
     Returns a list of ``{"kind": "text"|"media", "text": str,
     "media_ref": str}`` dicts in document order. Never raises on malformed
-    markup. Fast regex tokenizer; segmentation/scoring semantics are
+    markup. One ``_TOKEN_RE`` scan; segmentation/scoring semantics are
     identical to :func:`extract_main_content_reference` (cross-validated in
-    tests/test_htmlmain.py).
+    tests/test_htmlmain_fast.py).
     """
-    from html import unescape
-
     if "\x00" in html:
         # WHATWG replaces NUL in content; the engine's cleaning chain (O7)
         # strips it — normalize up front so junk tags with embedded NULs
         # tokenize identically in both implementations
         html = html.replace("\x00", "")
 
-    items: list[tuple[str, str]] = []
+    out: list[dict] = []
     exclude_depth = 0
     link_depth = 0
     parts: list[str] = []
@@ -288,94 +302,82 @@ def extract_main_content(html: str) -> list[dict]:
 
     def flush() -> None:
         nonlocal parts, link_chars
+        if not parts:
+            return  # link_chars only grows with parts, so it is 0 here
         raw = "".join(parts)
-        text = _WS.sub(" ", raw).strip()
+        # str.split() and \s+ agree on every code point (tests/test_fastpaths.py)
+        text = " ".join(raw.split())
         if text:
-            density = link_chars / len(raw) if raw else 0.0
+            density = link_chars / len(raw)
             if len(text) >= MIN_BLOCK_CHARS and density <= MAX_LINK_DENSITY:
-                items.append(("text", text))
+                out.append({"kind": "text", "text": text, "media_ref": ""})
         parts = []
         link_chars = 0
 
     pos = 0
-    n = len(html)
-    while pos < n:
-        lt = html.find("<", pos)
-        if lt == -1:
-            lt = n
-        if lt > pos:  # text run
-            if not exclude_depth:
-                data = html[pos:lt]
-                if _AMP in data:
-                    data = unescape(data)
-                parts.append(data)
-                if link_depth:
-                    link_chars += len(data)
-            pos = lt
-            continue
-        m = _TAG_RE.match(html, pos)
-        if m is None:
-            # stray '<' — html.parser treats it as text
-            if not exclude_depth:
-                parts.append("<")
-                if link_depth:
-                    link_chars += 1
-            pos += 1
-            continue
-        pos = m.end()
-        end_name, start_name = m.group(1), m.group(2)
-        if end_name is None and start_name is None:
-            continue  # comment / doctype / CDATA / PI / bogus end tag
-        closing = end_name is not None
-        tag = (end_name if closing else start_name).lower()
-        self_closing = m.group(4) == "/"
-
-        if not closing and tag in _RAWTEXT:
-            # skip raw content to the matching close tag (html.parser's
-            # CDATA_CONTENT_ELEMENTS behavior); script/style are excluded
-            # by policy, so the content is always dropped
-            end = _RAWTEXT_END[tag].search(html, pos)
-            pos = end.end() if end else n
-            continue
-
-        if tag in EXCLUDED_TAGS:
-            if closing:
-                exclude_depth = max(0, exclude_depth - 1)
-            elif not self_closing:
-                exclude_depth += 1
-            continue
-        if exclude_depth:
-            continue
-        if not closing:
-            if tag == "img":
-                flush()
-                sm = _SRC_RE.search(m.group(3) or "")
-                if sm:
-                    src = sm.group(2) or sm.group(3) or sm.group(4)
-                    if src:
-                        items.append(("media", src))
+    while pos is not None:
+        resume, pos = pos, None
+        for m in _TOKEN_RE.finditer(html, resume):
+            kind = m.lastindex
+            if kind == _TEXT:
+                if not exclude_depth:
+                    data = m.group(1)
+                    if "&" in data:
+                        data = _unescape(data)
+                    parts.append(data)
+                    if link_depth:
+                        link_chars += len(data)
                 continue
-            if tag in _LINEBREAK_TAGS:
-                parts.append("\n")
+            if kind is None:
+                continue  # comment / doctype / CDATA / PI / bogus end tag
+            if kind == _STRAY:
+                if not exclude_depth:
+                    parts.append("<")
+                    if link_depth:
+                        link_chars += 1
                 continue
-            if tag == "a":
-                link_depth += 1
-                if self_closing:
+            closing = kind == _END
+            tag = m.group(2 if closing else 3).lower()
+
+            if not closing and tag in _RAWTEXT:
+                # skip raw content to the matching close tag (html.parser's
+                # CDATA_CONTENT_ELEMENTS behavior), then scan on from there;
+                # script/style are excluded by policy, so the content is
+                # always dropped
+                end = _RAWTEXT_END[tag].search(html, m.end())
+                if end is not None:
+                    pos = end.end()
+                break
+
+            if tag in EXCLUDED_TAGS:
+                if closing:
+                    exclude_depth = max(0, exclude_depth - 1)
+                elif not m.group(5):  # not self-closing
+                    exclude_depth += 1
+                continue
+            if exclude_depth:
+                continue
+            if not closing:
+                if tag == "img":
+                    flush()
+                    sm = _SRC_RE.search(m.group(4))
+                    if sm:
+                        src = sm.group(2) or sm.group(3) or sm.group(4)
+                        if src:
+                            out.append({"kind": "media", "text": "", "media_ref": src})
+                    continue
+                if tag in _LINEBREAK_TAGS:
+                    parts.append("\n")
+                    continue
+                if tag == "a" and not m.group(5):  # <a/> opens nothing
+                    link_depth += 1
+                if tag in BLOCK_TAGS:
+                    flush()
+            else:
+                if tag == "a":
                     link_depth = max(0, link_depth - 1)
-            if tag in BLOCK_TAGS:
-                flush()
-        else:
-            if tag == "a":
-                link_depth = max(0, link_depth - 1)
-                continue
-            if tag in BLOCK_TAGS:
-                flush()
+                    continue
+                if tag in BLOCK_TAGS:
+                    flush()
     flush()
-
-    out: list[dict] = []
-    for kind, payload in items:
-        if kind == "text":
-            out.append({"kind": "text", "text": payload, "media_ref": ""})
-        else:
-            out.append({"kind": "media", "text": "", "media_ref": payload})
     return out

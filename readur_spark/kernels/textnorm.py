@@ -28,11 +28,11 @@ _NEWLINE_BEFORE_SPACE = re.compile(r"\n +")
 _MIXED_WHITESPACE = re.compile(r"[ \t]+")
 _HYPHEN_LINEBREAK = re.compile(r"(\w)-\n(\w)")
 
-#: pre-scan: any feature that makes the clean chain a non-identity
-#: (besides trim): camelCase boundary, tab, double space, 3+ newlines,
-#: space adjacent to a newline. One C-level scan skips six sub() passes on
-#: already-clean prose (property-tested identical in tests/test_fastpaths.py).
-_NEEDS_CLEAN = re.compile(r"[a-z][A-Z]|\t|  |\n\n\n| \n|\n ")
+#: pre-check for the one feature of the clean chain that a substring test
+#: cannot find: a camelCase boundary. The same predicate as ``[a-z][A-Z]``,
+#: but sre scans for it by its leading upper-case class, several times
+#: faster than testing every character against ``[a-z]`` first.
+_CAMEL_BOUNDARY = re.compile(r"[A-Z](?<=[a-z][A-Z])")
 
 #: readur truncates >10 MB text content with this literal suffix
 #: (src/ocr/enhanced.rs:1663).
@@ -68,7 +68,18 @@ def clean_extracted_text(text: str) -> str:
     survives step 4 and becomes ``" \\n"`` after step 6 — matching the
     reference exactly).
     """
-    if _NEEDS_CLEAN.search(text) is None:
+    # Every feature that makes the chain a non-identity besides the trim:
+    # tab, double space, 3+ newlines, a space next to a newline, camelCase.
+    # Clean prose has none, and then six sub() passes change nothing
+    # (property-tested identical in tests/test_fastpaths.py).
+    if not (
+        "\t" in text
+        or "  " in text
+        or "\n\n\n" in text
+        or " \n" in text
+        or "\n " in text
+        or _CAMEL_BOUNDARY.search(text)
+    ):
         return text.strip()
     cleaned = _WORD_BOUNDARIES.sub(r"\1 \2", text)
     cleaned = _MULTIPLE_SPACES.sub("  ", cleaned)
@@ -88,6 +99,8 @@ def repair_hyphenation(text: str) -> str:
     ``clean_extracted_text`` so the artificial line break never reaches the
     whitespace collapse.
     """
+    if "-\n" not in text:
+        return text
     return _HYPHEN_LINEBREAK.sub(r"\1\2", text)
 
 

@@ -50,7 +50,7 @@ def count_words_in_text(text: str) -> int:
     * else words = max(alnum_chars // 5, 1)
     """
     whitespace_words = len(text.split())
-    is_continuous = whitespace_words == 1 and len(text.encode("utf-8")) > 15
+    is_continuous = whitespace_words == 1 and len(text.encode("utf-8", errors="surrogatepass")) > 15
     is_no_words = whitespace_words == 0 and text.strip() != ""
     if not (is_continuous or is_no_words):
         return whitespace_words

@@ -27,8 +27,9 @@ the UDF stage is embarrassingly parallel at ``num_partitions`` granularity
 about 0.045 s of worker CPU: an identity ``mapInArrow`` over 20k
 ``doc_id``s at 4, 8 and 32 tasks on ``local[4]``, with the package's guard
 against per-task zip re-reads in place (0.25 s without it). The kernel
-costs about 200 µs per document, so a task of 10^4 documents spends under
-3% of its time on that fixed cost.
+costs about 70 µs of CPU per flagship document (the minimum over repeated
+in-process passes on its 5,000 documents), so a task of 10^4 documents
+spends under 7% of its time on that fixed cost.
 """
 
 from __future__ import annotations
@@ -142,7 +143,7 @@ def extract_spans(
     ``num_partitions``: when set, ``plan_partitions`` first. Sizing
     guidance: 2–3× total cores, so the stage keeps every core busy through
     skew and elasticity. A Python task's fixed cost is about 0.045 s of
-    worker CPU (module docstring), the kernel's time for about 225
+    worker CPU (module docstring), the kernel's time for about 650
     documents, so size tasks well above that: 10^4 documents or more.
     When ``None`` the input partitioning is kept (caller already planned).
 

@@ -4,7 +4,7 @@ reference forms they replaced."""
 import random
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from readur_spark.kernels.util import count_alnum
@@ -14,6 +14,10 @@ text_st = st.text(
     alphabet=st.characters(codec="utf-8"),
     max_size=300,
 )
+#: every character class the clean chain and the hyphen repair branch on:
+#: lower, upper, non-ASCII word char, underscore, digit, space, hyphen,
+#: newline, tab
+branch_st = st.text(alphabet="aZé_1 -\n\t", max_size=60)
 
 
 @given(text_st)
@@ -67,12 +71,39 @@ def _clean_chain_reference(text: str) -> str:
     return c.strip()
 
 
-@given(text_st)
+@given(text_st, branch_st)
 @settings(max_examples=300, deadline=None)
-def test_clean_shortcut_matches_chain(s):
+@example("", "aZ")
+@example("", "a\tb")
+@example("", "a  b")
+@example("", "a\n\n\nb")
+@example("", "a \nb")
+@example("", "a\n b")
+def test_clean_shortcut_matches_chain(s, b):
     from readur_spark.kernels.textnorm import clean_extracted_text
 
     assert clean_extracted_text(s) == _clean_chain_reference(s)
+    assert clean_extracted_text(b) == _clean_chain_reference(b)
+
+
+@given(branch_st)
+@settings(max_examples=300, deadline=None)
+@example("extrac-\ntion")
+@example("a-\n")
+def test_hyphen_shortcut_matches_sub(s):
+    from readur_spark.kernels.textnorm import _HYPHEN_LINEBREAK, repair_hyphenation
+
+    assert repair_hyphenation(s) == _HYPHEN_LINEBREAK.sub(r"\1\2", s)
+
+
+def test_split_join_matches_ws_collapse_on_every_code_point():
+    r"""The HTML block collapse ``" ".join(raw.split())`` equals
+    ``re.sub(r"\s+", " ", raw).strip()``: both agree on which code points
+    are whitespace, inside a string and at either end."""
+    ws = re.compile(r"\s+")
+    for cp in range(0x110000):
+        s = "a " + chr(cp) + " b" + chr(cp)
+        assert " ".join(s.split()) == ws.sub(" ", s).strip(), hex(cp)
 
 
 def test_fuzz_against_corpus_like_text():

@@ -5,6 +5,7 @@ The regression inputs come from the reference's own test matrix:
 tests/integration_enhanced_ocr_tests.rs:51-157.
 """
 
+from readur_spark.kernels.extractor import extract_document
 from readur_spark.kernels.wordcount import (
     count_words_in_text,
     count_words_optimized,
@@ -70,6 +71,15 @@ class TestCountWordsInText:
     def test_short_single_word_not_continuous(self):
         # ≤15 bytes: stays a single whitespace word
         assert count_words_in_text("hello") == 1
+
+    def test_lone_surrogate_counts_like_other_byte_lengths(self):
+        # a lone surrogate has no strict UTF-8 form; the continuous-text
+        # test measures bytes as every other byte length in the kernel does
+        # (surrogatepass), and the document completes
+        text = "abcdefghijklmnopq\ud800"
+        assert count_words_in_text(text) == 3  # 17 alnum // 5
+        out = extract_document([{"kind": "text", "text": text, "media_ref": "", "offset": 0}])
+        assert (out["status"], out["word_count"]) == ("completed", 3)
 
     def test_regression_cases_positive(self):
         # integration_pdf_word_count_tests.rs:309-341 — all must be > 0
