@@ -29,9 +29,11 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument("--batch-partitions", type=int, default=None,
                     help="commit every K partitions instead of one "
-                         "monolithic commit: a crash then loses at most "
-                         "one K-partition chunk (the assigned input is "
-                         "staged once, partition-pruned per chunk)")
+                         "commit of all todo partitions: a crash then loses "
+                         "at most one K-partition chunk. A run of more than "
+                         "one chunk stages the assigned input once and reads "
+                         "it partition-pruned per chunk; a later run of the "
+                         "same checkpoint reuses that snapshot")
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--no-hyphen-repair", action="store_true")
     ap.add_argument(

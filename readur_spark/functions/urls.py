@@ -81,27 +81,25 @@ def canonical_url_col(url: Column) -> Column:
 def dedup_by_canonical_url(
     docs: DataFrame,
     url_col: str = "url",
-    id_col: str = "doc_id",
-    canonical_col: str = "canonical_url",
 ) -> DataFrame:
     """Keep-first dedup on the canonical URL: one row per canonical form,
-    the survivor being the smallest ``id_col`` (deterministic under any
+    the survivor being the smallest ``doc_id`` (deterministic under any
     partitioning). Scale shape: ONE shuffle — a window partitioned by
     the canonical string (same plan as exact content dedup keep-first);
     at crawl scale the full-URL key is far better distributed than a
     per-host key, so no skew salt is needed."""
     from pyspark.sql import Window
 
-    canon = docs.withColumn(canonical_col, canonical_url_col(F.col(url_col)))
+    canon = docs.withColumn("canonical_url", canonical_url_col(F.col(url_col)))
     # docs WITHOUT a usable URL (NULL or canonicalizing to '') must all
     # survive: 'unknown URL' is not 'same page', and a single window
     # partition for the NULL key would otherwise silently discard every
     # such doc but one (review finding). They bypass the dedup window
     # entirely — which also removes the one potentially-skewed partition
     # (missing-metadata rows are the only non-unique key at crawl scale).
-    no_url = F.col(canonical_col).isNull() | (F.col(canonical_col) == "")
+    no_url = F.col("canonical_url").isNull() | (F.col("canonical_url") == "")
     keep = canon.filter(no_url)
-    w = Window.partitionBy(canonical_col).orderBy(id_col)
+    w = Window.partitionBy("canonical_url").orderBy("doc_id")
     deduped = (
         canon.filter(~no_url)
         .withColumn("__rn", F.row_number().over(w))

@@ -169,8 +169,7 @@ def extract_doc(data: bytes) -> tuple[str | None, str | None]:
 # --------------------------------------------------------------------------
 
 
-def build_doc(text: str, extchar: bool = False, complex_flag: bool = False,
-              encrypted: bool = False) -> bytes:
+def build_doc(text: str, extchar: bool = False, complex_flag: bool = False) -> bytes:
     """Build a minimal valid .doc: one FAT sector, one directory sector,
     a WordDocument stream (FIB + text, padded past the 4096-byte mini
     cutoff so it lives in the regular FAT)."""
@@ -178,9 +177,7 @@ def build_doc(text: str, extchar: bool = False, complex_flag: bool = False,
     fib = bytearray(1024)
     struct.pack_into("<H", fib, 0, 0xA5EC)
     struct.pack_into("<H", fib, 2, 0x00C1)
-    flags = (0x1000 if extchar else 0) | (0x0004 if complex_flag else 0) | (
-        0x0100 if encrypted else 0
-    )
+    flags = (0x1000 if extchar else 0) | (0x0004 if complex_flag else 0)
     struct.pack_into("<H", fib, 10, flags)
     struct.pack_into("<I", fib, 24, 1024)
     struct.pack_into("<I", fib, 28, 1024 + len(body))

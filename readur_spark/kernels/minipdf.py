@@ -434,9 +434,14 @@ def extract_text_layer(data: bytes) -> list[str]:
 #: baselines only, and column gutters dwarf this approximation
 _CHAR_W = 6.0
 _LINE_H = 10.0
+#: minimum white-band widths (pt) recognized as column gutters / block
+#: separators; they suit letter-size pages (a gutter is ≥0.3 in ≈ 22 pt
+#: in print layouts)
+_MIN_COL_GAP = 24.0
+_MIN_BAND_GAP = 18.0
 
 
-def _xycut(boxes, min_col_gap: float, min_band_gap: float):
+def _xycut(boxes):
     """Recursive X-Y cut (Nagy & Seth, "Hierarchical representation of
     optically scanned documents", ICPR 1984 — the classic layout-analysis
     decomposition): split the region at the widest horizontal white band
@@ -464,32 +469,28 @@ def _xycut(boxes, min_col_gap: float, min_band_gap: float):
         return out
 
     # 1) horizontal white band -> top block(s) read before bottom
-    hg = gaps([(b[2], b[3]) for b in boxes], min_band_gap)
+    hg = gaps([(b[2], b[3]) for b in boxes], _MIN_BAND_GAP)
     if hg:
         _, lo, hi = max(hg)
         cut = (lo + hi) / 2.0
         top = [b for b in boxes if b[2] >= cut]  # PDF y points up
         bottom = [b for b in boxes if b[2] < cut]
         if top and bottom:
-            return _xycut(top, min_col_gap, min_band_gap) + _xycut(
-                bottom, min_col_gap, min_band_gap
-            )
+            return _xycut(top) + _xycut(bottom)
     # 2) vertical white band -> left column before right column
-    vg = gaps([(b[0], b[1]) for b in boxes], min_col_gap)
+    vg = gaps([(b[0], b[1]) for b in boxes], _MIN_COL_GAP)
     if vg:
         _, lo, hi = max(vg)
         cut = (lo + hi) / 2.0
         left = [b for b in boxes if b[0] < cut]
         right = [b for b in boxes if b[0] >= cut]
         if left and right:
-            return _xycut(left, min_col_gap, min_band_gap) + _xycut(
-                right, min_col_gap, min_band_gap
-            )
+            return _xycut(left) + _xycut(right)
     # 3) leaf: emit as one block
     return [[b[4] for b in boxes]]
 
 
-def _assemble_layout(runs, min_col_gap: float, min_band_gap: float) -> str:
+def _assemble_layout(runs) -> str:
     if not runs:
         return ""
     boxes = [
@@ -501,33 +502,23 @@ def _assemble_layout(runs, min_col_gap: float, min_band_gap: float) -> str:
     # x) — so a page with no qualifying cut equals extract_text_layer
     # verbatim, and sub-tolerance baseline jitter can't drift lines
     # apart (round-5 review)
-    leaves = _xycut(boxes, min_col_gap, min_band_gap)
+    leaves = _xycut(boxes)
     return "\n".join(
         _assemble_page(leaf) for leaf in leaves if leaf
     )
 
 
-def extract_text_layout(
-    data: bytes,
-    min_col_gap: float = 24.0,
-    min_band_gap: float = 18.0,
-) -> list[str]:
+def extract_text_layout(data: bytes) -> list[str]:
     """Per-page text with COLUMN-AWARE reading order (the north star's
     "layout parsing with reading-order reconstruction"): recursive X-Y
     cut segments each page into blocks/columns before line assembly, so
     a two-column article reads column by column instead of the naive
     y-sort's line-by-line interleave. Single-column pages degenerate to
-    exactly :func:`extract_text_layer`'s order (tested).
-
-    ``min_col_gap`` / ``min_band_gap`` are the minimum white-band widths
-    (pt) recognized as column gutters / block separators; defaults suit
-    letter-size pages (a gutter is ≥0.3 in ≈ 22 pt in print layouts)."""
+    exactly :func:`extract_text_layer`'s order (tested)."""
     objs = _objects(data)
     pages = _page_order(objs)
     return [
-        _assemble_layout(
-            _runs_from_content(_page_content(objs, p)), min_col_gap, min_band_gap
-        )
+        _assemble_layout(_runs_from_content(_page_content(objs, p)))
         for p in pages
     ]
 

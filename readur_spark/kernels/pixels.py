@@ -592,19 +592,17 @@ def morphological_open_close(img: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def estimate_skew_angle(
-    gray: np.ndarray, max_deg: float = 5.0, step: float = 0.5
-) -> float:
+def estimate_skew_angle(gray: np.ndarray) -> float:
     """Skew angle in degrees (positive = text rises to the right). Shear
-    candidates over ±max_deg; the profile-variance argmax wins. 0.0 for
-    blank images."""
+    candidates over ±5° in 0.5° steps; the profile-variance argmax wins.
+    0.0 for blank images."""
     ink = (gray < 128).astype(np.int64)
     if not ink.any():
         return 0.0
     h, w = ink.shape
     xs = np.arange(w) - w // 2
     best_var, best_a = -1.0, 0.0
-    for a in np.arange(-max_deg, max_deg + step / 2, step):
+    for a in np.arange(-5.0, 5.0 + 0.5 / 2, 0.5):
         shift = np.round(np.tan(np.radians(a)) * xs).astype(np.int64)
         smin, smax = int(shift.min()), int(shift.max())
         prof = np.zeros(h + smax - smin, dtype=np.int64)

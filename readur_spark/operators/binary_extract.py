@@ -237,9 +237,6 @@ def extract_one(doc_id: str, filename: str, content: bytes, server_mime: str | N
 
 def extract_files(
     files_df: DataFrame,
-    id_col: str = "doc_id",
-    filename_col: str = "filename",
-    content_col: str = "content",
     server_mime_col: str | None = None,
     engine=None,
     ocr_settings=None,
@@ -256,7 +253,7 @@ def extract_files(
             engine=engine, ocr_settings=ocr_settings,
         )
 
-    inputs = [id_col, filename_col, content_col]
+    inputs = ["doc_id", "filename", "content"]
     if server_mime_col:
         inputs.append(server_mime_col)
     return map_documents(files_df, inputs, kernel, BINARY_EXTRACTED_SCHEMA)

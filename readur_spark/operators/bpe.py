@@ -88,7 +88,6 @@ def train_bpe_spark_loop(
     num_merges: int,
     checkpoint_every: int = 8,
     batch_merges: int = 64,
-    stats: dict | None = None,
 ) -> list[tuple[int, int]]:
     """Merge loop entirely on executors, for word tables too large to
     TakeOrdered. ``word_table`` is (word binary, count long); each
@@ -233,11 +232,6 @@ def train_bpe_spark_loop(
     from readur_spark.plans.curation import _release_checkpoint
 
     _release_checkpoint(last_ckpt)
-    if stats is not None:
-        # counting passes = job barriers paid; the observable proving the
-        # batch amortization (one-job-per-merge would pay len(merges))
-        stats["passes"] = passes
-        stats["merges"] = len(merges)
     return merges
 
 

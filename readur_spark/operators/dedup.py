@@ -41,23 +41,23 @@ _MIN_LINE_CHARS = 10
 # --------------------------------------------------------------------------
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """D4: GROUP BY content hash HAVING count>1
     (management.rs:90-150). Returns (fingerprint, n_dups)."""
     return (
-        docs.select(F.col(id_col), fingerprint_col(F.col(text_col)).alias("fingerprint"))
+        docs.select(F.col("doc_id"), fingerprint_col(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_dups"))
         .filter(F.col("n_dups") > 1)
     )
 
 
-def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_keep_first(docs: DataFrame) -> DataFrame:
     """D2 policy=Skip: keep the smallest id per content fingerprint.
     Window row_number — one shuffle on the fingerprint, no self-join."""
-    w = Window.partitionBy("fingerprint").orderBy(F.asc(id_col))
+    w = Window.partitionBy("fingerprint").orderBy(F.asc("doc_id"))
     return (
-        docs.withColumn("fingerprint", fingerprint_col(F.col(text_col)))
+        docs.withColumn("fingerprint", fingerprint_col(F.col("text")))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn", "fingerprint")
@@ -69,22 +69,20 @@ def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 # --------------------------------------------------------------------------
 
 
-def _token_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _token_rows(docs: DataFrame) -> DataFrame:
     """(id, pos, tk): one row per token in document order. Tokenization =
     lowercase + split on non-alnum runs (engine-portable so the DuckDB
     oracle can reproduce it exactly)."""
     tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
+        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
     )
     # a corpus that fits in one file split would tokenize on one core
     return ensure_partitions(docs).select(
-        F.col(id_col).alias("id"), F.posexplode(tokens).alias("pos", "tk")
+        F.col("doc_id").alias("id"), F.posexplode(tokens).alias("pos", "tk")
     )
 
 
-def _shingles(
-    docs: DataFrame, id_col: str, text_col: str, n: int, distinct: bool = True
-) -> DataFrame:
+def _shingles(docs: DataFrame, n: int, distinct: bool = True) -> DataFrame:
     """Word n-gram shingles per document: (id, shingle), distinct per doc
     by default (Jaccard is over shingle SETS).
 
@@ -99,7 +97,7 @@ def _shingles(
 
     ``distinct=False`` skips the de-dup shuffle for consumers that are
     multiset-safe (MinHash: min over a multiset equals min over the set)."""
-    rows = _token_rows(docs, id_col, text_col)
+    rows = _token_rows(docs)
     if n == 1:
         sh = rows.select("id", F.col("tk").alias("shingle"))
     else:
@@ -255,8 +253,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
     n: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard ≥ threshold via the shingle
@@ -286,7 +282,7 @@ def ngram_jaccard_pairs(
     # persisted: consumed by the df-cap filter, the size agg, and both join
     # sides — one shingling pass instead of four; released via
     # _materialize_release before returning
-    sh = _shingles(docs, id_col, text_col, n).persist()
+    sh = _shingles(docs, n).persist()
     kept, dropped = (
         (sh, False)
         if max_shingle_df is None
@@ -354,16 +350,12 @@ def _band_rows(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("id", "bk.band_no", "bk.band_val")
 
 
-def _candidate_shingles(
-    docs: DataFrame, ids: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
+def _candidate_shingles(docs: DataFrame, ids: DataFrame, n: int) -> DataFrame:
     """Shingles of just the documents whose id is in ``ids`` (one
     distinct ``id`` column, broadcast): verification explodes the
     candidates, never the corpus."""
     return _shingles(
-        docs.join(F.broadcast(ids.withColumnRenamed("id", id_col)), id_col, "left_semi"),
-        id_col,
-        text_col,
+        docs.join(F.broadcast(ids.withColumnRenamed("id", "doc_id")), "doc_id", "left_semi"),
         n,
     )
 
@@ -372,8 +364,6 @@ def minhash_signatures(
     docs: DataFrame,
     num_hashes: int = 32,
     n: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """MinHash signatures: h_i(doc) = min over shingles of
     xxhash64(shingle, seed=i). Pure Catalyst — the per-seed min-aggregation
@@ -393,7 +383,7 @@ def minhash_signatures(
     also: F.transform treats a two-arg lambda as (element, index).)"""
     # multiset-safe: min over repeated shingles equals min over the set,
     # so skip the distinct shuffle entirely
-    sh = _shingles(docs, id_col, text_col, n, distinct=False)
+    sh = _shingles(docs, n, distinct=False)
     based = sh.select("id", F.xxhash64("shingle").alias("bh"))
     aggs = [
         F.min(F.xxhash64(F.col("bh"), F.lit(i))).alias(f"h{i}")
@@ -408,8 +398,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     n: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs, verified with exact Jaccard.
@@ -440,7 +428,7 @@ def minhash_lsh_pairs(
     # one shingle+agg pass for the signatures (nothing else consumes the
     # exploded table anymore — verification shingles only the candidates).
     # Persisted because the band self-join consumes sig on BOTH sides.
-    sig = minhash_signatures(docs, num_hashes, n, id_col, text_col).persist()
+    sig = minhash_signatures(docs, num_hashes, n).persist()
     banded = _band_rows(sig, bands, num_hashes // bands)
     held = [sig]
     star = None
@@ -487,7 +475,7 @@ def minhash_lsh_pairs(
         .union(candidates.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    sh = _candidate_shingles(docs, cand_ids, id_col, text_col, n)
+    sh = _candidate_shingles(docs, cand_ids, n)
     result = _jaccard_for_pairs(sh, candidates, threshold)
     # eager-materialize the (small) pair list and release the cached
     # intermediates — without this, repeated calls in one session leak
@@ -547,8 +535,6 @@ def _simhash64(texts: pd.Series) -> pd.Series:
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance ≤ ``max_hamming``.
 
@@ -557,7 +543,7 @@ def simhash_pairs(
     is on (chunk_no, chunk_value) — never all-pairs. Verification is
     ``bit_count(a XOR b)`` (native)."""
     fp = ensure_partitions(docs).select(
-        F.col(id_col).alias("id"), _simhash64(F.col(text_col)).alias("sim")
+        F.col("doc_id").alias("id"), _simhash64(F.col("text")).alias("sim")
     )
     chunks = fp.select(
         "id",
@@ -597,12 +583,9 @@ def simhash_pairs(
 def embedding_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     broadcast_max_rows: int = 200_000,
     num_planes: int = 8,
     num_tables: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ threshold) with a size-dispatched
     physical strategy:
@@ -627,24 +610,24 @@ def embedding_dup_pairs(
     """
     if embeddings.count() > broadcast_max_rows:
         return _embedding_dup_pairs_bucketed(
-            embeddings, threshold, id_col, vec_col, num_planes, num_tables, seed
+            embeddings, threshold, num_planes, num_tables
         )
     import numpy as np
 
     spark = embeddings.sparkSession
-    pdf = embeddings.select(id_col, vec_col).toPandas()
-    order = pdf[id_col].to_numpy().argsort(kind="stable")
-    ids = pdf[id_col].to_numpy()[order]
-    mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[order]])
+    pdf = embeddings.select("vec_id", "embedding").toPandas()
+    order = pdf["vec_id"].to_numpy().argsort(kind="stable")
+    ids = pdf["vec_id"].to_numpy()[order]
+    mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"].to_numpy()[order]])
     norms = np.sqrt((mat * mat).sum(axis=1))
     bc = spark.sparkContext.broadcast((ids, mat, norms))
 
     def run(batches):
         b_ids, b_mat, b_norms = bc.value
         for block in batches:
-            a_ids = block[id_col].to_numpy()
+            a_ids = block["vec_id"].to_numpy()
             a_mat = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in block[vec_col].to_numpy()]
+                [np.asarray(v, dtype=np.float64) for v in block["embedding"].to_numpy()]
             )
             a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
             sims = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
@@ -659,8 +642,8 @@ def embedding_dup_pairs(
                 }
             )
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    id_type = embeddings.schema["vec_id"].dataType.simpleString()
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         run, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
     )
 
@@ -668,11 +651,8 @@ def embedding_dup_pairs(
 def _embedding_dup_pairs_bucketed(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str,
-    vec_col: str,
     num_planes: int,
     num_tables: int,
-    seed: int,
     chunk_rows: int = 1024,
 ) -> DataFrame:
     """Web-scale embedding near-dup: banded SRP-LSH + per-bucket exact
@@ -691,15 +671,15 @@ def _embedding_dup_pairs_bucketed(
 
     from readur_spark.operators.similarity import _as_lit_array, _dot
 
-    first = embeddings.select(vec_col).first()
+    id_type = embeddings.schema["vec_id"].dataType.simpleString()
+    first = embeddings.select("embedding").first()
     if first is None:
         return embeddings.sparkSession.createDataFrame(
-            [], schema=f"id_a {embeddings.schema[id_col].dataType.simpleString()}, "
-            f"id_b {embeddings.schema[id_col].dataType.simpleString()}, cosine double"
+            [], schema=f"id_a {id_type}, id_b {id_type}, cosine double"
         )
     dim = len(first[0])
-    rng = random.Random(seed)
-    emb = F.col(vec_col).cast("array<double>")
+    rng = random.Random(42)
+    emb = F.col("embedding").cast("array<double>")
     table_buckets = []
     for t in range(num_tables):
         bucket = F.lit(0).cast("long")
@@ -709,14 +689,14 @@ def _embedding_dup_pairs_bucketed(
             bucket = bucket + (bit.cast("long") * F.lit(1 << i))
         table_buckets.append(F.struct(F.lit(t).alias("t"), bucket.alias("b")))
     bucketed = embeddings.select(
-        F.col(id_col), emb.alias(vec_col), F.explode(F.array(*table_buckets)).alias("tb")
-    ).select(id_col, vec_col, F.col("tb.t").alias("table_no"), F.col("tb.b").alias("bucket"))
+        F.col("vec_id"), emb.alias("embedding"), F.explode(F.array(*table_buckets)).alias("tb")
+    ).select("vec_id", "embedding", F.col("tb.t").alias("table_no"), F.col("tb.b").alias("bucket"))
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = ids.argsort(kind="stable")
         ids = ids[order]
-        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[order]])
+        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"].to_numpy()[order]])
         norms = np.sqrt((mat * mat).sum(axis=1))
         out_a, out_b, out_c = [], [], []
         for lo in range(0, len(ids), chunk_rows):
@@ -735,7 +715,6 @@ def _embedding_dup_pairs_bucketed(
             }
         )
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
     return (
         bucketed.groupBy("table_no", "bucket")
         .applyInPandas(score_bucket, schema=f"id_a {id_type}, id_b {id_type}, cosine double")
@@ -836,7 +815,6 @@ def connected_components(
 def dedup_cluster_keep_first(
     docs: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Cluster-level near-dup policy: group the pair graph into connected
@@ -845,9 +823,9 @@ def dedup_cluster_keep_first(
     when A~B and B~C but A!~C). Docs not in any pair survive untouched."""
     comp = connected_components(pairs, "id_a", "id_b", checkpoint_dir=checkpoint_dir)
     losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
+        F.col("id").alias("doc_id")
     )
-    return docs.join(losers, id_col, "left_anti")
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -915,8 +893,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 8,
     window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Rolling-hash winnowing fingerprints, one row per selected
     fingerprint: (id, fp, pos). Guarantees: any shared substring of length
@@ -927,15 +903,15 @@ def winnow_fingerprints(
     def run(batches):
         for pdf in batches:
             ids, fps, poss = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 for fp, pos in _winnow_py(text, k, window):
                     ids.append(doc_id)
                     fps.append(fp)
                     poss.append(pos)
             yield pd.DataFrame({"id": ids, "fp": fps, "pos": poss})
 
-    id_type = docs.schema[id_col].dataType.simpleString()
-    return ensure_partitions(docs.select(id_col, text_col)).mapInPandas(
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    return ensure_partitions(docs.select("doc_id", "text")).mapInPandas(
         run, schema=f"id {id_type}, fp long, pos int"
     )
 
@@ -1068,8 +1044,6 @@ def duplicate_spans(
     min_len: int = 50,
     k: int = 25,
     window: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_seeds: int = 500,
 ) -> DataFrame:
     """Cross-document duplicated character spans ≥ ``min_len`` — the
@@ -1098,7 +1072,7 @@ def duplicate_spans(
     ``min_len`` still emits one marker row (start_a=start_b=-1, length=0)
     so the cap is never silent. Raise ``max_seeds`` to trade compute for
     recall on such pairs."""
-    fps = winnow_fingerprints(docs, k, window, id_col, text_col).persist()
+    fps = winnow_fingerprints(docs, k, window).persist()
     pruned, _ = _drop_high_df(
         fps, "fp", _MAX_FP_DF, fps.select("id", "fp").distinct()
     )
@@ -1116,7 +1090,7 @@ def duplicate_spans(
         .groupBy("id_a", "id_b")
         .agg(F.collect_set(F.struct("pos_a", "pos_b")).alias("seeds"))
     )
-    texts = docs.select(F.col(id_col).alias("tid"), F.col(text_col).alias("t"))
+    texts = docs.select(F.col("doc_id").alias("tid"), F.col("text").alias("t"))
     joined = (
         seeds.join(texts.withColumnRenamed("tid", "id_a").withColumnRenamed("t", "text_a"), "id_a")
         .join(texts.withColumnRenamed("tid", "id_b").withColumnRenamed("t", "text_b"), "id_b")
@@ -1131,10 +1105,6 @@ def decontaminate(
     min_len: int = 50,
     k: int = 25,
     window: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    heldout_id_col: str = "doc_id",
-    heldout_text_col: str = "text",
     exclude_same_id: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C / Pile procedure):
@@ -1161,8 +1131,8 @@ def decontaminate(
     (see ``decontaminate_filter``). ``exclude_same_id`` skips identity
     pairs when both frames share an id space (self-decontamination runs).
     """
-    fpc = winnow_fingerprints(corpus, k, window, id_col, text_col)
-    fpe = winnow_fingerprints(heldout, k, window, heldout_id_col, heldout_text_col)
+    fpc = winnow_fingerprints(corpus, k, window)
+    fpe = winnow_fingerprints(heldout, k, window)
     # cap on the EVAL side (the broadcast one): a boilerplate fingerprint
     # present in >cap eval docs seeds cap× the work for no extra decision
     # power — one hit already flags the doc
@@ -1186,10 +1156,8 @@ def decontaminate(
     grouped = seeds.groupBy("id_a", "id_b").agg(
         F.collect_set(F.struct("pos_a", "pos_b")).alias("seeds")
     )
-    ctexts = corpus.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a"))
-    etexts = heldout.select(
-        F.col(heldout_id_col).alias("id_b"), F.col(heldout_text_col).alias("text_b")
-    )
+    ctexts = corpus.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
+    etexts = heldout.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
     joined = grouped.join(ctexts, "id_a").join(F.broadcast(etexts), "id_b")
     spans = _extend_seeds(joined, k, min_len)
     # per-corpus-doc rollup; contaminated_chars = merged-interval coverage
@@ -1231,7 +1199,6 @@ def decontaminate(
 def decontaminate_filter(
     corpus: DataFrame,
     heldout: DataFrame,
-    id_col: str = "doc_id",
     **kwargs,
 ) -> DataFrame:
     """The clean corpus: drop every document with CONFIRMED contamination
@@ -1240,11 +1207,11 @@ def decontaminate_filter(
     seed cap silently delete clean documents; callers wanting the
     conservative policy can filter on seeds_truncated themselves."""
     flagged = (
-        decontaminate(corpus, heldout, id_col=id_col, **kwargs)
+        decontaminate(corpus, heldout, **kwargs)
         .filter(F.col("n_spans") > 0)
-        .select(F.col("doc_id").alias(id_col))
+        .select("doc_id")
     )
-    return corpus.join(flagged, id_col, "left_anti")
+    return corpus.join(flagged, "doc_id", "left_anti")
 
 
 def winnow_overlap_pairs(
@@ -1252,14 +1219,12 @@ def winnow_overlap_pairs(
     min_shared: int = 3,
     k: int = 8,
     window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Content-overlap candidate pairs: documents sharing ≥ ``min_shared``
     winnowing fingerprints (the plagiarism/near-dup detection shape —
     MOSS). Inverted-index join on the fingerprint (never all-pairs) with
     the same high-df skew cap as the shingle family."""
-    fps = winnow_fingerprints(docs, k, window, id_col, text_col).select("id", "fp").distinct().persist()
+    fps = winnow_fingerprints(docs, k, window).select("id", "fp").distinct().persist()
     pruned, _ = _drop_high_df(fps, "fp", _MAX_FP_DF)
     a = pruned.alias("a")
     b = pruned.alias("b")
@@ -1276,8 +1241,6 @@ def winnow_overlap_pairs(
 def dedup_lines(
     docs: DataFrame,
     max_line_df: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     separator: str = "\n",
 ) -> DataFrame:
     """Corpus-wide boilerplate-line removal (the C4 / RefinedWeb curation
@@ -1303,14 +1266,14 @@ def dedup_lines(
     groupBy(doc) reassembly via sort_array over (pos, line) structs.
     No driver-side state at any size.
 
-    Returns (id_col, text, n_lines, n_lines_removed) — ``text`` rewritten,
+    Returns (doc_id, text, n_lines, n_lines_removed) — ``text`` rewritten,
     with every input document present (a fully-boilerplate doc comes back
     with empty text and its removal count, so callers can gate on it)."""
     sep_rx = re.escape(separator)
     lines = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), sep_rx)
+            F.split(F.coalesce(F.col("text"), F.lit("")), sep_rx)
         ).alias("pos", "line"),
     ).withColumn(
         # normalize with a full-whitespace trim, NOT space-only trim: in
@@ -1345,14 +1308,14 @@ def dedup_lines(
                 lambda s: s["line"],
             ),
             separator,
-        ).alias(text_col),
+        ).alias("text"),
         F.count("*").alias("n_kept"),
     )
     return (
         totals.join(rebuilt, "id", "left")
         .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+            F.col("id").alias("doc_id"),
+            F.coalesce(F.col("text"), F.lit("")).alias("text"),
             F.col("n_lines"),
             (F.col("n_lines") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
                 "n_lines_removed"
@@ -1365,10 +1328,6 @@ def decontaminate_ngrams(
     corpus: DataFrame,
     heldout: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    heldout_id_col: str = "doc_id",
-    heldout_text_col: str = "text",
     exclude_same_id: bool = False,
 ) -> DataFrame:
     """Exact n-gram collision decontamination (the GPT-3/GPT-4 appendix
@@ -1387,11 +1346,11 @@ def decontaminate_ngrams(
     # distinct per-doc n-grams ONCE on the corpus side — the dominant
     # shuffle; building non-distinct and re-distincting per consumer would
     # pay it twice
-    cg = _shingles(corpus, id_col, text_col, n).select(
+    cg = _shingles(corpus, n).select(
         "id", F.xxhash64("shingle").alias("gh")
     )
     if exclude_same_id:
-        eg = _shingles(heldout, heldout_id_col, heldout_text_col, n).select(
+        eg = _shingles(heldout, n).select(
             F.col("id").alias("eid"), F.xxhash64("shingle").alias("gh")
         )
         hits = (
@@ -1402,7 +1361,7 @@ def decontaminate_ngrams(
         )
     else:
         eg = (
-            _shingles(heldout, heldout_id_col, heldout_text_col, n)
+            _shingles(heldout, n)
             .select(F.xxhash64("shingle").alias("gh"))
             .distinct()
         )
@@ -1413,7 +1372,7 @@ def decontaminate_ngrams(
         .agg(F.count("*").alias("n_collisions"))
         .join(totals, "id")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_collisions",
             "n_grams",
             F.round(F.col("n_collisions") / F.col("n_grams"), 6).alias(
@@ -1426,17 +1385,14 @@ def decontaminate_ngrams(
 def dedup_against_history(
     new_docs: DataFrame,
     history: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    history_col: str = "fingerprint",
 ) -> DataFrame:
     """Ingest-time dedup against the EXISTING corpus — the reference's
     per-upload check of the new file's hash against the documents table
     (/root/reference/src/ingestion/document_ingestion.rs:341-347, policy
     switch :23-33 'Skip'). The batch formulation: fingerprint the incoming
     batch once, drop rows whose fingerprint exists in ``history`` (a frame
-    with ``history_col`` — e.g. the committed corpus's fingerprint column,
-    or a compact distinct-hash table maintained between runs), then
+    with a ``fingerprint`` column — e.g. the committed corpus's, or a
+    compact distinct-hash table maintained between runs), then
     keep-first WITHIN the batch so the surviving set is collision-free.
 
     Scale: one left-anti join on the 16-byte fingerprint (history side is
@@ -1447,13 +1403,13 @@ def dedup_against_history(
     # internal column name, not 'fingerprint': withColumn would silently
     # overwrite (then drop) a caller-owned fingerprint column (ADVICE r4)
     fp = "__rs_ingest_fp__"
-    batch = new_docs.withColumn(fp, fingerprint_col(F.col(text_col)))
+    batch = new_docs.withColumn(fp, fingerprint_col(F.col("text")))
     fresh = batch.join(
-        history.select(F.col(history_col).alias(fp)).distinct(),
+        history.select(F.col("fingerprint").alias(fp)).distinct(),
         fp,
         "left_anti",
     )
-    w = Window.partitionBy(fp).orderBy(F.asc(id_col))
+    w = Window.partitionBy(fp).orderBy(F.asc("doc_id"))
     rn = "__rs_ingest_rn__"  # internal, like fp: never clobber caller data
     return (
         fresh.withColumn(rn, F.row_number().over(w))
@@ -1469,8 +1425,6 @@ def minhash_lsh_incremental(
     num_hashes: int = 32,
     bands: int = 8,
     n: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     history_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Continuous-ingestion near-dup: candidate pairs between an INCOMING
@@ -1495,7 +1449,7 @@ def minhash_lsh_incremental(
     spaces may overlap (re-ingest); identity pairs are excluded."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    sig_new = minhash_signatures(new_docs, num_hashes, n, id_col, text_col).persist()
+    sig_new = minhash_signatures(new_docs, num_hashes, n).persist()
     if history_signatures is not None:
         # caller-owned: do NOT touch its persist lifecycle (they persisted
         # it precisely to reuse across batches — unpersisting here would
@@ -1503,9 +1457,7 @@ def minhash_lsh_incremental(
         # re-persisting a custom storage level raises)
         sig_hist, own_hist = history_signatures, False
     else:
-        sig_hist = minhash_signatures(
-            history_docs, num_hashes, n, id_col, text_col
-        ).persist()
+        sig_hist = minhash_signatures(history_docs, num_hashes, n).persist()
         own_hist = True
     candidates = (
         _band_rows(sig_new, bands, rows_per_band)
@@ -1521,12 +1473,10 @@ def minhash_lsh_incremental(
     # the two sides shingle separately: a re-ingested document may carry
     # the id it has in history, so one merged table would mix two texts
     sh_new = _candidate_shingles(
-        new_docs, candidates.select(F.col("id_a").alias("id")).distinct(),
-        id_col, text_col, n,
+        new_docs, candidates.select(F.col("id_a").alias("id")).distinct(), n
     )
     sh_hist = _candidate_shingles(
-        history_docs, candidates.select(F.col("id_b").alias("id")).distinct(),
-        id_col, text_col, n,
+        history_docs, candidates.select(F.col("id_b").alias("id")).distinct(), n
     )
     result = _jaccard_for_pairs(sh_new, candidates, threshold, sh_hist)
     released = [sig_new, candidates] + ([sig_hist] if own_hist else [])

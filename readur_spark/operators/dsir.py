@@ -52,8 +52,6 @@ def hashed_ngram_features(
     docs: DataFrame,
     n: int = 2,
     num_buckets: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, bucket, cnt): hashed word-n-gram counts per document. Linear
     per doc (sliced-zip n-grams, one explode); multiset counts — DSIR's
@@ -69,8 +67,8 @@ def hashed_ngram_features(
     # materialized attribute. Output is bit-identical (measured, and
     # the DuckDB oracles replay the same values).
     based = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array(words_col(F.col(text_col)))).alias("w"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array(words_col(F.col("text")))).alias("w"),
     )
     w = F.col("w")
     size = F.size(w)
@@ -94,8 +92,6 @@ def dsir_weights(
     n: int = 2,
     num_buckets: int = 10_000,
     alpha: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_features, log_w) for every raw document with ≥1 feature:
     ``log_w`` = Σ_b cnt_b · ln(p_target(b) / p_raw(b)) with add-``alpha``
@@ -107,9 +103,9 @@ def dsir_weights(
     # bucket counts, AND the final per-doc rollup — without the persist
     # the dominant tokenize+hash+aggregate pass over the corpus runs
     # twice per call (once for the scalar collect, once at execution)
-    feats = hashed_ngram_features(raw, n, num_buckets, id_col, text_col).persist()
+    feats = hashed_ngram_features(raw, n, num_buckets).persist()
     tgt = (
-        hashed_ngram_features(target, n, num_buckets, id_col, text_col)
+        hashed_ngram_features(target, n, num_buckets)
         .groupBy("bucket")
         .agg(F.sum("cnt").alias("ct"))
     ).persist()
@@ -141,7 +137,7 @@ def dsir_weights(
     )
     result = (
         feats.join(F.broadcast(ratio), "bucket")
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.sum("cnt").alias("n_features"),
             F.sum(F.col("cnt") * F.col("log_ratio")).alias("log_w"),
@@ -155,8 +151,6 @@ def dsir_resample(
     target: DataFrame,
     k: int,
     temperature: float = 1.0,
-    salt: str = "dsir-resample-v1",
-    id_col: str = "doc_id",
     driver_topk_max: int = 100_000,
     boundary_band: int = 500_000,
     **kwargs,
@@ -189,8 +183,8 @@ def dsir_resample(
             f"temperature must be > 0, got {temperature} "
             "(use a small value like 0.01 for near-deterministic top-k)"
         )
-    weights = dsir_weights(raw, target, id_col=id_col, **kwargs)
-    u = hash_uniform_col(F.col(id_col), salt)
+    weights = dsir_weights(raw, target, **kwargs)
+    u = hash_uniform_col(F.col("doc_id"), "dsir-resample-v1")
     # clamp u away from {0,1}: log(-log(u)) is infinite at the edges
     safe_u = F.least(
         F.greatest(u, F.lit(1e-12)), F.lit(1.0 - 1e-12)
@@ -199,22 +193,22 @@ def dsir_resample(
     # weights is executor-checkpointed by dsir_weights, so every pass
     # below re-reads stored blocks, never the corpus tokenize
     keyed = weights.select(
-        id_col,
+        "doc_id",
         (F.col("log_w") / F.lit(float(temperature)) + gumbel).alias(
             "gumbel_key"
         ),
     )
     if k <= driver_topk_max:
         picked = (
-            keyed.orderBy(F.desc("gumbel_key"), F.asc(id_col))
+            keyed.orderBy(F.desc("gumbel_key"), F.asc("doc_id"))
             .limit(k)
-            .select(id_col)
+            .select("doc_id")
         )
-        return raw.join(picked, id_col, "left_semi")
+        return raw.join(picked, "doc_id", "left_semi")
 
     n = keyed.count()
     if k >= n:
-        return raw.join(keyed.select(id_col), id_col, "left_semi")
+        return raw.join(keyed.select("doc_id"), "doc_id", "left_semi")
     # rank error sized so the [lo_q, hi_q] bracket spans ~boundary_band
     # rows; approxQuantile guarantees rank error <= err * n
     err = max(1e-6, min(0.01, boundary_band / (4.0 * n)))
@@ -259,7 +253,7 @@ def dsir_resample(
             "larger boundary_band"
         )
     need = k - c_hi
-    sure = keyed.filter(F.col("gumbel_key") > hi).select(id_col)
+    sure = keyed.filter(F.col("gumbel_key") > hi).select("doc_id")
     band = keyed.filter(
         (F.col("gumbel_key") <= hi) & (F.col("gumbel_key") > lo)
     )
@@ -289,9 +283,9 @@ def dsir_resample(
             "with a larger boundary_band"
         )
     boundary = (
-        band.orderBy(F.desc("gumbel_key"), F.asc(id_col))
+        band.orderBy(F.desc("gumbel_key"), F.asc("doc_id"))
         .limit(need)
-        .select(id_col)
+        .select("doc_id")
     )
     picked = sure.unionByName(boundary)
-    return raw.join(picked, id_col, "left_semi")
+    return raw.join(picked, "doc_id", "left_semi")

@@ -168,8 +168,6 @@ def chunk_texts(
     docs_df: DataFrame,
     chunk_words: int = 128,
     overlap_words: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     array_path_max_words: int = 10_000,
 ) -> DataFrame:
     """Training-data chunking: split each document into word-bounded
@@ -198,7 +196,7 @@ def chunk_texts(
     """
     assert 0 <= overlap_words < chunk_words
     stride = chunk_words - overlap_words
-    words = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != "")
+    words = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != "")
     n = F.size(words)
 
     # ---- array path (zero shuffle), docs with n ≤ bound -----------------
@@ -220,9 +218,9 @@ def chunk_texts(
     ).alias("c")
     small = (
         docs_df.filter((n > 0) & (n <= array_path_max_words))
-        .select(F.col(id_col), chunk)
+        .select(F.col("doc_id"), chunk)
         .select(
-            id_col,
+            "doc_id",
             F.col("c.chunk_no").alias("chunk_no"),
             F.col("c.chunk_text").alias("chunk_text"),
             F.col("c.n_words").alias("n_words"),
@@ -231,7 +229,7 @@ def chunk_texts(
 
     # ---- relational path (linear), the mega tail -------------------------
     big_rows = docs_df.filter(n > array_path_max_words).select(
-        F.col(id_col).alias("_id"), F.posexplode(words).alias("pos", "w")
+        F.col("doc_id").alias("_id"), F.posexplode(words).alias("pos", "w")
     )
     counts = big_rows.groupBy("_id").agg(F.count("*").alias("_n"))
     nn = F.col("_n")
@@ -264,7 +262,7 @@ def chunk_texts(
         ).alias("chunk_text"),
         F.count("*").cast("int").alias("n_words"),
     ).select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("chunk_no").cast("int").alias("chunk_no"),
         "chunk_text",
         "n_words",
@@ -277,8 +275,6 @@ def chunk_texts_by_tokens(
     tokenizer,
     chunk_tokens: int = 512,
     overlap_tokens: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Token-boundary chunking: split each document into windows of
     ``chunk_tokens`` BPE tokens with ``overlap_tokens`` overlap, emitting
@@ -310,14 +306,14 @@ def chunk_texts_by_tokens(
     assert 0 <= overlap_tokens < chunk_tokens
     merges = tokenizer.merges
     holder: dict = {}
-    id_type = docs_df.schema[id_col].dataType.simpleString()
+    id_type = docs_df.schema["doc_id"].dataType.simpleString()
 
     def run(batches):
         tok = process_tokenizer(merges, holder)
         vocab = tok.token_bytes()
         for pdf in batches:
             rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 ids, starts = tok.encode_with_starts(text or "")
                 if not ids:
                     continue
@@ -327,17 +323,17 @@ def chunk_texts_by_tokens(
                 for chunk_no, (pos, end) in enumerate(windows):
                     rows.append(
                         {
-                            id_col: doc_id,
+                            "doc_id": doc_id,
                             "chunk_no": chunk_no,
                             "chunk_text": tok.decode(ids[pos:end]),
                             "n_tokens": end - pos,
                         }
                     )
             yield pd.DataFrame(
-                rows, columns=[id_col, "chunk_no", "chunk_text", "n_tokens"]
+                rows, columns=["doc_id", "chunk_no", "chunk_text", "n_tokens"]
             )
 
-    return docs_df.select(id_col, text_col).mapInPandas(
+    return docs_df.select("doc_id", "text").mapInPandas(
         run,
-        f"{id_col} {id_type}, chunk_no int, chunk_text string, n_tokens long",
+        f"doc_id {id_type}, chunk_no int, chunk_text string, n_tokens long",
     )

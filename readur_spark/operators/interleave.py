@@ -100,7 +100,6 @@ def build_interleaved_sequences(
     id_col: str = "doc_id",
     spans_col: str = "spans",
     media_token_cost: int | dict[str, int] | None = None,
-    num_buckets: int | None = None,
     token_counter=None,
     text_kinds: tuple[str, ...] = ("text",),
 ) -> DataFrame:
@@ -150,7 +149,7 @@ def build_interleaved_sequences(
     # bucket; the within-bucket order extends to (key, id, span_idx)
     from readur_spark.operators.packing import bucketed_stream_offsets
 
-    offs = bucketed_stream_offsets(base, ("id", "span_idx"), num_buckets)
+    offs = bucketed_stream_offsets(base, ("id", "span_idx"))
     empty_schema = (
         f"seq_id long, {id_col} {id_type}, span_idx int, kind string, "
         "media_ref string, tok_start long, tok_end long, n_tokens long, "

@@ -134,8 +134,6 @@ def extract_outlinks(
 
 def build_domain_graph(
     outlinks: DataFrame,
-    src_domain_col: str = "src_domain",
-    dst_domain_col: str = "dst_domain",
     weighted: bool = False,
 ) -> DataFrame:
     """Distinct (src, dst) domain edges, self-loops and empty hosts
@@ -149,8 +147,8 @@ def build_domain_graph(
     thousands of links across few distinct pairs, which the distinct
     view flattens to degree 1."""
     base = outlinks.select(
-        F.col(src_domain_col).alias("src"),
-        F.col(dst_domain_col).alias("dst"),
+        F.col("src_domain").alias("src"),
+        F.col("dst_domain").alias("dst"),
     ).filter(
         (F.col("src") != "")
         & (F.col("dst") != "")
@@ -224,8 +222,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
     tol: float | None = None,
     stats: dict | None = None,
     teleport: DataFrame | None = None,
@@ -286,9 +282,7 @@ def pagerank(
         stats.update(
             {"iterations_run": 0, "final_delta": None, "converged": False}
         )
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     nodes_ck = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -611,8 +605,6 @@ def trustrank(
     seeds: Iterable[str] | DataFrame,
     damping: float = 0.85,
     iters: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
     tol: float | None = None,
     stats: dict | None = None,
     init_ranks: DataFrame | None = None,
@@ -644,8 +636,6 @@ def trustrank(
         edges,
         damping=damping,
         iters=iters,
-        src_col=src_col,
-        dst_col=dst_col,
         tol=tol,
         stats=stats,
         teleport=sd,
@@ -656,8 +646,6 @@ def trustrank(
 def hits(
     edges: DataFrame,
     iters: int = 20,
-    src_col: str = "src",
-    dst_col: str = "dst",
     tol: float | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -698,9 +686,7 @@ def hits(
         stats.update(
             {"iterations_run": 0, "final_delta": None, "converged": False}
         )
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -854,11 +840,7 @@ def filter_by_domain_blocklist(
 ANCHOR_EL_RE = r"(?is)<a(?:\s[^>]*)?>.*?</a\s*>"
 
 
-def extract_anchor_texts(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def extract_anchor_texts(docs: DataFrame) -> DataFrame:
     """One row per (document, anchor): the canonical target URL, its
     domain, and the whitespace-collapsed anchor text — the classic
     relevance signal (anchor text describes the TARGET document, so
@@ -875,9 +857,9 @@ def extract_anchor_texts(
     href in any form, and anchors whose body is empty after markup
     strip, are dropped. No UDF, no shuffle."""
     els = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.col(html_col), F.lit(ANCHOR_EL_RE), 0)
+            F.regexp_extract_all(F.col("html"), F.lit(ANCHOR_EL_RE), 0)
         ).alias("el"),
     )
     open_tag = F.regexp_extract(F.col("el"), r"(?is)^<a(?:\s[^>]*)?>", 0)
@@ -899,13 +881,13 @@ def extract_anchor_texts(
     )
     return (
         els.select(
-            F.col(id_col),
+            F.col("doc_id"),
             href.alias("href"),
             anchor.alias("anchor_text"),
         )
         .filter(F.col("href").isNotNull() & (F.col("anchor_text") != ""))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             canonical_url_col(F.col("href")).alias("target_url"),
             domain_of(F.col("href")).alias("dst_domain"),
             F.col("anchor_text"),
@@ -913,9 +895,7 @@ def extract_anchor_texts(
     )
 
 
-def anchor_text_stats(
-    anchors: DataFrame, top_k: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
+def anchor_text_stats(anchors: DataFrame, top_k: int = 3) -> DataFrame:
     """Per-target anchor profile: ``(target_url, n_anchors, n_docs,
     n_unique_texts, top_anchors)`` with ``top_anchors`` the ``top_k``
     most frequent anchor texts (ties broken lexicographically — 
@@ -929,7 +909,7 @@ def anchor_text_stats(
 
     counts = anchors.groupBy("target_url", "anchor_text").agg(
         F.count("*").alias("c"),
-        F.countDistinct(id_col).alias("d"),
+        F.countDistinct("doc_id").alias("d"),
     )
     w = Window.partitionBy("target_url").orderBy(
         F.desc("c"), F.asc("anchor_text")
@@ -965,14 +945,12 @@ def anchor_text_stats(
 def anchor_quality_features(
     docs: DataFrame,
     anchors: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Join per-TARGET anchor-text profiles onto the target documents
     as trainable quality features — the classic inbound-anchor signal
     (anchor text describes the target and the target can't fake it;
     the r7 verdict's 'anchor_text_stats exists but nothing consumes
-    it' gap). ``docs`` needs (``id_col``, ``url_col``); ``anchors`` is
+    it' gap). ``docs`` needs (``doc_id``, ``url``); ``anchors`` is
     :func:`extract_anchor_texts` output (or any
     ``(doc_id, target_url, anchor_text)`` table — target_url is
     re-canonicalized here, so raw URLs are accepted).
@@ -995,7 +973,7 @@ def anchor_quality_features(
     keys docs by canonical URL — a uniform key, shuffle join at
     10^12 docs, no driver materialization, no UDF."""
     a = anchors.select(
-        F.col(id_col).alias("__src"),
+        F.col("doc_id").alias("__src"),
         canonical_url_col(F.col("target_url")).alias("target_url"),
         "anchor_text",
     )
@@ -1029,7 +1007,7 @@ def anchor_quality_features(
         "anchor_text_len_mean",
     )
     keyed = docs.withColumn(
-        "__url", canonical_url_col(F.col(url_col))
+        "__url", canonical_url_col(F.col("url"))
     )
     out = keyed.join(
         prof, keyed["__url"] == prof["target_url"], "left"
@@ -1109,9 +1087,7 @@ def domain_degree_stats(
     )
 
 
-def domain_components(
-    edges: DataFrame, max_iter: int = 100
-) -> DataFrame:
+def domain_components(edges: DataFrame) -> DataFrame:
     """Weakly-connected components of the host graph with component
     sizes: ``(node, component, component_size)``, component = the
     lexicographically smallest member — the link-farm-ISLAND signal
@@ -1123,7 +1099,7 @@ def domain_components(
     iterative min-label propagation, one join + one map-side-combining
     groupBy per round, per-round localCheckpoint keeping the plan O(1),
     early stop on convergence). Host graphs have larger diameters than
-    near-dup clusters, hence the raised ``max_iter`` (propagation stops
+    near-dup clusters, hence the raised bound of 100 rounds (propagation stops
     as soon as labels stabilize, so the bound is a guard, not a cost).
     Component size is one window over the label — same uniform key."""
     from pyspark.sql.window import Window
@@ -1134,7 +1110,7 @@ def domain_components(
         edges.select(
             F.col("src").alias("id_a"), F.col("dst").alias("id_b")
         ),
-        max_iter=max_iter,
+        max_iter=100,
     )
     w = Window.partitionBy("component")
     return comp.select(

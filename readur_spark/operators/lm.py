@@ -58,13 +58,13 @@ def _adjacent_zip(ws, order: int, names: tuple[str, ...]):
     )
 
 
-def _bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _bigrams(docs: DataFrame) -> DataFrame:
     """(id, prev, word) — one row per adjacent token pair; documents with
     fewer than two tokens produce no rows."""
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
     return (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             _adjacent_zip(w, 2, ("prev", "word")).alias("pairs"),
         )
         .where(F.size(w) >= 2)
@@ -86,8 +86,6 @@ class BigramLM:
 
 def train_bigram_lm(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     add_k: float = 0.5,
     min_count: int = 1,
 ) -> BigramLM:
@@ -103,7 +101,7 @@ def train_bigram_lm(
     # read the cached arrays. The pair table is checkpointed eagerly
     # (truncating its lineage off the cache) so the cache can be released
     # before returning — the model tables never re-tokenize.
-    toks = docs.select(words_col(F.col(text_col)).alias("ws")).persist()
+    toks = docs.select(words_col(F.col("text")).alias("ws")).persist()
     big = (
         toks.where(F.size("ws") >= 2)
         .select(
@@ -134,8 +132,6 @@ def train_bigram_lm(
 def perplexity_score(
     docs: DataFrame,
     lm: BigramLM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_model: bool = False,
 ) -> DataFrame:
     """(doc_id, n_bigrams, avg_nll, perplexity) per candidate document
@@ -150,7 +146,7 @@ def perplexity_score(
     if broadcast_model:
         pc, cc = F.broadcast(pc), F.broadcast(cc)
     k, v = float(lm.add_k), float(lm.vocab_size)
-    big = _bigrams(docs, id_col, text_col)
+    big = _bigrams(docs)
     scored = (
         big.join(pc, ["prev", "word"], "left")
         .join(cc, ["prev"], "left")
@@ -162,7 +158,7 @@ def perplexity_score(
             ).alias("lp"),
         )
     )
-    return scored.groupBy(F.col("id").alias(id_col)).agg(
+    return scored.groupBy(F.col("id").alias("doc_id")).agg(
         F.count("*").alias("n_bigrams"),
         (-F.avg("lp")).alias("avg_nll"),
         F.exp(-F.avg("lp")).alias("perplexity"),
@@ -173,7 +169,6 @@ def perplexity_filter(
     docs: DataFrame,
     lm: BigramLM,
     max_perplexity: float,
-    id_col: str = "doc_id",
     **kwargs,
 ) -> DataFrame:
     """Keep documents scoring at or below the perplexity ceiling (plus
@@ -182,18 +177,18 @@ def perplexity_filter(
     # single anti-join formulation: drop only the documents that scored
     # ABOVE the ceiling; unscored (<2-token) docs survive by absence from
     # the drop set — one pass over docs instead of the semi+anti+union
-    scores = perplexity_score(docs, lm, id_col=id_col, **kwargs)
-    dropped = scores.filter(F.col("perplexity") > max_perplexity).select(id_col)
-    return docs.join(dropped, id_col, "left_anti")
+    scores = perplexity_score(docs, lm, **kwargs)
+    dropped = scores.filter(F.col("perplexity") > max_perplexity).select("doc_id")
+    return docs.join(dropped, "doc_id", "left_anti")
 
 
-def _trigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _trigrams(docs: DataFrame) -> DataFrame:
     """(id, w1, w2, w3) — one row per adjacent token triple (linear:
     three array slices zipped via the shared _adjacent_zip, one explode)."""
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
     return (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             _adjacent_zip(w, 3, ("w1", "w2", "w3")).alias("t"),
         )
         .where(F.size(w) >= 3)
@@ -223,8 +218,6 @@ class BackoffLM:
 
 def train_backoff_lm(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     alpha: float = 0.4,
     min_count: int = 1,
 ) -> BackoffLM:
@@ -238,7 +231,7 @@ def train_backoff_lm(
     # three n-gram orders aggregate the cached arrays, each count table
     # checkpointed eagerly so the cache releases without any model table
     # re-tokenizing the corpus on later actions.
-    toks = docs.select(words_col(F.col(text_col)).alias("ws")).persist()
+    toks = docs.select(words_col(F.col("text")).alias("ws")).persist()
     tri = _materialize_release(
         toks.where(F.size("ws") >= 3)
         .select(
@@ -276,17 +269,14 @@ def train_backoff_lm(
 def backoff_score(
     docs: DataFrame,
     lm: BackoffLM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_model: bool = False,
-    unseen_count: float = 0.5,
 ) -> DataFrame:
     """(doc_id, n_trigrams, avg_nll, perplexity) under Stupid Backoff:
 
         S(w3 | w1 w2) = c(w1w2w3)/c(w1w2)           if the trigram is seen
                       = a * c(w2w3)/c(w2)           else if the bigram is
                       = a^2 * c(w3)/N               else if the word is
-                      = a^2 * unseen_count/N        else (OOV)
+                      = a^2 * 0.5/N                 else (OOV)
 
     Five LEFT joins on uniform token keys (trigram, context bigram,
     backoff bigram, two unigrams) then one per-doc rollup — scoring stays
@@ -313,7 +303,7 @@ def backoff_score(
     uni_ctx = maybe_b(lm.uni.select(F.col("w").alias("w2"), F.col("c1").alias("c1_ctx")))
     uni_w = maybe_b(lm.uni.select(F.col("w").alias("w3"), F.col("c1").alias("c1_w")))
 
-    g = _trigrams(docs, id_col, text_col)
+    g = _trigrams(docs)
     joined = (
         g.join(tri, ["w1", "w2", "w3"], "left")
         .join(bi_ctx, ["w1", "w2"], "left")
@@ -332,12 +322,12 @@ def backoff_score(
         )
         .otherwise(
             F.lit(a * a)
-            * F.coalesce(F.col("c1_w").cast("double"), F.lit(float(unseen_count)))
+            * F.coalesce(F.col("c1_w").cast("double"), F.lit(0.5))
             / F.lit(n_tot)
         )
     )
     scored = joined.select("id", F.log(score).alias("lp"))
-    return scored.groupBy(F.col("id").alias(id_col)).agg(
+    return scored.groupBy(F.col("id").alias("doc_id")).agg(
         F.count("*").alias("n_trigrams"),
         (-F.avg("lp")).alias("avg_nll"),
         F.exp(-F.avg("lp")).alias("perplexity"),

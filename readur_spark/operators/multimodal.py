@@ -52,9 +52,7 @@ def _bytes(raw) -> bytes:
     return bytes(raw) if raw is not None else b""
 
 
-def image_metadata(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def image_metadata(media_df: DataFrame) -> DataFrame:
     """I17+I5+I7 metadata/decision extraction — header-level parsing only,
     no pixel decode, so it runs at full Arrow batch speed."""
 
@@ -83,7 +81,7 @@ def image_metadata(
             "target_height": th,
         }
 
-    return map_documents(media_df, [id_col, content_col], kernel, IMAGE_META_SCHEMA)
+    return map_documents(media_df, ["doc_id", "content"], kernel, IMAGE_META_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -110,9 +108,7 @@ def _decode_image_stub(data: bytes, width: int, height: int) -> bytes:
     return (seed * reps)[:n]
 
 
-def decode_images(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def decode_images(media_df: DataFrame) -> DataFrame:
     """Decode stage: PNG/JPEG/GIF/TIFF/BMP → REAL decode (in-repo codecs,
     EXIF auto-rotate for JPEG) to grayscale pixels with
     ``decode_stub=false``; corrupt-but-parseable headers → flagged stub;
@@ -148,7 +144,7 @@ def decode_images(
             "pixels": _decode_image_stub(data, meta["width"], meta["height"]),
         }
 
-    return map_documents(media_df, [id_col, content_col], kernel, DECODED_SCHEMA)
+    return map_documents(media_df, ["doc_id", "content"], kernel, DECODED_SCHEMA)
 
 
 IMAGE_QUALITY_SCHEMA = T.StructType(
@@ -165,9 +161,7 @@ IMAGE_QUALITY_SCHEMA = T.StructType(
 )
 
 
-def image_quality(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def image_quality(media_df: DataFrame) -> DataFrame:
     """I9 distributed: real PNG decode + the reference's quality analysis
     (enhanced.rs:478-639) per image; the I10 enhancement decision under
     stat-gated (neutral) settings rides along. Per-image numpy work, no
@@ -199,7 +193,7 @@ def image_quality(
             "needs_enhancement": needs_enhancement(stats, settings),
         }
 
-    return map_documents(media_df, [id_col, content_col], kernel, IMAGE_QUALITY_SCHEMA)
+    return map_documents(media_df, ["doc_id", "content"], kernel, IMAGE_QUALITY_SCHEMA)
 
 
 OCR_RESULT_SCHEMA = T.StructType(
@@ -221,8 +215,6 @@ def ocr_images(
     engine=None,
     settings=None,
     limits=None,
-    id_col: str = "doc_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """I1–I4 distributed: the full image-OCR ladder (decode → preprocess →
     engine with language combo / PSM / confidence gate / timeout → I3
@@ -239,7 +231,7 @@ def ocr_images(
         res["confidence"] = float(res["confidence"])
         return res
 
-    return map_documents(media_df, [id_col, content_col], kernel, OCR_RESULT_SCHEMA)
+    return map_documents(media_df, ["doc_id", "content"], kernel, OCR_RESULT_SCHEMA)
 
 
 def ocr_dead_letters(ocr_df: DataFrame) -> DataFrame:

@@ -92,15 +92,11 @@ def _sigmoid(acc: float) -> float:
     return e / (1.0 + e)
 
 
-def _doc_features(
-    docs: DataFrame, num_buckets: int, id_col: str, text_col: str
-) -> DataFrame:
+def _doc_features(docs: DataFrame, num_buckets: int) -> DataFrame:
     """(id, fs array<struct<bucket,cnt>> sorted by bucket, total) — the
     per-document feature rows. Sorting fixes the fold order so the
     float64 dot product is reproducible."""
-    feats = hashed_ngram_features(
-        docs, n=1, num_buckets=num_buckets, id_col=id_col, text_col=text_col
-    )
+    feats = hashed_ngram_features(docs, n=1, num_buckets=num_buckets)
     return feats.groupBy("id").agg(
         F.array_sort(
             F.collect_list(F.struct("bucket", "cnt"))
@@ -109,19 +105,14 @@ def _doc_features(
     )
 
 
-def doc_features(
-    docs: DataFrame,
-    num_buckets: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_features(docs: DataFrame, num_buckets: int) -> DataFrame:
     """Public feature-table builder for callers that train AND score over
     the same corpus: compute it once, ``persist()`` it, and pass it to
     both :func:`train_quality_classifier` and :func:`score_quality` via
     their ``features=`` parameter so the corpus is tokenized+hashed once
     instead of once per consumer. The caller owns the persist lifecycle.
     MUST be built with the same ``num_buckets`` the model uses."""
-    return _flat_cols(_doc_features(docs, num_buckets, id_col, text_col))
+    return _flat_cols(_doc_features(docs, num_buckets))
 
 
 def _flat_cols(fs_df: DataFrame) -> DataFrame:
@@ -215,8 +206,6 @@ def train_quality_classifier(
     iters: int = 30,
     lr: float = 2.0,
     l2: float = 1e-4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     driver_train_max: int = 20_000,
     features: DataFrame | None = None,
 ) -> dict:
@@ -230,14 +219,8 @@ def train_quality_classifier(
     MB materialized through ``toLocalIterator`` (one partition in flight,
     rows converted to plain tuples as they stream). Above the bound the
     distributed loop runs instead — same model either way."""
-    labeled = positive.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col),
-        F.lit(1.0).alias("__y__"),
-    ).unionByName(
-        negative.select(
-            F.col(id_col).alias(id_col), F.col(text_col).alias(text_col),
-            F.lit(0.0).alias("__y__"),
-        )
+    labeled = positive.select("doc_id", "text", F.lit(1.0).alias("__y__")).unionByName(
+        negative.select("doc_id", "text", F.lit(0.0).alias("__y__"))
     )
     # Guard: _doc_features groups the UNION by id, so a doc_id appearing
     # in both sides (or twice in one) would silently merge two documents'
@@ -245,7 +228,7 @@ def train_quality_classifier(
     # corrupted row once per label — double-counted gradient. Fail fast
     # instead; the check is one metadata-scale aggregate.
     dup = (
-        labeled.groupBy(id_col)
+        labeled.groupBy("doc_id")
         .count()
         .filter(F.col("count") > 1)
         .limit(1)
@@ -253,17 +236,17 @@ def train_quality_classifier(
     )
     if dup:
         raise ValueError(
-            f"train_quality_classifier: {id_col}={dup[0][id_col]!r} appears "
+            f"train_quality_classifier: doc_id={dup[0]['doc_id']!r} appears "
             "more than once across positive+negative — ids must be unique "
             "and the two sides disjoint"
         )
     fs = (
-        _flat_cols(_doc_features(labeled, num_buckets, id_col, text_col))
+        _flat_cols(_doc_features(labeled, num_buckets))
         if features is None
         else features
     )
     data = (
-        fs.join(labeled.select(F.col(id_col).alias("id"), "__y__"), "id")
+        fs.join(labeled.select(F.col("doc_id").alias("id"), "__y__"), "id")
         .select("id", "fs", "total", "bs", "cs", "vals", "__y__")
         .persist()
     )
@@ -415,18 +398,16 @@ def _train_local(data, num_buckets: int, iters: int, lr: float, l2: float) -> di
 def score_quality(
     docs: DataFrame,
     model: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     features: DataFrame | None = None,
 ) -> DataFrame:
-    """(id_col, quality_prob) for every document with ≥1 token — the
+    """(doc_id, quality_prob) for every document with ≥1 token — the
     corpus-wide linear pass. Docs whose tokens all miss (empty text)
     produce no row; gate those on length filters. ``features``: a
     prebuilt :func:`doc_features` table for exactly these docs (caller-
     persisted) so train+score share one featurize pass."""
     fs = (
         _flat_cols(
-            _doc_features(docs, int(model["num_buckets"]), id_col, text_col)
+            _doc_features(docs, int(model["num_buckets"]))
         )
         if features is None
         else features
@@ -435,7 +416,7 @@ def score_quality(
         F.col("bs"), F.col("vals")
     )
     return fs.select(
-        F.col("id").alias(id_col), F.round(p, 6).alias("quality_prob")
+        F.col("id").alias("doc_id"), F.round(p, 6).alias("quality_prob")
     )
 
 
@@ -443,12 +424,11 @@ def quality_filter(
     docs: DataFrame,
     model: dict,
     min_prob: float = 0.5,
-    id_col: str = "doc_id",
     **kwargs,
 ) -> DataFrame:
     """Keep documents the classifier scores at/above ``min_prob``
     (unscored short docs survive by absence from the drop set — same
     convention as perplexity_filter)."""
-    scores = score_quality(docs, model, id_col=id_col, **kwargs)
-    dropped = scores.filter(F.col("quality_prob") < min_prob).select(id_col)
-    return docs.join(dropped, id_col, "left_anti")
+    scores = score_quality(docs, model, **kwargs)
+    dropped = scores.filter(F.col("quality_prob") < min_prob).select("doc_id")
+    return docs.join(dropped, "doc_id", "left_anti")

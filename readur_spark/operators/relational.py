@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: multi-agg groupBy after a pushed-down date filter —
     the canonical partial-agg (map-side combine) plan. Decimal-cast sums so
     the DuckDB oracle matches bit-for-bit (double summation order differs
@@ -23,7 +23,7 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFram
     tax = F.col("l_tax").cast("decimal(18,4)")
     qty = F.col("l_quantity").cast("decimal(18,4)")
     return (
-        lineitem.filter(F.col("l_shipdate") <= cutoff)
+        lineitem.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum(qty), 2).cast("double").alias("sum_qty"),
@@ -131,10 +131,11 @@ def event_type_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Sessionization: lag + cumulative gap-count window — the standard
-    batch formulation (no streaming state needed for bounded input).
-    Returns per-session aggregates."""
+    batch formulation (no streaming state needed for bounded input). A
+    gap of more than 30 minutes starts a new session. Returns per-session
+    aggregates."""
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     epoch = F.col("ts").cast("timestamp").cast("long")  # NTZ-safe under UTC session tz
     gap = epoch - F.lag(epoch, 1).over(w)
@@ -142,7 +143,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         events.withColumn("gap_s", gap)
         .withColumn(
             "new_session",
-            F.when(F.col("gap_s").isNull() | (F.col("gap_s") > gap_minutes * 60), 1).otherwise(0),
+            F.when(F.col("gap_s").isNull() | (F.col("gap_s") > 30 * 60), 1).otherwise(0),
         )
         .withColumn("session_no", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)))
     )

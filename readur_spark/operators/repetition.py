@@ -42,10 +42,10 @@ THRESHOLDS = {
 }
 
 
-def _dup_unit_fracs(docs, id_col, unit_col_expr, prefix):
+def _dup_unit_fracs(docs, unit_col_expr, prefix):
     """(id, {prefix}_frac, {prefix}_char_frac) for one unit family."""
     units = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(unit_col_expr).alias("unit"),
     ).where(F.trim(F.col("unit")) != "")
     per_unit = units.groupBy("id", "unit").agg(F.count("*").alias("cnt"))
@@ -63,7 +63,7 @@ def _dup_unit_fracs(docs, id_col, unit_col_expr, prefix):
     )
 
 
-def _top_ngram_frac(docs, id_col, text_col, n):
+def _top_ngram_frac(docs, n):
     """(id, top{n}_char_frac): chars covered by the most frequent word
     n-gram / total doc chars. Tokenization matches the shingle family
     (lowercase, non-alnum splits) so oracles reproduce it.
@@ -75,7 +75,7 @@ def _top_ngram_frac(docs, id_col, text_col, n):
     from pyspark.sql.window import Window
 
     tokens = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
+        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
     )
     # NOTE: no computed text-level column (e.g. length(text)) may ride
     # through the posexplode — Catalyst can evaluate such a projection
@@ -83,7 +83,7 @@ def _top_ngram_frac(docs, id_col, text_col, n):
     # means 200k × O(1.3M) numChars scans (observed as a multi-hour hang).
     # Per-doc totals join back in AFTER the aggregation instead.
     rows = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(tokens).alias("pos", "tk"),
     )
     w = Window.partitionBy("id").orderBy("pos")
@@ -102,7 +102,7 @@ def _top_ngram_frac(docs, id_col, text_col, n):
         ).alias("best_chars")
     )
     totals = docs.select(
-        F.col(id_col).alias("id"), F.length(text_col).alias("total_chars")
+        F.col("doc_id").alias("id"), F.length("text").alias("total_chars")
     )
     return best.join(totals, "id").select(
         "id",
@@ -112,23 +112,21 @@ def _top_ngram_frac(docs, id_col, text_col, n):
     )
 
 
-def repetition_metrics(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Per-document repetition metrics + the MassiveText ``rep_pass``
     verdict. Documents with no qualifying units score 0 for that family
     (nothing repeated)."""
-    lines = F.split(F.col(text_col), r"\n")
-    paras = F.split(F.col(text_col), r"\n\s*\n")
-    line_f = _dup_unit_fracs(docs, id_col, lines, "dup_line")
-    para_f = _dup_unit_fracs(docs, id_col, paras, "dup_para")
-    out = docs.select(F.col(id_col).alias("id"))
+    lines = F.split(F.col("text"), r"\n")
+    paras = F.split(F.col("text"), r"\n\s*\n")
+    line_f = _dup_unit_fracs(docs, lines, "dup_line")
+    para_f = _dup_unit_fracs(docs, paras, "dup_para")
+    out = docs.select(F.col("doc_id").alias("id"))
     for part in (
         line_f,
         para_f,
-        _top_ngram_frac(docs, id_col, text_col, 2),
-        _top_ngram_frac(docs, id_col, text_col, 3),
-        _top_ngram_frac(docs, id_col, text_col, 4),
+        _top_ngram_frac(docs, 2),
+        _top_ngram_frac(docs, 3),
+        _top_ngram_frac(docs, 4),
     ):
         out = out.join(part, "id", "left")
     metric_cols = [
@@ -146,5 +144,5 @@ def repetition_metrics(
     for c, t in THRESHOLDS.items():
         verdict = verdict & (F.col(c) <= t)
     return out.select(
-        F.col("id").alias(id_col), *metric_cols, verdict.alias("rep_pass")
+        F.col("id").alias("doc_id"), *metric_cols, verdict.alias("rep_pass")
     )

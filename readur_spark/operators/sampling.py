@@ -28,19 +28,16 @@ def hash_uniform_col(id_col: Column, salt: str) -> Column:
 
 
 def split_assign(
-    docs: DataFrame,
-    fractions: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    salt: str = "split-v1",
+    docs: DataFrame, fractions: dict[str, float] | None = None
 ) -> DataFrame:
     """Add a ``split`` column assigning each doc to a named split with the
-    given fractions (must sum to 1). Assignment is a pure function of
-    (id, salt): stable under corpus growth and engine-portable."""
+    given fractions (must sum to 1). Assignment is a pure function of the
+    salted id: stable under corpus growth and engine-portable."""
     fractions = fractions or {"train": 0.98, "val": 0.01, "test": 0.01}
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    u = hash_uniform_col(F.col(id_col), salt)
+    u = hash_uniform_col(F.col("doc_id"), "split-v1")
     expr = None
     acc = 0.0
     items = list(fractions.items())
@@ -56,14 +53,11 @@ def split_assign(
 def mix_sources(
     docs: DataFrame,
     target_fractions: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix-v1",
     counts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Domain mixing by downsample-only reweighting (the static corpus-
     mixing shape of The Pile / DoReMi deployment): resample so the kept
-    corpus approximates ``target_fractions`` over ``source_col``.
+    corpus approximates ``target_fractions`` over ``source``.
 
     The output size is the maximum feasible without upsampling:
     M = min_s N_s / T_s, and each source keeps rate_s = M·T_s / N_s of its
@@ -80,7 +74,7 @@ def mix_sources(
     if counts is None:
         counts = {
             r["s"]: r["n"]
-            for r in docs.groupBy(F.col(source_col).alias("s"))
+            for r in docs.groupBy(F.col("source").alias("s"))
             .agg(F.count("*").alias("n"))
             .collect()
         }
@@ -91,11 +85,11 @@ def mix_sources(
     rates = [(s, min(1.0, m * t / counts[s])) for s, t in targets.items()]
     spark = docs.sparkSession
     rate_df = F.broadcast(
-        spark.createDataFrame(rates, f"{source_col} string, _keep_rate double")
+        spark.createDataFrame(rates, "source string, _keep_rate double")
     )
-    u = hash_uniform_col(F.col(id_col), salt)
+    u = hash_uniform_col(F.col("doc_id"), "mix-v1")
     return (
-        docs.join(rate_df, source_col)
+        docs.join(rate_df, "source")
         .filter(u < F.col("_keep_rate"))
         .drop("_keep_rate")
     )
@@ -104,9 +98,6 @@ def mix_sources(
 def mix_sources_temperature(
     docs: DataFrame,
     temperature: float,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix-v1",
 ) -> DataFrame:
     """Temperature-scaled domain mixing (the multilingual/multi-source
     recipe of mT5 / PaLM): target share of source s ∝ p_s^(1/T) where
@@ -127,14 +118,14 @@ def mix_sources_temperature(
         raise ValueError(f"temperature must be > 0, got {temperature}")
     counts = {
         r["s"]: r["n"]
-        for r in docs.groupBy(F.col(source_col).alias("s"))
+        for r in docs.groupBy(F.col("source").alias("s"))
         .agg(F.count("*").alias("n"))
         .collect()
     }
     if None in counts:
         raise ValueError(
-            f"mix_sources_temperature: NULL in source column "
-            f"{source_col!r} ({counts[None]} rows) — fill or drop "
+            "mix_sources_temperature: NULL in source column "
+            f"'source' ({counts[None]} rows) — fill or drop "
             "unsourced docs first"
         )
     if not counts:
@@ -143,21 +134,13 @@ def mix_sources_temperature(
     targets = {
         s: (n / total) ** (1.0 / temperature) for s, n in counts.items()
     }
-    return mix_sources(
-        docs,
-        targets,
-        source_col=source_col,
-        id_col=id_col,
-        salt=salt,
-        counts=counts,
-    )
+    return mix_sources(docs, targets, counts=counts)
 
 
 def sample_by_weight(
     docs: DataFrame,
     rate: float,
     weight_col: str | None = None,
-    id_col: str = "doc_id",
     salt: str = "sample-v1",
 ) -> DataFrame:
     """Deterministic Bernoulli sample: keep a doc iff its salted uniform is
@@ -165,20 +148,18 @@ def sample_by_weight(
     to [0,1], so a weight ≥ 1/rate keeps the doc always). The standard
     quality-weighted downsampling shape — higher-quality docs survive at a
     higher rate, and the decision is per-doc with no shuffle."""
-    u = hash_uniform_col(F.col(id_col), salt)
+    u = hash_uniform_col(F.col("doc_id"), salt)
     p = F.lit(rate) * (F.col(weight_col) if weight_col else F.lit(1.0))
     return docs.filter(u < F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)))
 
 
 def global_shuffle(
     docs: DataFrame,
-    id_col: str = "doc_id",
     salt: str = "shuffle-v1",
     num_buckets: int = 1024,
-    pos_col: str = "shuffle_pos",
 ) -> DataFrame:
     """Deterministic GLOBAL shuffle with explicit positions: append
-    ``pos_col`` holding each row's 0-based rank in the order
+    ``shuffle_pos`` holding each row's 0-based rank in the order
     ``(md5(id || ':' || salt), id)`` — the training-data ordering step
     (every epoch pipeline shuffles its packed sequences; a different
     ``salt`` is a different epoch's permutation). The permutation is a
@@ -196,7 +177,7 @@ def global_shuffle(
     from readur_spark.operators.packing import bucketed_stream_offsets
 
     num_buckets = max(1, min(int(num_buckets), 1 << 16))
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":" + salt)))
     # the shared bucketed prefix scan (packing.bucketed_stream_offsets)
     # with weight 1: gstart == the 0-based global rank. The key is the
     # md5's leading 16 bits as a number — lexicographic order of
@@ -209,34 +190,26 @@ def global_shuffle(
     ).withColumn("__n", F.lit(1).cast("long"))
     offs = bucketed_stream_offsets(
         keyed,
-        ("__h", id_col),
+        ("__h", "doc_id"),
         num_buckets,
         key_col="__key",
         n_col="__n",
-        out_col=pos_col,
+        out_col="shuffle_pos",
     )
     if offs is None:
-        return docs.withColumn(pos_col, F.lit(None).cast("long")).filter(
+        return docs.withColumn("shuffle_pos", F.lit(None).cast("long")).filter(
             F.lit(False)
         )
     return offs.drop("__h", "__key", "__n")
 
 
-def curriculum_positions(
-    docs: DataFrame,
-    quality_col: str = "quality",
-    id_col: str = "doc_id",
-    phases: int = 10,
-    salt: str = "curriculum-v1",
-    pos_col: str = "curriculum_pos",
-) -> DataFrame:
+def curriculum_positions(docs: DataFrame, phases: int = 10) -> DataFrame:
     """Deterministic curriculum ordering: every document gets its
     0-based position in the training order that ascends through
     ``phases`` quality bands (floor(quality*phases), clamped) with a
     salted-md5 shuffle WITHIN each band — the curriculum-learning
     layout (start on low bands or high, the caller picks by reading
-    the order forward or backward; a new ``salt`` reshuffles within
-    bands without disturbing the band sequence).
+    the order forward or backward).
 
     Scale shape: band and hash pack into ONE numeric key
     (band·2^48 + first 48 md5 bits — phases ≤ 2^5 keeps the key well
@@ -247,20 +220,20 @@ def curriculum_positions(
         raise ValueError(f"phases must be in [1, 32], got {phases}")
     from readur_spark.operators.packing import bucketed_stream_offsets
 
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":curriculum-v1")))
     # greatest/least SKIP nulls, so an unguarded NULL quality would
     # silently land in the TOP band (greatest(0, least(p-1, NULL)) =
     # p-1). An unscored doc in a curriculum is an upstream gap — raise
     # instead of inventing a band (codegen'd branch, no action needed).
     q_checked = F.when(
-        F.col(quality_col).isNull(),
+        F.col("quality").isNull(),
         F.raise_error(
             F.lit(
-                f"curriculum_positions: NULL in quality column "
-                f"{quality_col!r} — score or drop unscored docs first"
+                "curriculum_positions: NULL in quality column "
+                "'quality' — score or drop unscored docs first"
             )
         ).cast("double"),
-    ).otherwise(F.col(quality_col).cast("double"))
+    ).otherwise(F.col("quality").cast("double"))
     band = F.greatest(
         F.lit(0),
         F.least(
@@ -278,14 +251,13 @@ def curriculum_positions(
     )
     offs = bucketed_stream_offsets(
         keyed,
-        ("__h", id_col),
-        None,
+        ("__h", "doc_id"),
         key_col="__key",
         n_col="__n",
-        out_col=pos_col,
+        out_col="curriculum_pos",
     )
     if offs is None:
-        return docs.withColumn(pos_col, F.lit(None).cast("long")).filter(
+        return docs.withColumn("curriculum_pos", F.lit(None).cast("long")).filter(
             F.lit(False)
         )
     return offs.drop("__h", "__key", "__n")

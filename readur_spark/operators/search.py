@@ -250,36 +250,35 @@ def search_ranked_ts(docs: DataFrame, query: str, limit: int = 25) -> DataFrame:
     return ranked.orderBy(F.desc("search_rank"), F.asc("doc_id")).limit(limit)
 
 
-def filter_by_role(
-    docs: DataFrame, user_id: int, role: str, owner_col: str = "owner_id"
-) -> DataFrame:
+def filter_by_role(docs: DataFrame, user_id: int, role: str) -> DataFrame:
     """F12: role-based visibility (helpers.rs:55-67) — admins see
-    everything (no predicate), users only rows whose ``owner_col`` matches.
+    everything (no predicate), users only rows whose ``owner_id`` matches.
     The user predicate reaches the parquet scan as a pushed filter when
-    ``owner_col`` is a physical column."""
+    ``owner_id`` is a physical column."""
     if role == "admin":
         return docs
-    return docs.filter(F.col(owner_col) == user_id)
+    return docs.filter(F.col("owner_id") == user_id)
 
 
-def snippets(docs: DataFrame, term: str, snippet_length: int = 200) -> DataFrame:
+def snippets(docs: DataFrame, term: str) -> DataFrame:
     """F10: first-match snippet window (search.rs:190-260 generates ≤5
     snippets ≤3/term with word-boundary snapping; the batch form keeps the
-    first match per doc, a fixed-width window — fully Catalyst-native)."""
+    first match per doc, a 200-char window starting 50 chars before the
+    match — fully Catalyst-native)."""
     lowered = F.lower(F.col("text"))
     pos = F.locate(term.lower(), lowered)  # 1-based; 0 = no match
-    start = F.greatest(pos - F.lit(snippet_length // 4), F.lit(1))
+    start = F.greatest(pos - F.lit(50), F.lit(1))
     return (
         docs.filter(pos > 0)
         .select(
             "doc_id",
-            F.substring(F.col("text"), start, F.lit(snippet_length)).alias("snippet"),
+            F.substring(F.col("text"), start, F.lit(200)).alias("snippet"),
             (pos - 1).alias("match_offset"),
         )
     )
 
 
-def snippets_full(docs: DataFrame, query: str, snippet_length: int = 200) -> DataFrame:
+def snippets_full(docs: DataFrame, query: str) -> DataFrame:
     """F10 with full reference semantics (word-boundary snapping, highlight
     ranges, ≤3-while-scanning / ≤5-total caps — search.rs:190-260) via the
     parity kernel in an Arrow-batched stage. One output row per snippet."""
@@ -291,7 +290,7 @@ def snippets_full(docs: DataFrame, query: str, snippet_length: int = 200) -> Dat
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for s in generate_snippets(text or "", query, snippet_length):
+                for s in generate_snippets(text or "", query):
                     rows.append({"doc_id": doc_id, **s})
             yield pd.DataFrame(
                 rows,
@@ -311,15 +310,12 @@ def snippets_full(docs: DataFrame, query: str, snippet_length: int = 200) -> Dat
 def list_documents(
     docs: DataFrame,
     lang: str | None = None,
-    source: str | None = None,
     min_chars: int | None = None,
 ) -> DataFrame:
     """F13: list + filter + sort (management.rs:242-315)."""
     out = docs
     if lang is not None:
         out = out.filter(F.col("lang") == lang)
-    if source is not None:
-        out = out.filter(F.col("source") == source)
     if min_chars is not None:
         out = out.filter(F.col("n_chars") >= min_chars)
     return out.select("doc_id", "lang", "source", "n_chars").orderBy("doc_id")
@@ -338,8 +334,6 @@ def doc_stats(docs: DataFrame) -> DataFrame:
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 2,
 ) -> DataFrame:
     """Corpus-wide TF-IDF keyword extraction: the top-``k`` most
@@ -363,7 +357,7 @@ def tfidf_top_terms(
     from readur_spark.operators.dedup import _materialize_release
 
     n_docs = docs.count()
-    toks = _token_rows(docs, id_col, text_col)
+    toks = _token_rows(docs)
     # persisted: the (doc, term, tf) table feeds BOTH the corpus df
     # aggregation and the scoring join — without the persist the token
     # explode + per-doc aggregation over the whole corpus executes twice
@@ -382,7 +376,7 @@ def tfidf_top_terms(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("tk").alias("term"),
             "tfidf",
             F.col("rnk").cast("int").alias("rnk"),

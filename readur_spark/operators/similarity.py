@@ -30,8 +30,6 @@ def cosine_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``query_vec``.
 
@@ -40,29 +38,31 @@ def cosine_topk(
     global sort materialization. Tie-break on id for a deterministic set.
     """
     q = _as_lit_array(query_vec)
-    emb = F.col(vec_col).cast("array<double>")
+    emb = F.col("embedding").cast("array<double>")
     score = F.round(_dot(emb, q) / (_norm(emb) * _norm(q)), 6)
     return (
-        embeddings.select(F.col(id_col), score.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        embeddings.select(F.col("vec_id"), score.alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def _srp_planes(num_planes: int, dim: int) -> list[list[float]]:
+    """``num_planes`` fixed seeded Gaussian hyperplanes in ``dim`` dims."""
+    rng = random.Random(42)
+    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
 
 
 def hyperplane_lsh_buckets(
     embeddings: DataFrame,
     num_planes: int = 16,
     dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Random-hyperplane (SRP) LSH: sign pattern of ``num_planes`` fixed
-    seeded hyperplanes → integer bucket. Deterministic given the seed.
+    seeded hyperplanes → integer bucket. Deterministic.
     Adds a ``bucket`` column; equal buckets = candidate neighbors."""
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
-    emb = F.col(vec_col).cast("array<double>")
+    planes = _srp_planes(num_planes, dim)
+    emb = F.col("embedding").cast("array<double>")
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
         bit = F.when(_dot(emb, _as_lit_array(p)) >= 0, F.lit(1)).otherwise(F.lit(0))
@@ -73,9 +73,7 @@ def hyperplane_lsh_buckets(
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    n_iter: int = 5,
     seed: int = 42,
-    sample_size: int = 2048,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_literal_centroids: int = 64,
@@ -96,13 +94,13 @@ def ivf_assign(
         # string is reproducible in any engine, unlike Spark's xxhash64 —
         # lets the DuckDB/pure-Python oracle replay the exact same k-means)
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(sample_size)
+        .limit(2048)
         .toPandas()
     )
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
     rng = np.random.RandomState(seed)
     centroids = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
-    for _ in range(n_iter):
+    for _ in range(5):
         d = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for c in range(len(centroids)):
@@ -154,9 +152,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: score only the ``n_probe`` clusters nearest
     to the query (the FAISS IVF-Flat shape). Recall is tuned by n_probe;
@@ -165,18 +160,12 @@ def ivf_topk(
     prune partitions at the scan."""
     import numpy as np
 
-    assigned, centroids = ivf_assign(
-        embeddings, n_centroids=n_centroids, seed=seed, id_col=id_col, vec_col=vec_col
-    )
+    assigned, centroids = ivf_assign(embeddings, n_centroids=n_centroids)
     q = np.asarray(query_vec, dtype=np.float64)
     dists = [(((np.asarray(c) - q) ** 2).sum(), i) for i, c in enumerate(centroids)]
     probe = [i for _, i in sorted(dists)[:n_probe]]
     return cosine_topk(
-        assigned.filter(F.col("cluster").isin(probe)).drop("cluster"),
-        query_vec,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
+        assigned.filter(F.col("cluster").isin(probe)).drop("cluster"), query_vec, k=k
     )
 
 
@@ -185,10 +174,6 @@ def ann_topk_lsh(
     query_vec: list[float],
     k: int = 10,
     num_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: restrict the exact scorer to the query's SRP
     bucket (and therefore a ~2^-num_planes fraction of the corpus).
@@ -196,47 +181,41 @@ def ann_topk_lsh(
     Recall/latency is tuned by ``num_planes``; candidates within the bucket
     are scored exactly, so results are a subset of the brute-force ranking.
     """
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
     qbucket = 0
-    for i, p in enumerate(planes):
+    for i, p in enumerate(_srp_planes(num_planes, len(query_vec))):
         if sum(x * y for x, y in zip(query_vec, p)) >= 0:
             qbucket |= 1 << i
     bucketed = hyperplane_lsh_buckets(
-        embeddings, num_planes=num_planes, dim=dim, seed=seed, id_col=id_col, vec_col=vec_col
+        embeddings, num_planes=num_planes, dim=len(query_vec)
     )
     return cosine_topk(
-        bucketed.filter(F.col("bucket") == qbucket).drop("bucket"),
-        query_vec,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
+        bucketed.filter(F.col("bucket") == qbucket).drop("bucket"), query_vec, k=k
     )
 
 
-def quantize_int8(
-    embeddings: DataFrame, vec_col: str = "embedding", out_col: str = "embedding_q8"
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x|/127, stored
     as (scale, array<tinyint>) — 4x smaller than float32 at rest, the
     standard storage trade for 10^12-vector corpora. Pure Catalyst;
     dequantize with :func:`dequantize_int8`. round() is HALF_UP, matching
     the DuckDB oracle."""
-    emb = F.col(vec_col).cast("array<double>")
+    emb = F.col("embedding").cast("array<double>")
     scale = F.array_max(F.transform(emb, lambda x: F.abs(x))) / F.lit(127.0)
     q = F.when(scale == 0, F.transform(emb, lambda x: x.cast("tinyint"))).otherwise(
         F.transform(emb, lambda x: F.round(x / scale, 0).cast("tinyint"))
     )
-    return embeddings.withColumn(f"{out_col}_scale", scale).withColumn(out_col, q)
+    return embeddings.withColumn("embedding_q8_scale", scale).withColumn(
+        "embedding_q8", q
+    )
 
 
-def dequantize_int8(
-    df: DataFrame, q_col: str = "embedding_q8", scale_col: str = "embedding_q8_scale",
-    out_col: str = "embedding_deq",
-) -> DataFrame:
+def dequantize_int8(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        out_col,
-        F.transform(F.col(q_col), lambda x: x.cast("double") * F.col(scale_col)),
+        "embedding_deq",
+        F.transform(
+            F.col("embedding_q8"),
+            lambda x: x.cast("double") * F.col("embedding_q8_scale"),
+        ),
     )
 
 
@@ -306,7 +285,6 @@ def semdedup(
     elif not embeddings.take(1):
         return embeddings.withColumn("oversized_split", F.lit(False))
 
-    from readur_spark.operators.dedup import _materialize_release
     from readur_spark.plans.curation import _release_checkpoint
 
     assigned, _cents = ivf_assign(

@@ -68,23 +68,23 @@ def run_extraction(
     first-writer-wins resume semantics as the tested parquet fallback
     (see sources/table_format.py for the spark-submit recipe).
 
-    ``batch_partitions``: commit granularity WITHIN a run. Default
-    (``None``) keeps the single-commit plan: one scan → one shuffle →
-    one partition-overwrite — minimal IO, but a crash mid-run commits
-    nothing and the whole todo set reruns. With ``batch_partitions=K``
-    the todo set is processed in chunks of K partitions, each chunk its
-    own claim → extract → atomic partition-overwrite → completed rows
-    (appended with the next chunk's claims), so a kill loses at most ONE
-    in-flight chunk — the difference between "restart the week-long
-    run" and "lose 20 minutes" at 10^12 docs. To keep chunked runs from rescanning the
-    full source once per chunk (partition_id is a hash — no source-side
-    pruning exists for it), the assigned input is first STAGED once to
-    ``<checkpoint>_staged`` partitioned by partition_id; every chunk
-    then reads back only its own partition directories (partition-
-    pruned scan), so total input IO is one extra write + one pruned
-    read regardless of chunk count. The staging table is reused on
-    resume when its committed marker exists — which also pins the run
-    to a deterministic snapshot of the input even if the source table
+    ``batch_partitions``: commit granularity WITHIN a run. The todo
+    partitions are split into chunks of ``batch_partitions`` (default
+    ``None``: all ``num_partitions``), each chunk its own claim → extract
+    → atomic partition-overwrite → completed rows (appended with the
+    next chunk's claims), so a kill loses at most ONE in-flight chunk —
+    the difference between "restart the week-long run" and "lose 20
+    minutes" at 10^12 docs. The plan follows from the chunk count. One
+    chunk is one scan → one shuffle → one partition-overwrite, with
+    nothing staged. With more than one, the assigned input is first
+    STAGED once to ``<checkpoint>_staged_p<num_partitions>``, partitioned
+    by partition_id, so the chunks do not rescan the full source once
+    each (partition_id is a hash — no source-side pruning exists for
+    it): every chunk reads back only its own partition directories, and
+    total input IO is one extra write + one pruned read regardless of
+    chunk count. A committed snapshot is reused by every later run of
+    this checkpoint and partition count, batched or not, which pins a
+    resume to the input the crashed run started from even if the source
     changes between the crash and the resume.
 
     Returns a summary dict: run_id, partitions planned/skipped/processed,
@@ -105,21 +105,17 @@ def run_extraction(
     done = ckpt.completed_partitions()
     prev_attempts = ckpt.attempts_so_far()
 
-    planned = assign_partitions(docs_df, num_partitions)
     todo_pids = sorted(set(range(num_partitions)) - done)
-    if not todo_pids:
-        chunks = []
-    elif batch_partitions is None:
-        chunks = [todo_pids]
-        source = planned
-    else:
-        source = _stage_assigned_input(
-            spark, planned, checkpoint_path, table_format, num_partitions
-        )
-        chunks = [
-            todo_pids[i : i + batch_partitions]
-            for i in range(0, len(todo_pids), batch_partitions)
-        ]
+    step = batch_partitions or num_partitions
+    chunks = [todo_pids[i : i + step] for i in range(0, len(todo_pids), step)]
+    source = _stage_assigned_input(
+        spark,
+        assign_partitions(docs_df, num_partitions),
+        checkpoint_path,
+        table_format,
+        num_partitions,
+        len(chunks) > 1,
+    )
 
     total_wall_ms = 0
     total_processed = 0
@@ -128,11 +124,7 @@ def run_extraction(
     # next chunk's claim rows: one checkpoint append per chunk boundary
     completed_rows: list[dict] = []
     for chunk in chunks:
-        todo = (
-            source.filter(F.col("partition_id").isin(chunk))
-            if (len(chunk) < num_partitions or done)
-            else source
-        )
+        todo = source.filter(F.col("partition_id").isin(chunk))
         # one explicit shuffle, one task per checkpoint partition: the
         # target is the partition id's position in the chunk (a hash of
         # the id would put several ids in one task and leave others idle;
@@ -221,14 +213,14 @@ def run_extraction(
     if completed_rows:
         ckpt.append(completed_rows)
 
-    # every partition is now committed: drop the staged snapshot — it is
-    # corpus-sized (the whole assigned input), and leaving it under the
-    # checkpoint path would orphan ~1× the input per completed run. A
+    # every partition is now committed: drop the staged snapshots — each
+    # is corpus-sized (the whole assigned input), and leaving one under
+    # the checkpoint path would orphan ~1× the input per completed run. A
     # later run over new docs restages from its own source scan.
-    # Unconditional (not only when THIS invocation batched): an unbatched
-    # resume of a crashed batched run must clean up too, and so must a
+    # Unconditional (not only when THIS invocation staged): a one-chunk
+    # resume of a crashed chunked run must clean up too, and so must a
     # no-op resume after a crash between the last commit and this drop.
-    _drop_staged_input(spark, checkpoint_path, table_format, num_partitions)
+    _drop_staged_input(spark, checkpoint_path, table_format)
 
     return {
         "run_id": run_id,
@@ -248,21 +240,25 @@ def _stage_assigned_input(
     checkpoint_path: str,
     table_format: str,
     num_partitions: int,
+    chunked: bool,
 ) -> DataFrame:
-    """Materialize the partition-assigned input ONCE, partitioned by
-    ``partition_id``, so chunked runs read back only each chunk's
-    partition directories instead of rescanning the full source per
-    chunk. Reused when already committed (parquet ``_SUCCESS`` marker /
-    existing Iceberg table): a resume keeps extracting the exact
-    snapshot the crashed run started from. The partition count is baked
-    into the name so a resume with a different ``num_partitions`` never
-    reuses a stale assignment."""
+    """The input the chunks read. A committed snapshot of this checkpoint
+    and partition count (parquet ``_SUCCESS`` marker / existing Iceberg
+    table) is always read back: a resume, chunked or not, keeps
+    extracting the exact snapshot the crashed run started from. Else a
+    ``chunked`` run materializes the partition-assigned input ONCE,
+    partitioned by ``partition_id``, so each chunk reads back only its
+    own partition directories instead of rescanning the full source; a
+    one-chunk run reads ``planned`` as it is. The partition count is
+    baked into the name so a resume with a different ``num_partitions``
+    never reuses a stale assignment."""
     staged = f"{checkpoint_path}_staged_p{num_partitions}"
     if table_format == "iceberg":
-        if not spark.catalog.tableExists(staged):
-            planned.writeTo(staged).partitionedBy(
-                F.col("partition_id")
-            ).create()
+        if spark.catalog.tableExists(staged):
+            return spark.read.table(staged)
+        if not chunked:
+            return planned
+        planned.writeTo(staged).partitionedBy(F.col("partition_id")).create()
         return spark.read.table(staged)
     # Hadoop FileSystem, not driver-local os.path: run_extraction is a
     # spark-submit entry point, and on HDFS/S3 a local existence probe
@@ -270,6 +266,8 @@ def _stage_assigned_input(
     # lose the pinned-snapshot guarantee (r8 advisor finding).
     fs, marker = hadoop_fs(spark, staged + "/_SUCCESS")
     if not fs.exists(marker):
+        if not chunked:
+            return planned
         planned.write.mode("overwrite").partitionBy("partition_id").parquet(
             staged
         )
@@ -292,24 +290,28 @@ def _read_output(spark: SparkSession, output_path: str, table_format: str):
 
 
 def _drop_staged_input(
-    spark: SparkSession,
-    checkpoint_path: str,
-    table_format: str,
-    num_partitions: int,
+    spark: SparkSession, checkpoint_path: str, table_format: str
 ) -> None:
-    """Remove the staged snapshot written by
-    :func:`_stage_assigned_input` (corpus-sized; dead weight once every
-    partition has a committed row)."""
-    staged = f"{checkpoint_path}_staged_p{num_partitions}"
+    """Remove every staged snapshot :func:`_stage_assigned_input` wrote
+    for this checkpoint (corpus-sized; dead weight once every partition
+    has a committed row). ALL ``_staged_p*`` siblings go, not only the
+    current partition count's: a resume with a different
+    ``num_partitions`` would otherwise orphan the previous snapshot
+    forever. Matched by name prefix, not by a glob or a ``LIKE``
+    pattern: the checkpoint name may itself hold their metacharacters."""
     if table_format == "iceberg":
-        spark.sql(f"DROP TABLE IF EXISTS {staged}")
+        namespace, dot, name = checkpoint_path.rpartition(".")
+        listing = spark.sql(
+            f"SHOW TABLES IN {namespace}" if namespace else "SHOW TABLES"
+        )
+        for row in listing.collect():
+            if row["tableName"].startswith(name + "_staged_p"):
+                spark.sql(
+                    f"DROP TABLE IF EXISTS {namespace}{dot}{row['tableName']}"
+                )
     else:
-        # drop ALL _staged_p* siblings, not only the current partition
-        # count: a resume with a different num_partitions would otherwise
-        # orphan the previous corpus-sized snapshot forever (r8 advisor
-        # finding). Hadoop FS for the same cluster-correctness reason as
-        # the existence probe above. Matched by name prefix, not by glob:
-        # the checkpoint path may itself hold glob metacharacters.
+        # Hadoop FS for the same cluster-correctness reason as the
+        # existence probe in _stage_assigned_input
         try:
             fs, p = hadoop_fs(spark, checkpoint_path)
             prefix = p.getName() + "_staged_p"

@@ -32,7 +32,6 @@ SUPPORTED_EXTENSIONS = (
 def read_binary_dir(
     spark: SparkSession,
     path: str,
-    extensions: tuple[str, ...] = SUPPORTED_EXTENSIONS,
     max_bytes: int = MAX_FILE_BYTES,
 ) -> DataFrame:
     """S2: recursive binary ingest with extension filter + size skip.
@@ -40,7 +39,7 @@ def read_binary_dir(
     Output: (doc_id=path, filename, length, modificationTime, content).
     The ``length`` predicate reaches the binaryFile source (no oversized
     file is ever read), matching the reference's stat-then-skip."""
-    glob = "*.{" + ",".join(extensions) + "}"
+    glob = "*.{" + ",".join(SUPPORTED_EXTENSIONS) + "}"
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -59,10 +58,10 @@ def read_binary_dir(
     )
 
 
-def size_priority(length_col: str = "length"):
+def size_priority():
     """Q2: size→priority bins (≤1 MB:10, ≤5:8, ≤10:6, ≤50:4, else 2)."""
     mb = 1024 * 1024
-    c = F.col(length_col)
+    c = F.col("length")
     return (
         F.when(c <= 1 * mb, 10)
         .when(c <= 5 * mb, 8)
@@ -75,8 +74,6 @@ def size_priority(length_col: str = "length"):
 def incremental_changes(
     current: DataFrame,
     previous: DataFrame,
-    key: str = "path",
-    etag: str = "etag",
 ) -> DataFrame:
     """S4: smart-sync delta — rows in ``current`` that are new (key absent
     from ``previous``) or changed (same key, different etag). One left join
@@ -84,14 +81,14 @@ def incremental_changes(
     subtrees are skipped exactly like the reference's per-directory etag
     compare (smart_sync.rs:167-175)."""
     prev = previous.select(
-        F.col(key).alias("_prev_key"), F.col(etag).alias("_prev_etag")
+        F.col("path").alias("_prev_key"), F.col("etag").alias("_prev_etag")
     )
     return (
         current.join(
-            F.broadcast(prev), current[key] == prev["_prev_key"], "left"
+            F.broadcast(prev), current["path"] == prev["_prev_key"], "left"
         )
         .filter(
-            F.col("_prev_key").isNull() | (F.col(etag) != F.col("_prev_etag"))
+            F.col("_prev_key").isNull() | (F.col("etag") != F.col("_prev_etag"))
         )
         .drop("_prev_key", "_prev_etag")
     )

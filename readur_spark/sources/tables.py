@@ -108,21 +108,18 @@ def labels_table(spark: SparkSession) -> DataFrame:
 _DOC_LABELS_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def document_labels_table(
-    spark: SparkSession, sf_dir: str, memoize: bool = True
-) -> DataFrame:
+def document_labels_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``document_labels`` join table, synthesized deterministically:
     document d carries label k iff d % (k+2) == 0 — pure Catalyst (explode
     over the 6 label ids + modular filter), reproducible in any engine."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if memoize and key in _DOC_LABELS_MEMO:
+    if key in _DOC_LABELS_MEMO:
         return _DOC_LABELS_MEMO[key]
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     k = F.explode(F.array(*[F.lit(i) for i in range(len(LABEL_NAMES))])).alias("label_id")
     out = docs.select("doc_id", k).filter(
         F.col("doc_id") % (F.col("label_id") + 2) == 0
     )
-    if memoize:
-        out = out.localCheckpoint(eager=True)
-        _DOC_LABELS_MEMO[key] = out
+    out = out.localCheckpoint(eager=True)
+    _DOC_LABELS_MEMO[key] = out
     return out

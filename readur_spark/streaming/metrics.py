@@ -16,21 +16,18 @@ from pyspark.sql import functions as F
 def windowed_metrics(
     events: DataFrame,
     window: str = "1 hour",
-    time_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
 ) -> DataFrame:
     """Tumbling-window per-key event counts and value totals."""
     return (
-        events.groupBy(F.window(F.col(time_col), window).alias("win"), F.col(key_col))
+        events.groupBy(F.window(F.col("ts"), window).alias("win"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("total_value"),
+            F.round(F.sum("value"), 4).alias("total_value"),
         )
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n_events",
             "total_value",
         )

@@ -31,7 +31,6 @@ def watch_and_extract(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int = 64,
-    repair_hyphens: bool = True,
 ) -> StreamingQuery:
     """Stream new interleaved-doc parquet files from ``input_dir`` through
     extraction into ``output_dir``.
@@ -47,7 +46,7 @@ def watch_and_extract(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    extracted = extract_spans(stream, repair_hyphens=repair_hyphens)
+    extracted = extract_spans(stream)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)

@@ -215,6 +215,18 @@ class TestLegacyDocNative:
         assert r["status"] == "failed"
         assert "convert" in r["error_message"].lower()
 
+    def test_encrypted_doc_degrades(self):
+        from readur_spark.kernels.minidoc import build_doc
+        from readur_spark.operators.binary_extract import extract_one
+
+        # set the FIB's fEncrypted bit (0x0100 of the flags word at offset
+        # 10 of the WordDocument stream, which starts at byte 512*3)
+        doc = bytearray(build_doc("secret words"))
+        doc[512 * 3 + 11] |= 0x01
+        r = extract_one("d", "e.doc", bytes(doc))
+        assert r["status"] == "failed"
+        assert "encrypted" in r["error_message"].lower()
+
     def test_non_word_ole2_degrades(self):
         from readur_spark.kernels.minidoc import build_doc
         from readur_spark.operators.binary_extract import extract_one

@@ -10,9 +10,19 @@ Public code that only tests call is deleted instead of kept, unless it is
 listed below with its reason: a readur-parity row of ``COVERAGE.md``, a
 fixture encoder the tests build inputs with, or a reference implementation
 the tests compare the fast path against.
+
+The same rule holds one level down, for options: every optional parameter
+of a public function, method or constructor is passed by some call in the
+checkout, tests included, by keyword or by position. A call counts for
+every def of its name (``f(...)`` and ``obj.f(...)`` alike; a class name
+for its ``__init__``), and a call that spreads ``*args`` or ``**kwargs``
+counts as passing every positional or every keyword option. An option no
+call passes is its default's constant, not a setting, unless it is a
+deployment setting listed in ``ALLOWED_OPTIONS`` with its reason.
 """
 
 import ast
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -101,3 +111,136 @@ def test_allowlist_is_current():
     refs = _referenced_names()
     assert sorted(n for n in ALLOWED if n not in defs) == []
     assert sorted(n for n in ALLOWED if n.rsplit(".", 1)[-1] in refs) == []
+
+
+ALLOWED_OPTIONS = {
+    ("TesseractEngine.available", "binary"): "deployment: tesseract binary path",
+    ("dedup_cluster_keep_first", "checkpoint_dir"): (
+        "deployment: reliable-checkpoint directory for the cluster loop"
+    ),
+    ("ocr_images", "engine"): "deployment: OCR engine adapter seam",
+    ("ocr_images", "settings"): "deployment: OCR engine adapter seam",
+    ("ocr_images", "limits"): "deployment: OCR engine adapter seam",
+    ("extract_files", "ocr_settings"): "deployment: OCR engine adapter seam",
+    ("ingest_with_history_dedup", "available_now"): "deployment: stream trigger",
+    ("ingest_with_history_dedup", "max_files_per_trigger"): (
+        "deployment: stream trigger"
+    ),
+    ("watch_and_extract", "max_files_per_trigger"): "deployment: stream trigger",
+}
+
+
+def _optional_params(fn, bound: bool) -> list[tuple[str, int | None]]:
+    """``(name, position)`` of each parameter with a default; position is
+    the index a positional call argument lands on (``None``: keyword-only),
+    counted after ``self``/``cls`` when ``bound``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(arg.arg, i - int(bound)) for i, arg in enumerate(pos) if i >= first]
+    out += [
+        (arg.arg, None)
+        for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _members(node):
+    """``(qualname, name its calls use, def, bound)`` for a public top-level
+    def, or for each public method and the ``__init__`` of a public class."""
+    if isinstance(node, _DEFS):
+        yield node.name, node.name, node, False
+        return
+    for m in node.body:
+        if not isinstance(m, _DEFS):
+            continue
+        static = any(
+            isinstance(d, ast.Name) and d.id == "staticmethod" for d in m.decorator_list
+        )
+        if m.name == "__init__":
+            yield node.name, node.name, m, True
+        elif not m.name.startswith("_"):
+            yield f"{node.name}.{m.name}", m.name, m, not static
+
+
+def _public_options() -> dict[tuple[str, str], tuple[str, str, int | None]]:
+    """``(qualname, option)`` → (defining file, name its calls use, position)
+    for every optional parameter of a public function, of a public method
+    of a public class, and of a public class's ``__init__``."""
+    opts = {}
+    for path in sorted((ROOT / "readur_spark").rglob("*.py")):
+        where = str(path.relative_to(ROOT))
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (*_DEFS, ast.ClassDef)) or node.name.startswith("_"):
+                continue
+            for qual, callee, fn, bound in _members(node):
+                for name, i in _optional_params(fn, bound):
+                    opts[(qual, name)] = (where, callee, i)
+    return opts
+
+
+def _passed_options():
+    """Per called name, the keywords passed and the most positional
+    arguments passed; and the names some call spreads ``*args`` /
+    ``**kwargs`` into."""
+    keywords = defaultdict(set)
+    positional = defaultdict(int)
+    star, double_star = set(), set()
+    for path in ROOT.rglob("*.py"):
+        if any(p.startswith(".") for p in path.relative_to(ROOT).parts):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                name = f.id
+            elif isinstance(f, ast.Attribute):
+                name = f.attr
+            else:
+                continue
+            plain = [a for a in node.args if not isinstance(a, ast.Starred)]
+            if len(plain) < len(node.args):
+                star.add(name)
+            positional[name] = max(positional[name], len(plain))
+            for k in node.keywords:
+                if k.arg is None:
+                    double_star.add(name)
+                else:
+                    keywords[name].add(k.arg)
+    return keywords, positional, star, double_star
+
+
+def _unpassed_options() -> dict[tuple[str, str], str]:
+    keywords, positional, star, double_star = _passed_options()
+    return {
+        key: where
+        for key, (where, callee, i) in _public_options().items()
+        if not (
+            key[1] in keywords[callee]
+            or callee in double_star
+            or (i is not None and (i < positional[callee] or callee in star))
+        )
+    }
+
+
+def test_every_option_is_passed_by_some_call():
+    unpassed = {
+        f"{qual}({name}=)": where
+        for (qual, name), where in _unpassed_options().items()
+        if (qual, name) not in ALLOWED_OPTIONS
+    }
+    assert unpassed == {}, (
+        "optional parameters no call passes: make each its default's "
+        "constant (or derive it from the input), give it a caller, or "
+        f"allowlist it as a deployment setting: {unpassed}"
+    )
+
+
+def test_option_allowlist_is_current():
+    """Each allowlisted option still exists and still has no caller."""
+    opts = _public_options()
+    unpassed = _unpassed_options()
+    assert sorted(k for k in ALLOWED_OPTIONS if k not in opts) == []
+    assert sorted(k for k in ALLOWED_OPTIONS if k not in unpassed) == []

@@ -99,6 +99,17 @@ def test_small_max_partition_bytes_adds_no_repartition(spark, one_file):
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
+def test_shuffle_above_a_narrow_scan_is_not_counted(spark, one_file):
+    """The documented rule: the scan's splits decide. A one-split scan under
+    a ``repartition(8)`` still counts as one partition, so asking for 4
+    repartitions it to 4 instead of keeping the uncounted 8."""
+    shuffled = spark.read.parquet(one_file).repartition(8)
+    assert shuffled.rdd.getNumPartitions() == 8
+    planned = ensure_partitions(shuffled, 4)
+    assert planned is not shuffled
+    assert planned.rdd.getNumPartitions() == 4
+
+
 def test_decision_starts_no_job(spark, one_file):
     shuffled = spark.read.parquet(one_file).repartition(8)
     tracker = spark.sparkContext.statusTracker()

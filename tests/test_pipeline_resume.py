@@ -676,3 +676,81 @@ def test_crash_before_boundary_append_reruns_the_chunk(spark, dirs, monkeypatch)
         for r in spark.read.parquet(out2).collect()
     }
     assert resumed == control
+
+
+def test_one_chunk_run_stages_nothing(spark, dirs, monkeypatch):
+    """A run whose ``batch_partitions`` covers every todo partition is one
+    chunk: it reads the source directly and never writes a staged
+    snapshot, not even for the length of the run."""
+    import os
+
+    import readur_spark.sources.table_format as tf
+    from readur_spark.sources.table_format import (
+        overwrite_partitions as real_overwrite,
+    )
+
+    out, ckpt_path = dirs
+    parent, name = os.path.split(ckpt_path)
+    staged_seen = []
+
+    def staged_snapshots():
+        return [f for f in os.listdir(parent) if f.startswith(name + "_staged_p")]
+
+    def recording_overwrite(df, target, partition_by, fmt="parquet"):
+        staged_seen.extend(staged_snapshots())
+        return real_overwrite(df, target, partition_by, fmt=fmt)
+
+    monkeypatch.setattr(tf, "overwrite_partitions", recording_overwrite)
+    docs = docs_dataframe(spark, 80, seed=5)
+    s = run_extraction(
+        spark, docs, out, ckpt_path, num_partitions=N_PARTS, batch_partitions=N_PARTS
+    )
+    assert s["batches"] == 1 and s["docs_processed"] == 80
+    assert staged_seen == [] and staged_snapshots() == []
+
+
+def test_unbatched_resume_extracts_the_crashed_runs_snapshot(spark, dirs, monkeypatch):
+    """Crash a batched run after its first chunk, change the source, and
+    resume without batching: the resume extracts the snapshot the crashed
+    run staged, so the output equals an uncrashed run over the original
+    docs, and the snapshot is dropped at completion."""
+    import os
+
+    import readur_spark.sources.table_format as tf
+    from readur_spark.sources.table_format import (
+        overwrite_partitions as real_overwrite,
+    )
+
+    out, ckpt_path = dirs
+    docs = docs_dataframe(spark, 80, seed=5)
+    calls = {"n": 0}
+
+    def crashing_overwrite(df, target, partition_by, fmt="parquet"):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash")
+        return real_overwrite(df, target, partition_by, fmt=fmt)
+
+    monkeypatch.setattr(tf, "overwrite_partitions", crashing_overwrite)
+    with pytest.raises(RuntimeError, match="simulated"):
+        run_extraction(
+            spark, docs, out, ckpt_path, num_partitions=N_PARTS, batch_partitions=4
+        )
+    monkeypatch.setattr(tf, "overwrite_partitions", real_overwrite)
+
+    changed = docs_dataframe(spark, 80, seed=6)
+    s = run_extraction(spark, changed, out, ckpt_path, num_partitions=N_PARTS)
+    assert s["partitions_skipped"] == 4 and s["partitions_processed"] == 4
+    assert not os.path.exists(f"{ckpt_path}_staged_p{N_PARTS}")
+
+    resumed = {
+        r["doc_id"]: [tuple(x) for x in r["spans"]]
+        for r in spark.read.parquet(out).collect()
+    }
+    out2, ckpt2 = out + "_ctl", ckpt_path + "_ctl"
+    run_extraction(spark, docs, out2, ckpt2, num_partitions=N_PARTS)
+    control = {
+        r["doc_id"]: [tuple(x) for x in r["spans"]]
+        for r in spark.read.parquet(out2).collect()
+    }
+    assert resumed == control

@@ -112,9 +112,23 @@ class _FakeIcebergSpark:
 
     def sql(self, q):
         self.sql_log.append(q)
-        # emulate the one DELETE shape cleanup_completed issues
         import re
 
+        # the namespace listing and the drops of staged-input cleanup
+        m = re.fullmatch(r"SHOW TABLES IN (\S+)", q)
+        if m:
+            ns = m.group(1)
+            rows = [
+                {"namespace": ns, "tableName": t[len(ns) + 1 :], "isTemporary": False}
+                for t in self.tables
+                if t.rpartition(".")[0] == ns
+            ]
+            return _FakeDF(rows, self)
+        m = re.fullmatch(r"DROP TABLE IF EXISTS (\S+)", q)
+        if m:
+            self.tables.pop(m.group(1), None)
+            return None
+        # emulate the one DELETE shape cleanup_completed sends
         m = re.match(
             r"DELETE FROM (\S+) WHERE status = 'completed' AND "
             r"completed_at IS NOT NULL AND completed_at < TIMESTAMP '(.+)'",
@@ -171,6 +185,9 @@ class _FakeDF:
 
     def count(self):
         return len(self.rows)
+
+    def collect(self):
+        return list(self.rows)
 
 
 def test_checkpoint_iceberg_branches_with_fake_catalog(monkeypatch):
@@ -259,3 +276,19 @@ def test_iceberg_overwrite_partitions_never_replaces_existing(monkeypatch):
     with pytest.raises(RuntimeError, match="transient"):
         tf.overwrite_partitions(_DF(), "lake.db.t", ["p"], fmt="iceberg")
     assert calls == ["overwritePartitions"]
+
+
+def test_iceberg_drop_staged_input_drops_every_partition_count():
+    """Iceberg cleanup drops the checkpoint's staged snapshot of EVERY
+    partition count, as the parquet leg does, and keeps the checkpoint
+    itself, a table in another namespace, and a decoy that a SQL ``LIKE``
+    pattern (``_`` matches any character) would also match."""
+    from readur_spark.plans import pipeline as pl
+
+    fake = _FakeIcebergSpark()
+    keep = ["lake.db.ck", "lake.db.ckXstaged_p8", "lake.other.ck_staged_p8"]
+    drop = ["lake.db.ck_staged_p8", "lake.db.ck_staged_p4"]
+    for ident in keep + drop:
+        fake.tables[ident] = []
+    pl._drop_staged_input(fake, "lake.db.ck", "iceberg")
+    assert sorted(fake.tables) == sorted(keep)

@@ -3,8 +3,9 @@
 Runs every ``queries()`` entry at sf0.01 next to its ``oracle_sql()`` and
 compares row count, column-name set, and an order-insensitive value hash
 (columns sorted by name, rows sorted by stringified values). Floats are
-normalized via repr of round(12) to absorb engine formatting noise while
-still catching real numeric differences.
+normalized via repr of round(9) to absorb engine formatting noise while
+still catching real numeric differences. Every ``ok`` and ``rows`` line
+prints the Spark side's hash, so two checkouts' outputs can be diffed.
 
 Usage: python tools/check_correctness.py [name ...]
 """
@@ -78,7 +79,10 @@ def main(only: list[str]) -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"rows  {name:24s} n={len(rows)} (rows-only, no oracle) {time.time()-t0:.1f}s")
+            print(
+                f"rows  {name:24s} n={len(rows)} hash={table_hash(cols, rows)} "
+                f"(rows-only, no oracle) {time.time()-t0:.1f}s"
+            )
             if len(rows) == 0:
                 print(f"      WARNING: {name} returned 0 rows")
             continue
@@ -109,7 +113,7 @@ def main(only: list[str]) -> int:
             failures += 1
             print(f"FAIL  {name:24s} {'; '.join(problems)}  {time.time()-t0:.1f}s")
         else:
-            print(f"ok    {name:24s} n={len(rows)}  {time.time()-t0:.1f}s")
+            print(f"ok    {name:24s} n={len(rows)} hash={h1}  {time.time()-t0:.1f}s")
     spark.stop()
     print("FAILURES:", failures)
     return 1 if failures else 0
