@@ -3,7 +3,7 @@
 Mirrors readur's strategy ladder (/root/reference/src/ocr/enhanced.rs:
 905-1024):
 
-1. size guard (``max_pdf_size``, enhanced.rs:910-920);
+1. size guard (``MAX_PDF_SIZE``, enhanced.rs:910-920);
 2. header validation (``%PDF-`` within the first 1 KB, :1854-1871);
 3. embedded-image probe (:950-975): a PDF with images goes to the per-page
    OCR path so image content isn't missed;
@@ -117,7 +117,19 @@ def ocrmypdf_strategy2_background(raster):
     return adaptive_threshold(gray, window // 2)
 
 
-def extract_pdf(data: bytes, ocr_stub: bool = True, max_pdf_size: int = MAX_PDF_SIZE) -> dict:
+def _reject(data: bytes) -> str | None:
+    """The size guard and header check both ladders run first."""
+    if len(data) > MAX_PDF_SIZE:
+        return (
+            f"PDF file too large: {len(data) / (1024.0 * 1024.0):.1f} MB "
+            f"(max: {MAX_PDF_SIZE / (1024.0 * 1024.0):.1f} MB)"
+        )
+    if not is_valid_pdf(data[:1024]):
+        return "Invalid PDF file: Missing or corrupted PDF header"
+    return None
+
+
+def extract_pdf(data: bytes) -> dict:
     """Run the ladder. Returns {text, confidence, preprocessing, error,
     page_count}; ``error`` is None on success."""
     result = {
@@ -127,21 +139,15 @@ def extract_pdf(data: bytes, ocr_stub: bool = True, max_pdf_size: int = MAX_PDF_
         "error": None,
         "page_count": 0,
     }
-    if len(data) > max_pdf_size:
-        result["error"] = (
-            f"PDF file too large: {len(data) / (1024.0 * 1024.0):.1f} MB "
-            f"(max: {max_pdf_size / (1024.0 * 1024.0):.1f} MB)"
-        )
-        return result
-    if not is_valid_pdf(data[:1024]):
-        result["error"] = "Invalid PDF file: Missing or corrupted PDF header"
+    result["error"] = _reject(data)
+    if result["error"] is not None:
         return result
 
     pages = extract_text_layer(data)
     result["page_count"] = pdf_page_count(data)
     has_images = pdf_has_images(data)
 
-    if has_images and ocr_stub:
+    if has_images:
         ocr_pages = [_ocr_page_stub(data, p) for p in pages]
         assembled = PAGE_BREAK.join(ocr_pages).strip()
         if count_words_safely_enhanced(assembled) > 0:
@@ -160,7 +166,7 @@ def extract_pdf(data: bytes, ocr_stub: bool = True, max_pdf_size: int = MAX_PDF_
         result["preprocessing"] = ["PDF text extraction (text-layer)"]
         return result
 
-    if not has_images and ocr_stub and text:
+    if not has_images and text:
         # the reference's "pdftotext insufficient → OCR" branch; the stub
         # reuses the text layer page-wise
         ocr_pages = [_ocr_page_stub(data, p) for p in pages]
@@ -187,8 +193,6 @@ def extract_pdf_with_engine(
     data: bytes,
     engine,
     settings=None,
-    render_dpi: int = 300,
-    max_pdf_size: int = MAX_PDF_SIZE,
 ) -> dict:
     """The ladder with a REAL per-page OCR path (P6+P7): pages rendered to
     rasters (minipdf.render_pdf_pages — the pdftoppm stage), each raster
@@ -205,9 +209,13 @@ def extract_pdf_with_engine(
 
     The text-layer fast path and its quality gate run FIRST exactly like
     :func:`extract_pdf`; OCR engages when the PDF has images or the text
-    layer is insufficient (enhanced.rs:905-1024)."""
+    layer is insufficient (enhanced.rs:905-1024). Pages render at
+    ``settings.ocr_dpi``."""
     from readur_spark.kernels.minipdf import render_pdf_pages
     from readur_spark.kernels.ocr_engine import ocr_image_array
+    from readur_spark.kernels.pixels import OcrSettings
+
+    settings = settings or OcrSettings()
 
     result = {
         "text": "",
@@ -216,14 +224,8 @@ def extract_pdf_with_engine(
         "error": None,
         "page_count": 0,
     }
-    if len(data) > max_pdf_size:
-        result["error"] = (
-            f"PDF file too large: {len(data) / (1024.0 * 1024.0):.1f} MB "
-            f"(max: {max_pdf_size / (1024.0 * 1024.0):.1f} MB)"
-        )
-        return result
-    if not is_valid_pdf(data[:1024]):
-        result["error"] = "Invalid PDF file: Missing or corrupted PDF header"
+    result["error"] = _reject(data)
+    if result["error"] is not None:
         return result
 
     pages = extract_text_layer(data)
@@ -231,7 +233,7 @@ def extract_pdf_with_engine(
     has_images = pdf_has_images(data)
 
     def ocr_all_pages(transform=None, label=None) -> dict | None:
-        rasters = render_pdf_pages(data, dpi=render_dpi)
+        rasters = render_pdf_pages(data, dpi=settings.ocr_dpi)
         all_text = ""
         total_conf = 0.0
         total_words = 0

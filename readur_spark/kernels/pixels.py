@@ -188,7 +188,7 @@ def png_decode(data: bytes) -> np.ndarray:
     return out.reshape(h, w, channels)
 
 
-def decode_image(data: bytes, auto_orient: bool = True) -> np.ndarray:
+def decode_image(data: bytes) -> np.ndarray:
     """Decode PNG, baseline JPEG, or GIF bytes to a pixel array; JPEGs
     with an EXIF orientation tag are auto-rotated (I5,
     document_ingestion.rs:356-408 applies the correction at ingest).
@@ -204,13 +204,12 @@ def decode_image(data: bytes, auto_orient: bool = True) -> np.ndarray:
     if data.startswith(b"\xff\xd8"):
         from readur_spark.kernels.minijpeg import jpeg_decode
 
-        img = jpeg_decode(data)
-        if auto_orient:
-            from readur_spark.kernels.media_meta import parse_exif_orientation
+        from readur_spark.kernels.media_meta import parse_exif_orientation
 
-            orientation = parse_exif_orientation(data)
-            if orientation != 1:
-                img = apply_orientation(img, orientation)
+        img = jpeg_decode(data)
+        orientation = parse_exif_orientation(data)
+        if orientation != 1:
+            img = apply_orientation(img, orientation)
         return img
     raise PngError("unrecognized image format")
 

@@ -237,12 +237,12 @@ def extract_one(doc_id: str, filename: str, content: bytes, server_mime: str | N
 
 def extract_files(
     files_df: DataFrame,
-    server_mime_col: str | None = None,
     engine=None,
     ocr_settings=None,
 ) -> DataFrame:
     """Distributed binary extraction. ``files_df`` needs (id, filename,
-    content:binary[, server_mime]); pairs naturally with
+    content:binary[, server_mime]); a ``server_mime`` column, when the
+    input has one, feeds MIME detection. Pairs naturally with
     ``spark.read.format("binaryFile")`` (S2 batch-ingest analog — the
     100 MB skip of batch_ingest.rs:239-243 becomes a length filter the
     caller applies before this operator)."""
@@ -254,8 +254,8 @@ def extract_files(
         )
 
     inputs = ["doc_id", "filename", "content"]
-    if server_mime_col:
-        inputs.append(server_mime_col)
+    if "server_mime" in files_df.columns:
+        inputs.append("server_mime")
     return map_documents(files_df, inputs, kernel, BINARY_EXTRACTED_SCHEMA)
 
 

@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 
 from readur_spark.kernels.bpe import BpeTokenizer, train_bpe, word_counts
 
+# train_bpe_spark_loop: the most compatible merges one counting pass
+# applies, and the passes between two lineage-cutting checkpoints
+BATCH_MERGES = 64
+CHECKPOINT_EVERY = 8
+
 
 def word_count_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word binary, count long) pre-token frequencies of the corpus.
@@ -86,23 +91,21 @@ def train_bpe_distributed(
 def train_bpe_spark_loop(
     word_table: DataFrame,
     num_merges: int,
-    checkpoint_every: int = 8,
-    batch_merges: int = 64,
 ) -> list[tuple[int, int]]:
     """Merge loop entirely on executors, for word tables too large to
     TakeOrdered. ``word_table`` is (word binary, count long); each
     counting pass = one pair-count groupBy (all adjacent positions,
     overlaps included, weighted by count) + one Arrow-batched application
-    of up to ``batch_merges`` COMPATIBLE merges — so a production 50k-rule
-    vocab costs ~50k/batch_merges job barriers, not 50k (round-5 verdict
+    of up to ``BATCH_MERGES`` COMPATIBLE merges — so a production 50k-rule
+    vocab costs ~50k/BATCH_MERGES job barriers, not 50k (round-5 verdict
     #1). Lineage is cut with eager localCheckpoint every
-    ``checkpoint_every`` passes so the plan stays O(interval).
+    ``CHECKPOINT_EVERY`` passes so the plan stays O(interval).
 
     The batch is provably sequential-exact, not merely heuristic. From
     one ranked snapshot (count desc, then smallest (a, b) — the
     sequential tie-break) accept the PREFIX of candidates whose token
     ids are pairwise disjoint, stopping at the first overlap, the
-    ``batch_merges`` cap, the count-2 floor, or just after a SELF-PAIR
+    ``BATCH_MERGES`` cap, the count-2 floor, or just after a SELF-PAIR
     (a, a); then RETAIN only accepted pairs whose count is strictly
     above the stopping candidate's count.
     Why this equals the sequential trainer: applying id-disjoint merges
@@ -122,12 +125,6 @@ def train_bpe_spark_loop(
     fixtures engineered to hit the overlap/tie edges.
 
     Stops early when the best pair count drops below 2."""
-    if batch_merges < 1:
-        raise ValueError(f"batch_merges must be >= 1, got {batch_merges}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     from pyspark.sql.types import ArrayType, IntegerType
 
     words = word_table.select(
@@ -159,7 +156,7 @@ def train_bpe_spark_loop(
             pairs.groupBy("a", "b")
             .agg(F.sum("count").alias("c"))
             .orderBy(F.desc("c"), F.asc("a"), F.asc("b"))
-            .limit(batch_merges * 4 + 64)
+            .limit(BATCH_MERGES * 4 + 64)
             .collect()
         )
         if not cand or int(cand[0]["c"]) < 2:
@@ -169,7 +166,7 @@ def train_bpe_spark_loop(
         count_stop = int(cand[-1]["c"])  # conservative when no stop in view
         for i, r in enumerate(cand):
             a, b, c = int(r["a"]), int(r["b"]), int(r["c"])
-            if c < 2 or a in used or b in used or len(batch) >= batch_merges:
+            if c < 2 or a in used or b in used or len(batch) >= BATCH_MERGES:
                 count_stop = c
                 break
             batch.append((a, b, c))
@@ -219,7 +216,7 @@ def train_bpe_spark_loop(
 
         words = words.withColumn("ids", make_udf(keep, base_id)("ids"))
         passes += 1
-        if passes % checkpoint_every == 0:
+        if passes % CHECKPOINT_EVERY == 0:
             nxt = words.localCheckpoint(eager=True)
             # free the superseded checkpoint's executor blocks; nxt no
             # longer references them (its lineage was truncated)

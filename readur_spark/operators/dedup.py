@@ -398,7 +398,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     n: int = 1,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs, verified with exact Jaccard.
 
@@ -407,22 +406,6 @@ def minhash_lsh_pairs(
     hash — shuffle is on band keys, uniformly distributed by hashing).
     Candidates are then verified against the *exact* shingle Jaccard so the
     output contains no false positives; LSH only bounds recall.
-
-    ``max_bucket_size`` is the mass-duplication guard: a band bucket of
-    ``m`` colliding docs emits ``m·(m-1)/2`` candidate pairs, so a corpus
-    where one page has 10^4 near-copies (the web-crawl reality: mirrors,
-    spam farms, boilerplate) turns a single bucket into 5·10^7
-    verification pairs — quadratic work no cluster size saves you from.
-    With the cap set, buckets over the cap emit STAR pairs instead
-    (bucket-minimum id as hub vs every other member — linear in bucket
-    size); buckets at/below the cap keep exact all-pairs semantics.
-    For the downstream connected-components cluster dedup the collapse
-    is unchanged whenever bucket members genuinely match the hub (the
-    replica case the cap exists for); what star expansion gives up is
-    direct pair edges between two members that both FAIL verification
-    against the hub yet match each other — accepted and documented
-    recall trade on pathological buckets, not silent truncation (the
-    all-pairs default is unchanged).
     """
     assert num_hashes % bands == 0
     # one shingle+agg pass for the signatures (nothing else consumes the
@@ -430,40 +413,15 @@ def minhash_lsh_pairs(
     # Persisted because the band self-join consumes sig on BOTH sides.
     sig = minhash_signatures(docs, num_hashes, n).persist()
     banded = _band_rows(sig, bands, num_hashes // bands)
-    held = [sig]
-    star = None
-    if max_bucket_size is not None:
-        # one window pass tags every (band, bucket) with its size and
-        # hub (min id); oversized buckets contribute star pairs with NO
-        # join at all — the quadratic self-join only ever sees buckets
-        # the cap admits
-        wb = Window.partitionBy("band_no", "band_val")
-        tagged = (
-            banded.withColumn("bsz", F.count("*").over(wb))
-            .withColumn("bmin", F.min("id").over(wb))
-            .persist()
-        )
-        held.append(tagged)
-        banded = tagged.filter(F.col("bsz") <= max_bucket_size).select(
-            "id", "band_no", "band_val"
-        )
-        star = (
-            tagged.filter(
-                (F.col("bsz") > max_bucket_size) & (F.col("id") != F.col("bmin"))
-            )
-            # hub = bucket min, so id_a < id_b holds by construction
-            .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
-        )
     x = banded.alias("x")
     y = banded.alias("y")
     candidates = (
         x.join(y, ["band_no", "band_val"])
         .where(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .distinct()
+        .cache()
     )
-    if star is not None:
-        candidates = candidates.union(star)
-    candidates = candidates.distinct().cache()
     # exact verification restricted to candidate DOCUMENTS only (the LSH
     # is selective, so this shingles a few hundred docs instead of the
     # whole corpus), then to the candidate pairs: a postings self-join
@@ -481,7 +439,7 @@ def minhash_lsh_pairs(
     # intermediates — without this, repeated calls in one session leak
     # storage blocks and pin shuffle files (round-2 judge: 4.75→9.47→13.2 s
     # monotonic slowdown on identical runs)
-    return _materialize_release(result, *held, candidates)
+    return _materialize_release(result, sig, candidates)
 
 
 # --------------------------------------------------------------------------
@@ -580,17 +538,21 @@ def simhash_pairs(
 # --------------------------------------------------------------------------
 
 
+# embedding_dup_pairs: corpora above this many rows take the LSH path; its
+# banding is EMBEDDING_LSH_TABLES tables of EMBEDDING_LSH_PLANES hyperplanes
+EMBEDDING_BROADCAST_MAX_ROWS = 200_000
+EMBEDDING_LSH_PLANES = 8
+EMBEDDING_LSH_TABLES = 16
+
+
 def embedding_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    broadcast_max_rows: int = 200_000,
-    num_planes: int = 8,
-    num_tables: int = 16,
 ) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ threshold) with a size-dispatched
     physical strategy:
 
-    * **small corpus** (≤ ``broadcast_max_rows``, cheap parquet-stats
+    * **small corpus** (≤ ``EMBEDDING_BROADCAST_MAX_ROWS``, cheap parquet-stats
       count): exact brute force — one side broadcast as a float64 matrix,
       each Arrow batch of the distributed side computes its similarity
       block with one BLAS ``matmul``. O(n²d) flops at memory-bandwidth
@@ -598,7 +560,7 @@ def embedding_dup_pairs(
       64-dim vectors on the broadcast side is the hard ceiling — hence the
       dispatch.
     * **at scale**: banded random-hyperplane LSH
-      (:func:`_embedding_dup_pairs_bucketed`) — ``num_tables`` independent
+      (:func:`_embedding_dup_pairs_bucketed`) — ``EMBEDDING_LSH_TABLES`` independent
       sign-pattern bucketings (OR-construction), per-bucket exact
       block-matmul via ``applyInPandas``, union + distinct. Nothing is ever
       collected to the driver; the shuffle key is (table, bucket), and
@@ -608,10 +570,8 @@ def embedding_dup_pairs(
       (s ≥ 0.9, defaults 8 planes × 16 tables) that is ≥ 99.5%; candidates
       are scored exactly so precision is always 1.
     """
-    if embeddings.count() > broadcast_max_rows:
-        return _embedding_dup_pairs_bucketed(
-            embeddings, threshold, num_planes, num_tables
-        )
+    if embeddings.count() > EMBEDDING_BROADCAST_MAX_ROWS:
+        return _embedding_dup_pairs_bucketed(embeddings, threshold)
     import numpy as np
 
     spark = embeddings.sparkSession
@@ -651,14 +611,12 @@ def embedding_dup_pairs(
 def _embedding_dup_pairs_bucketed(
     embeddings: DataFrame,
     threshold: float,
-    num_planes: int,
-    num_tables: int,
     chunk_rows: int = 1024,
 ) -> DataFrame:
     """Web-scale embedding near-dup: banded SRP-LSH + per-bucket exact
     block-matmul. See :func:`embedding_dup_pairs` for the contract.
 
-    Plan: one projection computes all ``num_tables`` sign-pattern buckets
+    Plan: one projection computes all ``EMBEDDING_LSH_TABLES`` sign-pattern buckets
     (pure Catalyst dot products against literal hyperplanes), ``explode``
     to (table_no, bucket) rows, one shuffle on that uniform composite key,
     ``applyInPandas`` scores each bucket exactly (chunked matmul bounds
@@ -681,9 +639,9 @@ def _embedding_dup_pairs_bucketed(
     rng = random.Random(42)
     emb = F.col("embedding").cast("array<double>")
     table_buckets = []
-    for t in range(num_tables):
+    for t in range(EMBEDDING_LSH_TABLES):
         bucket = F.lit(0).cast("long")
-        for i in range(num_planes):
+        for i in range(EMBEDDING_LSH_PLANES):
             plane = [rng.gauss(0.0, 1.0) for _ in range(dim)]
             bit = F.when(_dot(emb, _as_lit_array(plane)) >= 0, F.lit(1)).otherwise(F.lit(0))
             bucket = bucket + (bit.cast("long") * F.lit(1 << i))
@@ -967,8 +925,12 @@ def _extend_seed(a: "np.ndarray", b: "np.ndarray", pa: int, pb: int, k: int):
     return pa - left, pb - left, left + k + right
 
 
+# seed extensions per document pair in duplicate_spans / decontaminate
+MAX_SEEDS = 500
+
+
 def _pair_spans(
-    text_a: str, text_b: str, seeds, k: int, min_len: int, max_seeds: int = 500
+    text_a: str, text_b: str, seeds, k: int, min_len: int, max_seeds: int = MAX_SEEDS
 ):
     """All maximal duplicated spans ≥ min_len between two documents, seeded
     by winnowed fingerprint position matches. Seeds on the same diagonal
@@ -1001,15 +963,14 @@ def _pair_spans(
     return sorted(out), truncated
 
 
-def _extend_seeds(
-    joined: DataFrame, k: int, min_len: int, max_seeds: int = 500
-) -> DataFrame:
+def _extend_seeds(joined: DataFrame, k: int, min_len: int) -> DataFrame:
     """The one seed-extension pass: (id_a, id_b, seeds, text_a, text_b)
     rows → (id_a, id_b, start_a, start_b, length, seeds_truncated), one row
     per maximal span ≥ ``min_len`` (:func:`_pair_spans`), Arrow-batched.
-    A pair that hit the ``max_seeds`` cap and found no span still emits
+    A pair that hit the ``MAX_SEEDS`` cap and found no span still emits
     one marker row (start_a=start_b=-1, length=0), so the cap is never
     silent. Each id column keeps its input type."""
+    max_seeds = MAX_SEEDS
     cols = ["id_a", "id_b", "start_a", "start_b", "length", "seeds_truncated"]
     schema = (
         f"id_a {joined.schema['id_a'].dataType.simpleString()}, "
@@ -1044,7 +1005,6 @@ def duplicate_spans(
     min_len: int = 50,
     k: int = 25,
     window: int = 16,
-    max_seeds: int = 500,
 ) -> DataFrame:
     """Cross-document duplicated character spans ≥ ``min_len`` — the
     exact-substring-dedup shape from "Deduplicating Training Data Makes
@@ -1065,13 +1025,12 @@ def duplicate_spans(
     (id_a, id_b, start_a, start_b, length, seeds_truncated). Scale: the
     shuffle is the fingerprint join (uniform hash keys) plus one
     broadcast-free join per side to attach texts; per-pair work is bounded
-    by ``max_seeds`` seed extensions. When a pair has more seeds than that
+    by ``MAX_SEEDS`` seed extensions. When a pair has more seeds than that
     (pervasive duplication — the prime Lee-2021 target), recall on that
     pair is a LOWER BOUND and every emitted row carries
     ``seeds_truncated=true``; a truncated pair that yields no span ≥
     ``min_len`` still emits one marker row (start_a=start_b=-1, length=0)
-    so the cap is never silent. Raise ``max_seeds`` to trade compute for
-    recall on such pairs."""
+    so the cap is never silent."""
     fps = winnow_fingerprints(docs, k, window).persist()
     pruned, _ = _drop_high_df(
         fps, "fp", _MAX_FP_DF, fps.select("id", "fp").distinct()
@@ -1095,7 +1054,7 @@ def duplicate_spans(
         seeds.join(texts.withColumnRenamed("tid", "id_a").withColumnRenamed("t", "text_a"), "id_a")
         .join(texts.withColumnRenamed("tid", "id_b").withColumnRenamed("t", "text_b"), "id_b")
     )
-    result = _extend_seeds(joined, k, min_len, max_seeds)
+    result = _extend_seeds(joined, k, min_len)
     return _materialize_release(result, fps)
 
 
@@ -1425,7 +1384,6 @@ def minhash_lsh_incremental(
     num_hashes: int = 32,
     bands: int = 8,
     n: int = 1,
-    history_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Continuous-ingestion near-dup: candidate pairs between an INCOMING
     batch and the already-committed corpus, verified exactly — without
@@ -1434,12 +1392,7 @@ def minhash_lsh_incremental(
     (full-corpus): a real pipeline runs the full pass once, persists the
     signature table, then runs THIS per batch.
 
-    * the incoming side signatures fresh (one shingle+agg pass over the
-      batch only);
-    * the history side reuses ``history_signatures`` when provided (the
-      persisted signature table of the committed corpus — at 10^12 docs
-      recomputing it per batch is the whole cost, so don't); otherwise it
-      is computed from ``history_docs``;
+    * each side is signed in one shingle+agg pass;
     * banding joins NEW × HISTORY only (band keys are uniform hashes;
       new-new and history-history collisions never materialize);
     * candidates verify against exact shingle Jaccard over just the
@@ -1450,15 +1403,7 @@ def minhash_lsh_incremental(
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     sig_new = minhash_signatures(new_docs, num_hashes, n).persist()
-    if history_signatures is not None:
-        # caller-owned: do NOT touch its persist lifecycle (they persisted
-        # it precisely to reuse across batches — unpersisting here would
-        # silently recompute the whole history pass on the next call, and
-        # re-persisting a custom storage level raises)
-        sig_hist, own_hist = history_signatures, False
-    else:
-        sig_hist = minhash_signatures(history_docs, num_hashes, n).persist()
-        own_hist = True
+    sig_hist = minhash_signatures(history_docs, num_hashes, n).persist()
     candidates = (
         _band_rows(sig_new, bands, rows_per_band)
         .alias("x")
@@ -1479,5 +1424,4 @@ def minhash_lsh_incremental(
         history_docs, candidates.select(F.col("id_b").alias("id")).distinct(), n
     )
     result = _jaccard_for_pairs(sh_new, candidates, threshold, sh_hist)
-    released = [sig_new, candidates] + ([sig_hist] if own_hist else [])
-    return _materialize_release(result, *released)
+    return _materialize_release(result, sig_new, sig_hist, candidates)

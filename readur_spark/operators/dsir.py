@@ -23,7 +23,7 @@ Spark-first shape, no Python in any plan:
   sample without replacement that is a pure function of (id, salt),
   deterministic across re-runs and engines.
 
-Smoothing: add-``alpha`` on both distributions over the same B buckets,
+Smoothing: add-``ALPHA`` on both distributions over the same B buckets,
 so empty target buckets penalize instead of zeroing.
 """
 
@@ -33,6 +33,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from readur_spark.operators.sampling import hash_uniform_col
+
+ALPHA = 1.0  # add-alpha smoothing of both bucket distributions
+# dsir_resample's large-k path: rows its approxQuantile bracket aims to hold
+BOUNDARY_BAND = 500_000
 
 #: feature-hash salt — versioned so a changed hash can never silently mix
 #: with weights computed under the old one
@@ -91,10 +95,9 @@ def dsir_weights(
     target: DataFrame,
     n: int = 2,
     num_buckets: int = 10_000,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """(doc_id, n_features, log_w) for every raw document with ≥1 feature:
-    ``log_w`` = Σ_b cnt_b · ln(p_target(b) / p_raw(b)) with add-``alpha``
+    ``log_w`` = Σ_b cnt_b · ln(p_target(b) / p_raw(b)) with add-``ALPHA``
     smoothed bucket distributions — the log importance weight of the doc's
     hashed n-gram bag. Higher = more target-like."""
     from readur_spark.operators.dedup import _materialize_release
@@ -128,10 +131,10 @@ def dsir_weights(
             "bucket",
             (
                 F.log(
-                    (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(alpha))
-                    / F.lit(t_tgt + alpha * b)
+                    (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(ALPHA))
+                    / F.lit(t_tgt + ALPHA * b)
                 )
-                - F.log((F.col("cr") + F.lit(alpha)) / F.lit(t_raw + alpha * b))
+                - F.log((F.col("cr") + F.lit(ALPHA)) / F.lit(t_raw + ALPHA * b))
             ).alias("log_ratio"),
         )
     )
@@ -152,7 +155,6 @@ def dsir_resample(
     k: int,
     temperature: float = 1.0,
     driver_topk_max: int = 100_000,
-    boundary_band: int = 500_000,
     **kwargs,
 ) -> DataFrame:
     """Top-``k`` weighted sample without replacement via the Gumbel-top-k
@@ -170,7 +172,7 @@ def dsir_resample(
       bounded k-row limit).
     * larger ``k`` — threshold selection: ``approxQuantile`` brackets the
       k-th largest gumbel key with a rank error chosen so the bracket
-      band holds ~``boundary_band`` rows; everything strictly above the
+      band holds ~``BOUNDARY_BAND`` rows; everything strictly above the
       upper bracket is selected by a DISTRIBUTED FILTER (exact count,
       one scalar to the driver), and the remaining ``k - count`` slots
       are filled from the bounded band in exact (key desc, id asc)
@@ -209,9 +211,9 @@ def dsir_resample(
     n = keyed.count()
     if k >= n:
         return raw.join(keyed.select("doc_id"), "doc_id", "left_semi")
-    # rank error sized so the [lo_q, hi_q] bracket spans ~boundary_band
+    # rank error sized so the [lo_q, hi_q] bracket spans ~BOUNDARY_BAND
     # rows; approxQuantile guarantees rank error <= err * n
-    err = max(1e-6, min(0.01, boundary_band / (4.0 * n)))
+    err = max(1e-6, min(0.01, BOUNDARY_BAND / (4.0 * n)))
     q = 1.0 - k / n
     hi_q = min(1.0, q + 2.0 * err)
     lo_q = max(0.0, q - 2.0 * err)
@@ -250,7 +252,7 @@ def dsir_resample(
         raise RuntimeError(
             "dsir_resample: approxQuantile bracket failed to cover the "
             f"k-th key after widening (k={k}, c_hi={c_hi}); rerun with a "
-            "larger boundary_band"
+            "larger BOUNDARY_BAND"
         )
     need = k - c_hi
     sure = keyed.filter(F.col("gumbel_key") > hi).select("doc_id")
@@ -274,13 +276,13 @@ def dsir_resample(
         )
         _, band_cnt = _counts(lo, hi)
     # symmetric guard (round-5 review): under the sketch guarantee both
-    # `need` and the band stay O(boundary_band); a wild overshoot of `hi`
+    # `need` and the band stay O(BOUNDARY_BAND); a wild overshoot of `hi`
     # upward would otherwise silently funnel ~k rows through the limit
-    if c_hi + band_cnt < k or max(need, band_cnt) > 8 * boundary_band:
+    if c_hi + band_cnt < k or max(need, band_cnt) > 8 * BOUNDARY_BAND:
         raise RuntimeError(
             "dsir_resample: approxQuantile bracket degenerate "
             f"(k={k}, c_hi={c_hi}, need={need}, band={band_cnt}); rerun "
-            "with a larger boundary_band"
+            "with a larger BOUNDARY_BAND"
         )
     boundary = (
         band.orderBy(F.desc("gumbel_key"), F.asc("doc_id"))

@@ -164,11 +164,14 @@ def extract_spans(
     return map_documents(docs_df, ["spans"], kernel, EXTRACTED_SCHEMA, passthrough)
 
 
+# chunk_texts: longer docs take the linear relational path
+ARRAY_PATH_MAX_WORDS = 10_000
+
+
 def chunk_texts(
     docs_df: DataFrame,
     chunk_words: int = 128,
     overlap_words: int = 32,
-    array_path_max_words: int = 10_000,
 ) -> DataFrame:
     """Training-data chunking: split each document into word-bounded
     chunks of ``chunk_words`` with ``overlap_words`` overlap (stride =
@@ -176,7 +179,7 @@ def chunk_texts(
     n_words).
 
     Size-dispatched for the mega-doc tail: docs up to
-    ``array_path_max_words`` take the zero-shuffle array path (split +
+    ``ARRAY_PATH_MAX_WORDS`` take the zero-shuffle array path (split +
     sequence + slice + explode — a scan-speed codegen'd projection). The
     array path is NOT safe unbounded: the transform lambda re-evaluates
     the embedded split() per chunk (interpreted HOFs have no CSE), which
@@ -217,7 +220,7 @@ def chunk_texts(
         )
     ).alias("c")
     small = (
-        docs_df.filter((n > 0) & (n <= array_path_max_words))
+        docs_df.filter((n > 0) & (n <= ARRAY_PATH_MAX_WORDS))
         .select(F.col("doc_id"), chunk)
         .select(
             "doc_id",
@@ -228,7 +231,7 @@ def chunk_texts(
     )
 
     # ---- relational path (linear), the mega tail -------------------------
-    big_rows = docs_df.filter(n > array_path_max_words).select(
+    big_rows = docs_df.filter(n > ARRAY_PATH_MAX_WORDS).select(
         F.col("doc_id").alias("_id"), F.posexplode(words).alias("pos", "w")
     )
     counts = big_rows.groupBy("_id").agg(F.count("*").alias("_n"))

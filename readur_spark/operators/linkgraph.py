@@ -292,312 +292,297 @@ def pagerank(
     n = nodes_ck.count()
     if n == 0:
         return nodes_ck.withColumn("rank", F.lit(0.0))
-    # Scale-derived graph partitioning: a web-scale graph keeps the
-    # session's configured shuffle parallelism, but a small graph (the
-    # per-domain graphs these pipelines mostly rank: 10^2-10^4 hosts)
-    # collapses to a handful of partitions so each of the ``iters``
-    # sequential jobs schedules a few tasks instead of
-    # spark.sql.shuffle.partitions near-empty ones — the iteration loop
-    # on small graphs is pure scheduling latency (guide §2.6).
-    # Partitioning never changes the computed ranks.
-    spark = edges.sparkSession
+    # every intermediate below is released on the way out, whether the
+    # ranks return or a validation or iteration error raises
+    edeg = danglers = nodes_t = None
     try:
-        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_p = 200
-    graph_p = max(1, min(shuffle_p, -(-n // 2000)))
-    # narrow coalesced view for the loop; nodes_ck stays the handle the
-    # release paths unpersist (coalesce wraps the checkpointed RDD — an
-    # unpersist through the wrapper would miss it). Only wrap when the
-    # count actually shrinks: a no-op coalesce still erases the
-    # checkpoint's hash-partitioning info and forced an extra exchange
-    # of the node table every iteration at corpus scale (10M-edge A/B).
-    nodes = nodes_ck if graph_p >= shuffle_p else nodes_ck.coalesce(graph_p)
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # edges ⋈ outdeg once, pre-partitioned on src — every iteration's
-    # join reuses this layout instead of re-shuffling the edge table.
-    # The explicit partition count is only forced when it SHRINKS the
-    # layout (small graphs); a web-scale graph keeps the keyless-count
-    # form so AQE stays free to size the exchange (an explicit count
-    # disables AQE coalescing for that exchange — measured +20 % per
-    # iteration at 10M edges).
-    edeg = e.join(outdeg, "src")
-    edeg = (
-        edeg.repartition(graph_p, "src")
-        if graph_p < shuffle_p
-        else edeg.repartition("src")
-    ).persist()
-    edeg.count()  # materialize before the loop
-    # the DANGLING NODE SET is loop-invariant: materialize it once.
-    # Re-deriving it per iteration (ranks anti-join outdeg) re-executed
-    # the whole upstream edge plan — corpus-scale extraction work ×
-    # iters when edges is a lazy view over extract_outlinks (review
-    # finding); only the rank MASS on these nodes changes per step.
-    danglers_df = nodes.join(
-        edeg.select("src").distinct(),
-        nodes["node"] == F.col("src"),
-        "left_anti",
-    )
-    if graph_p < shuffle_p:
-        danglers_df = danglers_df.coalesce(graph_p)
-    danglers = danglers_df.localCheckpoint(eager=True)
+        # Scale-derived graph partitioning: a web-scale graph keeps the
+        # session's configured shuffle parallelism, but a small graph (the
+        # per-domain graphs these pipelines mostly rank: 10^2-10^4 hosts)
+        # collapses to a handful of partitions so each of the ``iters``
+        # sequential jobs schedules a few tasks instead of
+        # spark.sql.shuffle.partitions near-empty ones — the iteration loop
+        # on small graphs is pure scheduling latency (guide §2.6).
+        # Partitioning never changes the computed ranks.
+        spark = edges.sparkSession
+        try:
+            shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            shuffle_p = 200
+        graph_p = max(1, min(shuffle_p, -(-n // 2000)))
+        # narrow coalesced view for the loop; nodes_ck stays the handle the
+        # release paths unpersist (coalesce wraps the checkpointed RDD — an
+        # unpersist through the wrapper would miss it). Only wrap when the
+        # count actually shrinks: a no-op coalesce still erases the
+        # checkpoint's hash-partitioning info and forced an extra exchange
+        # of the node table every iteration at corpus scale (10M-edge A/B).
+        nodes = nodes_ck if graph_p >= shuffle_p else nodes_ck.coalesce(graph_p)
+        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+        # edges ⋈ outdeg once, pre-partitioned on src — every iteration's
+        # join reuses this layout instead of re-shuffling the edge table.
+        # The explicit partition count is only forced when it SHRINKS the
+        # layout (small graphs); a web-scale graph keeps the keyless-count
+        # form so AQE stays free to size the exchange (an explicit count
+        # disables AQE coalescing for that exchange — measured +20 % per
+        # iteration at 10M edges).
+        edeg = e.join(outdeg, "src")
+        edeg = (
+            edeg.repartition(graph_p, "src")
+            if graph_p < shuffle_p
+            else edeg.repartition("src")
+        ).persist()
+        edeg.count()  # materialize before the loop
+        # the DANGLING NODE SET is loop-invariant: materialize it once.
+        # Re-deriving it per iteration (ranks anti-join outdeg) re-executed
+        # the whole upstream edge plan — corpus-scale extraction work ×
+        # iters when edges is a lazy view over extract_outlinks (review
+        # finding); only the rank MASS on these nodes changes per step.
+        danglers_df = nodes.join(
+            edeg.select("src").distinct(),
+            nodes["node"] == F.col("src"),
+            "left_anti",
+        )
+        if graph_p < shuffle_p:
+            danglers_df = danglers_df.coalesce(graph_p)
+        danglers = danglers_df.localCheckpoint(eager=True)
 
-    # teleport vector: uniform stays the scalar formulation below
-    # (bit-identical to the oracle-pinned classic path); a
-    # personalization vector becomes a per-node __t column carried on
-    # the nodes table (normalized over graph nodes, absent nodes 0)
-    nodes_t = None
-    if teleport is not None:
-        tcols = teleport.columns
-        # __nbad flags rows whose raw weight is non-null but casts to
-        # NULL (non-numeric strings): sum/min silently skip NULLs, so
-        # without the flag a malformed seeds table would degrade
-        # TrustRank with no signal (r7 advisor finding). Counted
-        # BEFORE the groupBy — a node with one good and one malformed
-        # row must still raise.
-        # try_cast, not cast: under ANSI mode (Spark 4 default) a plain
-        # cast THROWS mid-stage on the first malformed string; try_cast
-        # yields NULL so the __nbad aggregate can surface ALL bad rows
-        # in one clean ValueError either way.
-        pre = teleport.select(
-            F.col(tcols[0]).alias("node"),
-            (
-                F.col(tcols[1]).try_cast("double")
-                if len(tcols) > 1
-                else F.lit(1.0)
-            ).alias("__w"),
-            (
+        # teleport vector: uniform stays the scalar formulation below
+        # (bit-identical to the oracle-pinned classic path); a
+        # personalization vector becomes a per-node __t column carried on
+        # the nodes table (normalized over graph nodes, absent nodes 0)
+        if teleport is not None:
+            tcols = teleport.columns
+            # __nbad flags rows whose raw weight is non-null but casts to
+            # NULL (non-numeric strings): sum/min silently skip NULLs, so
+            # without the flag a malformed seeds table would degrade
+            # TrustRank with no signal (r7 advisor finding). Counted
+            # BEFORE the groupBy — a node with one good and one malformed
+            # row must still raise.
+            # try_cast, not cast: under ANSI mode (Spark 4 default) a plain
+            # cast THROWS mid-stage on the first malformed string; try_cast
+            # yields NULL so the __nbad aggregate can surface ALL bad rows
+            # in one clean ValueError either way.
+            pre = teleport.select(
+                F.col(tcols[0]).alias("node"),
                 (
-                    F.col(tcols[1]).isNotNull()
-                    & F.col(tcols[1]).try_cast("double").isNull()
-                ).cast("long")
-                if len(tcols) > 1
-                else F.lit(0).cast("long")
-            ).alias("__nbad"),
-        )
-        tv = pre.groupBy("node").agg(
-            F.sum("__w").alias("__w"), F.sum("__nbad").alias("__nbad")
-        )
-        on_graph = nodes.join(tv, "node")
-        agg = on_graph.agg(
-            F.coalesce(F.sum("__w"), F.lit(0.0)).alias("total"),
-            F.coalesce(F.min("__w"), F.lit(0.0)).alias("lo"),
-            F.coalesce(F.sum("__nbad"), F.lit(0)).alias("nbad"),
-        ).first()
-        total = agg["total"]
-        if agg["nbad"] > 0:
-            edeg.unpersist()
-            _release_checkpoint(danglers)
-            _release_checkpoint(nodes_ck)
-            raise ValueError(
-                f"teleport weights contain {agg['nbad']} non-numeric "
-                "value(s) on graph nodes (cast to double yields NULL)"
-            )
-        if agg["lo"] < 0:
-            edeg.unpersist()
-            _release_checkpoint(danglers)
-            _release_checkpoint(nodes_ck)
-            raise ValueError(
-                "teleport weights must be non-negative "
-                f"(min on graph nodes: {agg['lo']})"
-            )
-        if total <= 0:
-            edeg.unpersist()
-            _release_checkpoint(danglers)
-            _release_checkpoint(nodes_ck)
-            raise ValueError(
-                "teleport vector has no positive mass on graph nodes"
-            )
-        nodes_t = (
-            nodes.join(
-                tv.select("node", (F.col("__w") / total).alias("__t")),
-                "node",
-                "left",
-            )
-            .select("node", F.coalesce("__t", F.lit(0.0)).alias("__t"))
-            .localCheckpoint(eager=True)
-        )
-        # warm starts never read the teleport-derived init vector — it
-        # would be built, checkpointed, and immediately replaced below
-        # (one wasted corpus-scale materialization per warm-started
-        # recrawl; r8 advisor finding). Only nodes_t is needed then.
-        ranks = (
-            None
-            if init_ranks is not None
-            else nodes_t.select(
-                "node", F.col("__t").alias("rank")
-            ).localCheckpoint(eager=True)
-        )
-    else:
-        ranks = (
-            None
-            if init_ranks is not None
-            else nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
-                eager=True
-            )
-        )
-    if init_ranks is not None:
-        # warm start (incremental recrawl): seed the iteration from a
-        # previous run's rank vector instead of the teleport/uniform
-        # init. The power-iteration FIXPOINT is init-independent (the
-        # Google matrix is primitive for damping < 1), so with tol=
-        # this only changes how many corpus-scale iterations the loop
-        # needs — new nodes absent from the old vector start at 1/N,
-        # then the whole vector is renormalized to a probability
-        # distribution (one scalar aggregate, setup-only cost).
-        icols = init_ranks.columns
-        # try_cast, same rationale as the teleport path: ANSI mode would
-        # otherwise throw an opaque mid-stage cast error on a malformed
-        # rank value, and non-ANSI would silently skip it in the sum —
-        # __nbad surfaces bad rows as a loud ValueError instead.
-        iv = (
-            init_ranks.select(
-                F.col(icols[0]).alias("node"),
-                F.col(icols[1]).try_cast("double").alias("__ir"),
-                F.col(icols[1]).isNotNull().alias("__raw_nn"),
-            )
-            .groupBy("node")
-            .agg(
-                F.sum("__ir").alias("__ir"),
-                F.sum(
-                    F.when(
-                        F.col("__raw_nn") & F.col("__ir").isNull(), 1
-                    ).otherwise(0)
+                    F.col(tcols[1]).try_cast("double")
+                    if len(tcols) > 1
+                    else F.lit(1.0)
+                ).alias("__w"),
+                (
+                    (
+                        F.col(tcols[1]).isNotNull()
+                        & F.col(tcols[1]).try_cast("double").isNull()
+                    ).cast("long")
+                    if len(tcols) > 1
+                    else F.lit(0).cast("long")
                 ).alias("__nbad"),
             )
-        )
-        seeded = nodes.join(iv, "node", "left").select(
-            "node",
-            F.coalesce("__ir", F.lit(1.0 / n)).alias("rank"),
-            F.coalesce("__nbad", F.lit(0)).alias("__nbad"),
-        )
-        itot = seeded.agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("t"),
-            F.coalesce(F.min("rank"), F.lit(0.0)).alias("lo"),
-            F.coalesce(F.sum("__nbad"), F.lit(0)).alias("nbad"),
-        ).first()
-        seeded = seeded.drop("__nbad")
-        if itot["nbad"] > 0:
-            edeg.unpersist()
-            _release_checkpoint(danglers)
-            _release_checkpoint(nodes_ck)
-            if nodes_t is not None:
-                _release_checkpoint(nodes_t)
-            raise ValueError(
-                f"init_ranks contains {itot['nbad']} non-numeric rank "
-                "value(s) on graph nodes (cast to double yields NULL)"
+            tv = pre.groupBy("node").agg(
+                F.sum("__w").alias("__w"), F.sum("__nbad").alias("__nbad")
             )
-        if itot["lo"] < 0 or itot["t"] <= 0:
-            edeg.unpersist()
-            _release_checkpoint(danglers)
-            _release_checkpoint(nodes_ck)
-            if nodes_t is not None:
-                _release_checkpoint(nodes_t)
-            raise ValueError(
-                "init_ranks must be non-negative with positive total "
-                f"mass on graph nodes (min {itot['lo']}, sum {itot['t']})"
-            )
-        ranks = seeded.select(
-            "node", (F.col("rank") / itot["t"]).alias("rank")
-        ).localCheckpoint(eager=True)
-    base = (1.0 - damping) / n
-    # Dangling-mass dispatch (measured both ways at both scales): on
-    # SMALL graphs the per-iteration `.first()` round trip dominates, so
-    # the 1-row aggregate is broadcast INTO the iteration job (one job
-    # per iteration instead of two). On LARGE graphs the fused form is
-    # net SLOWER — the broadcast subtree still reads the rank vector,
-    # and the nested-loop join of the scalar row against every node
-    # breaks whole-stage codegen (10M-edge A/B: +12-30 % per iteration)
-    # — so corpus-scale graphs keep the classic collect + literal.
-    # Either way the identical float64 reaches the identical expression
-    # (AQE on/off hash-equal probe + DuckDB gate).
-    fuse_dangling = n <= 100_000
-    for _ in range(iters):
-        # rank mass parked on dangling nodes (no outgoing edges)
-        dang_subtree = (
-            ranks.join(danglers, "node", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang"))
-        )
-        if fuse_dangling:
-            dang_uniform = F.col("__dang") / F.lit(float(n))
-            dang_teleport = F.col("__dang")
-        else:
-            dangling = dang_subtree.first()[0]
-            dang_uniform = F.lit(dangling / n)
-            dang_teleport = F.lit(dangling)
-        contribs = (
-            edeg.join(ranks, edeg["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inmass"))
-        )
-        if nodes_t is not None:
-            new_ranks = nodes_t.join(contribs, "node", "left")
-            if fuse_dangling:
-                new_ranks = new_ranks.crossJoin(F.broadcast(dang_subtree))
-            new_ranks = new_ranks.select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("__t")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inmass"), F.lit(0.0))
-                        + dang_teleport * F.col("__t")
-                    )
-                ).alias("rank"),
-            )
-        else:
-            new_ranks = nodes.join(contribs, "node", "left")
-            if fuse_dangling:
-                new_ranks = new_ranks.crossJoin(F.broadcast(dang_subtree))
-            new_ranks = new_ranks.select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inmass"), F.lit(0.0))
-                        + dang_uniform
-                    )
-                ).alias("rank"),
-            )
-        old = ranks
-        ranks = new_ranks.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["iterations_run"] += 1
-        if tol is not None:
-            delta = (
-                ranks.alias("new")
-                .join(old.alias("old"), "node")
-                .agg(
-                    F.coalesce(
-                        F.sum(
-                            F.abs(
-                                F.col("new.rank") - F.col("old.rank")
-                            )
-                        ),
-                        F.lit(0.0),
-                    )
+            on_graph = nodes.join(tv, "node")
+            agg = on_graph.agg(
+                F.coalesce(F.sum("__w"), F.lit(0.0)).alias("total"),
+                F.coalesce(F.min("__w"), F.lit(0.0)).alias("lo"),
+                F.coalesce(F.sum("__nbad"), F.lit(0)).alias("nbad"),
+            ).first()
+            total = agg["total"]
+            if agg["nbad"] > 0:
+                raise ValueError(
+                    f"teleport weights contain {agg['nbad']} non-numeric "
+                    "value(s) on graph nodes (cast to double yields NULL)"
                 )
-                .first()[0]
+            if agg["lo"] < 0:
+                raise ValueError(
+                    "teleport weights must be non-negative "
+                    f"(min on graph nodes: {agg['lo']})"
+                )
+            if total <= 0:
+                raise ValueError(
+                    "teleport vector has no positive mass on graph nodes"
+                )
+            nodes_t = (
+                nodes.join(
+                    tv.select("node", (F.col("__w") / total).alias("__t")),
+                    "node",
+                    "left",
+                )
+                .select("node", F.coalesce("__t", F.lit(0.0)).alias("__t"))
+                .localCheckpoint(eager=True)
             )
+            # warm starts never read the teleport-derived init vector — it
+            # would be built, checkpointed, and immediately replaced below
+            # (one wasted corpus-scale materialization per warm-started
+            # recrawl; r8 advisor finding). Only nodes_t is needed then.
+            ranks = (
+                None
+                if init_ranks is not None
+                else nodes_t.select(
+                    "node", F.col("__t").alias("rank")
+                ).localCheckpoint(eager=True)
+            )
+        else:
+            ranks = (
+                None
+                if init_ranks is not None
+                else nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(
+                    eager=True
+                )
+            )
+        if init_ranks is not None:
+            # warm start (incremental recrawl): seed the iteration from a
+            # previous run's rank vector instead of the teleport/uniform
+            # init. The power-iteration FIXPOINT is init-independent (the
+            # Google matrix is primitive for damping < 1), so with tol=
+            # this only changes how many corpus-scale iterations the loop
+            # needs — new nodes absent from the old vector start at 1/N,
+            # then the whole vector is renormalized to a probability
+            # distribution (one scalar aggregate, setup-only cost).
+            icols = init_ranks.columns
+            # try_cast, same rationale as the teleport path: ANSI mode would
+            # otherwise throw an opaque mid-stage cast error on a malformed
+            # rank value, and non-ANSI would silently skip it in the sum —
+            # __nbad surfaces bad rows as a loud ValueError instead.
+            iv = (
+                init_ranks.select(
+                    F.col(icols[0]).alias("node"),
+                    F.col(icols[1]).try_cast("double").alias("__ir"),
+                    F.col(icols[1]).isNotNull().alias("__raw_nn"),
+                )
+                .groupBy("node")
+                .agg(
+                    F.sum("__ir").alias("__ir"),
+                    F.sum(
+                        F.when(
+                            F.col("__raw_nn") & F.col("__ir").isNull(), 1
+                        ).otherwise(0)
+                    ).alias("__nbad"),
+                )
+            )
+            seeded = nodes.join(iv, "node", "left").select(
+                "node",
+                F.coalesce("__ir", F.lit(1.0 / n)).alias("rank"),
+                F.coalesce("__nbad", F.lit(0)).alias("__nbad"),
+            )
+            itot = seeded.agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("t"),
+                F.coalesce(F.min("rank"), F.lit(0.0)).alias("lo"),
+                F.coalesce(F.sum("__nbad"), F.lit(0)).alias("nbad"),
+            ).first()
+            seeded = seeded.drop("__nbad")
+            if itot["nbad"] > 0:
+                raise ValueError(
+                    f"init_ranks contains {itot['nbad']} non-numeric rank "
+                    "value(s) on graph nodes (cast to double yields NULL)"
+                )
+            if itot["lo"] < 0 or itot["t"] <= 0:
+                raise ValueError(
+                    "init_ranks must be non-negative with positive total "
+                    f"mass on graph nodes (min {itot['lo']}, sum {itot['t']})"
+                )
+            ranks = seeded.select(
+                "node", (F.col("rank") / itot["t"]).alias("rank")
+            ).localCheckpoint(eager=True)
+        base = (1.0 - damping) / n
+        # Dangling-mass dispatch (measured both ways at both scales): on
+        # SMALL graphs the per-iteration `.first()` round trip dominates, so
+        # the 1-row aggregate is broadcast INTO the iteration job (one job
+        # per iteration instead of two). On LARGE graphs the fused form is
+        # net SLOWER — the broadcast subtree still reads the rank vector,
+        # and the nested-loop join of the scalar row against every node
+        # breaks whole-stage codegen (10M-edge A/B: +12-30 % per iteration)
+        # — so corpus-scale graphs keep the classic collect + literal.
+        # Either way the identical float64 reaches the identical expression
+        # (AQE on/off hash-equal probe + DuckDB gate).
+        fuse_dangling = n <= 100_000
+        for _ in range(iters):
+            # rank mass parked on dangling nodes (no outgoing edges)
+            dang_subtree = (
+                ranks.join(danglers, "node", "left_semi")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang"))
+            )
+            if fuse_dangling:
+                dang_uniform = F.col("__dang") / F.lit(float(n))
+                dang_teleport = F.col("__dang")
+            else:
+                dangling = dang_subtree.first()[0]
+                dang_uniform = F.lit(dangling / n)
+                dang_teleport = F.lit(dangling)
+            contribs = (
+                edeg.join(ranks, edeg["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("outdeg")).alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("inmass"))
+            )
+            if nodes_t is not None:
+                new_ranks = nodes_t.join(contribs, "node", "left")
+                if fuse_dangling:
+                    new_ranks = new_ranks.crossJoin(F.broadcast(dang_subtree))
+                new_ranks = new_ranks.select(
+                    "node",
+                    (
+                        F.lit(1.0 - damping) * F.col("__t")
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("inmass"), F.lit(0.0))
+                            + dang_teleport * F.col("__t")
+                        )
+                    ).alias("rank"),
+                )
+            else:
+                new_ranks = nodes.join(contribs, "node", "left")
+                if fuse_dangling:
+                    new_ranks = new_ranks.crossJoin(F.broadcast(dang_subtree))
+                new_ranks = new_ranks.select(
+                    "node",
+                    (
+                        F.lit(base)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("inmass"), F.lit(0.0))
+                            + dang_uniform
+                        )
+                    ).alias("rank"),
+                )
+            old = ranks
+            ranks = new_ranks.localCheckpoint(eager=True)
             if stats is not None:
-                stats["final_delta"] = delta
-            if delta <= tol:
+                stats["iterations_run"] += 1
+            if tol is not None:
+                delta = (
+                    ranks.alias("new")
+                    .join(old.alias("old"), "node")
+                    .agg(
+                        F.coalesce(
+                            F.sum(
+                                F.abs(
+                                    F.col("new.rank") - F.col("old.rank")
+                                )
+                            ),
+                            F.lit(0.0),
+                        )
+                    )
+                    .first()[0]
+                )
                 if stats is not None:
-                    stats["converged"] = True
-                _release_checkpoint(old)
-                break
-        _release_checkpoint(old)
-    edeg.unpersist()
-    _release_checkpoint(danglers)
-    _release_checkpoint(nodes_ck)
-    if nodes_t is not None:
-        _release_checkpoint(nodes_t)
-    return ranks
+                    stats["final_delta"] = delta
+                if delta <= tol:
+                    if stats is not None:
+                        stats["converged"] = True
+                    _release_checkpoint(old)
+                    break
+            _release_checkpoint(old)
+        return ranks
+    finally:
+        if edeg is not None:
+            edeg.unpersist()
+        for ck in (danglers, nodes_ck, nodes_t):
+            if ck is not None:
+                _release_checkpoint(ck)
 
 
 def trustrank(

@@ -37,6 +37,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+ADD_K = 0.5  # bigram add-k smoothing
+BACKOFF_ALPHA = 0.4  # Stupid-Backoff penalty per level (Brants et al. 2007)
+
 
 def words_col(c: Column) -> Column:
     """Lowercase alphanumeric tokens — the same tokenization as the
@@ -84,16 +87,9 @@ class BigramLM:
     add_k: float
 
 
-def train_bigram_lm(
-    docs: DataFrame,
-    add_k: float = 0.5,
-    min_count: int = 1,
-) -> BigramLM:
-    """Count-based bigram LM over the reference corpus. ``min_count`` > 1
-    prunes rare pairs from the table (they then score through the smoothed
-    unseen path — a documented approximation that bounds the model size on
-    web-scale reference corpora; context counts stay exact so smoothing
-    denominators are unaffected)."""
+def train_bigram_lm(docs: DataFrame) -> BigramLM:
+    """Count-based bigram LM over the reference corpus, add-``ADD_K``
+    smoothed."""
     from readur_spark.operators.dedup import _materialize_release
 
     # ONE tokenize pass (r4 verdict #5): the corpus splits into word
@@ -111,7 +107,7 @@ def train_bigram_lm(
         )
         .select(F.col("p.prev").alias("prev"), F.col("p.word").alias("word"))
     )
-    all_pairs = _materialize_release(
+    pair_counts = _materialize_release(
         big.groupBy("prev", "word").agg(F.count("*").alias("c"))
     )
     vocab_size = (
@@ -120,13 +116,10 @@ def train_bigram_lm(
         .collect()[0]["v"]
     )
     toks.unpersist()
-    # context totals derive from the (pre-pruning) pair table — a cheap
-    # rollup of the checkpointed counts, no corpus access
-    ctx_counts = all_pairs.groupBy("prev").agg(F.sum("c").alias("cc"))
-    pair_counts = (
-        all_pairs.filter(F.col("c") >= min_count) if min_count > 1 else all_pairs
-    )
-    return BigramLM(pair_counts, ctx_counts, int(vocab_size), add_k)
+    # context totals derive from the pair table — a cheap rollup of the
+    # checkpointed counts, no corpus access
+    ctx_counts = pair_counts.groupBy("prev").agg(F.sum("c").alias("cc"))
+    return BigramLM(pair_counts, ctx_counts, int(vocab_size), ADD_K)
 
 
 def perplexity_score(
@@ -213,18 +206,12 @@ class BackoffLM:
     bi: DataFrame  # (w1, w2, c2)
     uni: DataFrame  # (w, c1)
     total_tokens: int
-    alpha: float = 0.4
+    alpha: float
 
 
-def train_backoff_lm(
-    docs: DataFrame,
-    alpha: float = 0.4,
-    min_count: int = 1,
-) -> BackoffLM:
+def train_backoff_lm(docs: DataFrame) -> BackoffLM:
     """Count the three n-gram orders (each one explode + map-side-combining
-    groupBy). ``min_count`` prunes the TRIGRAM table only — the fat tail
-    at web scale; pruned trigrams score through the bigram backoff, and
-    lower-order tables stay exact so every denominator is honest."""
+    groupBy); the model backs off by ``BACKOFF_ALPHA`` per level."""
     from readur_spark.operators.dedup import _materialize_release
 
     # ONE tokenize pass (r4 verdict #5): word arrays persisted once; the
@@ -246,8 +233,6 @@ def train_backoff_lm(
         )
         .agg(F.count("*").alias("c3"))
     )
-    if min_count > 1:
-        tri = tri.filter(F.col("c3") >= min_count)
     bi = _materialize_release(
         toks.where(F.size("ws") >= 2)
         .select(
@@ -263,7 +248,7 @@ def train_backoff_lm(
     )
     toks.unpersist()
     total = uni.agg(F.sum("c1").alias("t")).collect()[0]["t"]
-    return BackoffLM(tri, bi, uni, int(total or 0), alpha)
+    return BackoffLM(tri, bi, uni, int(total or 0), BACKOFF_ALPHA)
 
 
 def backoff_score(

@@ -96,10 +96,7 @@ def hyperball(
     edges: DataFrame,
     p: int = 8,
     max_t: int = 32,
-    src_col: str = "src",
-    dst_col: str = "dst",
     stats: dict | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Run HyperBall over a (src, dst) edge table. Returns one row per
     node: ``(node, reach_est, harmonic, t_converged)`` where
@@ -116,26 +113,19 @@ def hyperball(
     reporting), and ``neighborhood_function`` — the list
     [N(0), N(1), ...] of summed reach estimates per round.
 
-    ``num_partitions`` bounds per-task state: the union kernel holds
-    (nodes-in-partition × 2^p bytes) of register state per task, so at
-    10^8 nodes the session-default shuffle width is too coarse — size
-    it so nodes/num_partitions × 2^p stays comfortably in executor
-    memory (r7 advisor finding). ``None`` keeps the session default."""
+    The union kernel holds (nodes-in-partition × 2^p bytes) of register
+    state per task; the shuffles take the session's
+    ``spark.sql.shuffle.partitions``, so size that to keep
+    nodes/partitions × 2^p in executor memory."""
     if not 4 <= p <= 12:
         raise ValueError(f"p must be in [4, 12], got {p}")
     if max_t < 0:
         raise ValueError(f"max_t must be >= 0, got {max_t}")
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(
-            f"num_partitions must be >= 1, got {num_partitions}"
-        )
     from readur_spark.plans.curation import _release_checkpoint
 
     m = 1 << p
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -144,11 +134,7 @@ def hyperball(
     # pre-partition the edge table on dst ONCE: every round's join reads
     # this layout (sketches are re-hashed each round anyway; the edge
     # side is the reusable one)
-    ep = (
-        e.repartition(num_partitions, "dst")
-        if num_partitions
-        else e.repartition("dst")
-    ).persist()
+    ep = e.repartition("dst").persist()
     ep.count()
 
     @F.pandas_udf("binary")
@@ -273,11 +259,7 @@ def hyperball(
             sketches.select("node", "sk"),
             ep["dst"] == F.col("node"),
         ).select(F.col("src").alias("node"), "sk")
-        pulled = (
-            pulled.repartition(num_partitions, "node")
-            if num_partitions
-            else pulled.repartition("node")
-        )
+        pulled = pulled.repartition("node")
         contribs = pulled.mapInPandas(
             union_partition, "node string, sk binary"
         )

@@ -115,7 +115,6 @@ def pack_sequences(
     seq_len: int = 2048,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_buckets: int | None = None,
     token_counter=None,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -126,7 +125,7 @@ def pack_sequences(
     * **numeric ids** — stream order is ascending ``id_col``, and the
       bucketing is contiguous id ranges (pure arithmetic on the id, so
       re-runs bucket identically). A skewed id distribution skews bucket
-      sizes; pick ``num_buckets`` ≳ cluster parallelism (default) and the
+      sizes; there is one bucket per unit of cluster parallelism, so the
       window stays balanced for the dense-id common case.
     * **string (or other non-numeric) ids** — the prefix scan needs
       arithmetic range bucketing, so the stream order becomes ascending
@@ -189,7 +188,7 @@ def pack_sequences(
     # phases 1-3: the shared bucketed prefix scan (one collect per
     # bucket, broadcast bases, per-bucket window — no Exchange
     # SinglePartition anywhere in this plan)
-    offs = bucketed_stream_offsets(base, ("id",), num_buckets)
+    offs = bucketed_stream_offsets(base, ("id",))
     if offs is None:
         base.unpersist()
         return spark.createDataFrame(

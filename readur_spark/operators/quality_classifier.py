@@ -61,6 +61,10 @@ from readur_spark.operators.dsir import hashed_ngram_features
 #: document finite instead of log(0) (identical in every path + replica)
 P_EPS = 1e-12
 
+#: gradient-descent step size and L2 penalty of the logistic regression
+LR = 2.0
+L2 = 1e-4
+
 #: distributed-training chunking: documents per task for the gradient
 #: pass. Each doc costs microseconds of Python, so small corpora are
 #: latency-bound — re-chunk so a task amortizes task/Arrow overhead over
@@ -204,8 +208,6 @@ def train_quality_classifier(
     negative: DataFrame,
     num_buckets: int = 1024,
     iters: int = 30,
-    lr: float = 2.0,
-    l2: float = 1e-4,
     driver_train_max: int = 20_000,
     features: DataFrame | None = None,
 ) -> dict:
@@ -219,6 +221,7 @@ def train_quality_classifier(
     MB materialized through ``toLocalIterator`` (one partition in flight,
     rows converted to plain tuples as they stream). Above the bound the
     distributed loop runs instead — same model either way."""
+    lr, l2 = LR, L2
     labeled = positive.select("doc_id", "text", F.lit(1.0).alias("__y__")).unionByName(
         negative.select("doc_id", "text", F.lit(0.0).alias("__y__"))
     )
@@ -418,17 +421,3 @@ def score_quality(
     return fs.select(
         F.col("id").alias("doc_id"), F.round(p, 6).alias("quality_prob")
     )
-
-
-def quality_filter(
-    docs: DataFrame,
-    model: dict,
-    min_prob: float = 0.5,
-    **kwargs,
-) -> DataFrame:
-    """Keep documents the classifier scores at/above ``min_prob``
-    (unscored short docs survive by absence from the drop set — same
-    convention as perplexity_filter)."""
-    scores = score_quality(docs, model, **kwargs)
-    dropped = scores.filter(F.col("quality_prob") < min_prob).select("doc_id")
-    return docs.join(dropped, "doc_id", "left_anti")

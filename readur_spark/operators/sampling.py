@@ -18,6 +18,11 @@ from pyspark.sql import functions as F
 #: denominator for the md5-derived uniform: 8 hex chars = 32 bits
 _DENOM = float(1 << 32)
 
+#: the salts of sample_by_weight's Bernoulli draw and global_shuffle's
+#: permutation
+SAMPLE_SALT = "sample-v1"
+SHUFFLE_SALT = "shuffle-v1"
+
 
 def hash_uniform_col(id_col: Column, salt: str) -> Column:
     """Deterministic uniform in [0,1): first 32 bits of
@@ -141,30 +146,27 @@ def sample_by_weight(
     docs: DataFrame,
     rate: float,
     weight_col: str | None = None,
-    salt: str = "sample-v1",
 ) -> DataFrame:
     """Deterministic Bernoulli sample: keep a doc iff its salted uniform is
     below ``rate × weight`` (weight defaults to 1; the product is clamped
     to [0,1], so a weight ≥ 1/rate keeps the doc always). The standard
     quality-weighted downsampling shape — higher-quality docs survive at a
     higher rate, and the decision is per-doc with no shuffle."""
-    u = hash_uniform_col(F.col("doc_id"), salt)
+    u = hash_uniform_col(F.col("doc_id"), SAMPLE_SALT)
     p = F.lit(rate) * (F.col(weight_col) if weight_col else F.lit(1.0))
     return docs.filter(u < F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0)))
 
 
 def global_shuffle(
     docs: DataFrame,
-    salt: str = "shuffle-v1",
     num_buckets: int = 1024,
 ) -> DataFrame:
     """Deterministic GLOBAL shuffle with explicit positions: append
     ``shuffle_pos`` holding each row's 0-based rank in the order
-    ``(md5(id || ':' || salt), id)`` — the training-data ordering step
-    (every epoch pipeline shuffles its packed sequences; a different
-    ``salt`` is a different epoch's permutation). The permutation is a
-    pure function of (id, salt): reproducible across runs, engines, and
-    partitionings, and stable enough to resume mid-epoch.
+    ``(md5(id || ':' || SHUFFLE_SALT), id)`` — the training-data ordering
+    step (every epoch pipeline shuffles its packed sequences). The
+    permutation is a pure function of the id: reproducible across runs,
+    engines, and partitionings, and stable enough to resume mid-epoch.
 
     Scale shape (mirrors pack_sequences' two-phase prefix scan): a naive
     ``row_number() OVER (ORDER BY key)`` funnels the corpus through ONE
@@ -177,7 +179,7 @@ def global_shuffle(
     from readur_spark.operators.packing import bucketed_stream_offsets
 
     num_buckets = max(1, min(int(num_buckets), 1 << 16))
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":" + salt)))
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":" + SHUFFLE_SALT)))
     # the shared bucketed prefix scan (packing.bucketed_stream_offsets)
     # with weight 1: gstart == the 0-based global rank. The key is the
     # md5's leading 16 bits as a number — lexicographic order of

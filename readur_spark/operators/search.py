@@ -60,16 +60,19 @@ def _trigrams(s: str) -> list[str]:
     return sorted({s[i : i + 3] for i in range(len(s) - 2)}) if len(s) >= 3 else [s.lower()]
 
 
+# fuzzy_search: longer docs take the linear relational path
+ARRAY_PATH_MAX_CHARS = 10_000
+
+
 def fuzzy_search(
     docs: DataFrame,
     query: str,
     threshold: float = 0.3,
-    array_path_max_chars: int = 10_000,
 ) -> DataFrame:
     """F4: trigram-set Jaccard similarity > threshold (the pg_trgm
     ``similarity(text, q) > 0.3`` shape, search.rs:124-128).
 
-    Size-dispatched like the chunker: docs up to ``array_path_max_chars``
+    Size-dispatched like the chunker: docs up to ``ARRAY_PATH_MAX_CHARS``
     take the zero-shuffle codegen path (trigrams via
     ``transform(sequence(...)) + substr``). That path is quadratic in the
     text length — ``substr(i, 3)`` must scan to char i, and the lambda
@@ -93,9 +96,9 @@ def fuzzy_search(
     # filter after the similarity filter, and the quadratic trigram
     # expression must never evaluate on a mega row — when() short-circuits
     # per row regardless of predicate order
-    sim_guarded = F.when(F.length("text") <= array_path_max_chars, sim)
+    sim_guarded = F.when(F.length("text") <= ARRAY_PATH_MAX_CHARS, sim)
     small = (
-        docs.filter(F.length("text") <= array_path_max_chars)
+        docs.filter(F.length("text") <= ARRAY_PATH_MAX_CHARS)
         .withColumn("similarity", sim_guarded)
         .filter(F.col("similarity") > threshold)
         .select("doc_id", "similarity", "n_chars")
@@ -103,7 +106,7 @@ def fuzzy_search(
 
     from pyspark.sql.window import Window
 
-    big = docs.filter(F.length("text") > array_path_max_chars)
+    big = docs.filter(F.length("text") > ARRAY_PATH_MAX_CHARS)
     chars = big.select(
         "doc_id", F.posexplode(F.split(lowered, "")).alias("pos", "ch")
     )
@@ -331,10 +334,12 @@ def doc_stats(docs: DataFrame) -> DataFrame:
     )
 
 
+MIN_DF = 2  # tfidf_top_terms: terms in fewer docs are dropped
+
+
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 5,
-    min_df: int = 2,
 ) -> DataFrame:
     """Corpus-wide TF-IDF keyword extraction: the top-``k`` most
     distinctive terms per document — the relevance statistic F5's per-query
@@ -342,7 +347,7 @@ def tfidf_top_terms(
     it with static weights, src/db/documents/search.rs:69-94).
 
     tf = term count in doc; idf = ln((N+1)/(df+1)) + 1 (smoothed,
-    sklearn's convention); terms in fewer than ``min_df`` docs are dropped
+    sklearn's convention); terms in fewer than ``MIN_DF`` docs are dropped
     (hapaxes are typos/ids more often than keywords). Ties break on the
     term string so the top-k set is deterministic.
 
@@ -365,7 +370,7 @@ def tfidf_top_terms(
     # via the eager checkpoint of the k-per-doc result below.
     tf = toks.groupBy("id", "tk").agg(F.count("*").alias("tf")).persist()
     df = tf.groupBy("tk").agg(F.count("*").alias("df")).filter(
-        F.col("df") >= min_df
+        F.col("df") >= MIN_DF
     )
     idf = F.log((F.lit(float(n_docs) + 1.0)) / (F.col("df") + 1.0)) + 1.0
     scored = tf.join(df, "tk").select(

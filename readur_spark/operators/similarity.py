@@ -70,13 +70,15 @@ def hyperplane_lsh_buckets(
     return embeddings.withColumn("bucket", bucket)
 
 
+# ivf_assign: more centroids than this assign through a broadcast matmul
+MAX_LITERAL_CENTROIDS = 64
+IVF_CENTROIDS = 16  # ivf_topk's coarse quantizer size
+
+
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_literal_centroids: int = 64,
 ) -> tuple[DataFrame, list[list[float]]]:
     """IVF coarse quantizer: k-means centroids trained driver-side on a
     deterministic sample (numpy Lloyd iterations, seeded init), cluster
@@ -84,20 +86,20 @@ def ivf_assign(
 
     Training on a bounded sample is the standard IVF recipe (FAISS trains
     on ~256×k vectors); assignment is a projection over the full corpus —
-    no shuffle, scales linearly. Returns (embeddings + ``cluster`` column,
-    centroids)."""
+    no shuffle, scales linearly. Reads (vec_id, embedding); returns
+    (embeddings + ``cluster`` column, centroids)."""
     import numpy as np
 
     sample = (
-        embeddings.select(vec_col)
+        embeddings.select("embedding")
         # deterministic AND engine-portable sample order (md5 of the id
         # string is reproducible in any engine, unlike Spark's xxhash64 —
         # lets the DuckDB/pure-Python oracle replay the exact same k-means)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(2048)
         .toPandas()
     )
-    mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
+    mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample["embedding"]])
     rng = np.random.RandomState(seed)
     centroids = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
     for _ in range(5):
@@ -109,8 +111,8 @@ def ivf_assign(
                 centroids[c] = members.mean(axis=0)
 
     cents = [list(map(float, c)) for c in centroids]
-    if len(cents) <= max_literal_centroids:
-        emb = F.col(vec_col).cast("array<double>")
+    if len(cents) <= MAX_LITERAL_CENTROIDS:
+        emb = F.col("embedding").cast("array<double>")
         # argmin via an array of per-centroid distances + array_position of
         # the min — flat expression tree (a chained CASE WHEN would double
         # the tree per centroid and blow up Catalyst)
@@ -143,24 +145,24 @@ def ivf_assign(
         return pd.Series((msq[None, :] - 2.0 * (block @ m.T)).argmin(axis=1).astype(np.int32))
 
     _assign = F.pandas_udf(_assign_fn, IntegerType())
-    return embeddings.withColumn("cluster", _assign(F.col(vec_col))), cents
+    return embeddings.withColumn("cluster", _assign(F.col("embedding"))), cents
 
 
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
 ) -> DataFrame:
-    """IVF approximate top-k: score only the ``n_probe`` clusters nearest
-    to the query (the FAISS IVF-Flat shape). Recall is tuned by n_probe;
+    """IVF approximate top-k: score only the ``n_probe`` of
+    ``IVF_CENTROIDS`` clusters nearest to the query (the FAISS IVF-Flat
+    shape). Recall is tuned by n_probe;
     candidates are scored exactly, so results are a subset of brute force.
     At 10^12 scale, write the corpus partitioned by ``cluster`` so probes
     prune partitions at the scan."""
     import numpy as np
 
-    assigned, centroids = ivf_assign(embeddings, n_centroids=n_centroids)
+    assigned, centroids = ivf_assign(embeddings, n_centroids=IVF_CENTROIDS)
     q = np.asarray(query_vec, dtype=np.float64)
     dists = [(((np.asarray(c) - q) ** 2).sum(), i) for i, c in enumerate(centroids)]
     probe = [i for _, i in sorted(dists)[:n_probe]]
@@ -219,16 +221,18 @@ def dequantize_int8(df: DataFrame) -> DataFrame:
     )
 
 
+# semdedup: the k-means seed, the auto cluster size, and the re-split
+# guard's cluster cap and depth
+SEMDEDUP_SEED = 42
+TARGET_CLUSTER_SIZE = 5000
+MAX_CLUSTER_SIZE = 20_000
+MAX_SPLIT_DEPTH = 3
+
+
 def semdedup(
     embeddings: DataFrame,
     threshold: float = 0.95,
     n_clusters: int | None = None,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_cluster_size: int = 5000,
-    max_cluster_size: int = 20_000,
-    max_split_depth: int = 3,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication — k-means the
     embedding space, then within each cluster keep ONE representative per
@@ -248,24 +252,25 @@ def semdedup(
     Scale guards (r4 verdict #2 — a whole cluster's embedding matrix must
     fit one executor, so oversized clusters are never processed whole):
 
-    * ``n_clusters=None`` auto-derives ``ceil(count/target_cluster_size)``
+    * ``n_clusters=None`` auto-derives ``ceil(count/TARGET_CLUSTER_SIZE)``
       from one cheap ``count()`` — the paper's clusters ≈ corpus/5k rule
       enforced, not just documented.
-    * Any cluster above ``max_cluster_size`` is recursively RE-SPLIT by a
+    * Any cluster above ``MAX_CLUSTER_SIZE`` is recursively RE-SPLIT by a
       salted sub-k-means (deterministic: seed mixed with depth + cluster
-      id CRC), up to ``max_split_depth`` times; clusters still oversized
+      id CRC), up to ``MAX_SPLIT_DEPTH`` times; clusters still oversized
       at the cap (e.g. one giant exact-duplicate ball, where k-means
       can't separate anything) get a forced balanced hash split.
     * Survivors of every split cluster then get a SECOND greedy pass as
       one group, so duplicates that straddled a split boundary still
       collapse — for duplicate-heavy clusters the final kept set equals
       the unsplit answer (tests/test_similarity.py pins this).
-    * If even the survivor set exceeds ``max_cluster_size`` (a genuinely
+    * If even the survivor set exceeds ``MAX_CLUSTER_SIZE`` (a genuinely
       diverse mega-cluster), the second pass is skipped and those rows are
       SURFACED with ``oversized_split=true`` — cross-split near-dups may
       survive there; never a silent cap, never an OOM.
 
-    Returns the KEPT rows of ``embeddings`` plus an ``oversized_split``
+    Reads (vec_id, embedding). Returns the KEPT rows of ``embeddings``
+    plus an ``oversized_split``
     boolean column (false everywhere when no guard fired)."""
     import math
     import zlib
@@ -281,15 +286,14 @@ def semdedup(
         cnt = embeddings.count()
         if cnt == 0:
             return embeddings.withColumn("oversized_split", F.lit(False))
-        n_clusters = max(1, math.ceil(cnt / target_cluster_size))
+        n_clusters = max(1, math.ceil(cnt / TARGET_CLUSTER_SIZE))
     elif not embeddings.take(1):
         return embeddings.withColumn("oversized_split", F.lit(False))
 
     from readur_spark.plans.curation import _release_checkpoint
 
     assigned, _cents = ivf_assign(
-        embeddings, n_centroids=n_clusters, seed=seed,
-        id_col=id_col, vec_col=vec_col,
+        embeddings, n_centroids=n_clusters, seed=SEMDEDUP_SEED
     )
     # persisted: the assignment projection feeds the oversized() size
     # check AND the prune shuffle (plus every split-loop filter) — one
@@ -312,27 +316,24 @@ def semdedup(
             (r["gid"], int(r["n"]))
             for r in df.groupBy("gid")
             .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > max_cluster_size)
+            .filter(F.col("n") > MAX_CLUSTER_SIZE)
             .collect()
         ]
 
     split_roots: set[str] = set()
     over = oversized(work)
-    for depth in range(max_split_depth):
+    for depth in range(MAX_SPLIT_DEPTH):
         if not over:
             break
         parts = [work.filter(~F.col("gid").isin([g for g, _ in over]))]
         for g, n in over:
             split_roots.add(g.split("/", 1)[0].split("#", 1)[0])
             sub = work.filter(F.col("gid") == g).drop("gid")
-            k = max(2, math.ceil(n / target_cluster_size))
+            k = max(2, math.ceil(n / TARGET_CLUSTER_SIZE))
             sub_seed = (
-                seed + 7919 * (depth + 1) + zlib.crc32(g.encode())
+                SEMDEDUP_SEED + 7919 * (depth + 1) + zlib.crc32(g.encode())
             ) % (2**31)
-            sub_assigned, _ = ivf_assign(
-                sub, n_centroids=k, seed=sub_seed,
-                id_col=id_col, vec_col=vec_col,
-            )
+            sub_assigned, _ = ivf_assign(sub, n_centroids=k, seed=sub_seed)
             parts.append(
                 sub_assigned.withColumn(
                     "gid",
@@ -357,7 +358,7 @@ def semdedup(
         for g, _ in over:
             split_roots.add(g.split("/", 1)[0].split("#", 1)[0])
         kmap = {
-            g: max(2, math.ceil(n / target_cluster_size)) for g, n in over
+            g: max(2, math.ceil(n / TARGET_CLUSTER_SIZE)) for g, n in over
         }
         k_col = F.create_map(
             *[F.lit(x) for kv in kmap.items() for x in kv]
@@ -372,7 +373,7 @@ def semdedup(
                 F.concat_ws(
                     "#",
                     F.col("gid"),
-                    F.pmod(F.xxhash64(F.col(id_col)), k_col).cast("string"),
+                    F.pmod(F.xxhash64(F.col("vec_id")), k_col).cast("string"),
                 ),
             ).otherwise(F.col("gid")),
         )
@@ -380,10 +381,10 @@ def semdedup(
         backing, backing_is_ckpt = work, work_is_ckpt
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf[id_col].to_numpy().argsort(kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
+        order = pdf["vec_id"].to_numpy().argsort(kind="stable")
+        ids = pdf["vec_id"].to_numpy()[order]
         mat = np.vstack(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[order]]
+            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"].to_numpy()[order]]
         )
         norms = np.sqrt((mat * mat).sum(axis=1))
         norms[norms == 0] = 1.0
@@ -437,7 +438,7 @@ def semdedup(
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    refit = sorted(g for g, n in surv.items() if n <= max_cluster_size)
+    refit = sorted(g for g, n in surv.items() if n <= MAX_CLUSTER_SIZE)
     residual = sorted(set(surv) - set(refit))
 
     out = pruned.filter(~F.col("root").isin(roots)).select(

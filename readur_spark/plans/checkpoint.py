@@ -161,7 +161,7 @@ class CheckpointTable:
         )
         return {r["partition_id"]: r["a"] for r in rows}
 
-    def cleanup_completed(self, days_to_keep: int, now=None) -> int:
+    def cleanup_completed(self, days_to_keep: int) -> int:
         """Q8: drop completed checkpoint rows older than the retention
         horizon — the reference's
         ``DELETE FROM ocr_queue WHERE status='completed' AND completed_at <
@@ -182,16 +182,14 @@ class CheckpointTable:
         (a tri-state NOT over a NULL comparison silently deleted them
         before): age unknown is not age expired.
 
-        ``now`` defaults to the current instant; a naive ``now`` is local
-        time, as ``TimestampType`` reads it. Both legs compare against the
-        same UTC instant."""
+        Age is measured from the current instant; both legs compare
+        against the same UTC cutoff."""
         import datetime
 
         if not self.exists():
             return 0
-        now = now or datetime.datetime.now(datetime.timezone.utc)
-        cutoff = (now - datetime.timedelta(days=days_to_keep)).astimezone(
-            datetime.timezone.utc
+        cutoff = datetime.datetime.now(datetime.timezone.utc) - datetime.timedelta(
+            days=days_to_keep
         )
         if self.table_format == "iceberg":
             # metadata-only delete, one snapshot commit — no rewrite/rename;

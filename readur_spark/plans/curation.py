@@ -39,6 +39,8 @@ from readur_spark.functions.textstats import (
 from readur_spark.operators import dedup
 from readur_spark.operators.extract import chunk_texts, extract_spans
 
+SHINGLE_N = 3  # word-shingle size of the near-dup MinHash stage
+
 
 def _release_checkpoint(df: DataFrame) -> None:
     """Free a localCheckpointed frame's storage blocks deterministically —
@@ -104,17 +106,12 @@ def curate(
     line_dedup_separator: str = "\n",
     lm_ref_df: DataFrame | None = None,
     max_perplexity: float | None = None,
-    quality_model: dict | None = None,
-    min_quality_prob: float = 0.5,
     scrub_pii: bool = False,
     embeddings_df: DataFrame | None = None,
     semantic_threshold: float = 0.95,
     semantic_clusters: int = 16,
     heldout_df: DataFrame | None = None,
-    decontam_min_len: int = 50,
     near_dup_threshold: float = 0.5,
-    shingle_n: int = 3,
-    lsh_max_bucket_size: int | None = None,
     chunk_words: int = 128,
     overlap_words: int = 32,
     chunk_tokenizer=None,
@@ -127,8 +124,6 @@ def curate(
     rank_col: str = "rank",
     min_rank_ratio: float | None = None,
     rank_keep_quantile: float | None = None,
-    min_sentences: int = 0,
-    min_terminal_punct: float = 0.0,
 ) -> tuple[DataFrame, dict]:
     """Run the curation funnel. Returns (chunks DataFrame, funnel metrics).
 
@@ -143,8 +138,6 @@ def curate(
     (C4/RefinedWeb) so every later stage sees clean text;
     ``lm_ref_df`` + ``max_perplexity`` add the CCNet LM filter (train a
     bigram LM on the reference frame, keep docs at/below the ceiling);
-    ``quality_model`` adds the learned logistic-regression quality
-    filter (operators/quality_classifier.py — train once, pass the dict);
     ``scrub_pii`` redacts contact identifiers just before chunking (late,
     so dedup hashes are computed on the original bytes);
     ``embeddings_df`` (vec_id aligned with doc_id) adds the SemDeDup
@@ -157,10 +150,6 @@ def curate(
     since real pipelines size context windows in tokens (chunk text
     decodes exactly and re-encodes to its own token slice);
     ``split_fractions`` appends a deterministic ``split`` column;
-    ``lsh_max_bucket_size`` caps LSH band buckets via star expansion
-    (operators/dedup.minhash_lsh_pairs) — set it when the corpus carries
-    mass duplication (10^2+ near-copies of single pages), where
-    all-pairs candidates grow quadratically per duplicate group;
     ``url_col`` prepends the crawl-frontier stage — canonical-URL
     keep-first dedup (functions/urls) and, with ``domain_blocklist``,
     the UT1-style broadcast host filter — before any text stage runs;
@@ -176,10 +165,9 @@ def curate(
     uniform mass), ``rank_keep_quantile`` keeps the top (1-q) quantile
     by exact percentile. Scale shape: one scalar aggregate over the
     (domains-sized) rank table + a semi join on the uniform domain
-    key — broadcast when small, AQE-shuffled at 10^8 hosts;
-    ``min_sentences`` / ``min_terminal_punct`` add the C4 sentence gate
-    (drop pages with too few sentences or too few sentences ending in
-    terminal punctuation) inside the same fused quality scan.
+    key — broadcast when small, AQE-shuffled at 10^8 hosts.
+
+    Near-dup dedup is MinHash-LSH over ``SHINGLE_N``-word shingles.
     """
     # Stage boundaries use eager localCheckpoint, not bare persist: the
     # funnel composes a dozen operators, several of which reference their
@@ -319,10 +307,7 @@ def curate(
 
     if heldout_df is not None:
         text_df = _ckpt(dedup.decontaminate_filter(
-            text_df,
-            _to_text(heldout_df),
-            min_len=decontam_min_len,
-            exclude_same_id=True,
+            text_df, _to_text(heldout_df), exclude_same_id=True
         ))
         metrics["after_decontamination"] = text_df.count()
 
@@ -341,15 +326,6 @@ def curate(
     filtered = analyzed.filter(F.col("quality") >= min_quality)
     if require_gopher:
         filtered = filtered.filter(F.col("gopher_pass"))
-    if min_sentences or min_terminal_punct:
-        # the C4 sentence gate — same fused scan stage, no extra pass
-        from readur_spark.functions.textstats import sentence_stats_cols
-
-        ns, _mean, _mx, tp = sentence_stats_cols(F.col("text"))
-        if min_sentences:
-            filtered = filtered.filter(ns >= min_sentences)
-        if min_terminal_punct:
-            filtered = filtered.filter(tp >= min_terminal_punct)
     if require_rep_pass:
         from readur_spark.operators.repetition import repetition_metrics
 
@@ -367,26 +343,10 @@ def curate(
         ))
         metrics["after_lm_filter"] = filtered.count()
 
-    if quality_model is not None:
-        # learned LR quality filter (GPT-3/CCNet recipe): the model is a
-        # plain dict trained once (train_quality_classifier) and reused
-        # across runs; scoring is a broadcast-weights linear pass
-        from readur_spark.operators.quality_classifier import quality_filter
-
-        filtered = _ckpt(
-            quality_filter(filtered, quality_model, min_quality_prob)
-        )
-        metrics["after_learned_quality"] = filtered.count()
-
     exact = _ckpt(dedup.dedup_keep_first(filtered))
     metrics["after_exact_dedup"] = exact.count()
 
-    pairs = dedup.minhash_lsh_pairs(
-        exact,
-        threshold=near_dup_threshold,
-        n=shingle_n,
-        max_bucket_size=lsh_max_bucket_size,
-    )
+    pairs = dedup.minhash_lsh_pairs(exact, threshold=near_dup_threshold, n=SHINGLE_N)
     curated = _ckpt(dedup.dedup_cluster_keep_first(exact, pairs))
     metrics["after_near_dedup"] = curated.count()
 

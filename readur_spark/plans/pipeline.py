@@ -95,6 +95,8 @@ def run_extraction(
         resolve_format,
     )
 
+    if num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
     if batch_partitions is not None and batch_partitions < 1:
         raise ValueError(
             f"batch_partitions must be >= 1, got {batch_partitions}"

@@ -32,9 +32,9 @@ SUPPORTED_EXTENSIONS = (
 def read_binary_dir(
     spark: SparkSession,
     path: str,
-    max_bytes: int = MAX_FILE_BYTES,
 ) -> DataFrame:
-    """S2: recursive binary ingest with extension filter + size skip.
+    """S2: recursive binary ingest with extension filter + size skip
+    (files above ``MAX_FILE_BYTES``).
 
     Output: (doc_id=path, filename, length, modificationTime, content).
     The ``length`` predicate reaches the binaryFile source (no oversized
@@ -47,7 +47,7 @@ def read_binary_dir(
         .load(path)
     )
     return (
-        df.filter(F.col("length") <= max_bytes)
+        df.filter(F.col("length") <= MAX_FILE_BYTES)
         .select(
             F.col("path").alias("doc_id"),
             F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),

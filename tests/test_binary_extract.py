@@ -114,7 +114,7 @@ def files_df(spark):
 
 
 def test_distributed_extraction(spark, files_df):
-    out = extract_files(files_df, server_mime_col="server_mime")
+    out = extract_files(files_df)
     assert out.schema == BINARY_EXTRACTED_SCHEMA
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows["f1"]["status"] == "completed"

@@ -218,7 +218,8 @@ def test_train_bpe_distributed_truncation_surfaced(spark, corpus_df):
     assert st["mass_used"] < st["mass_total"]
 
 
-def test_train_bpe_spark_loop_equals_sequential(spark, corpus_df):
+def test_train_bpe_spark_loop_equals_sequential(spark, corpus_df, monkeypatch):
+    from readur_spark.operators import bpe
     from readur_spark.operators.bpe import (
         train_bpe_spark_loop,
         word_count_table,
@@ -227,26 +228,25 @@ def test_train_bpe_spark_loop_equals_sequential(spark, corpus_df):
     seq = train_bpe(
         word_counts([r["text"] for r in corpus_df.collect()]), 12
     )
+    monkeypatch.setattr(bpe, "CHECKPOINT_EVERY", 4)
     for bm in (1, 3, 64):
-        merges = train_bpe_spark_loop(
-            word_count_table(corpus_df),
-            num_merges=12,
-            checkpoint_every=4,
-            batch_merges=bm,
-        )
+        monkeypatch.setattr(bpe, "BATCH_MERGES", bm)
+        merges = train_bpe_spark_loop(word_count_table(corpus_df), num_merges=12)
         assert merges == seq, bm
 
 
-def test_train_bpe_spark_loop_batched_adversarial(spark):
+def test_train_bpe_spark_loop_batched_adversarial(spark, monkeypatch):
     """Fixtures engineered to hit the batch-acceptance edges: chained
     shared-id pairs (overlap stop), merge-created pairs whose count TIES
     lower-ranked snapshot pairs (the strict-> truncation case), and a
     deep merge cascade where later rules consume earlier batch output."""
+    from readur_spark.operators import bpe
     from readur_spark.operators.bpe import (
         train_bpe_spark_loop,
         word_count_table,
     )
 
+    monkeypatch.setattr(bpe, "CHECKPOINT_EVERY", 3)
     corpora = [
         # cascade: 'aaaa...' makes (a,a)->Z then (Z,Z)->W etc.
         ["a" * 17] * 5 + ["abab abab", "bcbc bc"] * 3,
@@ -262,12 +262,8 @@ def test_train_bpe_spark_loop_batched_adversarial(spark):
         )
         seq = train_bpe(word_counts(texts), 20)
         for bm in (2, 8, 64):
-            got = train_bpe_spark_loop(
-                word_count_table(docs),
-                num_merges=20,
-                checkpoint_every=3,
-                batch_merges=bm,
-            )
+            monkeypatch.setattr(bpe, "BATCH_MERGES", bm)
+            got = train_bpe_spark_loop(word_count_table(docs), num_merges=20)
             assert got == seq, (texts[0][:20], bm)
 
 

@@ -483,33 +483,6 @@ def test_curate_rank_table_stage_matches_manual_prefilter(spark):
         )
 
 
-def test_curate_sentence_gate(spark):
-    """C4 sentence gate: short or unterminated pages drop inside the
-    quality stage."""
-    good = (
-        "This is the first full sentence of the page. Here is another "
-        "complete sentence with more words. A third one follows here. "
-        "And a fourth sentence closes the paragraph nicely."
-    )
-    rows = [
-        (1, good),
-        (2, "one fragment without any terminal punctuation at all"),
-        (3, "Tiny. Page."),  # 2 sentences < 3
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    chunks, m = curate(
-        docs,
-        require_gopher=False,
-        chunk_words=40,
-        overlap_words=8,
-        min_sentences=3,
-        min_terminal_punct=0.75,
-    )
-    ids = {r["doc_id"] for r in chunks.select("doc_id").distinct().collect()}
-    assert ids == {1}
-    assert m["after_quality_filter"] == 1
-
-
 def test_curate_rank_table_duplicate_nodes_keep_documented_threshold(spark):
     """r8 advisor finding: the min_rank_ratio threshold divides by the
     number of DISTINCT domains, so a rank table with duplicate (or

@@ -20,7 +20,7 @@ def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
-def test_embedding_bucketed_equals_broadcast(spark, emb):
+def test_embedding_bucketed_equals_broadcast(spark, emb, monkeypatch):
     """The LSH-banded block-matmul path (never collects to the driver) must
     reproduce the exact broadcast path. planes=2 × tables=16 gives per-pair
     miss probability (1-p²)^16 ≈ 3e-4 even at cosine 0.4 (p≈0.63), and the
@@ -29,20 +29,21 @@ def test_embedding_bucketed_equals_broadcast(spark, emb):
         (r.id_a, r.id_b, r.cosine)
         for r in dedup.embedding_dup_pairs(emb, threshold=0.4).collect()
     }
+    monkeypatch.setattr(dedup, "EMBEDDING_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(dedup, "EMBEDDING_LSH_PLANES", 2)
     bucketed = {
         (r.id_a, r.id_b, r.cosine)
-        for r in dedup.embedding_dup_pairs(
-            emb, threshold=0.4, broadcast_max_rows=0, num_planes=2, num_tables=16
-        ).collect()
+        for r in dedup.embedding_dup_pairs(emb, threshold=0.4).collect()
     }
     assert exact, "testdata should contain planted near-dup embedding pairs"
     assert bucketed == exact
 
 
-def test_embedding_bucketed_never_collects(spark, emb):
+def test_embedding_bucketed_never_collects(spark, emb, monkeypatch):
     """The scale path's plan must contain no driver-side collect artifacts:
     it is bucketed shuffle + FlatMapGroupsInPandas."""
-    df = dedup.embedding_dup_pairs(emb, threshold=0.4, broadcast_max_rows=0)
+    monkeypatch.setattr(dedup, "EMBEDDING_BROADCAST_MAX_ROWS", 0)
+    df = dedup.embedding_dup_pairs(emb, threshold=0.4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan, plan
     assert "Exchange SinglePartition" not in plan, plan
@@ -286,8 +287,8 @@ def _long_varied_text(n_words: int, tag: str) -> str:
     )
 
 
-def test_duplicate_spans_flags_seed_truncation(spark):
-    """No-silent-caps: a pair with more seeds than max_seeds must say so.
+def test_duplicate_spans_flags_seed_truncation(spark, monkeypatch):
+    """No-silent-caps: a pair with more seeds than MAX_SEEDS must say so.
     Two docs sharing a ~9000-char verbatim run produce far more than 500
     winnowed seed matches; every emitted span row carries
     seeds_truncated=true and the shared run is still found (the dropped
@@ -301,9 +302,8 @@ def test_duplicate_spans_flags_seed_truncation(spark):
     assert rows and all(r["seeds_truncated"] for r in rows)
     assert max(r["length"] for r in rows) >= len(shared)
     # raising the cap clears the flag on the same input
-    rows2 = dedup.duplicate_spans(
-        docs, min_len=50, k=25, window=16, max_seeds=10_000
-    ).collect()
+    monkeypatch.setattr(dedup, "MAX_SEEDS", 10_000)
+    rows2 = dedup.duplicate_spans(docs, min_len=50, k=25, window=16).collect()
     assert rows2 and not any(r["seeds_truncated"] for r in rows2)
 
 
@@ -526,16 +526,6 @@ def test_minhash_incremental_matches_cross_set_exact(spark, docs):
     }
     assert got == cross
     assert all(a % 3 != 0 and b % 3 == 0 for a, b, _ in got)
-    # precomputed-signature path: identical pairs
-    sigs = dedup.minhash_signatures(hist, num_hashes=32, n=3)
-    got2 = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_incremental(
-            new, hist, threshold=0.5, num_hashes=32, bands=8, n=3,
-            history_signatures=sigs,
-        ).collect()
-    }
-    assert got2 == got
 
 
 def test_decontaminate_filter_keeps_marker_only_docs(spark):
@@ -565,21 +555,6 @@ def test_decontaminate_filter_keeps_marker_only_docs(spark):
         for r in dedup.decontaminate_filter(corpus, heldout, min_len=50).collect()
     }
     assert kept2 == {"c2"}
-
-
-def test_minhash_incremental_leaves_caller_signatures_persisted(spark, docs):
-    """Review finding: the caller's persisted history signature table is
-    the asset this API exists to reuse — the call must not unpersist it."""
-    hist = docs.filter(F.col("doc_id") % 3 == 0)
-    new = docs.filter(F.col("doc_id") % 3 != 0)
-    sigs = dedup.minhash_signatures(hist, num_hashes=32, n=3).persist()
-    sigs.count()
-    dedup.minhash_lsh_incremental(
-        new, hist, threshold=0.5, num_hashes=32, bands=8, n=3,
-        history_signatures=sigs,
-    ).collect()
-    assert sigs.storageLevel.useMemory  # still persisted
-    sigs.unpersist()
 
 
 def test_minhash_incremental_overlapping_ids_verify_each_side(spark):
@@ -654,51 +629,3 @@ def test_dedup_lines_paragraph_mode(spark):
     assert out["4"]["text"].startswith("repeated disclaimer paragraph\n")
     assert all(out[d]["n_lines_removed"] == 1 for d in ("1", "2", "3"))
     assert out["4"]["n_lines_removed"] == 0
-
-
-def test_minhash_bucket_cap_star_expansion(spark):
-    """Mass-dup guard: with max_bucket_size set, a 60-replica group still
-    collapses to ONE survivor through cluster dedup (every replica
-    verifies against the hub), while candidate pairs stay linear in the
-    group size instead of 60*59/2; small buckets keep exact all-pairs
-    behavior (capped run == uncapped run on a normal corpus)."""
-    base = (
-        "the quick brown fox jumps over the lazy dog while the clever "
-        "raven watches from a pine tree beside the frozen river "
-    ) * 3
-    rows = [(i, base + f"replica marker {i}") for i in range(60)]
-    # plus two unrelated singletons
-    rows += [
-        (100, "completely different content about maritime navigation "
-              "and sailing ships crossing the winter ocean at night " * 3),
-        (101, "a third unrelated document describing mountain trail "
-              "maintenance and alpine weather observation routines " * 3),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    capped = dedup.minhash_lsh_pairs(
-        docs, threshold=0.5, max_bucket_size=8
-    ).cache()
-    n_capped = capped.count()
-    # linear: hub-star pairs per band, dedup'd across bands -> 59 pairs,
-    # far below the 1770 all-pairs count
-    assert n_capped <= 8 * 59
-    assert n_capped >= 59
-    survivors = dedup.dedup_cluster_keep_first(docs, capped)
-    ids = sorted(r["doc_id"] for r in survivors.select("doc_id").collect())
-    assert ids == [0, 100, 101]
-    capped.unpersist()
-
-    # no oversized buckets -> capped == uncapped, pair for pair
-    small = spark.createDataFrame(rows[55:], "doc_id long, text string")
-    a = sorted(
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_pairs(small, threshold=0.5).collect()
-    )
-    b = sorted(
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_pairs(
-            small, threshold=0.5, max_bucket_size=8
-        ).collect()
-    )
-    assert a == b

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from readur_spark.operators import dsir
 from readur_spark.operators.dsir import dsir_resample, dsir_weights
 
 
@@ -94,12 +95,13 @@ def test_dsir_self_target_gives_zero_weights(spark):
     assert rows and all(r["log_w"] == 0.0 for r in rows)
 
 
-def test_resample_threshold_path_equals_takeordered(spark):
+def test_resample_threshold_path_equals_takeordered(spark, monkeypatch):
     """r4 verdict #3: above driver_topk_max the selection switches to
     approxQuantile threshold + bounded boundary band; the selected set
     must be IDENTICAL to the TakeOrdered answer."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     tgt = docs.filter(F.col("doc_id") % 5 == 0)
+    monkeypatch.setattr(dsir, "BOUNDARY_BAND", 64)
     for k in (7, 40, 150):
         small = {
             r["doc_id"]
@@ -111,24 +113,21 @@ def test_resample_threshold_path_equals_takeordered(spark):
         large = {
             r["doc_id"]
             for r in dsir_resample(
-                docs, tgt, k=k, num_buckets=1024,
-                driver_topk_max=0, boundary_band=64,
+                docs, tgt, k=k, num_buckets=1024, driver_topk_max=0
             ).collect()
         }
         assert large == small, (k, sorted(large ^ small))
         assert len(large) == k
 
 
-def test_resample_threshold_path_has_no_k_row_limit(spark):
+def test_resample_threshold_path_has_no_k_row_limit(spark, monkeypatch):
     """The large-k plan must contain no k-row limit / TakeOrdered over
     the keyed corpus — only the bounded boundary-band limit (< k)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     tgt = docs.filter(F.col("doc_id") % 5 == 0)
     k = 150
-    out = dsir_resample(
-        docs, tgt, k=k, num_buckets=1024,
-        driver_topk_max=0, boundary_band=64,
-    )
+    monkeypatch.setattr(dsir, "BOUNDARY_BAND", 64)
+    out = dsir_resample(docs, tgt, k=k, num_buckets=1024, driver_topk_max=0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert f"TakeOrderedAndProject(limit={k}" not in plan, plan
     assert f"GlobalLimit {k}" not in plan, plan

@@ -226,27 +226,36 @@ def test_chunk_property_full_coverage_and_order(spark):
 
 
 def test_chunk_texts_paths_equal_and_mega_linear(spark):
-    """The size-dispatched chunker: the relational mega path must produce
-    byte-identical chunks to the zero-shuffle array path, and a 200k-word
+    """The size-dispatched chunker: the zero-shuffle array path (docs up to
+    ARRAY_PATH_MAX_WORDS words) and the relational mega path (a doc one
+    word past it) both produce the reference windows, and a 200k-word
     doc must chunk in seconds (the array path alone re-evaluates split()
     per chunk and effectively hangs there)."""
     import time
 
-    from readur_spark.operators.extract import chunk_texts
+    from readur_spark.operators.extract import ARRAY_PATH_MAX_WORDS, chunk_texts
 
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join(f"w{i}" for i in range(500))),
-            (2, "short doc only"),
-            (3, " ".join(f"t{i % 7}" for i in range(129))),
-        ],
-        "doc_id long, text string",
-    )
-    a = sorted(tuple(r) for r in chunk_texts(docs, 128, 32).collect())
-    b = sorted(
-        tuple(r) for r in chunk_texts(docs, 128, 32, array_path_max_words=0).collect()
-    )
-    assert a == b and len(a) == 8
+    def windows(doc_id, text, size=128, stride=96):
+        words = text.split()
+        out, i = [], 0
+        while words:
+            out.append((doc_id, i, " ".join(words[i * stride : i * stride + size]),
+                        min(len(words) - i * stride, size)))
+            if i * stride + size >= len(words):
+                break
+            i += 1
+        return out
+
+    texts = [
+        (1, " ".join(f"w{i}" for i in range(500))),
+        (2, "short doc only"),
+        (3, " ".join(f"t{i % 7}" for i in range(129))),
+        (4, " ".join(f"m{i}" for i in range(ARRAY_PATH_MAX_WORDS + 1))),
+    ]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    got = sorted(tuple(r) for r in chunk_texts(docs, 128, 32).collect())
+    want = sorted(w for doc_id, text in texts for w in windows(doc_id, text))
+    assert got == want and len(want) == 8 + 104
     mega = " ".join(f"tok{i % 9973} w{i % 331}" for i in range(100_000))
     mdocs = spark.createDataFrame([(1, mega)], "doc_id long, text string")
     t0 = time.time()

@@ -36,7 +36,7 @@ def test_train_counts_and_vocab(spark):
 
 def test_perplexity_matches_hand_computation(spark):
     docs = _mk(spark, [("a", "the cat sat"), ("b", "the cat ran far")])
-    lm = train_bigram_lm(docs, add_k=0.5)
+    lm = train_bigram_lm(docs)
     score = _mk(spark, [("x", "the cat sat"), ("y", "the dog")])
     got = {r["doc_id"]: r for r in perplexity_score(score, lm).collect()}
     k, v = 0.5, 5.0
@@ -52,7 +52,7 @@ def test_perplexity_matches_hand_computation(spark):
 
 def test_unseen_context_degrades_to_uniform(spark):
     docs = _mk(spark, [("a", "alpha beta gamma")])
-    lm = train_bigram_lm(docs, add_k=0.5)
+    lm = train_bigram_lm(docs)
     got = perplexity_score(_mk(spark, [("z", "zz qq")]), lm).collect()[0]
     # unseen context: (0 + k) / (0 + k*V) = 1/V
     assert got["perplexity"] == pytest.approx(float(lm.vocab_size))
@@ -85,17 +85,6 @@ def test_filter_keeps_fluent_and_short_docs(spark):
     assert kept == {"fluent", "short"}
 
 
-def test_min_count_pruning_shrinks_model_not_contexts(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    full = train_bigram_lm(docs)
-    pruned = train_bigram_lm(docs, min_count=3)
-    assert pruned.pair_counts.count() < full.pair_counts.count()
-    # context denominators stay exact under pruning
-    a = {r["prev"]: r["cc"] for r in full.ctx_counts.collect()}
-    b = {r["prev"]: r["cc"] for r in pruned.ctx_counts.collect()}
-    assert a == b
-
-
 def test_broadcast_model_plan(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     # train on a filtered subset (limit() would inject its own
@@ -115,7 +104,7 @@ def test_backoff_score_hits_every_level(spark):
     from readur_spark.operators.lm import backoff_score, train_backoff_lm
 
     train = _mk(spark, [("t", "a b c d")])  # trigrams: abc, bcd
-    lm = train_backoff_lm(train, alpha=0.4)
+    lm = train_backoff_lm(train)
     assert lm.total_tokens == 4
     cands = _mk(
         spark,
@@ -131,17 +120,6 @@ def test_backoff_score_hits_every_level(spark):
     assert got["bi"] == pytest.approx(-math.log(0.4))
     assert got["uni"] == pytest.approx(-math.log(0.4 * 0.4 * 1 / 4))
     assert got["oov"] == pytest.approx(-math.log(0.4 * 0.4 * 0.5 / 4))
-
-
-def test_backoff_min_count_prunes_trigrams_only(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    from readur_spark.operators.lm import train_backoff_lm
-
-    full = train_backoff_lm(docs)
-    pruned = train_backoff_lm(docs, min_count=3)
-    assert pruned.tri.count() < full.tri.count()
-    assert pruned.bi.count() == full.bi.count()
-    assert pruned.total_tokens == full.total_tokens
 
 
 def test_backoff_broadcast_plan(spark):
@@ -163,7 +141,7 @@ def test_bigram_lm_is_a_proper_distribution_per_context(spark):
     else equals exactly 1 (the unseen vocab words are part of the same
     V-term sum)."""
     docs = _mk(spark, [("a", "x y x z y x")])
-    lm = train_bigram_lm(docs, add_k=0.5)
+    lm = train_bigram_lm(docs)
     pairs = {(r["prev"], r["word"]): r["c"] for r in lm.pair_counts.collect()}
     ctx = {r["prev"]: r["cc"] for r in lm.ctx_counts.collect()}
     vocab = {w for _, w in pairs} | {p for p, _ in pairs}
@@ -200,7 +178,7 @@ def test_backoff_training_is_one_tokenize_pass(spark):
         [(i, "one two three four five one two three") for i in range(6)],
         "doc_id long, text string",
     )
-    lm = train_backoff_lm(docs, min_count=2)
+    lm = train_backoff_lm(docs)
     for df in (lm.tri, lm.bi, lm.uni):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "split(" not in plan, plan

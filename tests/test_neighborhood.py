@@ -129,24 +129,28 @@ def test_hyperball_validation_and_empty(spark):
 
 
 def test_hyperball_num_partitions_is_result_invariant(spark):
-    """The per-task-state knob (r7 advisor finding) changes only the
-    physical layout: results stay bit-identical to the default, for a
+    """The shuffle width that bounds per-task register state changes only
+    the physical layout: results stay bit-identical to the default, for a
     width both below and above the corpus's key count."""
     from readur_spark.operators.neighborhood import hyperball
 
     df = spark.createDataFrame(EDGES, "src string, dst string")
 
-    def run(**kw):
+    def run():
         return sorted(
             (r["node"], r["reach_est"], r["harmonic"], r["t_converged"])
-            for r in hyperball(df, p=6, max_t=16, **kw).collect()
+            for r in hyperball(df, p=6, max_t=16).collect()
         )
 
     base = run()
-    assert run(num_partitions=2) == base
-    assert run(num_partitions=64) == base
-    with pytest.raises(ValueError, match="num_partitions"):
-        hyperball(df, p=6, num_partitions=0)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        for width in ("2", "64"):
+            spark.conf.set(key, width)
+            assert run() == base, width
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_hyperball_releases_checkpoints(spark):

@@ -12,13 +12,16 @@ fixture encoder the tests build inputs with, or a reference implementation
 the tests compare the fast path against.
 
 The same rule holds one level down, for options: every optional parameter
-of a public function, method or constructor is passed by some call in the
-checkout, tests included, by keyword or by position. A call counts for
-every def of its name (``f(...)`` and ``obj.f(...)`` alike; a class name
-for its ``__init__``), and a call that spreads ``*args`` or ``**kwargs``
-counts as passing every positional or every keyword option. An option no
-call passes is its default's constant, not a setting, unless it is a
-deployment setting listed in ``ALLOWED_OPTIONS`` with its reason.
+of a public function, method or constructor is passed by some call outside
+``tests/``, by keyword or by position; a value only tests set is a
+constant the tests patch, not an option. A call counts for every def of
+its name (``f(...)`` and ``obj.f(...)`` alike; a class name for its
+``__init__``), and a call that spreads ``*args`` counts as passing every
+positional option. A def that spreads its own ``**kwargs`` into a call
+forwards the keywords its callers pass; any other ``**`` spread passes
+nothing. An option no call passes is its default's constant, not a
+setting, unless ``ALLOWED_OPTIONS`` lists it with its reason: a deployment
+setting, or a fixture encoder's switch.
 """
 
 import ast
@@ -127,6 +130,26 @@ ALLOWED_OPTIONS = {
         "deployment: stream trigger"
     ),
     ("watch_and_extract", "max_files_per_trigger"): "deployment: stream trigger",
+    ("watch_and_extract", "available_now"): "deployment: stream trigger",
+    ("extract_files", "engine"): "deployment: OCR engine adapter seam",
+    ("load_table", "table_format"): "deployment: table format of the source",
+}
+_FIXTURE = "fixture: selects the input variant a decoder test needs"
+ALLOWED_OPTIONS |= {
+    key: _FIXTURE
+    for key in (
+        ("build_doc", "complex_flag"),
+        ("build_doc", "extchar"),
+        ("jpeg_encode", "quality"),
+        ("jpeg_encode", "subsample"),
+        ("jpeg_encode_progressive", "quality"),
+        ("build_pdf", "compress"),
+        ("build_pdf", "with_image"),
+        ("tiff_encode", "compression"),
+        ("build_warc", "gzip_per_record"),
+        ("docs_dataframe", "num_partitions"),
+        ("docs_dataframe", "seed"),
+    )
 }
 
 
@@ -180,46 +203,81 @@ def _public_options() -> dict[tuple[str, str], tuple[str, str, int | None]]:
     return opts
 
 
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
 def _passed_options():
-    """Per called name, the keywords passed and the most positional
-    arguments passed; and the names some call spreads ``*args`` /
-    ``**kwargs`` into."""
+    """Per called name, the keywords non-test calls pass and the most
+    positional arguments they pass; and the names some non-test call
+    spreads ``*args`` into.
+
+    A def that spreads its own ``**kwargs`` into a call of ``g`` forwards
+    to ``g`` the keywords its callers pass that are not its own named
+    parameters; forwards are resolved until nothing changes. A ``**``
+    spread passes nothing by itself."""
     keywords = defaultdict(set)
     positional = defaultdict(int)
-    star, double_star = set(), set()
+    star = set()
+    forwards = defaultdict(set)  # forwarding def name -> callees
+    named = defaultdict(set)  # forwarding def name -> its named parameters
     for path in ROOT.rglob("*.py"):
-        if any(p.startswith(".") for p in path.relative_to(ROOT).parts):
+        parts = path.relative_to(ROOT).parts
+        if parts[0] == "tests" or any(p.startswith(".") for p in parts):
             continue
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, _DEFS) or fn.args.kwarg is None:
+                continue
+            kw = fn.args.kwarg.arg
+            callees = {
+                _call_name(node)
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and any(
+                    k.arg is None and isinstance(k.value, ast.Name) and k.value.id == kw
+                    for k in node.keywords
+                )
+            } - {None}
+            if callees:
+                a = fn.args
+                forwards[fn.name] |= callees
+                named[fn.name] |= {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue
-            f = node.func
-            if isinstance(f, ast.Name):
-                name = f.id
-            elif isinstance(f, ast.Attribute):
-                name = f.attr
-            else:
+            name = _call_name(node)
+            if name is None:
                 continue
             plain = [a for a in node.args if not isinstance(a, ast.Starred)]
             if len(plain) < len(node.args):
                 star.add(name)
             positional[name] = max(positional[name], len(plain))
-            for k in node.keywords:
-                if k.arg is None:
-                    double_star.add(name)
-                else:
-                    keywords[name].add(k.arg)
-    return keywords, positional, star, double_star
+            keywords[name] |= {k.arg for k in node.keywords if k.arg is not None}
+    changed = True
+    while changed:
+        changed = False
+        for f, callees in forwards.items():
+            extra = keywords[f] - named[f]
+            for g in callees:
+                if not extra <= keywords[g]:
+                    keywords[g] |= extra
+                    changed = True
+    return keywords, positional, star
 
 
 def _unpassed_options() -> dict[tuple[str, str], str]:
-    keywords, positional, star, double_star = _passed_options()
+    keywords, positional, star = _passed_options()
     return {
         key: where
         for key, (where, callee, i) in _public_options().items()
         if not (
             key[1] in keywords[callee]
-            or callee in double_star
             or (i is not None and (i < positional[callee] or callee in star))
         )
     }
@@ -232,9 +290,9 @@ def test_every_option_is_passed_by_some_call():
         if (qual, name) not in ALLOWED_OPTIONS
     }
     assert unpassed == {}, (
-        "optional parameters no call passes: make each its default's "
+        "optional parameters no non-test call passes: make each its default's "
         "constant (or derive it from the input), give it a caller, or "
-        f"allowlist it as a deployment setting: {unpassed}"
+        f"allowlist it with its reason: {unpassed}"
     )
 
 

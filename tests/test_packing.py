@@ -1,8 +1,11 @@
 """GPT-style sequence packing: distributed prefix-scan manifest."""
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
+from readur_spark.operators import packing
 from readur_spark.operators.packing import pack_sequences, packing_stats
 
 SF = "/root/testdata/sf0.001"
@@ -43,14 +46,25 @@ def test_pack_invariants(spark, docs):
     manifest.unpersist()
 
 
-def test_pack_deterministic_across_bucket_counts(spark, docs):
+def _with_buckets(monkeypatch, n):
+    """Pin the prefix scan's bucket count, which pack_sequences takes from
+    the cluster's parallelism."""
+    scan = packing.bucketed_stream_offsets
+    monkeypatch.setattr(
+        packing, "bucketed_stream_offsets", functools.partial(scan, num_buckets=n)
+    )
+
+
+def test_pack_deterministic_across_bucket_counts(spark, docs, monkeypatch):
     """The manifest is a pure function of the corpus — bucket count is an
     execution detail (the re-run-safety property spark_partition_id over
     repartitionByRange lacks)."""
-    a = {tuple(r) for r in pack_sequences(docs, seq_len=300, num_buckets=1).collect()}
-    b = {tuple(r) for r in pack_sequences(docs, seq_len=300, num_buckets=8).collect()}
-    c = {tuple(r) for r in pack_sequences(docs, seq_len=300, num_buckets=37).collect()}
-    assert a == b == c
+    out = []
+    for n in (1, 8, 37):
+        with monkeypatch.context() as m:
+            _with_buckets(m, n)
+            out.append({tuple(r) for r in pack_sequences(docs, seq_len=300).collect()})
+    assert out[0] == out[1] == out[2]
 
 
 def test_pack_splits_long_doc_across_sequences(spark):
@@ -84,7 +98,7 @@ def test_pack_no_single_partition_exchange(spark, docs):
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_pack_string_ids_hash_order(spark, docs):
+def test_pack_string_ids_hash_order(spark, docs, monkeypatch):
     """Non-numeric ids pack deterministically in (xxhash64(id), id) order:
     same invariants (full sequences, token conservation, per-doc tiling),
     identical across bucket counts, and the bucketing never dies in
@@ -105,7 +119,8 @@ def test_pack_string_ids_hash_order(spark, docs):
     assert dict(manifest.dtypes)["doc_id"] == "string"
     # bucket count stays an execution detail for the hash order too
     a = {tuple(r) for r in manifest.collect()}
-    b = {tuple(r) for r in pack_sequences(sdocs, seq_len=L, num_buckets=7).collect()}
+    _with_buckets(monkeypatch, 7)
+    b = {tuple(r) for r in pack_sequences(sdocs, seq_len=L).collect()}
     assert a == b
     manifest.unpersist()
 

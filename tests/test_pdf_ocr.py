@@ -4,6 +4,7 @@
 import numpy as np
 import pytest
 
+from readur_spark.kernels import pdfextract
 from readur_spark.kernels.minipdf import (
     build_pdf,
     pdf_media_boxes,
@@ -85,14 +86,16 @@ class PageCountingEngine(FakeOcrEngine):
         return self.text, self.conf
 
 
-def _settings():
+def _settings(dpi=36):
     # skip enhancement so each page OCRs once (no preprocessing variance)
-    return OcrSettings(ocr_skip_enhancement=True, ocr_detect_orientation=False)
+    return OcrSettings(
+        ocr_skip_enhancement=True, ocr_detect_orientation=False, ocr_dpi=dpi
+    )
 
 
 def test_pdf_ocr_assembles_with_page_breaks():
     eng = PageCountingEngine(conf=90.0)
-    res = extract_pdf_with_engine(THREE_PAGES, eng, settings=_settings(), render_dpi=36)
+    res = extract_pdf_with_engine(THREE_PAGES, eng, settings=_settings())
     assert res["error"] is None
     # text-layer path loses to OCR? No: this PDF has no images and a good
     # text layer -> fast path wins at 95.0
@@ -105,7 +108,7 @@ def test_pdf_with_images_goes_through_page_ocr():
         [[(72.0, 720.0, "alpha")], [(72.0, 720.0, "beta")]], with_image=True
     )
     eng = PageCountingEngine(text="ocr words from page", conf=80.0)
-    res = extract_pdf_with_engine(pdf, eng, settings=_settings(), render_dpi=36)
+    res = extract_pdf_with_engine(pdf, eng, settings=_settings())
     assert res["error"] is None
     assert eng.calls == 2
     assert res["text"].count(PAGE_BREAK.strip()) == 1  # between 2 pages
@@ -127,7 +130,7 @@ def test_failed_page_skipped_and_mean_confidence():
             return "page text ok", 70.0 if self.calls == 1 else 90.0
 
     eng = VaryingEngine()
-    res = extract_pdf_with_engine(pdf, eng, settings=_settings(), render_dpi=36)
+    res = extract_pdf_with_engine(pdf, eng, settings=_settings())
     assert res["error"] is None
     assert res["confidence"] == pytest.approx(80.0)  # mean of 70 and 90
     assert res["preprocessing"] == ["PDF page-to-image OCR (2 pages)"]
@@ -137,14 +140,15 @@ def test_failed_page_skipped_and_mean_confidence():
 def test_all_pages_fail_falls_back_to_text_layer_gate():
     pdf = build_pdf([[(72.0, 720.0, "tiny")]], with_image=True)
     eng = PageCountingEngine(fail_calls={1, 2, 3})
-    res = extract_pdf_with_engine(pdf, eng, settings=_settings(), render_dpi=36)
+    res = extract_pdf_with_engine(pdf, eng, settings=_settings())
     # OCR produced nothing; text layer 'tiny' has <= 5 words -> salvage or
     # error; either way not a silent success at OCR confidence
     assert res["preprocessing"] != ["PDF page-to-image OCR (1 pages)"]
 
 
-def test_oversize_pdf_guarded():
-    res = extract_pdf_with_engine(b"%PDF-1.4" + b"0" * 100, FakeOcrEngine(), max_pdf_size=50)
+def test_oversize_pdf_guarded(monkeypatch):
+    monkeypatch.setattr(pdfextract, "MAX_PDF_SIZE", 50)
+    res = extract_pdf_with_engine(b"%PDF-1.4" + b"0" * 100, FakeOcrEngine())
     assert res["error"] is not None and "too large" in res["error"]
 
 
@@ -226,7 +230,7 @@ def test_pdf_page_ocr_with_glyph_engine_reproduces_text_layer():
         with_image=True,  # forces the page-OCR path over the text layer
     )
     res = extract_pdf_with_engine(
-        pdf, GlyphOcrEngine(dpi=150), settings=_settings(), render_dpi=150
+        pdf, GlyphOcrEngine(dpi=150), settings=_settings(150)
     )
     assert res["error"] is None
     assert res["preprocessing"] == ["PDF page-to-image OCR (2 pages)"]
@@ -322,7 +326,7 @@ def test_ladder_falls_through_to_strategy2(monkeypatch):
         lambda data, dpi=300: [_darken(p) for p in real_render(data, dpi=dpi)],
     )
     res = pdfextract.extract_pdf_with_engine(
-        pdf, GlyphOcrEngine(dpi=72), settings=_settings(), render_dpi=72
+        pdf, GlyphOcrEngine(dpi=72), settings=_settings(72)
     )
     assert res["error"] is None
     assert res["preprocessing"] == ["ocrmypdf strategy 2 (remove-background) OCR"]

@@ -86,6 +86,25 @@ def test_lineage_metrics(spark, dirs):
     assert stats["completed"]["docs_processed"] == 60
 
 
+def test_run_extraction_rejects_partition_count_below_one(spark, dirs):
+    """A partition count below one plans no todo partition (and hashes
+    every doc to a null partition), so a batched run would extract
+    nothing and succeed; the run raises before touching the checkpoint
+    instead, batched or not."""
+    import os
+
+    out, ckpt_path = dirs
+    docs = docs_dataframe(spark, 10, seed=3)
+    for bad in (0, -1):
+        for batch in (None, 4):
+            with pytest.raises(ValueError, match="num_partitions"):
+                run_extraction(
+                    spark, docs, out, ckpt_path, num_partitions=bad,
+                    batch_partitions=batch,
+                )
+    assert not os.path.exists(ckpt_path) and not os.path.exists(out)
+
+
 def test_cleanup_completed_q8(spark, tmp_path):
     """Q8 (queue.rs:1171-1184): completed rows older than the horizon are
     deleted; fresh completed rows and non-completed rows survive. A
@@ -96,7 +115,7 @@ def test_cleanup_completed_q8(spark, tmp_path):
 
     for path in (str(tmp_path / "ck"), (tmp_path / "ck_uri").as_uri()):
         ck = CheckpointTable(spark, path)
-        now = datetime.datetime(2026, 8, 16, 12, 0, 0)
+        now = datetime.datetime.now(datetime.timezone.utc)
         old = now - datetime.timedelta(days=10)
         fresh = now - datetime.timedelta(hours=2)
         ck.append(
@@ -106,12 +125,12 @@ def test_cleanup_completed_q8(spark, tmp_path):
                 {"run_id": "r1", "partition_id": 2, "status": "failed", "completed_at": old},
             ]
         )
-        deleted = ck.cleanup_completed(days_to_keep=7, now=now)
+        deleted = ck.cleanup_completed(days_to_keep=7)
         assert deleted == 1, path
         remaining = {(r["partition_id"], r["status"]) for r in ck.read().collect()}
         assert remaining == {(1, "completed"), (2, "failed")}
         # idempotent
-        assert ck.cleanup_completed(days_to_keep=7, now=now) == 0
+        assert ck.cleanup_completed(days_to_keep=7) == 0
         # expired partition is re-eligible on resume (its completed row is gone)
         assert ck.completed_partitions() == {1}
 
@@ -125,7 +144,7 @@ def test_cleanup_retains_null_completed_at(spark, tmp_path):
     from readur_spark.plans.checkpoint import CheckpointTable
 
     ck = CheckpointTable(spark, str(tmp_path / "ck"))
-    now = datetime.datetime(2026, 8, 16, 12, 0, 0)
+    now = datetime.datetime.now(datetime.timezone.utc)
     old = now - datetime.timedelta(days=10)
     ck.append(
         [
@@ -133,7 +152,7 @@ def test_cleanup_retains_null_completed_at(spark, tmp_path):
             {"run_id": "r1", "partition_id": 1, "status": "completed", "completed_at": old},
         ]
     )
-    assert ck.cleanup_completed(days_to_keep=7, now=now) == 1
+    assert ck.cleanup_completed(days_to_keep=7) == 1
     remaining = {r["partition_id"] for r in ck.read().collect()}
     assert remaining == {0}
 
@@ -148,7 +167,7 @@ def test_cleanup_crash_recovery(spark, tmp_path):
 
     from readur_spark.plans.checkpoint import CheckpointTable
 
-    now = datetime.datetime(2026, 8, 16, 12, 0, 0)
+    now = datetime.datetime.now(datetime.timezone.utc)
     old = now - datetime.timedelta(days=10)
     rows = [
         {"run_id": "r1", "partition_id": 0, "status": "completed", "completed_at": old},
@@ -174,7 +193,7 @@ def test_cleanup_crash_recovery(spark, tmp_path):
     # state C: crash after commit, stale .old leftover
     ck = CheckpointTable(spark, str(tmp_path / "c"))
     ck.append(rows)
-    assert ck.cleanup_completed(days_to_keep=7, now=now) == 1
+    assert ck.cleanup_completed(days_to_keep=7) == 1
     shutil.copytree(ck.path, ck.path + ".old-cafebabe")
     got = ck.read().collect()
     assert len(got) == 1  # leftover dropped, no duplication
@@ -465,9 +484,8 @@ def new_york_driver(monkeypatch):
 
 def test_job_stamps_read_back_as_true_instants(spark, dirs, new_york_driver):
     """The rows ``run_extraction`` writes hold the instants they were
-    taken at, and retention measures age from them: a row completed
-    ``days_to_keep`` days + 1 h ago is deleted, one completed
-    ``days_to_keep`` days − 1 h ago is kept."""
+    taken at, and retention measures age from them: the run's rows are
+    younger than a day, and older than a zero-day horizon."""
     import datetime
 
     utc = datetime.timezone.utc
@@ -488,10 +506,8 @@ def test_job_stamps_read_back_as_true_instants(spark, dirs, new_york_driver):
     (started,), (done,) = stamps, completed
     assert t_before <= started <= done <= t_after
 
-    kept = done + datetime.timedelta(days=7, hours=-1)
-    expired = done + datetime.timedelta(days=7, hours=1)
-    assert ck.cleanup_completed(days_to_keep=7, now=kept) == 0
-    assert ck.cleanup_completed(days_to_keep=7, now=expired) == 2
+    assert ck.cleanup_completed(days_to_keep=1) == 0
+    assert ck.cleanup_completed(days_to_keep=0) == 2
     assert ck.completed_partitions() == set()
 
 
@@ -538,7 +554,9 @@ def test_cleanup_cutoff_is_one_instant_on_both_legs(
         spark.conf.set(zone_key, "America/New_York")
         with monkeypatch.context() as m:
             m.setattr(spark, "sql", deletes.append)
-            ice.cleanup_completed(days_to_keep=7, now=now)
+            t_before = datetime.datetime.now(datetime.timezone.utc)
+            ice.cleanup_completed(days_to_keep=7)
+            t_after = datetime.datetime.now(datetime.timezone.utc)
         (stmt,) = deletes
         literal = stmt.split("completed_at < ", 1)[1]
         got = spark.sql(f"SELECT unix_micros({literal}) AS us").first()["us"]
@@ -546,8 +564,9 @@ def test_cleanup_cutoff_is_one_instant_on_both_legs(
         spark.conf.set(zone_key, zone)
     spark.catalog.dropTempView("ck_iceberg_leg")
     epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-    cutoff = now - datetime.timedelta(days=7)
-    assert got == (cutoff - epoch) // datetime.timedelta(microseconds=1)
+    week = datetime.timedelta(days=7)
+    us = datetime.timedelta(microseconds=1)
+    assert (t_before - week - epoch) // us <= got <= (t_after - week - epoch) // us
 
     assert ck.cleanup_completed(days_to_keep=7) == 1
     assert {r["partition_id"] for r in ck.read().collect()} == {1}

@@ -200,18 +200,38 @@ def test_fuzzy_search_mega_doc_linear(spark, docs):
     doc in the seconds range with identical similarity on both paths."""
     import time
 
-    from readur_spark.operators.search import fuzzy_search
+    from readur_spark.operators.search import (
+        ARRAY_PATH_MAX_CHARS,
+        _trigrams,
+        fuzzy_search,
+    )
 
-    a = sorted(
-        tuple(r) for r in fuzzy_search(docs, "spark merge", threshold=0.05).collect()
+    q = set(_trigrams("spark merge"))
+
+    def reference(text):
+        t = set(_trigrams(text))
+        inter = len(t & q)
+        return inter / (len(t) + len(q) - inter)
+
+    # a doc one char past the bound takes the relational path; the corpus
+    # docs are all shorter and take the array path
+    edge = ("spark merge window batch " * 401)[: ARRAY_PATH_MAX_CHARS + 1]
+    edge_df = spark.createDataFrame(
+        [(-1, edge, len(edge))], "doc_id long, text string, n_chars long"
     )
-    b = sorted(
-        tuple(r)
-        for r in fuzzy_search(
-            docs, "spark merge", threshold=0.05, array_path_max_chars=0
-        ).collect()
-    )
-    assert a == b and a
+    both = docs.select("doc_id", "text", "n_chars").unionByName(edge_df)
+    got = {
+        r["doc_id"]: r["similarity"]
+        for r in fuzzy_search(both, "spark merge", threshold=0.05).collect()
+    }
+    want = {
+        r["doc_id"]: reference(r["text"])
+        for r in both.select("doc_id", "text").collect()
+        if reference(r["text"]) > 0.05
+    }
+    assert -1 in want and len(want) > 1
+    assert got.keys() == want.keys()
+    assert all(got[i] == pytest.approx(want[i], abs=1e-6) for i in want)
     mega = "spark merge window batch " * 60_000
     mdocs = spark.createDataFrame(
         [(1, mega, len(mega))], "doc_id long, text string, n_chars long"

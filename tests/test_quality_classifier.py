@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from readur_spark.operators import quality_classifier
 from readur_spark.operators.quality_classifier import (
-    quality_filter,
     score_quality,
     train_quality_classifier,
 )
@@ -53,21 +53,6 @@ def test_classifier_separates_pos_from_neg(spark, labeled):
     assert model["losses"][-1] < model["losses"][0]
 
 
-def test_quality_filter_keeps_high_and_short(spark, labeled):
-    pos, neg = labeled
-    model = train_quality_classifier(pos, neg, num_buckets=256, iters=25)
-    docs = spark.createDataFrame(
-        [
-            (1, "the committee reviewed the report findings with care"),
-            (2, "free prize click here winner jackpot claim now"),
-            (3, ""),  # unscorable: survives by convention
-        ],
-        "doc_id long, text string",
-    )
-    kept = {r["doc_id"] for r in quality_filter(docs, model, 0.5).collect()}
-    assert kept == {1, 3}
-
-
 def test_training_is_deterministic(spark, labeled):
     pos, neg = labeled
     m1 = train_quality_classifier(pos, neg, num_buckets=128, iters=8)
@@ -100,34 +85,14 @@ def test_matches_sequential_replica_both_paths(spark):
         assert got == sorted(exp_rows), cap
 
 
-def test_funnel_learned_quality_stage(spark, labeled):
-    from readur_spark.plans.curation import curate
-
-    pos, neg = labeled
-    model = train_quality_classifier(pos, neg, num_buckets=256, iters=25)
-    docs = spark.createDataFrame(
-        [
-            (1, "the committee published the report and the members "
-                "reviewed the findings with care and the work continued"),
-            (2, "zx click here buy now qq winner free prize zz qk offer "
-                "claim jackpot vv extra words to pass length checks here"),
-        ],
-        "doc_id long, text string",
-    )
-    chunks, metrics = curate(
-        docs, require_gopher=False, quality_model=model,
-        near_dup_threshold=0.95, chunk_words=50, overlap_words=0,
-    )
-    assert metrics["after_learned_quality"] == 1
-    assert {r["doc_id"] for r in chunks.collect()} == {1}
-
-
-def test_saturated_probabilities_train_without_crash(spark, labeled):
+def test_saturated_probabilities_train_without_crash(spark, labeled, monkeypatch):
     """r5 review: a cleanly-separable corpus at high lr saturates p to
     1.0/0.0 in float64 — the clamp must keep log finite in BOTH paths
     and they must still agree."""
     pos, neg = labeled
-    kwargs = dict(num_buckets=64, iters=60, lr=50.0, l2=0.0)
+    monkeypatch.setattr(quality_classifier, "LR", 50.0)
+    monkeypatch.setattr(quality_classifier, "L2", 0.0)
+    kwargs = dict(num_buckets=64, iters=60)
     m_local = train_quality_classifier(pos, neg, **kwargs)
     m_dist = train_quality_classifier(
         pos, neg, driver_train_max=0, **kwargs

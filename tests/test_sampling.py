@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from readur_spark.operators import sampling
 from readur_spark.operators.sampling import (
     hash_uniform_col,
     sample_by_weight,
@@ -42,14 +43,15 @@ def test_splits_are_disjoint_and_exhaustive(spark, docs):
     assert out.filter(F.col("split").isNull()).count() == 0
 
 
-def test_sample_rate_and_determinism(spark, docs):
+def test_sample_rate_and_determinism(spark, docs, monkeypatch):
     s1 = {r["doc_id"] for r in sample_by_weight(docs, rate=0.5).collect()}
     s2 = {r["doc_id"] for r in sample_by_weight(docs, rate=0.5).collect()}
     assert s1 == s2  # deterministic, unlike DataFrame.sample
     n = docs.count()
     assert 0.4 < len(s1) / n < 0.6
     # a different salt draws an independent sample
-    s3 = {r["doc_id"] for r in sample_by_weight(docs, rate=0.5, salt="other").collect()}
+    monkeypatch.setattr(sampling, "SAMPLE_SALT", "other")
+    s3 = {r["doc_id"] for r in sample_by_weight(docs, rate=0.5).collect()}
     assert s3 != s1
 
 
@@ -123,7 +125,7 @@ def test_global_shuffle_is_exact_permutation(spark):
     assert [out[i] for i in range(10)] != list(range(10))
 
 
-def test_global_shuffle_partitioning_invariant_and_salted(spark):
+def test_global_shuffle_partitioning_invariant_and_salted(spark, monkeypatch):
     from readur_spark.operators.sampling import global_shuffle
 
     df = spark.createDataFrame([(i,) for i in range(2000)], "doc_id long")
@@ -131,10 +133,8 @@ def test_global_shuffle_partitioning_invariant_and_salted(spark):
     b = {tuple(r) for r in global_shuffle(df.repartition(17)).collect()}
     assert a == b
     # a different salt is a different (but still exact) permutation
-    c = {
-        r["doc_id"]: r["shuffle_pos"]
-        for r in global_shuffle(df, salt="epoch-2").collect()
-    }
+    monkeypatch.setattr(sampling, "SHUFFLE_SALT", "epoch-2")
+    c = {r["doc_id"]: r["shuffle_pos"] for r in global_shuffle(df).collect()}
     assert sorted(c.values()) == list(range(2000))
     assert c != {k: v for k, v in a}
 

@@ -3,7 +3,10 @@
 import pytest
 from pyspark.sql import functions as F
 
+from readur_spark.operators import similarity
 from readur_spark.operators.similarity import (
+    IVF_CENTROIDS,
+    MAX_LITERAL_CENTROIDS,
     ann_topk_lsh,
     cosine_topk,
     hyperplane_lsh_buckets,
@@ -55,32 +58,38 @@ def test_ivf_assignment_and_recall(emb, query_vec):
     assert len(centroids) == 8
 
     exact = {r["vec_id"] for r in cosine_topk(emb, query_vec, k=10).collect()}
-    approx = {r["vec_id"] for r in ivf_topk(emb, query_vec, k=10, n_centroids=8, n_probe=4).collect()}
+    approx = {r["vec_id"] for r in ivf_topk(emb, query_vec, k=10, n_probe=4).collect()}
     assert 0 in approx  # self-match always found (its own cluster is probed)
-    assert len(exact & approx) / 10 >= 0.5  # reasonable recall at n_probe=4/8
+    assert len(exact & approx) / 10 >= 0.5  # reasonable recall at n_probe=4/16
 
 
 def test_ivf_full_probe_equals_exact(emb, query_vec):
     exact = [(r["vec_id"], r["cosine"]) for r in cosine_topk(emb, query_vec, k=10).collect()]
     full = [
         (r["vec_id"], r["cosine"])
-        for r in ivf_topk(emb, query_vec, k=10, n_centroids=8, n_probe=8).collect()
+        for r in ivf_topk(emb, query_vec, k=10, n_probe=IVF_CENTROIDS).collect()
     ]
     assert full == exact  # probing every cluster = brute force
 
 
 def test_ivf_large_k_pandas_path_matches_literal_path(spark, emb, query_vec):
-    """Above max_literal_centroids the assignment switches to the
-    broadcast-matmul pandas UDF; assignments must match the Catalyst
-    literal-argmin form exactly."""
-    from readur_spark.operators.similarity import ivf_assign
+    """Above MAX_LITERAL_CENTROIDS the assignment switches to the
+    broadcast-matmul pandas UDF; on both sides of the bound every vector
+    goes to its nearest returned centroid, as the Catalyst literal-argmin
+    form computes it."""
+    import numpy as np
 
-    lit_df, lit_c = ivf_assign(emb, n_centroids=8, seed=42, max_literal_centroids=64)
-    udf_df, udf_c = ivf_assign(emb, n_centroids=8, seed=42, max_literal_centroids=2)
-    assert lit_c == udf_c
-    a = {r["vec_id"]: r["cluster"] for r in lit_df.select("vec_id", "cluster").collect()}
-    b = {r["vec_id"]: r["cluster"] for r in udf_df.select("vec_id", "cluster").collect()}
-    assert a == b
+    rows = emb.select("vec_id", "embedding").collect()
+    vecs = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    for n in (8, MAX_LITERAL_CENTROIDS + 1):
+        df, cents = ivf_assign(emb, n_centroids=n, seed=42)
+        assert len(cents) == n
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("ArrowEvalPython" in plan) == (n > MAX_LITERAL_CENTROIDS), plan
+        c = np.asarray(cents, dtype=np.float64)
+        want = ((vecs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        got = {r["vec_id"]: r["cluster"] for r in df.select("vec_id", "cluster").collect()}
+        assert [got[r["vec_id"]] for r in rows] == want.tolist(), n
 
 
 def test_quantize_int8_roundtrip(spark, emb):
@@ -145,7 +154,7 @@ def _vecs_df(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_semdedup_oversized_duplicate_cluster_resplit_matches_unsplit(spark):
+def test_semdedup_oversized_duplicate_cluster_resplit_matches_unsplit(spark, monkeypatch):
     """r4 verdict #2: a giant exact-duplicate ball k-means cannot separate
     must be re-split (salted sub-k-means, then forced hash split at the
     depth cap), and the survivor pass must collapse boundary-straddling
@@ -167,14 +176,14 @@ def test_semdedup_oversized_duplicate_cluster_resplit_matches_unsplit(spark):
         for j in range(60)
     ]
     df = _vecs_df(spark, rows)
-    guarded = semdedup(
-        df, threshold=0.95, n_clusters=1,
-        target_cluster_size=100, max_cluster_size=200, max_split_depth=2,
-    ).collect()
-    unsplit = semdedup(
-        df, threshold=0.95, n_clusters=1,
-        target_cluster_size=10**9, max_cluster_size=10**9,
-    ).collect()
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "TARGET_CLUSTER_SIZE", 100)
+        m.setattr(similarity, "MAX_CLUSTER_SIZE", 200)
+        m.setattr(similarity, "MAX_SPLIT_DEPTH", 2)
+        guarded = semdedup(df, threshold=0.95, n_clusters=1).collect()
+    # the 960 rows fit one unsplit cluster at the default cap
+    assert len(rows) <= similarity.MAX_CLUSTER_SIZE
+    unsplit = semdedup(df, threshold=0.95, n_clusters=1).collect()
     assert {r["vec_id"] for r in guarded} == {r["vec_id"] for r in unsplit}
     # the duplicate family collapsed to its global minimum id
     kept_dups = [r["vec_id"] for r in guarded if r["vec_id"] < 1000]
@@ -183,7 +192,7 @@ def test_semdedup_oversized_duplicate_cluster_resplit_matches_unsplit(spark):
     assert all(not r["oversized_split"] for r in guarded)
 
 
-def test_semdedup_residual_diverse_megacluster_is_flagged_not_dropped(spark):
+def test_semdedup_residual_diverse_megacluster_is_flagged_not_dropped(spark, monkeypatch):
     """A genuinely diverse oversized cluster (no duplicates to shrink it)
     keeps all rows and SURFACES them with oversized_split=true — the
     guard never silently caps or drops."""
@@ -196,17 +205,17 @@ def test_semdedup_residual_diverse_megacluster_is_flagged_not_dropped(spark):
         (i, [float(x) for x in rng.standard_normal(32)]) for i in range(600)
     ]
     df = _vecs_df(spark, rows)
-    out = semdedup(
-        df, threshold=0.95, n_clusters=1,
-        target_cluster_size=100, max_cluster_size=150, max_split_depth=1,
-    ).collect()
+    monkeypatch.setattr(similarity, "TARGET_CLUSTER_SIZE", 100)
+    monkeypatch.setattr(similarity, "MAX_CLUSTER_SIZE", 150)
+    monkeypatch.setattr(similarity, "MAX_SPLIT_DEPTH", 1)
+    out = semdedup(df, threshold=0.95, n_clusters=1).collect()
     # random gaussian directions in R^32 essentially never exceed 0.95
     # cosine: every row survives, and every row is flagged residual
     assert len(out) == 600
     assert all(r["oversized_split"] for r in out)
 
 
-def test_semdedup_auto_n_clusters(spark):
+def test_semdedup_auto_n_clusters(spark, monkeypatch):
     """n_clusters=None derives ceil(count/target) from one count() and
     matches the equivalent explicit setting exactly."""
     import numpy as np
@@ -218,7 +227,8 @@ def test_semdedup_auto_n_clusters(spark):
         (i, [float(x) for x in rng.standard_normal(8)]) for i in range(100)
     ]
     df = _vecs_df(spark, rows)
-    auto = semdedup(df, threshold=0.9, target_cluster_size=10).collect()
+    monkeypatch.setattr(similarity, "TARGET_CLUSTER_SIZE", 10)
+    auto = semdedup(df, threshold=0.9).collect()
     explicit = semdedup(df, threshold=0.9, n_clusters=10).collect()
     assert {r["vec_id"] for r in auto} == {r["vec_id"] for r in explicit}
 

@@ -63,7 +63,7 @@ def test_distributed_snippets_full(spark):
 
 def test_tfidf_top_terms_distinctive_over_common(spark):
     """A term concentrated in one doc outranks corpus-wide common terms;
-    hapaxes (df < min_df) never appear; k and the (tfidf desc, term asc)
+    hapaxes (df < MIN_DF) never appear; k and the (tfidf desc, term asc)
     tie-break are deterministic."""
     from pyspark.sql import functions as F
 
@@ -77,17 +77,17 @@ def test_tfidf_top_terms_distinctive_over_common(spark):
         ],
         "doc_id string, text string",
     )
-    out = tfidf_top_terms(docs, k=3, min_df=2)
+    out = tfidf_top_terms(docs, k=3)
     rows = {}
     for r in out.collect():
         rows.setdefault(r["doc_id"], []).append((r["rnk"], r["term"], r["tfidf"]))
-    # zebra df=1 -> excluded by min_df; within doc 1 the top terms are the
+    # zebra df=1 -> excluded by MIN_DF; within doc 1 the top terms are the
     # shared vocabulary, ranked by tf then term
     assert all(len(v) == 3 for v in rows.values())
     assert all(t != "hapaxunique" for v in rows.values() for _, t, _ in v)
     # deterministic: re-run equal
     again = {}
-    for r in tfidf_top_terms(docs, k=3, min_df=2).collect():
+    for r in tfidf_top_terms(docs, k=3).collect():
         again.setdefault(r["doc_id"], []).append((r["rnk"], r["term"], r["tfidf"]))
     assert {k: sorted(v) for k, v in rows.items()} == {
         k: sorted(v) for k, v in again.items()
@@ -107,7 +107,7 @@ def test_tfidf_rare_term_outranks_common_when_df_allows(spark):
     )
     rows = [
         (r["doc_id"], r["rnk"], r["term"])
-        for r in tfidf_top_terms(docs, k=1, min_df=2).collect()
+        for r in tfidf_top_terms(docs, k=1).collect()
     ]
     # doc 1: rare (tf=2, df=2) beats common (tf=4, df=3) iff
     # 2*(ln(4/3)+1) > 4*(ln(4/4)+1) -> 2.58 < 4 -> common wins; assert the

@@ -7,6 +7,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from readur_spark.sources import files as files_mod
 from readur_spark.sources.files import incremental_changes, read_binary_dir, size_priority
 
 
@@ -25,8 +26,9 @@ def file_tree():
     return d
 
 
-def test_read_binary_dir(spark, file_tree):
-    df = read_binary_dir(spark, file_tree, max_bytes=1024 * 1024)
+def test_read_binary_dir(spark, file_tree, monkeypatch):
+    monkeypatch.setattr(files_mod, "MAX_FILE_BYTES", 1024 * 1024)
+    df = read_binary_dir(spark, file_tree)
     rows = {r["filename"]: r for r in df.collect()}
     assert set(rows) == {"a.txt", "b.html"}  # .exe filtered, big.txt skipped
     assert bytes(rows["a.txt"]["content"]) == b"hello text file"
@@ -54,10 +56,11 @@ def test_incremental_changes(spark):
     assert got == {"p2", "p3"}  # changed + new; unchanged p1 skipped
 
 
-def test_binary_dir_into_extraction(spark, file_tree):
+def test_binary_dir_into_extraction(spark, file_tree, monkeypatch):
     from readur_spark.operators.binary_extract import extract_files
 
-    files = read_binary_dir(spark, file_tree, max_bytes=1024 * 1024)
+    monkeypatch.setattr(files_mod, "MAX_FILE_BYTES", 1024 * 1024)
+    files = read_binary_dir(spark, file_tree)
     out = {r["filename"]: r for r in extract_files(files).collect()}
     assert out["a.txt"]["status"] == "completed"
     assert out["a.txt"]["spans"][0]["text"] == "hello text file"
@@ -353,18 +356,6 @@ def test_warc_gzip_bomb_capped(monkeypatch):
         list(warc_mod._gzip_members(bomb))
     # well under the caps: everything yields normally
     assert list(warc_mod._gzip_members(ok + ok)) == [b"fine member"] * 2
-
-
-def test_bpe_spark_loop_rejects_bad_batch_size(spark):
-    import pytest as _pytest
-
-    from readur_spark.operators.bpe import train_bpe_spark_loop
-
-    words = spark.createDataFrame(
-        [(b"abab", 3)], "word binary, count long"
-    )
-    with _pytest.raises(ValueError, match="batch_merges"):
-        train_bpe_spark_loop(words, num_merges=4, batch_merges=0)
 
 
 def test_warc_overstated_length_does_not_double_emit_payload_bytes():
